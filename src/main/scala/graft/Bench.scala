@@ -16,18 +16,9 @@ object Bench {
     // query names; unset = full suite. Shared warmup stages whose
     // consumers are all filtered out are skipped too.
     val benchOnly: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fail loud on unknown names (r12 advice): a typo'd filter used to
-    // silently bench zero queries and publish a plausible-looking
-    // artifact with total_sec 0 and n_failed 0
-    benchOnly.foreach { only =>
-      val unknown = only -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names ${unknown.toSeq.sorted.mkString(", ")} " +
-          "are not SparkEntry.queries keys — fix the filter (names are exact)")
-    }
-    def stageNeeded(consumers: Set[String]): Boolean =
-      benchOnly.forall(only => (only & consumers).nonEmpty)
+      .map(SparkEntry.queryFilter(_, "SPARK_GRAFT_BENCH_ONLY"))
+    def stageNeeded(stage: String): Boolean =
+      benchOnly.forall(only => (only & SparkEntry.consumersOf(stage)).nonEmpty)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffleParts)
@@ -255,16 +246,7 @@ object Bench {
       val infos = spark.sparkContext.getRDDStorageInfo
       (infos.map(_.memSize).sum / 1e6, infos.map(_.diskSize).sum / 1e6)
     }
-    val neardupConsumers = Set("q_minhash_lsh", "q_ngram_jaccard", "q_dedup_pipeline",
-      "q_dup_components", "q_dedup_weights", "q_leak_split", "q_survivorship",
-      "q_dedup_exact", "q_substring_dedup", "q_semdedup")
-    val graphConsumers = Set("q_pagerank", "q_trustrank", "q_bfs", "q_sssp", "q_hits",
-      "q_kcore", "q_triangles", "q_clustering", "q_modularity", "q_assortativity",
-      "q_adamic_adar", "q_adamic_adar_capped", "q_adamic_adar_capstats",
-      "q_degree_dist", "q_conductance", "q_labelprop", "q_hyperball",
-      "q_harmonic")
-    val lpaConsumers = Set("q_labelprop", "q_modularity", "q_conductance")
-    val wNearDup = if (!stageNeeded(neardupConsumers)) 0.0 else timed {
+    val wNearDup = if (!stageNeeded("neardup")) 0.0 else timed {
       SparkEntry.queries("q_minhash_lsh")(spark, sfDir).count()
       // the shared document clustering (5 consumers: components /
       // pipeline / leak-split / survivorship / dedup-weights) — the
@@ -276,7 +258,7 @@ object Bench {
     // (ops/Graphs.scala) — build them here so the one-time distinct +
     // persist cost is this reported field, not whichever of the 13
     // graph queries happens to run first in name order
-    val wGraphs = if (!stageNeeded(graphConsumers)) 0.0 else timed {
+    val wGraphs = if (!stageNeeded("graphs")) 0.0 else timed {
       graft.ops.Graphs.bipartite(spark, sfDir).count()
       graft.ops.Graphs.bipartiteQuarter(spark, sfDir).count()
       graft.ops.Graphs.coocQuarter(spark, sfDir).count()
@@ -285,7 +267,7 @@ object Bench {
     // the shared LPA partition (q_labelprop + q_modularity +
     // q_conductance) is cached the same way — pay the 3 synchronous
     // rounds here, once
-    val wLpa = if (!stageNeeded(lpaConsumers)) 0.0
+    val wLpa = if (!stageNeeded("lpa")) 0.0
       else timed(graft.ops.Graphs.labelsBipartite(spark, sfDir).count())
     val sLpa = storageNow()
     // ...and the DBSCAN labeling (q_dbscan): its star-contraction
@@ -295,7 +277,7 @@ object Bench {
     // detailed JSON line (`warmup_detail`) because the sf1 run showed
     // warmup_shared growing 26.7 → 118.7 s and an unbroken total
     // can't say WHICH shared artifact grew.
-    val wDbscan = if (!stageNeeded(Set("q_dbscan"))) 0.0
+    val wDbscan = if (!stageNeeded("dbscan")) 0.0
       else timed(graft.ops.Graphs.dbscanCustomerGrid(spark, sfDir).count())
     val sDbscan = storageNow()
     // the persisted IVF-PQ index build (r12 verdict item #5): the
@@ -303,7 +285,7 @@ object Bench {
     // measures the directory-pruned PROBE — the production read path —
     // while q_ivfpq_topk stays registered as the fused build+probe
     // receipt
-    val wIvfpq = if (!stageNeeded(Set("q_ivfpq_indexed", "q_ivfpq_layout"))) 0.0
+    val wIvfpq = if (!stageNeeded("ivfpq")) 0.0
       else timed {
         val emb = graft.Tables.embeddings(spark, sfDir)
         val mdl = graft.operators.ProductQuantizer.model(emb, m = 4, k = 16)
@@ -318,59 +300,16 @@ object Bench {
     // artifact instead of re-instrumenting (r9 verdict item #7)
     def s2(p: (Double, Double)): String = s"""[${f3(p._1)},${f3(p._2)}]"""
     val wdJson = s"""{"neardup":${f3(wNearDup)},"graphs":${f3(wGraphs)},"lpa":${f3(wLpa)},"dbscan":${f3(wDbscan)},"ivfpq":${f3(wIvfpq)},"storage_mb_after":{"neardup":${s2(sNearDup)},"graphs":${s2(sGraphs)},"lpa":${s2(sLpa)},"dbscan":${s2(sDbscan)}}}"""
-    // regime tags (r9 verdict item #8): the two-regime receipt pairs,
-    // so a scale-table reader can group a deliberately-degenerate
-    // reference instance with its production twin instead of
-    // mis-grading the receipt as a defect. Queries without a tag are
-    // plain production paths.
-    val regimeTagsRaw = Map(
-      "q_embed_neardup" -> "degenerate-reference",
-      "q_embed_neardup_hi" -> "production-twin",
-      "q_interval_join" -> "degenerate-reference",
-      "q_interval_join_user" -> "production-twin",
-      // the per-key sequential recurrences and their skew-proof
-      // chunked-scan twins (r10): sequential stays registered as the
-      // bit-exact/simple contract, chunked is the form that survives
-      // a hot key
-      "q_cusum" -> "sequential-reference",
-      "q_cusum_chunked" -> "production-twin",
-      "q_ewma" -> "sequential-reference",
-      "q_ewma_chunked" -> "production-twin",
-      "q_holt" -> "sequential-reference",
-      "q_holt_chunked" -> "production-twin",
-      // r13 verdict item #1: the fused IVF-PQ build+probe stays
-      // registered as the BUILD-COST receipt (its 195 s sf10 row was
-      // half the pin headline) now that q_ivfpq_indexed measures the
-      // production probe with the build priced as warmup_detail.ivfpq
-      "q_ivfpq_topk" -> "build-reference",
-      "q_ivfpq_indexed" -> "production-twin",
-      // ...and the exact Adamic-Adar is the REFUSAL receipt: its
-      // wedge-volume guard trips by design at sf10 (781M wedges), so
-      // its -1 must publish as a receipt refusal, not an engine
-      // failure — the capped twin is the production path
-      "q_adamic_adar" -> "refusal-reference",
-      "q_adamic_adar_capped" -> "production-twin")
+    // regime tags of the two-regime receipt pairs (QuerySpec.regime);
+    // queries without a tag are plain production paths
+    val regimeTagsRaw = SparkEntry.specs.collect { case q if q.regime.nonEmpty => q.name -> q.regime.get }
     def regimesJsonFor(present: String => Boolean): String =
       regimeTagsRaw.filter { case (k, _) => present(k) }.toSeq.sorted
         .map { case (k, v) => s"\"$k\":\"$v\"" }.mkString("{", ",", "}")
-    // detonation-receipt set (r11 what's-wrong #3): the deliberately-
-    // degenerate reference instances prove a LAW (a scaling regime),
-    // not a throughput — so they are measured and published per-query
-    // but EXCLUDED from the headline total (reported under
-    // receipt_total_sec) and, in variance mode, run once instead of
-    // N times (a receipt needs no error bar; the sf1 one costs 59 s
-    // per pass). Their production twins stay in the headline.
-    // …the sequential recurrence forms joined the receipt set in r13
-    // (r12 what's-wrong #5): they are deliberately-sequential reference
-    // instances whose chunked production twins sit beside them in the
-    // headline — under the 20%-hot skew twin the sequential forms cost
-    // 10-23× while the chunked twins hold 1.0-1.9×, so leaving them in
-    // the engine total made the skew headline measure the receipts.
-    val receiptSet = regimeTagsRaw.collect {
-      case (k, "degenerate-reference") => k
-      case (k, "sequential-reference") => k
-      case (k, "build-reference") => k
-      case (k, "refusal-reference") => k }.toSet
+    // the receipt set (QuerySpec.isReceipt): measured and published
+    // per query, but excluded from the headline total (reported under
+    // receipt_total_sec) and run once instead of N times in variance mode
+    val receiptSet = SparkEntry.specs.filter(_.isReceipt).map(_.name).toSet
     // per-query resource metrics (r11 verdict item #4): shuffle bytes
     // read/written, spilled bytes, and peak per-task execution memory
     // via one SparkListener. These are DETERMINISTIC where wall time

@@ -79,7 +79,7 @@ object InvariantOracles {
        |SELECT e.src, e.dst FROM $prev e
        |JOIN $s x ON x.id = e.src JOIN $s y ON y.id = e.dst""".stripMargin)
 
-  private val kcore: Seq[String] = Seq(
+  private[graft] val kcore: Seq[String] = Seq(
     // the expensive base — the quarter-orders co-occurrence self-join
     // — materialized exactly ONCE (the replay re-executed it ~3^rounds
     // times through CTE inlining)
@@ -115,7 +115,7 @@ object InvariantOracles {
        |SELECT id, $c // GREATEST(1, ((SELECT max($c) FROM $raw) + 999999999) // 1000000000) AS v
        |FROM $raw""".stripMargin)
 
-  private val hits: Seq[String] = Seq(
+  private[graft] val hits: Seq[String] = Seq(
     """CREATE TEMP TABLE ht_e AS
       |SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem""".stripMargin,
     """CREATE TEMP TABLE ht_n AS
@@ -136,7 +136,7 @@ object InvariantOracles {
       |  WHERE r.id IS NULL OR h.id IS NULL OR r.hub != h.hub OR r.auth != h.auth
       |) LIMIT 20""".stripMargin)
 
-  private val modularity: Seq[String] = Seq(
+  private[graft] val modularity: Seq[String] = Seq(
     """CREATE TEMP TABLE md_ed AS
       |SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem""".stripMargin,
     """CREATE TEMP TABLE md_e AS
@@ -175,7 +175,7 @@ object InvariantOracles {
       |  FROM md_e e LEFT JOIN md_lab l ON l.id = e.src WHERE l.id IS NULL
       |) LIMIT 20""".stripMargin)
 
-  private val dbscan: Seq[String] = Seq(
+  private[graft] val dbscan: Seq[String] = Seq(
     """CREATE TEMP TABLE db_p AS
       |SELECT c_custkey AS id,
       |  CAST(concat('0x', substr(md5(concat('gx', CAST(c_custkey AS VARCHAR))), 1, 15)) AS BIGINT) % 1000000 AS x,
@@ -289,7 +289,7 @@ object InvariantOracles {
          |WHERE q.x != q.y""".stripMargin)
   }
 
-  private val ivfpq: Seq[String] = Seq(
+  private[graft] val ivfpq: Seq[String] = Seq(
     """CREATE TEMP TABLE iv_qz AS
       |SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
       |FROM embeddings""".stripMargin,
@@ -364,7 +364,7 @@ object InvariantOracles {
     * per-list counts, a missing list directory, or a sidecar id set
     * that doesn't match. The full-outer join also pins the corpus
     * total (equal id sets + equal per-list counts ⇒ equal sums). */
-  private val ivfpqIndexed: Seq[String] = ivfpq.dropRight(1) ++ Seq(
+  private[graft] val ivfpqIndexed: Seq[String] = ivfpq.dropRight(1) ++ Seq(
     """CREATE TEMP TABLE iv_layout_expect AS
       |SELECT c.cid AS list_id, CAST(COALESCE(x.n, 0) AS BIGINT) AS n_rows
       |FROM (SELECT vec_id AS cid FROM embeddings WHERE vec_id < 8) c
@@ -402,7 +402,7 @@ object InvariantOracles {
     * changed/missing/extra (id_a, id_b, dist2) row flips its
     * bucket's count or hash-sum. Soundness AND completeness are both
     * fully covered (dist2 participates in the hash). */
-  private val geoRadius: Seq[String] = Seq(
+  private[graft] val geoRadius: Seq[String] = Seq(
     """CREATE TEMP TABLE gr_g AS
       |SELECT id, x, y, x // 20000 AS cx, y // 20000 AS cy FROM (
       |  SELECT c_custkey AS id,
@@ -452,7 +452,7 @@ object InvariantOracles {
     *    that legitimately belongs in the result is the one class this
     *    stages does not fully cover at sf10 — stated here openly; the
     *    full replay covers it at sf0.001–sf1. */
-  private val jaroRank: Seq[String] = Seq(
+  private[graft] val jaroRank: Seq[String] = Seq(
     """CREATE TEMP TABLE jr_dirty AS
       |SELECT p_partkey AS dirty_id, replace(p_name, 'e', '') AS dirty_name,
       |  regexp_replace(lower(trim(replace(p_name, 'e', ''))), '[aeiou ]', '', 'g') AS blk
@@ -505,7 +505,7 @@ object InvariantOracles {
     * membership + carried-string exactness + completeness are EXACT
     * over all rows (Levenshtein runs only on the anti-set);
     * the dist VALUE is recomputed on the pinned 1-in-37 stratum. */
-  private val fuzzyMatch: Seq[String] = Seq(
+  private[graft] val fuzzyMatch: Seq[String] = Seq(
     """CREATE TEMP TABLE fz_dirty AS
       |SELECT p_partkey AS dirty_id, replace(p_name, 'e', '') AS dirty_name,
       |  regexp_replace(lower(trim(replace(p_name, 'e', ''))), '[aeiou ]', '', 'g') AS blk
@@ -585,7 +585,7 @@ object InvariantOracles {
     * must equal `result` EXACTLY — the kcore/hits transition-check
     * pattern, full-strength (every node's label re-derived
     * independently of the engine). */
-  private val labelProp: Seq[String] = Seq(
+  private[graft] val labelProp: Seq[String] = Seq(
     """CREATE TEMP TABLE lp_ed AS
       |SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem""".stripMargin,
     """CREATE TEMP TABLE lp_e AS
@@ -611,7 +611,7 @@ object InvariantOracles {
     * conductance consumes the identical shared labels frame), plus
     * the unlabeled-endpoint guard so a labels dump missing nodes
     * cannot silently shrink the edge pass. */
-  private val conductance: Seq[String] = Seq(
+  private[graft] val conductance: Seq[String] = Seq(
     """CREATE TEMP TABLE cd_ed AS
       |SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem""".stripMargin,
     """CREATE TEMP TABLE cd_e AS
@@ -640,31 +640,4 @@ object InvariantOracles {
       |  SELECT 'unlabeled_endpoint', CAST(e.src AS VARCHAR)
       |  FROM cd_e e LEFT JOIN cd_lab l ON l.id = e.src WHERE l.id IS NULL
       |) LIMIT 20""".stripMargin)
-
-  /** Query name → ordered DuckDB statements; the last SELECTs
-    * violation rows (zero rows = pass_invariant). */
-  val sql: Map[String, Seq[String]] = Map(
-    "q_kcore" -> kcore,
-    "q_hits" -> hits,
-    "q_modularity" -> modularity,
-    "q_dbscan" -> dbscan,
-    "q_ivfpq_topk" -> ivfpq,
-    // the persisted-index probe (r13) returns the SAME approximation
-    // as the fused instance on the same params — the identical exact
-    // recompute certifies its dump, and its replay oracle (the
-    // q_ivfpq_topk replica) hits the same ~500 s DuckDB OOM wall at
-    // sf1 that put q_ivfpq_topk on this list in r11. Since r14 its
-    // staged list ALSO reconciles the persisted index's per-list
-    // layout via the engine's q_ivfpq_layout dump (see ivfpqIndexed).
-    "q_ivfpq_indexed" -> ivfpqIndexed,
-    // the sf10 tier (r14 — these three replays are fine through sf1
-    // and stay the primary gate there; only the sf10 gate maps them
-    // here, where their candidate volumes grow superlinearly):
-    "q_geo_radius" -> geoRadius,
-    "q_jaro_rank" -> jaroRank,
-    "q_fuzzy_match" -> fuzzyMatch,
-    // sf10 tier, second wave (r14): CTE-re-inlining spill victims —
-    // replays green through sf1, >40 GiB DuckDB spill at sf10
-    "q_labelprop" -> labelProp,
-    "q_conductance" -> conductance)
 }

@@ -9,7 +9,7 @@ object Verify {
     // filter is a dev-loop convenience (the driver always passes 2)
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(SparkEntry.queryFilter(args(2), "the Verify filter")) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     // decoupled from cpus for memory-constrained runs (see Bench)

@@ -34,12 +34,6 @@ object TextFunctions {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Character n-gram shingles (distinct). */
-  def charShingles(text: Column, n: Int): Column =
-    array_distinct(
-      transform(sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-        i => text.substr(i, lit(n))))
-
   /** Deterministic 60-bit hash of a string: first 15 hex chars of md5.
     * Fits a signed long; reproducible in DuckDB as
     * CAST('0x'||substr(md5(x),1,15) AS BIGINT).
@@ -91,12 +85,6 @@ object TextFunctions {
   /** Number of non-alphanumeric, non-space characters. */
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[^A-Za-z0-9 ]", ""))
-
-  /** Stopword ratio over a combined marker vocabulary. */
-  def stopwordRatio(text: Column): Column = {
-    val all = LangMarkers.flatMap(_._2).distinct
-    markerCount(text, all).cast("double") / greatest(size(tokens(text)), lit(1)).cast("double")
-  }
 
   /** BPE-ish token count: words, digits, and individual symbols as
     * separate tokens (approximates subword tokenizer counts within a

@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
   *    and only the small rank frame (one long per node) moves. The
   *    per-iteration exchange volume drops from O(|E|) to O(|V|);
   *    PageRankSpec asserts the edge side of the loop join is
-  *    exchange-free, and `Profile pagerank` measures the effect at
-  *    1× and 10× edges.
+  *    exchange-free, and SCALE_NOTES ("Bucketed PageRank") records
+  *    the effect at 1× and 10× edges.
   *
   * Every iteration truncates the plan to constant size (the
   * `Components` loop lesson), so 20 iterations cost 20 bounded

@@ -81,7 +81,7 @@ object ProductQuantizer {
     * `adcTopK` are unchanged; the stand-in stays the oracle path
     * (its codebook is SQL-replicable; a trained one would need the
     * whole Lloyd's loop in SQL), trained is the production path —
-    * Profile `pq` measures the recall it buys. */
+    * SCALE_NOTES' round-6 PQ table records the recall it buys. */
   def trainedModel(corpus: DataFrame, m: Int, k: Int, iters: Int): Model = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
     val init = model(corpus, m, k)

@@ -37,35 +37,6 @@ object Checkpoints {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
     else df.localCheckpoint(true)
 
-  /** Round-`i` loop truncation at half cadence in local mode (r14
-    * optimization): a loop body that references its previous state
-    * ONCE grows the plan linearly, so cutting every SECOND round
-    * still bounds the plan at two rounds' depth while halving the
-    * eager materializations — each skipped cut saves one job launch,
-    * one AQE replan, and one block-store write+read of the state
-    * frame (measured: the iterative graph family spent more wall in
-    * per-round checkpoint jobs than in its shuffles at sf0.1; the
-    * shuffles themselves are unchanged — exchanges still run exactly
-    * once inside the following round's job via shuffle reuse).
-    *
-    * Under a configured checkpoint DIR (reliable mode) every round
-    * still cuts: there the checkpoint is the executor-loss recovery
-    * point — the durability contract in the object doc — not just a
-    * plan bound. NOT for loops that reference the previous state more
-    * than once per round (plan size would double per skipped cut —
-    * the Components lesson stands). */
-  def truncateEvery(i: Int, k: Int = 2)(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else if (i % k == k - 1) df.localCheckpoint(true)
-    else df
-
-  /** [[truncateEvery]] with a guaranteed cut on the LAST round, so a
-    * loop's returned state is always materialized whatever the
-    * cadence — callers (memos, specs, multi-consumer plans) rely on
-    * the final frame being a constant-size checkpoint scan. */
-  def truncateLoop(i: Int, iters: Int, k: Int = 2)(df: DataFrame): DataFrame =
-    if (i == iters - 1) truncate(df) else truncateEvery(i, k)(df)
-
   /** LAZY executor-local cut for fused fixed-round loops (r15): the
     * returned frame scans a checkpoint-marked RDD — the logical plan
     * is bounded to constant size per round exactly as with
@@ -83,18 +54,6 @@ object Checkpoints {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
     else df.localCheckpoint(false)
 
-  /** Run a fixed-shape loop body with adaptive execution OFF, in
-    * executor-local mode only (restored after; reliable mode runs the
-    * body untouched — there each round is its own recovery-point job
-    * and AQE's runtime sizing keeps its value). Two reasons, both
-    * measured at sf0.1 (r15): (1) AQE re-plans the IDENTICAL loop
-    * plan every round — pure driver latency for a shape that never
-    * changes; (2) an AQE root materializes its exchange stages
-    * EAGERLY when the plan is turned into an RDD, which would defeat
-    * [[truncateFused]]'s single-job fusion. Loop bodies pre-size
-    * their exchanges explicitly (the operators repartition on the
-    * session's shuffle parallelism), so the static planner's shape is
-    * already the right one at any scale. */
   /** Pin a loop frame's layout for [[fusedLoop]]: explicit hash
     * partitioning on `keys` at the session's shuffle parallelism,
     * eagerly truncated. The checkpoint scan PRESERVES the output
@@ -113,6 +72,18 @@ object Checkpoints {
     truncate(df.repartition(
       df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*))
 
+  /** Run a fixed-shape loop body with adaptive execution OFF, in
+    * executor-local mode only (restored after; reliable mode runs the
+    * body untouched — there each round is its own recovery-point job
+    * and AQE's runtime sizing keeps its value). Two reasons, both
+    * measured at sf0.1 (r15): (1) AQE re-plans the IDENTICAL loop
+    * plan every round — pure driver latency for a shape that never
+    * changes; (2) an AQE root materializes its exchange stages
+    * EAGERLY when the plan is turned into an RDD, which would defeat
+    * [[truncateFused]]'s single-job fusion. Loop bodies pre-size
+    * their exchanges explicitly (the operators repartition on the
+    * session's shuffle parallelism), so the static planner's shape is
+    * already the right one at any scale. */
   def fusedLoop[T](df: DataFrame)(body: => T): T = {
     val spark = df.sparkSession
     if (spark.sparkContext.getCheckpointDir.isDefined) body

@@ -3,16 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Row-shaping operators: explode, envelope assembly, discriminated
-  * union (SURVEY §2.2 O5/O10, §2.7).
+/** Row-shaping operators: envelope assembly, discriminated union
+  * (SURVEY §2.2 O10, §2.7).
   */
 object Shaping {
-
-  /** O5 — explode an array column to one row per element, keeping
-    * parent columns (reference: per-hour rows out of the history
-    * payload's hourly array, dags/fetch_weather.py:67,73-85). */
-  def explodeArray(df: DataFrame, arrayCol: String, as: String): DataFrame =
-    df.withColumn(as, explode(col(arrayCol))).drop(arrayCol)
 
   /** O10 — envelope projection: wrap payload columns into a nested
     * struct and stamp batch metadata (reference builds

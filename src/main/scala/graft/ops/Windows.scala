@@ -22,12 +22,6 @@ object Windows {
   def topKPerKey(df: DataFrame, partCols: Seq[String], orderBy: Seq[Column], k: Int): DataFrame =
     ranked(df, partCols, orderBy).where(col("rnk") <= k)
 
-  /** W2 — a per-group flag stamped onto every row of the group
-    * (reference: is_full_recap distributed to all hours,
-    * dags/daily_compile_weather.py:114-126). */
-  def groupFlag(df: DataFrame, partCols: Seq[String], flag: Column, flagCol: String): DataFrame =
-    df.withColumn(flagCol, max(flag).over(Window.partitionBy(partCols.map(col): _*)))
-
   /** Lag delta — change vs previous row per key in event-time order
     * (the reference's implied "reading vs previous cycle" semantics). */
   def lagDelta(df: DataFrame, partCols: Seq[String], orderBy: Seq[Column], valueCol: String): DataFrame = {

@@ -1,0 +1,911 @@
+package graft
+package queries
+
+import org.apache.spark.sql.functions._
+
+/** Registered queries for iterative graph analytics over the shared
+  * bipartite and co-occurrence edge frames. */
+private[graft] object GraphQueries {
+  val specs: Seq[QuerySpec] = Seq(
+    // ---- degree distribution of the shared bipartite graph — the
+    // first graph audit anyone runs (hub detection, power-law tail):
+    // one degree aggregate folded to (degree, n_nodes) plus each
+    // row's share of nodes in exact nano-units ----
+    QuerySpec("q_degree_dist", (s, dir) => {
+      val edges = graft.ops.Graphs.bipartiteSym(s, dir)
+      val deg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+      val dist = deg.groupBy(col("deg")).agg(count(lit(1)).as("n_nodes"))
+      val total = deg.agg(count(lit(1)).as("n_total"))
+      dist.crossJoin(broadcast(total))
+        .select(col("deg"), col("n_nodes"),
+          round(lit(1e9) * col("n_nodes").cast("double") /
+            col("n_total").cast("double")).cast("long").as("share_nano"))
+        .orderBy(col("deg"))
+    },
+      // one degree aggregate over the symmetric edge replica
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), deg AS (
+        |  SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1
+        |), dist AS (
+        |  SELECT deg, CAST(count(*) AS BIGINT) AS n_nodes FROM deg GROUP BY 1
+        |), t AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS n_total FROM deg
+        |)
+        |SELECT deg, n_nodes,
+        |  CAST(round(1e9 * CAST(n_nodes AS DOUBLE) / CAST(n_total AS DOUBLE)) AS BIGINT) AS share_nano
+        |FROM dist, t ORDER BY deg""".stripMargin, shares = Set("graphs")),
+    // ---- per-community conductance of the labelprop partition:
+    // the boundary-leakiness score modularity misses (Cheeger's
+    // quantity); exact integer cut/volume sums over the shared
+    // cached graph ----
+    QuerySpec("q_conductance", (s, dir) => {
+      graft.operators.GraphStats.conductance(
+          graft.ops.Graphs.bipartiteSym(s, dir), graft.ops.Graphs.labelsBipartite(s, dir))
+        .orderBy(col("lab"))
+    },
+      // rides the q_labelprop unroll, then per-community cut/volume
+      // sums and the mirrored φ division
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), l0 AS (
+        |  SELECT DISTINCT src AS id, src AS lab FROM e
+        |), v1 AS (
+        |  SELECT id, lab, count(*) AS c FROM (
+        |    SELECT e.dst AS id, l.lab FROM e JOIN l0 l ON l.id = e.src
+        |    UNION ALL SELECT id, lab FROM l0
+        |  ) GROUP BY 1, 2
+        |), l1 AS (
+        |  SELECT id, lab FROM (
+        |    SELECT id, lab, row_number() OVER (
+        |      PARTITION BY id ORDER BY c DESC, lab) AS rn FROM v1
+        |  ) WHERE rn = 1
+        |), v2 AS (
+        |  SELECT id, lab, count(*) AS c FROM (
+        |    SELECT e.dst AS id, l.lab FROM e JOIN l1 l ON l.id = e.src
+        |    UNION ALL SELECT id, lab FROM l1
+        |  ) GROUP BY 1, 2
+        |), l2 AS (
+        |  SELECT id, lab FROM (
+        |    SELECT id, lab, row_number() OVER (
+        |      PARTITION BY id ORDER BY c DESC, lab) AS rn FROM v2
+        |  ) WHERE rn = 1
+        |), v3 AS (
+        |  SELECT id, lab, count(*) AS c FROM (
+        |    SELECT e.dst AS id, l.lab FROM e JOIN l2 l ON l.id = e.src
+        |    UNION ALL SELECT id, lab FROM l2
+        |  ) GROUP BY 1, 2
+        |), l3 AS (
+        |  SELECT id, lab FROM (
+        |    SELECT id, lab, row_number() OVER (
+        |      PARTITION BY id ORDER BY c DESC, lab) AS rn FROM v3
+        |  ) WHERE rn = 1
+        |), parts AS (
+        |  SELECT ls.lab AS lab, CAST(count(*) AS BIGINT) AS vol,
+        |    CAST(sum(CASE WHEN ls.lab <> ld.lab THEN 1 ELSE 0 END) AS BIGINT) AS cut
+        |  FROM e JOIN l3 ls ON ls.id = e.src JOIN l3 ld ON ld.id = e.dst
+        |  GROUP BY 1
+        |), m2t AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS m2 FROM e
+        |)
+        |SELECT CAST(lab AS BIGINT) AS lab, vol, cut,
+        |  CASE WHEN least(vol, m2 - vol) = 0 THEN NULL
+        |    ELSE CAST(round(1e9 * CAST(cut AS DOUBLE)
+        |      / CAST(least(vol, m2 - vol) AS DOUBLE)) AS BIGINT)
+        |  END AS phi_nano
+        |FROM parts, m2t ORDER BY lab""".stripMargin, invariant = InvariantOracles.conductance,
+      shares = Set("graphs", "lpa")),
+    // ---- DBSCAN density clustering over the q_geo_radius point
+    // cloud: grid-bucketed radius join → core points → components
+    // over core-core edges → deterministic min-cluster border
+    // assignment. Exact integers end to end ----
+    // the labeling itself is memoized in Graphs.dbscanCustomerGrid
+    // (the labelsBipartite pattern): the star-loop cost is a shared
+    // rebuildable artifact paid once in Bench's warmup_shared_sec,
+    // and the memoized result is bit-identical to a fresh run
+    QuerySpec("q_dbscan", (s, dir) =>
+      graft.ops.Graphs.dbscanCustomerGrid(s, dir).orderBy(col("id")),
+      // brute-force neighbor graph + the recursive min-label closure
+      // (the componentsSql pattern); border = min core-neighbor cluster
+      """WITH RECURSIVE p AS (
+        |  SELECT c_custkey AS id,
+        |    CAST(concat('0x', substr(md5(concat('gx', CAST(c_custkey AS VARCHAR))), 1, 15))
+        |         AS BIGINT) % 1000000 AS x,
+        |    CAST(concat('0x', substr(md5(concat('gy', CAST(c_custkey AS VARCHAR))), 1, 15))
+        |         AS BIGINT) % 1000000 AS y
+        |  FROM customer
+        |), pairs AS (
+        |  SELECT a.id AS id_a, b.id AS id_b
+        |  FROM p a JOIN p b ON a.id < b.id
+        |  WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 400000000
+        |), sym AS (
+        |  SELECT id_a AS id, id_b AS nb FROM pairs
+        |  UNION ALL SELECT id_b, id_a FROM pairs
+        |), core AS (
+        |  SELECT id FROM sym GROUP BY id HAVING count(*) >= 2
+        |), ce AS (
+        |  SELECT s.id AS src, s.nb AS dst FROM sym s
+        |  JOIN core c1 ON c1.id = s.id JOIN core c2 ON c2.id = s.nb
+        |), reach(id, r) AS (
+        |  SELECT src, src FROM ce
+        |  UNION
+        |  SELECT e.src, r.r FROM ce e JOIN reach r ON r.id = e.dst
+        |), comp AS (
+        |  SELECT id, min(r) AS cluster_id FROM reach GROUP BY 1
+        |), core_clusters AS (
+        |  SELECT c.id, coalesce(m.cluster_id, c.id) AS cluster_id
+        |  FROM core c LEFT JOIN comp m USING (id)
+        |), border AS (
+        |  SELECT s.id, min(cc.cluster_id) AS cluster_id
+        |  FROM sym s JOIN core_clusters cc ON cc.id = s.nb
+        |  WHERE s.id NOT IN (SELECT id FROM core)
+        |  GROUP BY 1
+        |)
+        |SELECT p.id,
+        |  CASE WHEN cc.id IS NOT NULL THEN 'core'
+        |       WHEN b.id IS NOT NULL THEN 'border' ELSE 'noise' END AS role,
+        |  coalesce(cc.cluster_id, b.cluster_id) AS cluster_id
+        |FROM p LEFT JOIN core_clusters cc ON cc.id = p.id
+        |LEFT JOIN border b ON b.id = p.id
+        |ORDER BY p.id""".stripMargin, invariant = InvariantOracles.dbscan, shares = Set("dbscan")),
+    // ---- weighted shortest paths: 4 Bellman-Ford relaxation
+    // rounds from the %202 seed parts, integer weights
+    // 1 + (src+dst)%7 — the union-min relaxation replays as 4
+    // unrolled SQL levels ----
+    QuerySpec("q_sssp", (s, dir) => {
+      val ps = graft.ops.Graphs.bipartite(s, dir)
+      val sym = graft.ops.Graphs.symmetrize(ps)
+      val edges = sym.withColumn("w", lit(1L) + (col("src") + col("dst")) % 7)
+      val sources = ps.select(col("src").as("id")).distinct()
+        .where(col("id") % 202 === 0)
+      graft.operators.Sssp.distances(edges, sources, rounds = 4)
+        .orderBy(col("id"))
+    },
+      // each Bellman-Ford round is the union-min: relaxation
+      // candidates UNION ALL current distances, min() per node
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), sym AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), e AS (
+        |  SELECT src, dst, 1 + (src + dst) % 7 AS w FROM sym
+        |), s0 AS (
+        |  SELECT DISTINCT src AS id, CAST(0 AS BIGINT) AS dist FROM ed WHERE src % 202 = 0
+        |), d1 AS (
+        |  SELECT id, min(dist) AS dist FROM (
+        |    SELECT e.dst AS id, d.dist + e.w AS dist FROM e JOIN s0 d ON d.id = e.src
+        |    UNION ALL SELECT id, dist FROM s0
+        |  ) GROUP BY id
+        |), d2 AS (
+        |  SELECT id, min(dist) AS dist FROM (
+        |    SELECT e.dst AS id, d.dist + e.w AS dist FROM e JOIN d1 d ON d.id = e.src
+        |    UNION ALL SELECT id, dist FROM d1
+        |  ) GROUP BY id
+        |), d3 AS (
+        |  SELECT id, min(dist) AS dist FROM (
+        |    SELECT e.dst AS id, d.dist + e.w AS dist FROM e JOIN d2 d ON d.id = e.src
+        |    UNION ALL SELECT id, dist FROM d2
+        |  ) GROUP BY id
+        |), d4 AS (
+        |  SELECT id, min(dist) AS dist FROM (
+        |    SELECT e.dst AS id, d.dist + e.w AS dist FROM e JOIN d3 d ON d.id = e.src
+        |    UNION ALL SELECT id, dist FROM d3
+        |  ) GROUP BY id
+        |)
+        |SELECT CAST(id AS BIGINT) AS id, CAST(dist AS BIGINT) AS dist
+        |FROM d4 ORDER BY id""".stripMargin, shares = Set("graphs")),
+    // ---- Adamic-Adar link prediction: wedge pairs on the (eighth
+    // of parts) bipartite graph scored by shared-neighbor obscurity;
+    // wedge volume checked loudly before the join ----
+    QuerySpec("q_adamic_adar", (s, dir) => {
+      // l_partkey % 8 == 0 ⟺ src (= 2*partkey) % 16 == 0, so the
+      // eighth-of-parts instance is a narrow filter over the shared
+      // cached bipartite frame instead of its own lineitem distinct
+      val ps = graft.ops.Graphs.bipartite(s, dir).where(col("src") % 16 === 0)
+      val sym = graft.ops.Graphs.symmetrize(ps)
+      graft.operators.GraphStats.adamicAdar(sym, k = 100)
+    },
+      // per-wedge nano rounding then exact integer sums; top-100 by
+      // the (score DESC, u, v) total order
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst
+        |  FROM lineitem WHERE l_partkey % 8 = 0
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), deg AS (
+        |  SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1
+        |), w AS (
+        |  SELECT a.dst AS u, b.dst AS v, a.src AS z
+        |  FROM e a JOIN e b ON a.src = b.src WHERE a.dst < b.dst
+        |), sc AS (
+        |  SELECT u, v, CAST(count(*) AS BIGINT) AS common_neighbors,
+        |    CAST(sum(CAST(round(1e9 / ln(CAST(deg.deg AS DOUBLE))) AS BIGINT)) AS BIGINT) AS aa_nano
+        |  FROM w JOIN deg ON deg.id = w.z GROUP BY 1, 2
+        |)
+        |SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v,
+        |  common_neighbors, aa_nano
+        |FROM sc
+        |WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.src = sc.u AND e.dst = sc.v)
+        |ORDER BY aa_nano DESC, u, v LIMIT 100""".stripMargin,
+      // ...and the exact Adamic-Adar is the REFUSAL receipt: its
+      // wedge-volume guard trips by design at sf10 (781M wedges), so
+      // its -1 must publish as a receipt refusal, not an engine
+      // failure — the capped twin is the production path
+      regime = Some("refusal-reference"), shares = Set("graphs")),
+    // ---- hub-capped Adamic-Adar: the PRODUCTION twin on the same
+    // instance (r12 verdict item #4 — the exact form above is the
+    // refusing receipt at sf10's 781M wedges). Each node keeps its 16
+    // smallest neighbors; exact AA over the capped graph (the cap IS
+    // the definition, so the oracle replays it), wedge volume
+    // ≤ |V|·256 — linear in nodes. Adjacent pairs excluded against
+    // the FULL graph ----
+    QuerySpec("q_adamic_adar_capped", (s, dir) => {
+      val ps = graft.ops.Graphs.bipartite(s, dir).where(col("src") % 16 === 0)
+      val sym = graft.ops.Graphs.symmetrize(ps)
+      graft.operators.GraphStats.adamicAdarCapped(sym, k = 100, hubCap = 16)
+    },
+      // capped twin: row_number-by-smallest-dst keeps 16 neighbors per
+      // node, degrees and wedges over the CAPPED adjacency, adjacency
+      // exclusion against the FULL graph — the cap replayed exactly
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst
+        |  FROM lineitem WHERE l_partkey % 8 = 0
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), ec AS (
+        |  SELECT src, dst FROM (
+        |    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY dst) AS rn FROM e
+        |  ) WHERE rn <= 16
+        |), deg AS (
+        |  SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM ec GROUP BY 1
+        |), w AS (
+        |  SELECT a.dst AS u, b.dst AS v, a.src AS z
+        |  FROM ec a JOIN ec b ON a.src = b.src WHERE a.dst < b.dst
+        |), sc AS (
+        |  SELECT u, v, CAST(count(*) AS BIGINT) AS common_neighbors,
+        |    CAST(sum(CAST(round(1e9 / ln(CAST(deg.deg AS DOUBLE))) AS BIGINT)) AS BIGINT) AS aa_nano
+        |  FROM w JOIN deg ON deg.id = w.z GROUP BY 1, 2
+        |)
+        |SELECT CAST(u AS BIGINT) AS u, CAST(v AS BIGINT) AS v,
+        |  common_neighbors, aa_nano
+        |FROM sc
+        |WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.src = sc.u AND e.dst = sc.v)
+        |ORDER BY aa_nano DESC, u, v LIMIT 100""".stripMargin, regime = Some("production-twin"),
+      shares = Set("graphs")),
+    // ---- the cap's explicit cost: dropped-wedge accounting from one
+    // degree aggregate — published as its own oracle-gated row so the
+    // cap is a judged trade, not a trusted one ----
+    QuerySpec("q_adamic_adar_capstats", (s, dir) => {
+      val ps = graft.ops.Graphs.bipartite(s, dir).where(col("src") % 16 === 0)
+      val sym = graft.ops.Graphs.symmetrize(ps)
+      graft.operators.GraphStats.adamicAdarCapStats(sym, hubCap = 16)
+    },
+      // the cap's dropped-wedge accounting: C(d,2) vs C(min(d,16),2)
+      // sums over the uncapped degree frame — d*(d-1) is always even,
+      // so integer // 2 is exact
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst
+        |  FROM lineitem WHERE l_partkey % 8 = 0
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), deg AS (
+        |  SELECT src, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY 1
+        |)
+        |SELECT CAST(count(*) AS BIGINT) AS n_nodes,
+        |  CAST(sum(CASE WHEN d > 16 THEN 1 ELSE 0 END) AS BIGINT) AS nodes_capped,
+        |  CAST(sum(d * (d - 1) // 2) AS BIGINT) AS wedges_exact,
+        |  CAST(sum(least(d, 16) * (least(d, 16) - 1) // 2) AS BIGINT) AS wedges_kept,
+        |  CAST(sum(d * (d - 1) // 2) - sum(least(d, 16) * (least(d, 16) - 1) // 2) AS BIGINT) AS wedges_dropped
+        |FROM deg""".stripMargin, shares = Set("graphs")),
+    // ---- Newman modularity of the labelprop partition: integer
+    // intra-edge and degree-mass sums per community, one IEEE
+    // formula per community row — grades the community structure
+    // the q_labelprop run found ----
+    QuerySpec("q_modularity", (s, dir) => {
+      graft.operators.GraphStats.modularity(
+          graft.ops.Graphs.bipartiteSym(s, dir), graft.ops.Graphs.labelsBipartite(s, dir))
+        .orderBy(col("lab"))
+    },
+      // modularity rides the q_labelprop unroll: the partition is the
+      // same 3-round replica, then integer intra/mass sums and the
+      // mirrored Q_c formula per community
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), l0 AS (
+        |  SELECT DISTINCT src AS id, src AS lab FROM e
+        |), v1 AS (
+        |  SELECT id, lab, count(*) AS c FROM (
+        |    SELECT e.dst AS id, l.lab FROM e JOIN l0 l ON l.id = e.src
+        |    UNION ALL SELECT id, lab FROM l0
+        |  ) GROUP BY 1, 2
+        |), l1 AS (
+        |  SELECT id, lab FROM (
+        |    SELECT id, lab, row_number() OVER (
+        |      PARTITION BY id ORDER BY c DESC, lab) AS rn FROM v1
+        |  ) WHERE rn = 1
+        |), v2 AS (
+        |  SELECT id, lab, count(*) AS c FROM (
+        |    SELECT e.dst AS id, l.lab FROM e JOIN l1 l ON l.id = e.src
+        |    UNION ALL SELECT id, lab FROM l1
+        |  ) GROUP BY 1, 2
+        |), l2 AS (
+        |  SELECT id, lab FROM (
+        |    SELECT id, lab, row_number() OVER (
+        |      PARTITION BY id ORDER BY c DESC, lab) AS rn FROM v2
+        |  ) WHERE rn = 1
+        |), v3 AS (
+        |  SELECT id, lab, count(*) AS c FROM (
+        |    SELECT e.dst AS id, l.lab FROM e JOIN l2 l ON l.id = e.src
+        |    UNION ALL SELECT id, lab FROM l2
+        |  ) GROUP BY 1, 2
+        |), l3 AS (
+        |  SELECT id, lab FROM (
+        |    SELECT id, lab, row_number() OVER (
+        |      PARTITION BY id ORDER BY c DESC, lab) AS rn FROM v3
+        |  ) WHERE rn = 1
+        |), deg AS (
+        |  SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1
+        |), m2t AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS m2 FROM e
+        |), intra AS (
+        |  SELECT ls.lab AS lab, CAST(count(*) AS BIGINT) AS intra_edges
+        |  FROM e JOIN l3 ls ON ls.id = e.src JOIN l3 ld ON ld.id = e.dst
+        |  WHERE ls.lab = ld.lab GROUP BY 1
+        |), mass AS (
+        |  SELECT l3.lab, CAST(sum(deg.deg) AS BIGINT) AS degree_mass
+        |  FROM deg JOIN l3 ON l3.id = deg.id GROUP BY 1
+        |)
+        |SELECT CAST(mass.lab AS BIGINT) AS lab,
+        |  CAST(COALESCE(intra.intra_edges, 0) AS BIGINT) AS intra_edges,
+        |  mass.degree_mass,
+        |  CAST(round(1e9 * (
+        |    CAST(COALESCE(intra.intra_edges, 0) AS DOUBLE) / CAST(m2 AS DOUBLE) -
+        |    (CAST(degree_mass AS DOUBLE) / CAST(m2 AS DOUBLE)) *
+        |    (CAST(degree_mass AS DOUBLE) / CAST(m2 AS DOUBLE)))) AS BIGINT) AS q_nano
+        |FROM mass LEFT JOIN intra USING (lab), m2t
+        |ORDER BY lab""".stripMargin, invariant = InvariantOracles.modularity,
+      shares = Set("graphs", "lpa")),
+    // ---- degree assortativity of the bipartite graph: exact
+    // integer moment sums over one degree join, Pearson formula as
+    // the only IEEE step ----
+    QuerySpec("q_assortativity", (s, dir) => {
+      graft.operators.GraphStats.assortativity(graft.ops.Graphs.bipartiteSym(s, dir))
+    },
+      // one degree join then pure integer moment sums; the Pearson
+      // tree is mirrored: (m·sxy − sx·sy) / sqrt((m·sxx − sx²)(m·syy − sy²))
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), deg AS (
+        |  SELECT src AS id, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1
+        |), xy AS (
+        |  SELECT dx.deg AS x, dy.deg AS y
+        |  FROM e JOIN deg dx ON dx.id = e.src JOIN deg dy ON dy.id = e.dst
+        |), s AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS m2,
+        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+        |    CAST(sum(x*y) AS BIGINT) AS sxy,
+        |    CAST(sum(x*x) AS BIGINT) AS sxx, CAST(sum(y*y) AS BIGINT) AS syy
+        |  FROM xy
+        |)
+        |SELECT m2,
+        |  CASE WHEN (CAST(m2 AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) = 0
+        |         OR (CAST(m2 AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) = 0
+        |    THEN NULL
+        |    ELSE CAST(round((1e9 * (CAST(m2 AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))) /
+        |      sqrt((CAST(m2 AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
+        |           (CAST(m2 AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))) AS BIGINT)
+        |  END AS r_nano
+        |FROM s""".stripMargin, shares = Set("graphs")),
+    // ---- HITS hubs & authorities (2 iterations) over the DIRECTED
+    // part -> supplier graph: integer half-step sums with a
+    // ceil(max/1e9) rescale div — replays as an unrolled SQL replica
+    // with scalar-subquery divisors ----
+    QuerySpec("q_hits", (s, dir) => {
+      val edges = graft.ops.Graphs.bipartite(s, dir)
+      graft.operators.Hits.scores(edges, iters = 2)
+        .orderBy(col("id"))
+    },
+      // each HITS half-step: gather-sum, then the integer rescale
+      // x // GREATEST(1, (max+1e9-1)//1e9) as a scalar subquery —
+      // DuckDB floor division on non-negative longs ≡ Spark `div`
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), n AS (
+        |  SELECT src AS id FROM ed UNION SELECT dst FROM ed
+        |), h0 AS (
+        |  SELECT id, CAST(1 AS BIGINT) AS hub FROM n
+        |), a1r AS (
+        |  SELECT n.id, COALESCE(s.s, 0) AS auth FROM n LEFT JOIN (
+        |    SELECT e.dst AS id, CAST(sum(h.hub) AS BIGINT) AS s
+        |    FROM ed e JOIN h0 h ON h.id = e.src GROUP BY 1) s ON s.id = n.id
+        |), a1 AS (
+        |  SELECT id, auth // GREATEST(1, ((SELECT max(auth) FROM a1r) + 999999999) // 1000000000) AS auth
+        |  FROM a1r
+        |), h1r AS (
+        |  SELECT n.id, COALESCE(s.s, 0) AS hub FROM n LEFT JOIN (
+        |    SELECT e.src AS id, CAST(sum(a.auth) AS BIGINT) AS s
+        |    FROM ed e JOIN a1 a ON a.id = e.dst GROUP BY 1) s ON s.id = n.id
+        |), h1 AS (
+        |  SELECT id, hub // GREATEST(1, ((SELECT max(hub) FROM h1r) + 999999999) // 1000000000) AS hub
+        |  FROM h1r
+        |), a2r AS (
+        |  SELECT n.id, COALESCE(s.s, 0) AS auth FROM n LEFT JOIN (
+        |    SELECT e.dst AS id, CAST(sum(h.hub) AS BIGINT) AS s
+        |    FROM ed e JOIN h1 h ON h.id = e.src GROUP BY 1) s ON s.id = n.id
+        |), a2 AS (
+        |  SELECT id, auth // GREATEST(1, ((SELECT max(auth) FROM a2r) + 999999999) // 1000000000) AS auth
+        |  FROM a2r
+        |), h2r AS (
+        |  SELECT n.id, COALESCE(s.s, 0) AS hub FROM n LEFT JOIN (
+        |    SELECT e.src AS id, CAST(sum(a.auth) AS BIGINT) AS s
+        |    FROM ed e JOIN a2 a ON a.id = e.dst GROUP BY 1) s ON s.id = n.id
+        |), h2 AS (
+        |  SELECT id, hub // GREATEST(1, ((SELECT max(hub) FROM h2r) + 999999999) // 1000000000) AS hub
+        |  FROM h2r
+        |)
+        |SELECT CAST(h2.id AS BIGINT) AS id, CAST(h2.hub AS BIGINT) AS hub,
+        |  CAST(a2.auth AS BIGINT) AS auth
+        |FROM h2 JOIN a2 ON a2.id = h2.id
+        |ORDER BY id""".stripMargin, invariant = InvariantOracles.hits, shares = Set("graphs")),
+    // ---- synchronous label-propagation communities (3 rounds,
+    // deterministic (count DESC, label ASC) votes) over the
+    // part<->supplier bipartite graph — replays as a 3x-unrolled
+    // SQL replica, the q_pagerank precedent ----
+    QuerySpec("q_labelprop", (s, dir) => {
+      graft.ops.Graphs.labelsBipartite(s, dir)
+        .orderBy(col("id"))
+    },
+      // synchronous LPA unrolls: each round is a vote count plus the
+      // (count DESC, label ASC) pick — row_number is the SQL spelling
+      // of the operator's struct arg-min, both total orders
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), l0 AS (
+        |  SELECT DISTINCT src AS id, src AS lab FROM e
+        |), v1 AS (
+        |  SELECT id, lab, count(*) AS c FROM (
+        |    SELECT e.dst AS id, l.lab FROM e JOIN l0 l ON l.id = e.src
+        |    UNION ALL SELECT id, lab FROM l0
+        |  ) GROUP BY 1, 2
+        |), l1 AS (
+        |  SELECT id, lab FROM (
+        |    SELECT id, lab, row_number() OVER (
+        |      PARTITION BY id ORDER BY c DESC, lab) AS rn FROM v1
+        |  ) WHERE rn = 1
+        |), v2 AS (
+        |  SELECT id, lab, count(*) AS c FROM (
+        |    SELECT e.dst AS id, l.lab FROM e JOIN l1 l ON l.id = e.src
+        |    UNION ALL SELECT id, lab FROM l1
+        |  ) GROUP BY 1, 2
+        |), l2 AS (
+        |  SELECT id, lab FROM (
+        |    SELECT id, lab, row_number() OVER (
+        |      PARTITION BY id ORDER BY c DESC, lab) AS rn FROM v2
+        |  ) WHERE rn = 1
+        |), v3 AS (
+        |  SELECT id, lab, count(*) AS c FROM (
+        |    SELECT e.dst AS id, l.lab FROM e JOIN l2 l ON l.id = e.src
+        |    UNION ALL SELECT id, lab FROM l2
+        |  ) GROUP BY 1, 2
+        |), l3 AS (
+        |  SELECT id, lab FROM (
+        |    SELECT id, lab, row_number() OVER (
+        |      PARTITION BY id ORDER BY c DESC, lab) AS rn FROM v3
+        |  ) WHERE rn = 1
+        |)
+        |SELECT CAST(id AS BIGINT) AS id, CAST(lab AS BIGINT) AS lab
+        |FROM l3 ORDER BY id""".stripMargin,
+      // sf10 tier, second wave (r14): CTE-re-inlining spill victims —
+      // replays green through sf1, >40 GiB DuckDB spill at sf10
+      invariant = InvariantOracles.labelProp, shares = Set("graphs", "lpa")),
+    // ---- PageRank over the part<->supplier bipartite graph
+    // (node id = 2*partkey for parts, 2*suppkey+1 for suppliers;
+    // symmetric edges). Exact fixed-point arithmetic — floor-divided
+    // contributions and integer damping — makes 5 iterations
+    // bit-reproducible, so the oracle is a 5x-unrolled SQL replica ----
+    QuerySpec("q_pagerank", (s, dir) => {
+      val edges = graft.ops.Graphs.bipartiteSym(s, dir)
+      graft.operators.PageRank.ranks(edges, iters = 5)
+        .orderBy(col("id"))
+    },
+      // PageRank: 5 unrolled iterations of the same integer
+      // recurrence (r' = base + (17·Σ(r // deg)) // 20); DuckDB's //
+      // and Spark's `div` both floor on non-negative operands.
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), n AS (
+        |  SELECT DISTINCT src AS id FROM e
+        |), d AS (
+        |  SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1
+        |), ewd AS (
+        |  SELECT e.src, e.dst, d.deg FROM e JOIN d ON d.src = e.src
+        |), i0 AS (
+        |  SELECT id, CAST(1000000000 AS BIGINT) AS r FROM n
+        |), i1 AS (
+        |  SELECT n.id, 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i0 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |), i2 AS (
+        |  SELECT n.id, 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i1 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |), i3 AS (
+        |  SELECT n.id, 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i2 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |), i4 AS (
+        |  SELECT n.id, 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i3 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |), i5 AS (
+        |  SELECT n.id, 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i4 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |)
+        |SELECT id, CAST(r AS BIGINT) AS rank FROM i5 ORDER BY id""".stripMargin,
+      shares = Set("graphs")),
+    // ---- triangle counting with degree-ordered orientation over
+    // the parts-bought-together co-occurrence graph (edge = two
+    // parts in the same order). Exact integers end to end; the
+    // oracle replicates the identical orientation, so each triangle
+    // is counted once at its lowest-(deg,id) corner. Instance
+    // sizing: wedge volume (the algorithm's true cost, Σ outdeg²)
+    // grows with the SQUARE of co-occurrence density, so the gate
+    // instance takes the deterministic quarter of orders — the full
+    // graph is the SCALE_NOTES measurement, not the
+    // per-round bench ----
+    QuerySpec("q_triangles", (s, dir) => {
+      graft.operators.Triangles.perNodeCounts(graft.ops.Graphs.coocQuarter(s, dir))
+        .orderBy(col("id"))
+    },
+      // Triangles: the same degree-ordered orientation as the engine
+      // (orient each undirected edge from its (deg,id)-smaller
+      // endpoint), wedge join on the shared source, close with an
+      // oriented edge — each triangle materializes exactly once.
+      """WITH pe AS (
+        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+        |  FROM lineitem a JOIN lineitem b
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        |  WHERE a.l_orderkey % 4 = 0
+        |), deg AS (
+        |  SELECT id, CAST(count(*) AS BIGINT) AS d
+        |  FROM (SELECT u AS id FROM pe UNION ALL SELECT v AS id FROM pe)
+        |  GROUP BY 1
+        |), o AS (
+        |  SELECT
+        |    CASE WHEN du.d < dv.d OR (du.d = dv.d AND pe.u < pe.v) THEN pe.u ELSE pe.v END AS src,
+        |    CASE WHEN du.d < dv.d OR (du.d = dv.d AND pe.u < pe.v) THEN pe.v ELSE pe.u END AS dst,
+        |    CASE WHEN du.d < dv.d OR (du.d = dv.d AND pe.u < pe.v) THEN dv.d ELSE du.d END AS ddeg
+        |  FROM pe JOIN deg du ON du.id = pe.u JOIN deg dv ON dv.id = pe.v
+        |), tri AS (
+        |  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
+        |  FROM o e1
+        |  JOIN o e2 ON e1.src = e2.src
+        |    AND (e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst))
+        |  JOIN o e3 ON e3.src = e1.dst AND e3.dst = e2.dst
+        |)
+        |SELECT id, CAST(count(*) AS BIGINT) AS n_triangles
+        |FROM (SELECT a AS id FROM tri UNION ALL SELECT b FROM tri UNION ALL SELECT c FROM tri)
+        |GROUP BY id ORDER BY id""".stripMargin, shares = Set("graphs")),
+    // ---- local clustering coefficients over the same graph: every
+    // node with degree, triangle count, and cc = 2T/(deg·(deg−1))
+    // (NULL below degree 2 — undefined, not zero). Exact integers
+    // plus one IEEE division ----
+    QuerySpec("q_clustering", (s, dir) => {
+      graft.operators.Triangles.clusteringCoefficients(graft.ops.Graphs.coocQuarter(s, dir))
+        .orderBy(col("id"))
+    },
+      // Clustering coefficients: the q_triangles pipeline + a degree
+      // left join; cc = one IEEE division over exact integers.
+      """WITH pe AS (
+        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+        |  FROM lineitem a JOIN lineitem b
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        |  WHERE a.l_orderkey % 4 = 0
+        |), deg AS (
+        |  SELECT id, CAST(count(*) AS BIGINT) AS d
+        |  FROM (SELECT u AS id FROM pe UNION ALL SELECT v AS id FROM pe)
+        |  GROUP BY 1
+        |), o AS (
+        |  SELECT
+        |    CASE WHEN du.d < dv.d OR (du.d = dv.d AND pe.u < pe.v) THEN pe.u ELSE pe.v END AS src,
+        |    CASE WHEN du.d < dv.d OR (du.d = dv.d AND pe.u < pe.v) THEN pe.v ELSE pe.u END AS dst,
+        |    CASE WHEN du.d < dv.d OR (du.d = dv.d AND pe.u < pe.v) THEN dv.d ELSE du.d END AS ddeg
+        |  FROM pe JOIN deg du ON du.id = pe.u JOIN deg dv ON dv.id = pe.v
+        |), tri AS (
+        |  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
+        |  FROM o e1
+        |  JOIN o e2 ON e1.src = e2.src
+        |    AND (e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst))
+        |  JOIN o e3 ON e3.src = e1.dst AND e3.dst = e2.dst
+        |), tc AS (
+        |  SELECT id, CAST(count(*) AS BIGINT) AS n
+        |  FROM (SELECT a AS id FROM tri UNION ALL SELECT b FROM tri UNION ALL SELECT c FROM tri)
+        |  GROUP BY id
+        |)
+        |SELECT d.id, d.d AS deg,
+        |  CAST(COALESCE(t.n, 0) AS BIGINT) AS n_triangles,
+        |  CASE WHEN d.d >= 2
+        |       THEN CAST(2 * COALESCE(t.n, 0) AS DOUBLE) / (d.d * (d.d - 1)) END AS cc
+        |FROM deg d LEFT JOIN tc t ON t.id = d.id
+        |ORDER BY d.id""".stripMargin, shares = Set("graphs")),
+    // ---- k-core peeling (Seidman 1983) on the same co-occurrence
+    // graph: three fixed peel rounds at k=8 — the fixed-round form
+    // (engine fixpoint loop spec-gated in KCoreSpec) unrolls into an
+    // exact SQL oracle, the PageRank precedent ----
+    QuerySpec("q_kcore", (s, dir) => {
+      graft.operators.KCore.peelRounds(graft.ops.Graphs.coocQuarter(s, dir), k = 8, rounds = 3)
+        .orderBy(col("id"))
+    },
+      // PQ: centroids = corpus rows vec_id < 16 subspace-sliced;
+      // encode = per-subspace argmin of exact integer squared L2
+      // (lexicographic list min → ties to smallest centroid id);
+      // ADC = sum of per-subspace distances to the CODED centroids.
+      // k-core: three unrolled peels — each round recomputes degrees
+      // over the surviving edge set and keeps vertices with deg >= 8.
+      """WITH pe AS (
+        |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+        |  FROM lineitem a JOIN lineitem b
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        |  WHERE a.l_orderkey % 4 = 0
+        |), e0 AS (
+        |  SELECT u AS src, v AS dst FROM pe
+        |), s0 AS (
+        |  SELECT id FROM (SELECT src AS id FROM e0 UNION ALL SELECT dst FROM e0)
+        |  GROUP BY id HAVING count(*) >= 8
+        |), e1 AS (
+        |  SELECT e.src, e.dst FROM e0 e
+        |  JOIN s0 x ON x.id = e.src JOIN s0 y ON y.id = e.dst
+        |), s1 AS (
+        |  SELECT id FROM (SELECT src AS id FROM e1 UNION ALL SELECT dst FROM e1)
+        |  GROUP BY id HAVING count(*) >= 8
+        |), e2 AS (
+        |  SELECT e.src, e.dst FROM e1 e
+        |  JOIN s1 x ON x.id = e.src JOIN s1 y ON y.id = e.dst
+        |), s2 AS (
+        |  SELECT id FROM (SELECT src AS id FROM e2 UNION ALL SELECT dst FROM e2)
+        |  GROUP BY id HAVING count(*) >= 8
+        |), e3 AS (
+        |  SELECT e.src, e.dst FROM e2 e
+        |  JOIN s2 x ON x.id = e.src JOIN s2 y ON y.id = e.dst
+        |)
+        |SELECT id, CAST(count(*) AS BIGINT) AS deg
+        |FROM (SELECT src AS id FROM e3 UNION ALL SELECT dst FROM e3)
+        |GROUP BY id
+        |ORDER BY id""".stripMargin, invariant = InvariantOracles.kcore, shares = Set("graphs")),
+    // ---- multi-source BFS: shortest hop distances from the
+    // partkey%101==0 seed parts over the part<->supplier bipartite
+    // graph (the q_pagerank instance). Exact small integers, so the
+    // 4-round frontier expansion replays verbatim as a bounded
+    // recursive CTE ----
+    QuerySpec("q_bfs_hops", (s, dir) => {
+      val ps = graft.ops.Graphs.bipartite(s, dir)
+      val edges = graft.ops.Graphs.symmetrize(ps)
+      val sources = ps.select(col("src").as("id")).distinct()
+        .where(col("id") % 202 === 0)
+      graft.operators.Bfs.hops(edges, sources, rounds = 4).orderBy(col("id"))
+    },
+      // BFS: DuckDB's bounded recursive CTE IS the frontier
+      // expansion — UNION dedups (id, dist) pairs, dist < 4 bounds
+      // the walk, min(dist) per id is the shortest hop count.
+      """WITH RECURSIVE ps AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), e AS (
+        |  SELECT src, dst FROM ps UNION ALL SELECT dst AS src, src AS dst FROM ps
+        |), seeds AS (
+        |  SELECT DISTINCT src AS id FROM ps WHERE src % 202 = 0
+        |), walk(id, dist) AS (
+        |  SELECT id, CAST(0 AS BIGINT) FROM seeds
+        |  UNION
+        |  SELECT e.dst, walk.dist + 1 FROM walk JOIN e ON e.src = walk.id
+        |  WHERE walk.dist < 4
+        |)
+        |SELECT id, CAST(min(dist) AS BIGINT) AS dist
+        |FROM walk GROUP BY id ORDER BY id""".stripMargin),
+    // ---- personalized PageRank (TrustRank): teleport mass pinned
+    // to the suppkey%10==0 "trusted" suppliers (node id ≡ 1 mod 20)
+    // over the same bipartite graph. Exact integers → 5x-unrolled
+    // SQL replica, the q_pagerank precedent ----
+    QuerySpec("q_trustrank", (s, dir) => {
+      val ps = graft.ops.Graphs.bipartite(s, dir)
+      val edges = graft.ops.Graphs.symmetrize(ps)
+      val seeds = ps.select(col("dst").as("id")).distinct()
+        .where(col("id") % 20 === 1)
+      graft.operators.PageRank.personalizedRanks(edges, seeds, iters = 5)
+        .orderBy(col("id"))
+    },
+      // TrustRank: the q_pagerank unroll with the teleport term
+      // (init AND per-iteration base) restricted to seed nodes
+      // (supplier ids ≡ 1 mod 20).
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), n AS (
+        |  SELECT DISTINCT src AS id, CASE WHEN src % 20 = 1 THEN 1 ELSE 0 END AS sd FROM e
+        |), d AS (
+        |  SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1
+        |), ewd AS (
+        |  SELECT e.src, e.dst, d.deg FROM e JOIN d ON d.src = e.src
+        |), i0 AS (
+        |  SELECT id, CAST(sd * 1000000000 AS BIGINT) AS r FROM n
+        |), i1 AS (
+        |  SELECT n.id, n.sd * 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i0 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |), i2 AS (
+        |  SELECT n.id, n.sd * 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i1 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |), i3 AS (
+        |  SELECT n.id, n.sd * 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i2 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |), i4 AS (
+        |  SELECT n.id, n.sd * 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i3 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |), i5 AS (
+        |  SELECT n.id, n.sd * 150000000 + (17 * COALESCE(s.s, 0)) // 20 AS r
+        |  FROM n LEFT JOIN (SELECT ed.dst AS id, CAST(SUM(p.r // ed.deg) AS BIGINT) AS s
+        |                    FROM ewd ed JOIN i4 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
+        |)
+        |SELECT id, CAST(r AS BIGINT) AS rank FROM i5 ORDER BY id""".stripMargin,
+      shares = Set("graphs")),
+    // ---- HyperBall: per-node 2-hop ball-size estimates (lgK=7)
+    // over the bipartite graph. Deterministic integer registers ⇒
+    // the APPROXIMATE estimates themselves replay exactly in SQL —
+    // the q_hll_portable contract, unrolled two merge rounds. Gate
+    // instance on the deterministic quarter of orders (the
+    // q_triangles sizing); the full graph at 1×/10× is the
+    // hyperball measurement in SCALE_NOTES ----
+    QuerySpec("q_hyperball", (s, dir) => {
+      val edges = graft.ops.Graphs.bipartiteQuarterSym(s, dir)
+      graft.operators.HyperBall.ballSizes(edges, rounds = 2, lgK = 7)
+        .orderBy(col("id"))
+    },
+      // HyperBall: seed registers from each node's own hash, two
+      // absorb-from-successors max-merge rounds, then the portable
+      // HLL estimator at m=128 (linear-counting branch included) —
+      // byte-for-byte the q_hll_portable estimation pipeline.
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |  WHERE l_orderkey % 4 = 0
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), n AS (
+        |  SELECT DISTINCT src AS id FROM e
+        |), h AS (
+        |  SELECT id,
+        |    CAST(concat('0x', substr(md5(CAST(id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
+        |  FROM n
+        |), c0 AS (
+        |  SELECT id, CAST(hv % 128 AS INT) AS reg,
+        |    CASE WHEN hv // 128 = 0 THEN 54
+        |         ELSE CAST(bit_count(((hv // 128) & (-(hv // 128))) - 1) AS INT) + 1
+        |    END AS r
+        |  FROM h
+        |), c1 AS (
+        |  SELECT id, reg, max(r) AS r FROM (
+        |    SELECT id, reg, r FROM c0
+        |    UNION ALL
+        |    SELECT e.src AS id, c.reg, c.r FROM c0 c JOIN e ON e.dst = c.id
+        |  ) GROUP BY 1, 2
+        |), c2 AS (
+        |  SELECT id, reg, max(r) AS r FROM (
+        |    SELECT id, reg, r FROM c1
+        |    UNION ALL
+        |    SELECT e.src AS id, c.reg, c.r FROM c1 c JOIN e ON e.dst = c.id
+        |  ) GROUP BY 1, 2
+        |), s AS (
+        |  SELECT id,
+        |    sum(CAST((1::BIGINT << (60 - r)) AS HUGEINT)) AS sp,
+        |    CAST(count(*) AS BIGINT) AS np
+        |  FROM c2 GROUP BY 1
+        |), est AS (
+        |  SELECT id, 128 - np AS zeros,
+        |    ((0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 128.0::DOUBLE))
+        |      * 16384.0::DOUBLE * 1152921504606846976.0::DOUBLE)
+        |      / CAST(sp + CAST(128 - np AS HUGEINT) * (1::BIGINT << 60) AS DOUBLE) AS rawE
+        |  FROM s
+        |)
+        |SELECT id,
+        |  CAST(round(CASE WHEN zeros > 0 AND rawE <= 320.0::DOUBLE
+        |                  THEN 128.0::DOUBLE * ln(128.0::DOUBLE / CAST(zeros AS DOUBLE))
+        |                  ELSE rawE END) AS BIGINT) AS ball_est
+        |FROM est ORDER BY id""".stripMargin, shares = Set("graphs")),
+    // ---- harmonic centrality from the same machinery: Σ_r
+    // shell_r/r over per-round incoming-ball estimates, in exact
+    // nano-units (shells are already-rounded longs). Gate instance
+    // on the deterministic quarter of orders (the q_kcore sizing —
+    // per-round estimates make this ~2× the q_hyperball work) ----
+    QuerySpec("q_harmonic", (s, dir) => {
+      val edges = graft.ops.Graphs.bipartiteQuarterSym(s, dir)
+      graft.operators.HyperBall.harmonicCentrality(edges, rounds = 2, lgK = 7)
+        .orderBy(col("id"))
+    },
+      // Harmonic centrality: the q_hyperball unroll with the
+      // portable estimator applied at EVERY round (r0, r1, r2);
+      // shells clamp at 0 and contribute (shell·1e9)//r. The graph
+      // is symmetric, so the transpose is the same edge set.
+      """WITH ed AS (
+        |  SELECT DISTINCT 2*l_partkey AS src, 2*l_suppkey + 1 AS dst FROM lineitem
+        |  WHERE l_orderkey % 4 = 0
+        |), e AS (
+        |  SELECT src, dst FROM ed UNION ALL SELECT dst AS src, src AS dst FROM ed
+        |), n AS (
+        |  SELECT DISTINCT src AS id FROM e
+        |), h AS (
+        |  SELECT id,
+        |    CAST(concat('0x', substr(md5(CAST(id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
+        |  FROM n
+        |), c0 AS (
+        |  SELECT id, CAST(hv % 128 AS INT) AS reg,
+        |    CASE WHEN hv // 128 = 0 THEN 54
+        |         ELSE CAST(bit_count(((hv // 128) & (-(hv // 128))) - 1) AS INT) + 1
+        |    END AS r
+        |  FROM h
+        |), c1 AS (
+        |  SELECT id, reg, max(r) AS r FROM (
+        |    SELECT id, reg, r FROM c0
+        |    UNION ALL
+        |    SELECT e.src AS id, c.reg, c.r FROM c0 c JOIN e ON e.dst = c.id
+        |  ) GROUP BY 1, 2
+        |), c2 AS (
+        |  SELECT id, reg, max(r) AS r FROM (
+        |    SELECT id, reg, r FROM c1
+        |    UNION ALL
+        |    SELECT e.src AS id, c.reg, c.r FROM c1 c JOIN e ON e.dst = c.id
+        |  ) GROUP BY 1, 2
+        |), e0 AS (
+        |  SELECT id, CAST(round(CASE WHEN (128 - np) > 0 AND rawE <= 320.0::DOUBLE
+        |    THEN 128.0::DOUBLE * ln(128.0::DOUBLE / CAST(128 - np AS DOUBLE))
+        |    ELSE rawE END) AS BIGINT) AS est
+        |  FROM (SELECT id, np,
+        |          ((0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 128.0::DOUBLE))
+        |            * 16384.0::DOUBLE * 1152921504606846976.0::DOUBLE)
+        |          / CAST(sp + CAST(128 - np AS HUGEINT) * (1::BIGINT << 60) AS DOUBLE) AS rawE
+        |        FROM (SELECT id, sum(CAST((1::BIGINT << (60 - r)) AS HUGEINT)) AS sp,
+        |                     CAST(count(*) AS BIGINT) AS np
+        |              FROM c0 GROUP BY 1))
+        |), e1 AS (
+        |  SELECT id, CAST(round(CASE WHEN (128 - np) > 0 AND rawE <= 320.0::DOUBLE
+        |    THEN 128.0::DOUBLE * ln(128.0::DOUBLE / CAST(128 - np AS DOUBLE))
+        |    ELSE rawE END) AS BIGINT) AS est
+        |  FROM (SELECT id, np,
+        |          ((0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 128.0::DOUBLE))
+        |            * 16384.0::DOUBLE * 1152921504606846976.0::DOUBLE)
+        |          / CAST(sp + CAST(128 - np AS HUGEINT) * (1::BIGINT << 60) AS DOUBLE) AS rawE
+        |        FROM (SELECT id, sum(CAST((1::BIGINT << (60 - r)) AS HUGEINT)) AS sp,
+        |                     CAST(count(*) AS BIGINT) AS np
+        |              FROM c1 GROUP BY 1))
+        |), e2 AS (
+        |  SELECT id, CAST(round(CASE WHEN (128 - np) > 0 AND rawE <= 320.0::DOUBLE
+        |    THEN 128.0::DOUBLE * ln(128.0::DOUBLE / CAST(128 - np AS DOUBLE))
+        |    ELSE rawE END) AS BIGINT) AS est
+        |  FROM (SELECT id, np,
+        |          ((0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 128.0::DOUBLE))
+        |            * 16384.0::DOUBLE * 1152921504606846976.0::DOUBLE)
+        |          / CAST(sp + CAST(128 - np AS HUGEINT) * (1::BIGINT << 60) AS DOUBLE) AS rawE
+        |        FROM (SELECT id, sum(CAST((1::BIGINT << (60 - r)) AS HUGEINT)) AS sp,
+        |                     CAST(count(*) AS BIGINT) AS np
+        |              FROM c2 GROUP BY 1))
+        |)
+        |SELECT e0.id,
+        |  CAST((greatest(e1.est - e0.est, 0) * 1000000000) // 1
+        |     + (greatest(e2.est - e1.est, 0) * 1000000000) // 2 AS BIGINT) AS harmonic_e9
+        |FROM e0 JOIN e1 ON e1.id = e0.id JOIN e2 ON e2.id = e0.id
+        |ORDER BY e0.id""".stripMargin, shares = Set("graphs")))
+}

@@ -1,0 +1,951 @@
+package graft
+package queries
+
+import org.apache.spark.sql.functions._
+
+/** Registered queries for embedding similarity search, clustering,
+  * quantization and projections. */
+private[graft] object VectorQueries {
+  // Mirrors KMeans.train(k=8, iters=2) + assign: the two update
+  // steps are UNROLLED as CTE stages (c0 seed → assign a0 → integer
+  // per-dim sums s1 → centroids c1 → a1 → s2 → c2 → final a2).
+  // Centroids are exact-integer SUM vectors (never floating means:
+  // cosine against the sum equals cosine against the mean), the
+  // seed is vec_id < k, argmax ties go to the smallest cid, and an
+  // empty cluster keeps its previous centroid (the LEFT JOIN +
+  // coalesce) — term-for-term the Scala training loop, so the
+  // assignment is an exact replication, not a statistical one.
+  private def kmeansAssignCte(cents: String, out: String) =
+    s"""$out AS (
+       |  SELECT vec_id, cid FROM (
+       |    SELECT n.vec_id, c.cid,
+       |      row_number() OVER (PARTITION BY n.vec_id
+       |        ORDER BY CAST(CAST(list_sum(list_transform(generate_series(1, len(n.v)), i -> n.v[i]*c.cv[i])) AS BIGINT) AS DOUBLE)/(n.nv*c.cn) DESC, c.cid ASC) AS rn
+       |    FROM nrm n, $cents c)
+       |  WHERE rn = 1
+       |)""".stripMargin
+
+  private def kmeansUpdateCte(assign: String, prev: String, out: String) =
+    s"""s_$out AS (
+       |  SELECT a.cid, d.i, CAST(SUM(n.v[d.i]) AS BIGINT) AS s
+       |  FROM $assign a JOIN nrm n USING (vec_id), (SELECT unnest(generate_series(1, 64)) AS i) d
+       |  GROUP BY 1, 2
+       |), u_$out AS (
+       |  SELECT cid, list(s ORDER BY i) AS cv,
+       |    sqrt(CAST(CAST(SUM(s*s) AS BIGINT) AS DOUBLE)) AS cn
+       |  FROM s_$out GROUP BY cid
+       |), $out AS (
+       |  SELECT $prev.cid, coalesce(u_$out.cv, $prev.cv) AS cv, coalesce(u_$out.cn, $prev.cn) AS cn
+       |  FROM $prev LEFT JOIN u_$out USING (cid)
+       |)""".stripMargin
+
+  private val kmeansCtes =
+    s"""WITH qz AS (
+       |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+       |  FROM embeddings
+       |), nrm AS (
+       |  SELECT vec_id, v,
+       |    sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(v)), i -> v[i]*v[i])) AS BIGINT) AS DOUBLE)) AS nv
+       |  FROM qz
+       |), c0 AS (
+       |  SELECT vec_id AS cid, v AS cv, nv AS cn FROM nrm WHERE vec_id < 8
+       |), ${kmeansAssignCte("c0", "a0")},
+       |${kmeansUpdateCte("a0", "c0", "c1")},
+       |${kmeansAssignCte("c1", "a1")},
+       |${kmeansUpdateCte("a1", "c1", "c2")},
+       |${kmeansAssignCte("c2", "a2")}""".stripMargin
+
+  // IVF-PQ: q_ivf_topk's coarse assign/probe CTEs (nLists=8,
+  // nProbe=2) composed with q_pq_adc's code/ADC CTEs — candidate
+  // pairs restricted to probed lists, ADC rank inside them.
+  private val ivfpqTopkSql =
+    """WITH qz AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), nrm AS (
+        |  SELECT vec_id, v,
+        |    sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(v)), i -> v[i]*v[i])) AS BIGINT) AS DOUBLE)) AS nv
+        |  FROM qz
+        |), coarse AS (
+        |  SELECT vec_id AS cid, v AS cv, nv AS cn FROM nrm WHERE vec_id < 8
+        |), cscore AS (
+        |  SELECT n.vec_id, c.cid,
+        |    row_number() OVER (PARTITION BY n.vec_id
+        |                       ORDER BY CAST(CAST(list_sum(list_transform(generate_series(1, len(n.v)), i -> n.v[i]*c.cv[i])) AS BIGINT) AS DOUBLE)/(n.nv*c.cn) DESC, c.cid ASC) AS rn
+        |  FROM nrm n, coarse c
+        |), corpus_assign AS (
+        |  SELECT vec_id AS corpus_id, cid AS list_id FROM cscore WHERE rn = 1
+        |), probes AS (
+        |  SELECT vec_id AS query_id, cid AS list_id FROM cscore WHERE rn <= 2 AND vec_id < 50
+        |), cent AS (
+        |  SELECT vec_id AS cid, v FROM qz WHERE vec_id < 16
+        |), sub AS (
+        |  SELECT q.vec_id, s.s, c.cid,
+        |    CAST(list_sum(list_transform(generate_series(1, 16), i ->
+        |      (q.v[s.s*16 + i] - c.v[s.s*16 + i]) * (q.v[s.s*16 + i] - c.v[s.s*16 + i]))) AS BIGINT) AS d
+        |  FROM qz q, (SELECT unnest(generate_series(0, 3)) AS s) s, cent c
+        |), best AS (
+        |  SELECT vec_id, s, min([d, cid])[2] AS code FROM sub GROUP BY 1, 2
+        |), adcsub AS (
+        |  SELECT p.query_id, b.vec_id AS corpus_id, b.s,
+        |    CAST(list_sum(list_transform(generate_series(1, 16), i ->
+        |      (qq.v[b.s*16 + i] - c.v[b.s*16 + i]) * (qq.v[b.s*16 + i] - c.v[b.s*16 + i]))) AS BIGINT) AS d
+        |  FROM best b
+        |  JOIN corpus_assign a ON a.corpus_id = b.vec_id
+        |  JOIN probes p ON p.list_id = a.list_id
+        |  JOIN qz qq ON qq.vec_id = p.query_id
+        |  JOIN cent c ON c.cid = b.code
+        |  WHERE qq.vec_id != b.vec_id
+        |), adc AS (
+        |  SELECT query_id, corpus_id, CAST(SUM(d) AS BIGINT) AS adc_dist
+        |  FROM adcsub GROUP BY 1, 2
+        |)
+        |SELECT query_id, corpus_id, adc_dist, CAST(rnk AS INT) AS rnk
+        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_dist, corpus_id) AS rnk
+        |      FROM adc)
+        |WHERE rnk <= 3
+        |ORDER BY query_id, rnk""".stripMargin
+
+  val specs: Seq[QuerySpec] = Seq(
+    // ---- image-text pair alignment audit (r8 verdict item #7): a
+    // caption-curation pipeline holds a PAIR table with one embedding
+    // per modality; the audit scores every pair's cross-modal cosine
+    // and rolls the distribution up per source so a bad ingest batch
+    // (OCR captions, watermarked stock photos) surfaces as a
+    // low-alignment source. Pairs here: even vec_id = "text" side,
+    // the adjacent odd vec_id = "image" side (SF-independent), source
+    // via the documents table. All-quantized-integer dots (the
+    // Similarity.qdot native expression), one equi-join + one hash
+    // aggregate — no crosses, no windows; scales as a fact-fact
+    // co-partitioned join at 100 TB ----
+    QuerySpec("q_pair_align", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+        .select(col("vec_id"),
+          graft.operators.Similarity.quantize(col("embedding")).as("v"))
+      val txt = emb.where(pmod(col("vec_id"), lit(2L)) === 0)
+      val img = emb.select((col("vec_id") - 1).as("vec_id"), col("v").as("w"))
+      val qd = graft.operators.Similarity.qdot _
+      val scored = txt.join(img, Seq("vec_id"))
+        .select(col("vec_id"), qd(col("v"), col("v")).as("nt"),
+          qd(col("w"), col("w")).as("ni"), qd(col("v"), col("w")).as("dot"))
+        .where(col("nt") > 0 && col("ni") > 0)
+        .select(col("vec_id"),
+          round(lit(1e9) * col("dot").cast("double") /
+            (sqrt(col("nt").cast("double")) * sqrt(col("ni").cast("double"))))
+            .cast("long").as("align_nano"))
+      val src = Tables.documents(s, dir).select(col("doc_id").as("vec_id"), col("source"))
+      scored.join(src, Seq("vec_id"))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(col("align_nano")).as("__sum"),
+          min(col("align_nano")).as("min_align_nano"),
+          max(col("align_nano")).as("max_align_nano"),
+          sum(when(col("align_nano") < 100000000L, 1L).otherwise(0L)).as("n_misaligned"))
+        .select(col("source"), col("n_pairs"),
+          round(col("__sum").cast("double") / col("n_pairs").cast("double"))
+            .cast("long").as("mean_align_nano"),
+          col("min_align_nano"), col("max_align_nano"), col("n_misaligned"))
+        .orderBy(col("source"))
+    }, """WITH qz AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), pr AS (
+        |  SELECT t.vec_id AS vec_id, t.v AS v, i.v AS w
+        |  FROM qz t JOIN qz i ON i.vec_id = t.vec_id + 1
+        |  WHERE t.vec_id % 2 = 0
+        |), s AS (
+        |  SELECT vec_id,
+        |    CAST(list_sum(list_transform(generate_series(1, len(v)), k -> v[k]*w[k])) AS BIGINT) AS dot,
+        |    CAST(list_sum(list_transform(generate_series(1, len(v)), k -> v[k]*v[k])) AS BIGINT) AS nt,
+        |    CAST(list_sum(list_transform(generate_series(1, len(w)), k -> w[k]*w[k])) AS BIGINT) AS ni
+        |  FROM pr
+        |), a AS (
+        |  SELECT vec_id,
+        |    CAST(round(1e9 * CAST(dot AS DOUBLE) / (sqrt(CAST(nt AS DOUBLE)) * sqrt(CAST(ni AS DOUBLE)))) AS BIGINT) AS align_nano
+        |  FROM s WHERE nt > 0 AND ni > 0
+        |)
+        |SELECT d.source AS source, count(*) AS n_pairs,
+        |  CAST(round(CAST(CAST(sum(a.align_nano) AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS mean_align_nano,
+        |  min(a.align_nano) AS min_align_nano,
+        |  max(a.align_nano) AS max_align_nano,
+        |  CAST(sum(CASE WHEN a.align_nano < 100000000 THEN 1 ELSE 0 END) AS BIGINT) AS n_misaligned
+        |FROM a JOIN documents d ON d.doc_id = a.vec_id
+        |GROUP BY d.source""".stripMargin),
+    // ---- label-noise audit (confident-learning-lite): leave-one-out
+    // kNN over the LABELED pool — a point whose 5 nearest labeled
+    // neighbors vote against its own label is a mislabeling
+    // candidate; the per-class flag rate is the audit a labeling
+    // vendor gets graded on. Pure composition: knnLabel's neighbor
+    // stage already excludes self (query_id ≠ corpus_id), the vote is
+    // unchanged, one broadcast label join + one hash aggregate on
+    // top. Swap the brute-force scorer for the partitioned IVF-PQ
+    // index at corpus scale; everything downstream is identical ----
+    QuerySpec("q_knn_noise", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val pred = graft.operators.Similarity.knnLabel(
+        emb, emb.where(col("vec_id") < 200), k = 5)
+      pred.join(emb.select(col("vec_id"),
+          col("label").cast("long").as("true_label")), Seq("vec_id"))
+        .groupBy(col("true_label"))
+        .agg(count(lit(1)).as("n_checked"),
+          sum(when(col("pred_label").cast("long") =!= col("true_label"), 1L)
+            .otherwise(0L)).as("n_flagged"))
+        .select(col("true_label"), col("n_checked"), col("n_flagged"),
+          round(lit(1e9) * col("n_flagged").cast("double") /
+            col("n_checked").cast("double")).cast("long").as("flag_rate_nano"))
+        .orderBy(col("true_label"))
+    }, """WITH qz AS (
+        |  SELECT vec_id, label,
+        |    list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), s AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+        |    CAST(list_sum(list_transform(generate_series(1, len(q.v)), i -> q.v[i]*c.v[i])) AS BIGINT) AS dot,
+        |    CAST(list_sum(list_transform(generate_series(1, len(q.v)), i -> q.v[i]*q.v[i])) AS BIGINT) AS nq,
+        |    CAST(list_sum(list_transform(generate_series(1, len(c.v)), i -> c.v[i]*c.v[i])) AS BIGINT) AS nc
+        |  FROM qz q, qz c
+        |  WHERE q.vec_id < 200 AND c.vec_id <> q.vec_id
+        |), top AS (
+        |  SELECT query_id, corpus_id, rnk FROM (
+        |    SELECT query_id, corpus_id,
+        |      row_number() OVER (PARTITION BY query_id ORDER BY
+        |        CAST(dot AS DOUBLE)/(sqrt(CAST(nq AS DOUBLE))*sqrt(CAST(nc AS DOUBLE))) DESC,
+        |        corpus_id ASC) AS rnk
+        |    FROM s)
+        |  WHERE rnk <= 5
+        |), votes AS (
+        |  SELECT t.query_id, e.label, CAST(count(*) AS BIGINT) AS votes,
+        |    min(t.rnk) AS best_rnk
+        |  FROM top t JOIN embeddings e ON e.vec_id = t.corpus_id
+        |  GROUP BY 1, 2
+        |), pred AS (
+        |  SELECT query_id AS vec_id, label AS pred_label
+        |  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+        |          ORDER BY votes DESC, best_rnk ASC, label ASC) AS r FROM votes)
+        |  WHERE r = 1
+        |)
+        |SELECT CAST(e.label AS BIGINT) AS true_label,
+        |  count(*) AS n_checked,
+        |  CAST(sum(CASE WHEN CAST(p.pred_label AS BIGINT) <> CAST(e.label AS BIGINT)
+        |                THEN 1 ELSE 0 END) AS BIGINT) AS n_flagged,
+        |  CAST(round(1e9 * CAST(CAST(sum(CASE WHEN CAST(p.pred_label AS BIGINT) <> CAST(e.label AS BIGINT)
+        |                THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS BIGINT) AS flag_rate_nano
+        |FROM pred p JOIN embeddings e USING (vec_id)
+        |GROUP BY 1""".stripMargin),
+    // ---- top principal component of the embedding corpus by
+    // integer power iteration on the exact n²-scaled scatter matrix
+    // (All-but-the-Top whitening direction) — the approximation
+    // itself replays bit-for-bit in SQL ----
+    QuerySpec("q_pca_power", (s, dir) => {
+      graft.operators.Pca.topComponent(Tables.embeddings(s, dir), iters = 3)
+        .orderBy(col("dim"))
+    },
+      // integer power iteration on the n²-scaled scatter matrix: M and
+      // every iterate rescale by truncating division (DuckDB // and
+      // Java / both truncate toward zero — measured), fixed all-ones
+      // start, 3 unrolled rounds
+      """WITH q AS (
+        |  SELECT list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings WHERE embedding IS NOT NULL
+        |), n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM q),
+        |dims AS (SELECT unnest(range(1, 65)) AS i),
+        |cells AS (
+        |  SELECT d1.i, d2.i AS j, CAST(sum(q.v[d1.i] * q.v[d2.i]) AS BIGINT) AS g
+        |  FROM q, dims d1, dims d2 GROUP BY 1, 2
+        |), sv AS (
+        |  SELECT d.i, CAST(sum(q.v[d.i]) AS BIGINT) AS s FROM q, dims d GROUP BY 1
+        |), m0 AS (
+        |  SELECT c.i, c.j, n.n * c.g - si.s * sj.s AS m
+        |  FROM cells c JOIN sv si ON si.i = c.i JOIN sv sj ON sj.i = c.j, n
+        |), dm AS (
+        |  SELECT greatest(CAST(1 AS BIGINT), max(abs(m)) // 1073741824) AS d FROM m0
+        |), m AS (
+        |  SELECT i, j, m0.m // dm.d AS m FROM m0, dm
+        |), w0 AS (SELECT i AS j, CAST(1 AS BIGINT) AS w FROM dims),
+        |u1 AS (SELECT m.i AS j, CAST(sum(m.m * w0.w) AS BIGINT) AS u FROM m JOIN w0 USING (j) GROUP BY 1),
+        |e1 AS (SELECT greatest(CAST(1 AS BIGINT), max(abs(u)) // 1048576) AS d FROM u1),
+        |w1 AS (SELECT j, u // d AS w FROM u1, e1),
+        |u2 AS (SELECT m.i AS j, CAST(sum(m.m * w1.w) AS BIGINT) AS u FROM m JOIN w1 USING (j) GROUP BY 1),
+        |e2 AS (SELECT greatest(CAST(1 AS BIGINT), max(abs(u)) // 1048576) AS d FROM u2),
+        |w2 AS (SELECT j, u // d AS w FROM u2, e2),
+        |u3 AS (SELECT m.i AS j, CAST(sum(m.m * w2.w) AS BIGINT) AS u FROM m JOIN w2 USING (j) GROUP BY 1),
+        |e3 AS (SELECT greatest(CAST(1 AS BIGINT), max(abs(u)) // 1048576) AS d FROM u3),
+        |w3 AS (SELECT j, u // d AS w FROM u3, e3)
+        |SELECT CAST(j AS BIGINT) AS dim, w FROM w3 ORDER BY dim""".stripMargin),
+    // ---- kNN weak labeling: every 4th vector's label predicted by
+    // a 5-NN majority vote from the labeled three quarters —
+    // deterministic vote (votes desc, best rank, smallest label),
+    // so the PREDICTION replays exactly in SQL ----
+    QuerySpec("q_knn_label", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      graft.operators.Similarity.knnLabel(
+          emb.where(col("vec_id") % 4 =!= 0),
+          emb.where(col("vec_id") % 4 === 0 && col("vec_id") < 200), k = 5)
+        .orderBy(col("vec_id"))
+    },
+      // the q_cosine_topk brute-force replica restricted to the
+      // labeled/unlabeled split, then the deterministic majority vote
+      """WITH qz AS (
+        |  SELECT vec_id, label,
+        |    list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), s AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+        |    CAST(list_sum(list_transform(generate_series(1, len(q.v)), i -> q.v[i]*c.v[i])) AS BIGINT) AS dot,
+        |    CAST(list_sum(list_transform(generate_series(1, len(q.v)), i -> q.v[i]*q.v[i])) AS BIGINT) AS nq,
+        |    CAST(list_sum(list_transform(generate_series(1, len(c.v)), i -> c.v[i]*c.v[i])) AS BIGINT) AS nc
+        |  FROM qz q, qz c
+        |  WHERE q.vec_id % 4 = 0 AND q.vec_id < 200 AND c.vec_id % 4 <> 0
+        |), top AS (
+        |  SELECT query_id, corpus_id, rnk FROM (
+        |    SELECT query_id, corpus_id,
+        |      row_number() OVER (PARTITION BY query_id ORDER BY
+        |        CAST(dot AS DOUBLE)/(sqrt(CAST(nq AS DOUBLE))*sqrt(CAST(nc AS DOUBLE))) DESC,
+        |        corpus_id ASC) AS rnk
+        |    FROM s)
+        |  WHERE rnk <= 5
+        |), votes AS (
+        |  SELECT t.query_id, e.label, CAST(count(*) AS BIGINT) AS votes,
+        |    min(t.rnk) AS best_rnk
+        |  FROM top t JOIN embeddings e ON e.vec_id = t.corpus_id
+        |  GROUP BY 1, 2
+        |)
+        |SELECT query_id AS vec_id, label AS pred_label, votes
+        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+        |        ORDER BY votes DESC, best_rnk ASC, label ASC) AS r FROM votes)
+        |WHERE r = 1 ORDER BY vec_id""".stripMargin),
+    // ---- class separability: pairwise centroid distances over the
+    // labeled embeddings — cross-scaled integer sums, one division;
+    // the (label, dim) cell shuffle never carries vectors ----
+    QuerySpec("q_class_sep", (s, dir) => {
+      graft.operators.ClassSep.centroidDistances(
+          Tables.embeddings(s, dir), "label", "embedding")
+        .orderBy(col("label_a"), col("label_b"))
+    },
+      // ||s_a·n_b − s_b·n_a||² exact integer fold, then the two
+      // mirrored divisions by (n_a·n_b). The squares live in HUGEINT
+      // (the engine mirrors with decimal(38,0)): measured ~10²² at
+      // sf10, past int64 — plain BIGINT multiplication errors in
+      // DuckDB and silently wraps in Spark (r14)
+      """WITH q AS (
+        |  SELECT label, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings WHERE label IS NOT NULL AND embedding IS NOT NULL
+        |), cells AS (
+        |  SELECT label AS lab, i, CAST(sum(v[i]) AS BIGINT) AS s
+        |  FROM q, unnest(range(1, len(v)+1)) AS u(i)
+        |  GROUP BY 1, 2
+        |), sums AS (
+        |  SELECT lab, array_agg(s ORDER BY i) AS sv FROM cells GROUP BY 1
+        |), counts AS (
+        |  SELECT label AS lab, CAST(count(*) AS BIGINT) AS n FROM q GROUP BY 1
+        |), c AS (
+        |  SELECT sums.lab, sv, n FROM sums JOIN counts USING (lab)
+        |)
+        |SELECT CAST(a.lab AS BIGINT) AS label_a, CAST(b.lab AS BIGINT) AS label_b,
+        |  a.n AS n_a, b.n AS n_b,
+        |  CAST(round(1e9 * CAST(list_sum(list_transform(range(1, len(a.sv)+1),
+        |      i -> (CAST(a.sv[i] AS HUGEINT)*b.n - CAST(b.sv[i] AS HUGEINT)*a.n)
+        |         * (CAST(a.sv[i] AS HUGEINT)*b.n - CAST(b.sv[i] AS HUGEINT)*a.n))) AS DOUBLE) /
+        |    CAST(a.n * b.n AS DOUBLE) / CAST(a.n * b.n AS DOUBLE)) AS BIGINT) AS dist2_nano
+        |FROM c a JOIN c b ON a.lab < b.lab
+        |ORDER BY 1, 2""".stripMargin),
+    // ---- Johnson-Lindenstrauss signed random projection: every
+    // embedding reduced to 8 exact-integer coordinates against the
+    // sign-LSH plane family — per-row map, no shuffle. Emitted as
+    // exploded scalar rows (vec_id, j, d) rather than one array
+    // column so the pandas comparator (tools/oracle_compare.py) can hash it
+    // (array<long> cells are unhashable there — r7 verdict #1) ----
+    QuerySpec("q_random_proj", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      emb.select(col("vec_id"),
+          posexplode(graft.operators.Similarity.randomProject(
+            graft.operators.Similarity.quantize(col("embedding")), k = 8)).as(Seq("j", "d")))
+        .select(col("vec_id"), col("j").cast("long").as("j"), col("d"))
+        .orderBy(col("vec_id"), col("j"))
+    },
+      // the ±1 planes rebuild from the md5 hash-parity formula; each
+      // projected coordinate is an exact integer dot
+      """WITH q AS (
+        |  SELECT vec_id, list_transform(embedding,
+        |    x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), planes AS (
+        |  SELECT j, list_transform(range(0, 64), i ->
+        |    CASE WHEN CAST(concat('0x', substr(md5(concat(CAST(j AS VARCHAR), ':', CAST(i AS VARCHAR))), 1, 15)) AS BIGINT) % 2 = 1
+        |      THEN 1 ELSE -1 END) AS s
+        |  FROM range(0, 8) t(j)
+        |), dots AS (
+        |  SELECT q.vec_id, CAST(p.j AS BIGINT) AS j,
+        |    CAST(list_sum(list_transform(range(1, len(q.v) + 1),
+        |      ix -> q.v[ix] * p.s[ix])) AS BIGINT) AS d
+        |  FROM q, planes p
+        |)
+        |SELECT vec_id, j, d FROM dots ORDER BY vec_id, j""".stripMargin),
+    // ---- embedding-cosine near-dup pairs: sign-LSH banded candidates
+    // + exact quantized verify (the crossJoin baseline lives only in
+    // TrainingOpsSpec's equality check — no all-pairs plan ships) ----
+    QuerySpec("q_embed_neardup", (s, dir) => {
+      // the DEGENERATE-REFERENCE regime, kept registered as the
+      // measured scale receipts (sf1 exponent 1.64 — a volume law of
+      // threshold-0.5 banding, not a plan defect). The explicit
+      // raised budget opts this receipts instance out of the default
+      // candidate-volume guard; any caller using the DEFAULTS on a
+      // dense corpus now fails loud instead (r9 verdict item #2).
+      // planesPerBand=4 PINNED since r14: the operator default is now
+      // the n-scaled AutoPlanes law; this receipt replays the historic
+      // 16x4 regime its oracle mirrors
+      graft.operators.Similarity.cosineNearDupPairsLsh(Tables.embeddings(s, dir), 0.5,
+          planesPerBand = 4, maxCandidatePairs = Long.MaxValue)
+        .orderBy(col("a_id"), col("b_id"))
+    },
+      // Mirrors Similarity.cosineNearDupPairsLsh (bands=16, r=4,
+      // threshold=0.5): DuckDB rebuilds the same 64-plane hash60 sign
+      // family (plane p belongs to band p//4, bit p%4), reproduces the
+      // banded candidate join, and verifies with the same quantized
+      // cosine — an exact replication of the approximation, like
+      // q_lsh_topk.
+      """WITH q AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), nrm AS (
+        |  SELECT vec_id, v,
+        |    sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(v)), i -> v[i]*v[i])) AS BIGINT) AS DOUBLE)) AS nv
+        |  FROM q
+        |), planes AS (
+        |  SELECT p.p // 4 AS band, p.p % 4 AS j, i.i,
+        |    CASE WHEN CAST('0x' || substr(md5(p.p || ':' || i.i), 1, 15) AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END AS s
+        |  FROM (SELECT unnest(generate_series(0, 63)) AS p) p,
+        |       (SELECT unnest(generate_series(0, 63)) AS i) i
+        |), proj AS (
+        |  SELECT n.vec_id, pl.band, pl.j, CAST(SUM(n.v[pl.i + 1] * pl.s) AS BIGINT) AS dot
+        |  FROM nrm n JOIN planes pl ON pl.i < len(n.v)
+        |  GROUP BY 1, 2, 3
+        |), bkt AS (
+        |  SELECT vec_id, band, CAST(SUM(CASE WHEN dot >= 0 THEN 1 << j ELSE 0 END) AS BIGINT) AS bucket
+        |  FROM proj GROUP BY 1, 2
+        |), cand AS (
+        |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+        |  FROM bkt a JOIN bkt b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
+        |), s AS (
+        |  SELECT c.a_id, c.b_id,
+        |    CAST(CAST(list_sum(list_transform(generate_series(1, len(an.v)), k -> an.v[k]*bn.v[k])) AS BIGINT) AS DOUBLE)/(an.nv*bn.nv) AS cosine
+        |  FROM cand c JOIN nrm an ON an.vec_id = c.a_id JOIN nrm bn ON bn.vec_id = c.b_id
+        |)
+        |SELECT a_id, b_id, cosine FROM s WHERE cosine >= 0.5""".stripMargin,
+      regime = Some("degenerate-reference")),
+    // ---- tuned high-threshold near-dup: the config banding theory
+    // actually prescribes for dup DETECTION (threshold 0.9, bands =
+    // lshParams(0.9, 0.01, 12) = 28, vs the degenerate selectivity
+    // any config has at 0.5 — see Similarity.lshParams). The corpus
+    // is seeded with a deterministic near-dup twin per vector
+    // (per-dim factors 1 + k/128, exactly representable doubles, so
+    // the oracle rebuilds the same twins bit-for-bit).
+    // planesPerBand SCALES WITH n (r12 verdict item #2): the r11-r12
+    // pinned r=12 made random bucket collisions quadratic
+    // (bands·n²/2^13) and guard-refused at sf10 with 845M pre-counted
+    // candidates; r = ⌈log₂ n⌉ + 5 pins them ≤ bands/64 · n — linear.
+    // n is one metadata-cheap count; the oracle derives the SAME r
+    // from its own COUNT(*) via the same integer power-of-two scan ----
+    QuerySpec("q_embed_neardup_hi", (s, dir) => {
+      val nCorpus = 2L * Tables.embeddings(s, dir).count() // base + twins
+      graft.operators.Similarity.cosineNearDupPairsLsh(
+          graft.operators.Similarity.twinSeeded(Tables.embeddings(s, dir)),
+          0.9, bands = 28,
+          planesPerBand = graft.operators.Similarity.autoPlanesPerBand(nCorpus))
+        .orderBy(col("a_id"), col("b_id"))
+    },
+      // Same plane family and verify shape as q_embed_neardup, but
+      // 28 bands × r planes at threshold 0.9 over the twin-seeded
+      // corpus, where r = max(12, ceil_log2(corpus) + 5) MIRRORS
+      // Similarity.autoPlanesPerBand from DuckDB's own COUNT(*) via the
+      // identical integer power-of-two scan (no FP log on either side);
+      // the twin factors (1 + k/128) are exact doubles, so quantization
+      // agrees bit-for-bit across engines.
+      """WITH twin AS (
+        |  SELECT vec_id + 1000000 AS tid,
+        |    list_transform(generate_series(1, len(embedding)), i ->
+        |      CAST(embedding[i] AS DOUBLE) * (1.0 + ((vec_id * 31 + (i - 1)) % 7 - 3) / 128.0)) AS e
+        |  FROM embeddings
+        |), corpus AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |  UNION ALL
+        |  SELECT tid AS vec_id, list_transform(e, x -> CAST(round(x*10000) AS BIGINT)) AS v
+        |  FROM twin
+        |), params AS (
+        |  SELECT least(40, greatest(12, min(i.i) + 5)) AS r
+        |  FROM (SELECT unnest(generate_series(1, 62)) AS i) i,
+        |       (SELECT count(*) AS n FROM corpus) nn
+        |  WHERE power(2.0, i.i) >= nn.n
+        |), nrm AS (
+        |  SELECT vec_id, v,
+        |    sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(v)), i -> v[i]*v[i])) AS BIGINT) AS DOUBLE)) AS nv
+        |  FROM corpus
+        |), planes AS (
+        |  SELECT p.p // pr.r AS band, p.p % pr.r AS j, i.i,
+        |    CASE WHEN CAST('0x' || substr(md5(p.p || ':' || i.i), 1, 15) AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END AS s
+        |  FROM (SELECT unnest(generate_series(0, 28*40 - 1)) AS p) p,
+        |       (SELECT unnest(generate_series(0, 63)) AS i) i,
+        |       params pr
+        |  WHERE p.p < 28 * pr.r
+        |), proj AS (
+        |  SELECT n.vec_id, pl.band, pl.j, CAST(SUM(n.v[pl.i + 1] * pl.s) AS BIGINT) AS dot
+        |  FROM nrm n JOIN planes pl ON pl.i < len(n.v)
+        |  GROUP BY 1, 2, 3
+        |), bkt AS (
+        |  SELECT vec_id, band, CAST(SUM(CASE WHEN dot >= 0 THEN 1 << j ELSE 0 END) AS BIGINT) AS bucket
+        |  FROM proj GROUP BY 1, 2
+        |), cand AS (
+        |  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+        |  FROM bkt a JOIN bkt b ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id
+        |), s AS (
+        |  SELECT c.a_id, c.b_id,
+        |    CAST(CAST(list_sum(list_transform(generate_series(1, len(an.v)), k -> an.v[k]*bn.v[k])) AS BIGINT) AS DOUBLE)/(an.nv*bn.nv) AS cosine
+        |  FROM cand c JOIN nrm an ON an.vec_id = c.a_id JOIN nrm bn ON bn.vec_id = c.b_id
+        |)
+        |SELECT a_id, b_id, cosine FROM s WHERE cosine >= 0.9
+        |ORDER BY a_id, b_id""".stripMargin, regime = Some("production-twin")),
+    QuerySpec("q_lsh_topk", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      graft.operators.Similarity.lshTopK(emb, emb.where(col("vec_id") < 50), 3, nPlanes = 6)
+        .orderBy(col("query_id"), col("rnk"))
+    },
+      // Mirrors Similarity.lshTopK (nPlanes=6, k=3, queries =
+      // vec_id < 50): the ±1 hyperplanes are hash60("p:i")-derived
+      // constants, so DuckDB rebuilds the same 6×64 sign matrix (384
+      // rows, computed once) and reproduces the exact bucketing.
+      """WITH qz AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), nrm AS (
+        |  SELECT vec_id, v,
+        |    sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(v)), i -> v[i]*v[i])) AS BIGINT) AS DOUBLE)) AS nv
+        |  FROM qz
+        |), planes AS (
+        |  SELECT p.p, i.i,
+        |    CASE WHEN CAST('0x' || substr(md5(p.p || ':' || i.i), 1, 15) AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END AS s
+        |  FROM (SELECT unnest(generate_series(0, 5)) AS p) p,
+        |       (SELECT unnest(generate_series(0, 63)) AS i) i
+        |), proj AS (
+        |  SELECT n.vec_id, pl.p, CAST(SUM(n.v[pl.i + 1] * pl.s) AS BIGINT) AS dot
+        |  FROM nrm n JOIN planes pl ON pl.i < len(n.v)
+        |  GROUP BY 1, 2
+        |), bkt AS (
+        |  SELECT vec_id, CAST(SUM(CASE WHEN dot >= 0 THEN 1 << p ELSE 0 END) AS BIGINT) AS bucket
+        |  FROM proj GROUP BY 1
+        |), scored AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+        |    CAST(CAST(list_sum(list_transform(generate_series(1, len(qn.v)), i -> qn.v[i]*cn.v[i])) AS BIGINT) AS DOUBLE)/(qn.nv*cn.nv) AS cosine
+        |  FROM bkt q JOIN bkt c ON q.bucket = c.bucket AND q.vec_id != c.vec_id
+        |  JOIN nrm qn ON qn.vec_id = q.vec_id
+        |  JOIN nrm cn ON cn.vec_id = c.vec_id
+        |  WHERE q.vec_id < 50
+        |)
+        |SELECT query_id, corpus_id, cosine, CAST(rnk AS INT) AS rnk
+        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, corpus_id ASC) AS rnk
+        |      FROM scored)
+        |WHERE rnk <= 3""".stripMargin),
+    // ---- IVF ANN (deterministic coarse quantizer → full oracle:
+    // DuckDB replicates the same assignment/probe approximation) ----
+    QuerySpec("q_ivf_topk", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      graft.operators.Similarity.ivfTopK(emb, emb.where(col("vec_id") < 50), 3,
+        nLists = 16, nProbe = 4)
+        .select(col("query_id"), col("corpus_id"), col("cosine"), col("rnk").cast("int").as("rnk"))
+        .orderBy(col("query_id"), col("rnk"))
+    },
+      // Mirrors Similarity.ivfTopK (nLists=16, nProbe=4, k=3,
+      // queries = vec_id < 50): same quantization, same deterministic
+      // centroid set (vec_id < 16), same tie-breaks — the oracle
+      // reproduces the exact approximation, not just its intent.
+      """WITH qz AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), nrm AS (
+        |  SELECT vec_id, v,
+        |    sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(v)), i -> v[i]*v[i])) AS BIGINT) AS DOUBLE)) AS nv
+        |  FROM qz
+        |), cent AS (
+        |  SELECT vec_id AS cid, v AS cv, nv AS cn FROM nrm WHERE vec_id < 16
+        |), cscore AS (
+        |  SELECT n.vec_id, c.cid,
+        |    CAST(CAST(list_sum(list_transform(generate_series(1, len(n.v)), i -> n.v[i]*c.cv[i])) AS BIGINT) AS DOUBLE)/(n.nv*c.cn) AS cos,
+        |    row_number() OVER (PARTITION BY n.vec_id
+        |                       ORDER BY CAST(CAST(list_sum(list_transform(generate_series(1, len(n.v)), i -> n.v[i]*c.cv[i])) AS BIGINT) AS DOUBLE)/(n.nv*c.cn) DESC, c.cid ASC) AS rn
+        |  FROM nrm n, cent c
+        |), corpus_assign AS (
+        |  SELECT vec_id AS corpus_id, cid AS list_id FROM cscore WHERE rn = 1
+        |), probes AS (
+        |  SELECT vec_id AS query_id, cid AS list_id FROM cscore WHERE rn <= 4 AND vec_id < 50
+        |), cand AS (
+        |  SELECT p.query_id, a.corpus_id
+        |  FROM probes p JOIN corpus_assign a ON a.list_id = p.list_id
+        |  WHERE a.corpus_id != p.query_id
+        |), scored AS (
+        |  SELECT c.query_id, c.corpus_id,
+        |    CAST(CAST(list_sum(list_transform(generate_series(1, len(q.v)), i -> q.v[i]*t.v[i])) AS BIGINT) AS DOUBLE)/(q.nv*t.nv) AS cosine
+        |  FROM cand c
+        |  JOIN nrm q ON q.vec_id = c.query_id
+        |  JOIN nrm t ON t.vec_id = c.corpus_id
+        |)
+        |SELECT query_id, corpus_id, cosine, CAST(rnk AS INT) AS rnk
+        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, corpus_id ASC) AS rnk
+        |      FROM scored)
+        |WHERE rnk <= 3""".stripMargin),
+    // ---- trained k-means (exact-integer centroid sums, fixed seed
+    // and tie-breaks ⇒ DuckDB unrolls the same two update steps) ----
+    QuerySpec("q_kmeans", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      graft.operators.KMeans.assign(emb, graft.operators.KMeans.train(emb, 8, 2))
+        .select(col("vec_id"), col("list_id").cast("int").as("list_id"))
+        .orderBy(col("vec_id"))
+    }, s"""$kmeansCtes
+         |SELECT vec_id, CAST(cid AS INT) AS list_id FROM a2 ORDER BY vec_id""".stripMargin),
+    // ---- product quantization: 64 floats -> 4 codebook codes
+    // (Jégou et al. 2011). Integer-quantized subspace distances make
+    // encode (argmin, ties to smallest centroid) and ADC scores
+    // exact — both carry full cross-engine oracles ----
+    QuerySpec("q_pq_codes", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val mdl = graft.operators.ProductQuantizer.model(emb, m = 4, k = 16)
+      graft.operators.ProductQuantizer.encode(emb, mdl)
+        .orderBy(col("vec_id"))
+    }, """WITH qz AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), cent AS (
+        |  SELECT vec_id AS cid, v FROM qz WHERE vec_id < 16
+        |), sub AS (
+        |  SELECT q.vec_id, s.s, c.cid,
+        |    CAST(list_sum(list_transform(generate_series(1, 16), i ->
+        |      (q.v[s.s*16 + i] - c.v[s.s*16 + i]) * (q.v[s.s*16 + i] - c.v[s.s*16 + i]))) AS BIGINT) AS d
+        |  FROM qz q, (SELECT unnest(generate_series(0, 3)) AS s) s, cent c
+        |), best AS (
+        |  SELECT vec_id, s, min([d, cid])[2] AS code FROM sub GROUP BY 1, 2
+        |)
+        |SELECT vec_id,
+        |  CAST(max(CASE WHEN s = 0 THEN code END) AS INT) AS code0,
+        |  CAST(max(CASE WHEN s = 1 THEN code END) AS INT) AS code1,
+        |  CAST(max(CASE WHEN s = 2 THEN code END) AS INT) AS code2,
+        |  CAST(max(CASE WHEN s = 3 THEN code END) AS INT) AS code3
+        |FROM best GROUP BY vec_id ORDER BY vec_id""".stripMargin),
+    QuerySpec("q_pq_adc", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val mdl = graft.operators.ProductQuantizer.model(emb, m = 4, k = 16)
+      val codes = graft.operators.ProductQuantizer.encode(emb, mdl)
+      graft.operators.ProductQuantizer.adcTopK(
+          codes, emb.where(col("vec_id") < 50), mdl, k = 3)
+        .orderBy(col("query_id"), col("rnk"))
+    }, """WITH qz AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), cent AS (
+        |  SELECT vec_id AS cid, v FROM qz WHERE vec_id < 16
+        |), sub AS (
+        |  SELECT q.vec_id, s.s, c.cid,
+        |    CAST(list_sum(list_transform(generate_series(1, 16), i ->
+        |      (q.v[s.s*16 + i] - c.v[s.s*16 + i]) * (q.v[s.s*16 + i] - c.v[s.s*16 + i]))) AS BIGINT) AS d
+        |  FROM qz q, (SELECT unnest(generate_series(0, 3)) AS s) s, cent c
+        |), best AS (
+        |  SELECT vec_id, s, min([d, cid])[2] AS code FROM sub GROUP BY 1, 2
+        |), adcsub AS (
+        |  SELECT qq.vec_id AS query_id, b.vec_id AS corpus_id, b.s,
+        |    CAST(list_sum(list_transform(generate_series(1, 16), i ->
+        |      (qq.v[b.s*16 + i] - c.v[b.s*16 + i]) * (qq.v[b.s*16 + i] - c.v[b.s*16 + i]))) AS BIGINT) AS d
+        |  FROM best b JOIN cent c ON c.cid = b.code
+        |       JOIN qz qq ON qq.vec_id < 50
+        |  WHERE qq.vec_id != b.vec_id
+        |), adc AS (
+        |  SELECT query_id, corpus_id, CAST(SUM(d) AS BIGINT) AS adc_dist
+        |  FROM adcsub GROUP BY 1, 2
+        |)
+        |SELECT query_id, corpus_id, adc_dist, CAST(rnk AS INT) AS rnk
+        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_dist, corpus_id) AS rnk
+        |      FROM adc)
+        |WHERE rnk <= 3
+        |ORDER BY query_id, rnk""".stripMargin),
+    // ---- the PRODUCTION codebook path: encode under a 2-iteration
+    // exact-integer-Lloyd's trained codebook. Deterministic under any
+    // partitioning (integer sums, rounded-integer means, ties to the
+    // smallest centroid id), so the whole training loop unrolls into
+    // a cross-engine SQL oracle — the q_kmeans precedent ----
+    QuerySpec("q_pq_trained", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val mdl = graft.operators.ProductQuantizer.trainedModel(emb, m = 4, k = 16, iters = 2)
+      graft.operators.ProductQuantizer.encode(emb, mdl)
+        .orderBy(col("vec_id"))
+    },
+      // PQ trained codebook: ProductQuantizer.trainedModel(m=4, k=16,
+      // iters=2) + encode, unrolled per subspace (the m subspaces train
+      // independently — loop order in the Scala code is irrelevant).
+      // Each subspace: seed c{s}_0 = corpus rows vec_id < 16 sliced,
+      // two Lloyd rounds of (argmin assign with ties to the smallest
+      // cid, rounded-integer-mean update floorDiv(2·Σx + n, 2n) with
+      // empty clusters keeping their centroid), then the final encode
+      // assignment. The assignment ranks by FULL squared L2 where the
+      // Scala side drops the constant ‖v_s‖² term — identical order and
+      // ties within each (vec, subspace) partition. floorDiv must be
+      // FLOOR division (Math.floorDiv): DuckDB's // truncates toward
+      // zero, hence the explicit (a − ((a%b)+b)%b)/b form (b = 2n > 0).
+      {
+      val m = 4; val k = 16; val sd = 16
+      def d2(vExpr: String, cvExpr: String) =
+        s"CAST(list_sum(list_transform(generate_series(1, $sd), i -> ($vExpr[i] - $cvExpr[i]) * ($vExpr[i] - $cvExpr[i]))) AS BIGINT)"
+      def assignCte(s: Int, cents: String, out: String) =
+        s"""$out AS (
+           |  SELECT vec_id, cid FROM (
+           |    SELECT n.vec_id, c.cid,
+           |      row_number() OVER (PARTITION BY n.vec_id ORDER BY ${d2("n.sv", "c.cv")} ASC, c.cid ASC) AS rn
+           |    FROM sv$s n, $cents c)
+           |  WHERE rn = 1
+           |)""".stripMargin
+      def updateCte(s: Int, assign: String, prev: String, out: String) = {
+        val fd = "((2*sx + n) - (((2*sx + n) % (2*n)) + (2*n)) % (2*n)) // (2*n)"
+        s"""s_$out AS (
+           |  SELECT a.cid, d.i, CAST(SUM(n.sv[d.i]) AS BIGINT) AS sx, CAST(count(*) AS BIGINT) AS n
+           |  FROM $assign a JOIN sv$s n USING (vec_id), (SELECT unnest(generate_series(1, $sd)) AS i) d
+           |  GROUP BY 1, 2
+           |), u_$out AS (
+           |  SELECT cid, list($fd ORDER BY i) AS cv FROM s_$out GROUP BY cid
+           |), $out AS (
+           |  SELECT p.cid, coalesce(u.cv, p.cv) AS cv FROM $prev p LEFT JOIN u_$out u USING (cid)
+           |)""".stripMargin
+      }
+      val perS = (0 until m).map { s =>
+        val lo = s * sd + 1; val hi = (s + 1) * sd
+        s"""sv$s AS (
+           |  SELECT vec_id, list_slice(v, $lo, $hi) AS sv FROM qz
+           |), c${s}_0 AS (
+           |  SELECT vec_id AS cid, list_slice(v, $lo, $hi) AS cv FROM qz WHERE vec_id < $k
+           |), ${assignCte(s, s"c${s}_0", s"a${s}_1")},
+           |${updateCte(s, s"a${s}_1", s"c${s}_0", s"c${s}_1")},
+           |${assignCte(s, s"c${s}_1", s"a${s}_2")},
+           |${updateCte(s, s"a${s}_2", s"c${s}_1", s"c${s}_2")},
+           |${assignCte(s, s"c${s}_2", s"f$s")}""".stripMargin
+      }.mkString(",\n")
+      s"""WITH qz AS (
+         |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+         |  FROM embeddings WHERE embedding IS NOT NULL
+         |), $perS
+         |SELECT q.vec_id,
+         |  CAST(f0.cid AS INT) AS code0, CAST(f1.cid AS INT) AS code1,
+         |  CAST(f2.cid AS INT) AS code2, CAST(f3.cid AS INT) AS code3
+         |FROM qz q JOIN f0 USING (vec_id) JOIN f1 USING (vec_id)
+         |     JOIN f2 USING (vec_id) JOIN f3 USING (vec_id)
+         |ORDER BY q.vec_id""".stripMargin
+    }),
+    // ---- IVF-PQ (IVFADC, Jégou et al. 2011): coarse lists route
+    // the query to nProbe/nLists of the corpus, global PQ codes
+    // shrink each scanned row to m bytes-ish, ADC ranks — the
+    // billion-scale ANN layout as one composition of the two
+    // oracle-gated parts. Integer ADC + deterministic tie-breaks ⇒
+    // DuckDB replicates the exact same approximation ----
+    QuerySpec("q_ivfpq_topk", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val mdl = graft.operators.ProductQuantizer.model(emb, m = 4, k = 16)
+      graft.operators.Similarity.ivfPqTopK(emb, emb.where(col("vec_id") < 50), 3,
+          nLists = 8, nProbe = 2, mdl)
+        .orderBy(col("query_id"), col("rnk"))
+    }, ivfpqTopkSql, invariant = InvariantOracles.ivfpq,
+      // r13 verdict item #1: the fused IVF-PQ build+probe stays
+      // registered as the BUILD-COST receipt (its 195 s sf10 row was
+      // half the pin headline) now that q_ivfpq_indexed measures the
+      // production probe with the build priced as warmup_detail.ivfpq
+      regime = Some("build-reference")),
+    // ---- the PERSISTED-index IVF-PQ probe (r12 verdict item #5):
+    // q_ivfpq_topk above FUSES the linear index build with the probe
+    // (its two-decade exponent was 1.00 because the build dominates —
+    // it stays registered as the build-cost receipt). This instance
+    // builds the list_id-partitioned index ONCE per (session, sfDir)
+    // — bench pays it in warmup_detail.ivfpq — and measures the
+    // probe: a directory-pruned scan of nProbe/nLists of the 8-byte
+    // code rows. Same models, same params ⇒ same answer, and the
+    // oracle replays the identical approximation ----
+    QuerySpec("q_ivfpq_indexed", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val mdl = graft.operators.ProductQuantizer.model(emb, m = 4, k = 16)
+      val path = graft.operators.Similarity.ivfPqIndexFor(s, dir, emb, nLists = 8, mdl)
+      graft.operators.Similarity.ivfPqTopKIndexed(s, path,
+          emb.where(col("vec_id") < 50), 3, nProbe = 2)
+        .orderBy(col("query_id"), col("rnk"))
+    },
+      // the persisted-index probe returns the SAME approximation as the
+      // fused q_ivfpq_topk (same coarse lists, same global PQ codes,
+      // same nProbe) — its oracle is that replica verbatim; what
+      // differs is WHERE the engine reads (the list_id-pruned directory
+      // layout vs an in-memory rebuild), which SQL cannot and need not
+      // see
+      ivfpqTopkSql,
+      // the persisted-index probe (r13) returns the SAME approximation
+      // as the fused instance on the same params — the identical exact
+      // recompute certifies its dump, and its replay oracle (the
+      // q_ivfpq_topk replica) hits the same ~500 s DuckDB OOM wall at
+      // sf1 that put q_ivfpq_topk on this list in r11. Since r14 its
+      // staged list ALSO reconciles the persisted index's per-list
+      // layout via the engine's q_ivfpq_layout dump (see ivfpqIndexed).
+      invariant = InvariantOracles.ivfpqIndexed, regime = Some("production-twin"),
+      shares = Set("ivfpq")),
+    // ---- the index LAYOUT certificate (r13 verdict item #5): one
+    // row per coarse centroid in the PERSISTED index's sidecar, with
+    // the row count of its list_id partition directory — read from
+    // the index bytes q_ivfpq_indexed probes, not recomputed. The
+    // oracle recomputes the coarse assignment from the raw embeddings
+    // and counts per list, so a stale, truncated, or mis-partitioned
+    // index mismatches HERE even at SFs where the full top-k replay
+    // is DuckDB-infeasible; q_ivfpq_indexed's staged invariant
+    // reconciles against this dump (r_q_ivfpq_layout) for the same
+    // reason ----
+    QuerySpec("q_ivfpq_layout", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val mdl = graft.operators.ProductQuantizer.model(emb, m = 4, k = 16)
+      val path = graft.operators.Similarity.ivfPqIndexFor(s, dir, emb, nLists = 8, mdl)
+      val counts = s.read.parquet(path)
+        .groupBy(col("list_id").cast("long").as("list_id"))
+        .agg(count(lit(1)).as("n_rows"))
+      s.read.parquet(path + ".centroids")
+        .select(col("cid").cast("long").as("list_id"))
+        .join(counts, Seq("list_id"), "full_outer")
+        .select(col("list_id"), coalesce(col("n_rows"), lit(0L)).as("n_rows"))
+        .orderBy(col("list_id"))
+    },
+      // the persisted-index layout certificate: per-coarse-centroid row
+      // counts, recomputed INDEPENDENTLY from the raw embeddings (the
+      // same coarse-assignment CTEs as q_ivfpq_topk's replay, stopped
+      // at corpus_assign — linear, no pair joins, feasible at every SF
+      // where the top-k replay OOMs). The engine side read the counts
+      // from the persisted list_id directories + the centroid sidecar,
+      // so truncation/staleness/mis-partitioning mismatches here.
+      """WITH qz AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), nrm AS (
+        |  SELECT vec_id, v,
+        |    sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(v)), i -> v[i]*v[i])) AS BIGINT) AS DOUBLE)) AS nv
+        |  FROM qz
+        |), coarse AS (
+        |  SELECT vec_id AS cid, v AS cv, nv AS cn FROM nrm WHERE vec_id < 8
+        |), cscore AS (
+        |  SELECT n.vec_id, c.cid,
+        |    row_number() OVER (PARTITION BY n.vec_id
+        |                       ORDER BY CAST(CAST(list_sum(list_transform(generate_series(1, len(n.v)), i -> n.v[i]*c.cv[i])) AS BIGINT) AS DOUBLE)/(n.nv*c.cn) DESC, c.cid ASC) AS rn
+        |  FROM nrm n, coarse c
+        |), corpus_assign AS (
+        |  SELECT vec_id AS corpus_id, cid AS list_id FROM cscore WHERE rn = 1
+        |)
+        |SELECT CAST(c.cid AS BIGINT) AS list_id, CAST(COALESCE(g.n, 0) AS BIGINT) AS n_rows
+        |FROM (SELECT vec_id AS cid FROM embeddings WHERE vec_id < 8) c
+        |LEFT JOIN (SELECT list_id, count(*) AS n FROM corpus_assign GROUP BY 1) g ON g.list_id = c.cid
+        |ORDER BY list_id""".stripMargin, shares = Set("ivfpq")),
+    // ---- cross-corpus SEMANTIC contamination: eval rows (natural
+    // tail + planted copies of train rows) banded against the train
+    // side — the paraphrase-leak check n-gram contamination can't
+    // make; at 0.95 only the planted copies match. Same plane
+    // family as q_embed_neardup, replicated exactly in SQL ----
+    QuerySpec("q_semantic_contam", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val train = emb.where(col("vec_id") < 1500)
+      // planted leaks carry NEGATIVE ids: natural ids can never
+      // collide with them at ANY SF. The old +10000 offset collided
+      // with GenScale's copy stride at sf1, where the oracle's
+      // per-vid grouped projection silently summed the two colliding
+      // vectors' signatures and lost 2 of the 100 planted pairs —
+      // the sf1 gate's one real catch
+      val evalSet = emb.where(col("vec_id") >= 1500)
+        .unionByName(emb.where(col("vec_id") < 100)
+          .withColumn("vec_id", -col("vec_id") - 1L))
+      graft.operators.Similarity.crossCorpusNearDup(train, evalSet, 0.95)
+        .orderBy(col("eval_id"), col("train_id"))
+    },
+      // Cross-corpus contamination: q_embed_neardup's plane family,
+      // banded EVAL × TRAIN instead of self; eval = natural tail +
+      // planted train copies (ids shifted +10000).
+      """WITH tr AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings WHERE vec_id < 1500
+        |), ev AS (
+        |  SELECT vec_id AS vid, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings WHERE vec_id >= 1500
+        |  UNION ALL
+        |  SELECT -vec_id - 1, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT))
+        |  FROM embeddings WHERE vec_id < 100
+        |), trn AS (
+        |  SELECT vec_id, v,
+        |    sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(v)), i -> v[i]*v[i])) AS BIGINT) AS DOUBLE)) AS nv
+        |  FROM tr
+        |), evn AS (
+        |  SELECT vid, v,
+        |    sqrt(CAST(CAST(list_sum(list_transform(generate_series(1, len(v)), i -> v[i]*v[i])) AS BIGINT) AS DOUBLE)) AS nv
+        |  FROM ev
+        |), planes AS (
+        |  SELECT p.p // 4 AS band, p.p % 4 AS j, i.i,
+        |    CASE WHEN CAST('0x' || substr(md5(p.p || ':' || i.i), 1, 15) AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END AS s
+        |  FROM (SELECT unnest(generate_series(0, 63)) AS p) p,
+        |       (SELECT unnest(generate_series(0, 63)) AS i) i
+        |), projT AS (
+        |  SELECT n.vec_id, pl.band, pl.j, CAST(SUM(n.v[pl.i + 1] * pl.s) AS BIGINT) AS dot
+        |  FROM trn n JOIN planes pl ON pl.i < len(n.v) GROUP BY 1, 2, 3
+        |), bktT AS (
+        |  SELECT vec_id, band, CAST(SUM(CASE WHEN dot >= 0 THEN 1 << j ELSE 0 END) AS BIGINT) AS bucket
+        |  FROM projT GROUP BY 1, 2
+        |), projE AS (
+        |  SELECT n.vid, pl.band, pl.j, CAST(SUM(n.v[pl.i + 1] * pl.s) AS BIGINT) AS dot
+        |  FROM evn n JOIN planes pl ON pl.i < len(n.v) GROUP BY 1, 2, 3
+        |), bktE AS (
+        |  SELECT vid, band, CAST(SUM(CASE WHEN dot >= 0 THEN 1 << j ELSE 0 END) AS BIGINT) AS bucket
+        |  FROM projE GROUP BY 1, 2
+        |), cand AS (
+        |  SELECT DISTINCT e.vid AS eval_id, t.vec_id AS train_id
+        |  FROM bktE e JOIN bktT t ON t.band = e.band AND t.bucket = e.bucket
+        |), s AS (
+        |  SELECT c.eval_id, c.train_id,
+        |    CAST(CAST(list_sum(list_transform(generate_series(1, len(en.v)), k -> en.v[k]*tn.v[k])) AS BIGINT) AS DOUBLE)/(en.nv*tn.nv) AS cosine
+        |  FROM cand c JOIN evn en ON en.vid = c.eval_id JOIN trn tn ON tn.vec_id = c.train_id
+        |)
+        |SELECT eval_id, train_id, cosine FROM s WHERE cosine >= 0.95
+        |ORDER BY eval_id, train_id""".stripMargin),
+    // ---- SemDeDup: within-cluster near-dup pairs under the trained
+    // k-means model (cluster-scoped quadratic search — the published
+    // alternative to global LSH bucketing) ----
+    QuerySpec("q_semdedup", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      graft.operators.SemDedup.pairs(emb, 0.4, k = 8, iters = 2)
+        .orderBy(col("a_id"), col("b_id"))
+    },
+      // SemDeDup: the same trained assignment, then all within-cluster
+      // pairs verified with the exact quantized cosine at threshold 0.4
+      s"""$kmeansCtes
+         |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+         |  CAST(CAST(list_sum(list_transform(generate_series(1, len(x.v)), i -> x.v[i]*y.v[i])) AS BIGINT) AS DOUBLE)/(x.nv*y.nv) AS cosine
+         |FROM a2 a JOIN a2 b ON a.cid = b.cid AND a.vec_id < b.vec_id
+         |JOIN nrm x ON x.vec_id = a.vec_id
+         |JOIN nrm y ON y.vec_id = b.vec_id
+         |WHERE CAST(CAST(list_sum(list_transform(generate_series(1, len(x.v)), i -> x.v[i]*y.v[i])) AS BIGINT) AS DOUBLE)/(x.nv*y.nv) >= 0.4""".stripMargin,
+      shares = Set("neardup")),
+    // ---- brute-force cosine top-k over embeddings (quantized-exact) ----
+    QuerySpec("q_cosine_topk", (s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      graft.operators.Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 100), 3)
+        .orderBy(col("query_id"), col("rnk"))
+    }, """WITH qz AS (
+        |  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT)) AS v
+        |  FROM embeddings
+        |), s AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
+        |    CAST(list_sum(list_transform(generate_series(1, len(q.v)), i -> q.v[i]*c.v[i])) AS BIGINT) AS dot,
+        |    CAST(list_sum(list_transform(generate_series(1, len(q.v)), i -> q.v[i]*q.v[i])) AS BIGINT) AS nq,
+        |    CAST(list_sum(list_transform(generate_series(1, len(c.v)), i -> c.v[i]*c.v[i])) AS BIGINT) AS nc
+        |  FROM qz q, qz c
+        |  WHERE q.vec_id < 100 AND q.vec_id != c.vec_id
+        |), scored AS (
+        |  SELECT query_id, corpus_id,
+        |    CAST(dot AS DOUBLE)/(sqrt(CAST(nq AS DOUBLE))*sqrt(CAST(nc AS DOUBLE))) AS cosine
+        |  FROM s
+        |)
+        |SELECT query_id, corpus_id, cosine,
+        |  CAST(rnk AS INT) AS rnk
+        |FROM (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, corpus_id ASC) AS rnk
+        |      FROM scored)
+        |WHERE rnk <= 3""".stripMargin))
+}

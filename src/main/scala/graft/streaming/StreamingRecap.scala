@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions._
   * partial re-emission of day recaps as hours arrive (ST6). In
   * Structured Streaming those become: event-time tumbling windows +
   * watermark (bounds state; late rows beyond the watermark are
-  * dropped — the batch path's anti-join handles older backfill),
-  * `dropDuplicates` within the watermark for at-least-once sources
-  * (ST7), and update-mode emission of window aggregates (ST6).
+  * dropped — the batch path's anti-join handles older backfill) and
+  * update-mode emission of window aggregates (ST6).
   *
   * The transforms are batch/stream agnostic (`DataFrame =>
   * DataFrame`): the same call works on `spark.read` and
@@ -21,12 +20,6 @@ import org.apache.spark.sql.functions._
   * `hourlyWindowed` on a MemoryStream.
   */
 object StreamingRecap {
-
-  /** ST7 — exactly-once-per-key within the watermark horizon. */
-  def dedupWithinWatermark(events: DataFrame, watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicates("location_id", "ts")
 
   /** ST4 — hourly tumbling event-time aggregation, streaming-legal
     * (single event-time window group; no sort-dependent aggregates).

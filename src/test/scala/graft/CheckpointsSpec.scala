@@ -1,9 +1,9 @@
 package graft
 
-/** Pins the r14 half-cadence loop truncation: fixed-round loops cut
-  * every 2nd round plus ALWAYS the last, so returned state is a
-  * materialized constant-size scan while mid-loop rounds skip the
-  * eager checkpoint job. */
+/** Pins the loop-truncation contract of [[graft.ops.Checkpoints]]:
+  * `truncateFused` is a lazy executor-local cut, except under a
+  * configured checkpoint dir, where every cut is an eager reliable
+  * checkpoint on the checkpoint filesystem (the durability contract). */
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -12,40 +12,6 @@ class CheckpointsSpec extends SparkSpec {
       org.apache.spark.sql.execution.ExternalRDD[_]] ||
       df.queryExecution.logical.isInstanceOf[
         org.apache.spark.sql.execution.LogicalRDD]
-
-  test("truncateEvery cuts only on the k-th round; truncateLoop always cuts last") {
-    val df = Seq(1, 2, 3).toDF("x")
-    assert(!isCheckpointScan(graft.ops.Checkpoints.truncateEvery(0)(df)))
-    assert(isCheckpointScan(graft.ops.Checkpoints.truncateEvery(1)(df)))
-    // last round cuts regardless of cadence position
-    assert(isCheckpointScan(graft.ops.Checkpoints.truncateLoop(2, 3)(df)))
-    assert(!isCheckpointScan(graft.ops.Checkpoints.truncateLoop(0, 3)(df)))
-    assert(isCheckpointScan(graft.ops.Checkpoints.truncateLoop(1, 3)(df)))
-  }
-
-  test("half-cadence call sites stay the audited single-consumer loops") {
-    // truncateEvery/truncateLoop are only safe when the loop state has
-    // ONE consumer per round (the doc's precondition): a multi-consumer
-    // loop silently doubles plan depth per skipped cut. The registry
-    // below is the enforcement — adding a call site requires measuring
-    // the loop both ways (the r14 protocol: SSSP/KCore/BFS/HyperBall
-    // all measured WORSE at half cadence and keep per-round cuts) and
-    // then extending this set.
-    val allowed = Set("PageRank.scala")
-    import scala.jdk.CollectionConverters._
-    val offenders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        !p.getFileName.toString.equals("Checkpoints.scala"))
-      .filter { p =>
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        txt.contains("truncateEvery") || txt.contains("truncateLoop")
-      }
-      .map(_.getFileName.toString).toSet
-    assert((offenders -- allowed).isEmpty,
-      s"unaudited truncateEvery/truncateLoop call sites: ${offenders -- allowed} " +
-        "— measure the loop at both cadences first, then extend the registry")
-  }
 
   test("reliable mode end-to-end: PageRank identical under a checkpoint dir, files land there") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L), (4L, 1L)).toDF("src", "dst")
@@ -71,16 +37,47 @@ class CheckpointsSpec extends SparkSpec {
     }
   }
 
-  test("truncateEvery under a checkpoint dir cuts every round (durability contract)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
+  test("truncateFused under a checkpoint dir cuts eagerly to that dir") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
     try {
-      val df = Seq(1).toDF("x")
-      assert(isCheckpointScan(graft.ops.Checkpoints.truncateEvery(0)(df)))
+      val cut = graft.ops.Checkpoints.truncateFused(spark.range(10).toDF("x"))
+      assert(isCheckpointScan(cut))
+      // eager: the files are on the checkpoint filesystem before any action
+      import scala.jdk.CollectionConverters._
+      val files = java.nio.file.Files.walk(dir).iterator().asScala
+        .count(java.nio.file.Files.isRegularFile(_))
+      assert(files > 0, s"no checkpoint files landed under $dir")
+      assert(cut.count() == 10)
     } finally {
       // unset: a checkpoint dir leaking into other suites would switch
       // every loop to reliable mode
       org.apache.spark.GraftSparkShim.clearCheckpointDir(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
     }
+  }
+
+  test("truncateFused without a checkpoint dir is lazy and launches no job") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val df = spark.range(10).toDF("x")
+    org.apache.spark.GraftSparkShim.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val cut = graft.ops.Checkpoints.truncateFused(df)
+      assert(isCheckpointScan(cut))
+      org.apache.spark.GraftSparkShim.drainListeners(sc)
+      assert(jobs.get == 0, s"truncateFused launched ${jobs.get} job(s) before any action")
+      assert(cut.count() == 10)
+      org.apache.spark.GraftSparkShim.drainListeners(sc)
+      assert(jobs.get > 0)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -11,8 +11,9 @@ class DeterminismSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  test("every query yields identical rows on a second run") {
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+  // one test per registered query, so a failure and its timing name the query
+  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    test(s"$name yields identical rows on a second run") {
       val first = fn(spark, sfDir).collect().map(_.toString).toSeq
       val second = fn(spark, sfDir).collect().map(_.toString).toSeq
       assert(first == second, s"$name differs between two runs")
