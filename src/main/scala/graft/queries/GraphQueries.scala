@@ -713,7 +713,7 @@ private[graft] object GraphQueries {
         |  WHERE walk.dist < 4
         |)
         |SELECT id, CAST(min(dist) AS BIGINT) AS dist
-        |FROM walk GROUP BY id ORDER BY id""".stripMargin),
+        |FROM walk GROUP BY id ORDER BY id""".stripMargin, shares = Set("graphs")),
     // ---- personalized PageRank (TrustRank): teleport mass pinned
     // to the suppkey%10==0 "trusted" suppliers (node id ≡ 1 mod 20)
     // over the same bipartite graph. Exact integers → 5x-unrolled

@@ -55,19 +55,12 @@ object Sinks {
   /** S7 — keyed upsert via dynamic partition overwrite: replaces only
     * the partitions present in `df`, leaving the rest of the table
     * untouched. Combined with S8 dedup this gives idempotent,
-    * exactly-once-per-key output for re-runs. */
-  def upsertPartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = conf.getOption(key)
-    conf.set(key, "dynamic")
-    try
-      df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => conf.set(key, v)
-      case None    => conf.unset(key)
-    }
-  }
+    * exactly-once-per-key output for re-runs. The mode is an option
+    * of this write, so the session conf is never changed: streams
+    * sharing a session can upsert from `foreachBatch` concurrently. */
+  def upsertPartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(path)
 
   /** S8 — unique-key enforcement before write: keep the first row per
     * key by explicit order (never "arrival order", which has no

@@ -2447,7 +2447,7 @@ object Snapshots {
     * system temp dir. */
   def ensureDemoTable(spark: SparkSession, sfDir: String): String =
     clonedFixture("snap", sfDir) { tableDir =>
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = graft.Tables.documents(spark, sfDir)
       val stats = Seq("doc_id") // zone-map envelopes for q_snapshot_prune
       commit(docs.where("doc_id % 2 = 0").repartitionByRange(4, org.apache.spark.sql.functions.col("doc_id")),
         tableDir.toString, "append", statsCols = stats)                   // v1
@@ -2480,7 +2480,7 @@ object Snapshots {
     * private copy. */
   def ensureScatteredDocsTable(spark: SparkSession, sfDir: String): String =
     clonedFixture("zbase", sfDir) { tableDir =>
-      commit(spark.read.parquet(s"$sfDir/documents.parquet").repartition(8),
+      commit(graft.Tables.documents(spark, sfDir).repartition(8),
         tableDir.toString)
     }
 
@@ -2490,7 +2490,7 @@ object Snapshots {
     * fresh on the private clone every call. */
   def ensureEvenDocsTable(spark: SparkSession, sfDir: String): String =
     clonedFixture("mvbase", sfDir) { tableDir =>
-      commit(spark.read.parquet(s"$sfDir/documents.parquet").where("doc_id % 2 = 0"),
+      commit(graft.Tables.documents(spark, sfDir).where("doc_id % 2 = 0"),
         tableDir.toString)
     }
 
@@ -2501,7 +2501,7 @@ object Snapshots {
     * keep the bloom build cost off the other snapshot queries. */
   def ensureBloomTable(spark: SparkSession, sfDir: String): String =
     clonedFixture("bloomtab", sfDir) { tableDir =>
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = graft.Tables.documents(spark, sfDir)
       val src = org.apache.spark.sql.functions.col("source")
       commit(docs.where("doc_id % 2 = 0").repartition(4, src), tableDir.toString,
         "append", bloomCols = Seq("source"), bloomExpectedItems = 4000L, bloomFpp = 0.01)

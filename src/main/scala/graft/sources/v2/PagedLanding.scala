@@ -54,7 +54,7 @@ object PagedLanding {
       "graft-landing-" + math.abs(sfDir.hashCode).toString + "-" + nPages)
     val fs = dest.getFileSystem(new Configuration())
 
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       // a keyed pager can only fetch rows it can address by key —
       // the same key guard Sources.landedJson applies on ingest

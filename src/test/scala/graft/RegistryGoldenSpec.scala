@@ -44,16 +44,7 @@ class RegistryGoldenSpec extends AnyFunSuite {
   }
 
   test("bench warmup consumer sets are unchanged") {
-    // Bench's hand-written graphs set named q_bfs, which is not a
-    // registered query (the BFS query is q_bfs_hops), so it never
-    // matched a filter; a spec can only share a stage under a real name
-    val stale = Set("q_bfs")
-    val registered = SparkEntry.queries.keySet
-    val expected = rows("warmup").map { case Seq(stage, qs) =>
-      val names = qs.split(",").toSet
-      assert((names -- registered) subsetOf stale, s"$stage: ${names -- registered}")
-      Seq(stage, (names & registered).toSeq.sorted.mkString(","))
-    }
+    val expected = rows("warmup")
     val now = expected.map(_.head)
       .map(stage => Seq(stage, SparkEntry.consumersOf(stage).toSeq.sorted.mkString(",")))
     assert(now == expected)

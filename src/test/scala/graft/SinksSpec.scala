@@ -19,18 +19,27 @@ class SinksSpec extends SparkSpec {
   }
 
   test("upsertPartitions replaces only incoming partitions (S7 upsert semantics)") {
-    val path = tmp()
-    val day1 = Seq((1L, "2024-01-01", 10.0), (2L, "2024-01-02", 20.0)).toDF("id", "d", "v")
-    Sinks.upsertPartitions(day1, path, Seq("d"))
-    // re-run day 2 with corrected value — day 1 must survive untouched
-    val day2fix = Seq((2L, "2024-01-02", 99.0)).toDF("id", "d", "v")
-    Sinks.upsertPartitions(day2fix, path, Seq("d"))
-    // note: the partition column comes back type-inferred as DATE
-    val out = spark.read.parquet(path).collect()
-      .map(r => r.getAs[Any]("d").toString -> r.getAs[Double]("v")).toMap
-    assert(out("2024-01-01") == 10.0)
-    assert(out("2024-01-02") == 99.0)
-    assert(spark.read.parquet(path).count() == 2)
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    // a session left at its default, and one set to static: the write's
+    // own mode wins either way, and the session value is left as it was
+    Seq(None, Some("static")).foreach { mode =>
+      mode.foreach(spark.conf.set(key, _))
+      try {
+        val path = tmp()
+        val day1 = Seq((1L, "2024-01-01", 10.0), (2L, "2024-01-02", 20.0)).toDF("id", "d", "v")
+        Sinks.upsertPartitions(day1, path, Seq("d"))
+        // re-run day 2 with corrected value — day 1 must survive untouched
+        val day2fix = Seq((2L, "2024-01-02", 99.0)).toDF("id", "d", "v")
+        Sinks.upsertPartitions(day2fix, path, Seq("d"))
+        // note: the partition column comes back type-inferred as DATE
+        val out = spark.read.parquet(path).collect()
+          .map(r => r.getAs[Any]("d").toString -> r.getAs[Double]("v")).toMap
+        assert(out("2024-01-01") == 10.0, s"session mode $mode")
+        assert(out("2024-01-02") == 99.0, s"session mode $mode")
+        assert(spark.read.parquet(path).count() == 2, s"session mode $mode")
+        assert(spark.conf.getAll.get(key) == mode)
+      } finally spark.conf.unset(key)
+    }
   }
 
   test("upsert is idempotent (re-running the same batch changes nothing)") {
