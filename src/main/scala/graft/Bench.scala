@@ -30,7 +30,7 @@ object Bench {
     // query, not executor startup: the first bench entry was absorbing
     // ~2 s of one-time infrastructure cost
     spark.range(1000).selectExpr("sum(id)").collect()
-    val warm = spark.read.parquet(s"$sfDir/region.parquet")
+    val warm = Tables.region(spark, sfDir)
     warm.join(org.apache.spark.sql.functions.broadcast(warm), Seq("r_regionkey"))
       .groupBy("r_regionkey").count().orderBy("r_regionkey").collect()
     // first-touch the remaining execution machinery (ObjectHashAggregate

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental near-dup detection — the production dedup shape: a
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * runs on every ingest tick once the corpus exists.)
   *
   * The index is two parquet tables under one root:
-  *  - `<root>/bands`: (band, bucket, doc_id, n_shingles) — the LSH
+  *  - `<root>/bands`: (doc_id, band, bucket, n_shingles) — the LSH
   *    band table, the candidate-join side. At 100 TB this is the ONLY
   *    per-tick scan of corpus-derived data, and it's 4 longs per
   *    (doc × band) row regardless of document size.
@@ -24,7 +24,10 @@ import org.apache.spark.sql.functions._
   * 1−(1−t^r)^b from banding, then exact). New-batch-internal dups are
   * NOT this operator's job — run `NearDup` on the batch first, then
   * probe the corpus; `appendToIndex` admits the accepted batch so the
-  * next tick sees it.
+  * next tick sees it. `nearDupsAgainstIndex` and `appendToIndex` take
+  * a frame already signed by `NearDup.withBandBuckets`, so a caller
+  * that clusters, probes and admits one batch (the streaming gate)
+  * shingles and signs it once.
   *
   * No shingle-set clustering here: clustering pays when a dup-heavy
   * frame self-joins (NearDup.scala:77-84); the cross join here is
@@ -32,52 +35,75 @@ import org.apache.spark.sql.functions._
   */
 object Incremental {
 
-  /** Per-doc band table for a shingled frame — delegates to the one
-    * canonical definition (`NearDup.bandTable`) so index candidates
-    * and corpus-wide dedup candidates can never drift apart. */
-  def bandTable(sh: DataFrame, k: Int = 96, b: Int = 24): DataFrame =
-    NearDup.bandTable(sh, k, b)
-
-  /** Build the index from a corpus: one shingling pass, then the band
-    * table and the shingle store land under `root`. */
+  /** Build the index from a corpus: one shingling and signing pass,
+    * then the band table and the shingle store land under `root`. */
   def writeIndex(docs: DataFrame, textCol: String, n: Int, root: String,
                  k: Int = 96, b: Int = 24): Unit = {
-    val sh = NearDup.shingled(docs, textCol, n)
+    val signed = NearDup.withBandBuckets(NearDup.shingled(docs, textCol, n), k, b)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      bandTable(sh, k, b).write.mode("overwrite").parquet(s"$root/bands")
-      sh.select(col("doc_id"), col("hs"), col("n_shingles"))
-        .write.mode("overwrite").parquet(s"$root/shingles")
-    } finally sh.unpersist(blocking = false)
+    try writeRows(signed, root, "overwrite")
+    finally signed.unpersist(blocking = false)
   }
 
-  /** Admit an accepted batch into the index (append-only; the next
-    * tick's probes see it). Idempotence is the caller's contract —
+  /** Admit an accepted, signed batch into the index (append-only; the
+    * next tick's probes see it). Idempotence is the caller's contract —
     * re-appending a batch double-registers its bands, which costs
     * duplicate candidates (dropped by the distinct) but never wrong
     * results. */
-  def appendToIndex(docs: DataFrame, textCol: String, n: Int, root: String,
-                    k: Int = 96, b: Int = 24): Unit = {
-    val sh = NearDup.shingled(docs, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      bandTable(sh, k, b).write.mode("append").parquet(s"$root/bands")
-      sh.select(col("doc_id"), col("hs"), col("n_shingles"))
-        .write.mode("append").parquet(s"$root/shingles")
-    } finally sh.unpersist(blocking = false)
+  private[graft] def appendToIndex(signed: DataFrame, root: String): Unit =
+    writeRows(signed, root, "append")
+
+  private def writeRows(signed: DataFrame, root: String, mode: String): Unit = {
+    NearDup.bandRows(signed).write.mode(mode).parquet(s"$root/bands")
+    shingleRows(signed).write.mode(mode).parquet(s"$root/shingles")
   }
+
+  private def shingleRows(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), col("hs"), col("n_shingles"))
 
   /** Pure-frame form: probe `newDocs`' shingled frame against a band
     * table + shingle store (in-memory or read from an index). Output:
     * (new_id, old_id, common, jaccard) for every cross pair with
     * exact Jaccard ≥ threshold among banding candidates. */
   def nearDupsAgainstFrom(newSh: DataFrame, oldBands: DataFrame, oldSh: DataFrame,
-                          threshold: Double, k: Int = 96, b: Int = 24): DataFrame = {
-    val newBands = bandTable(newSh, k, b)
+                          threshold: Double, k: Int = 96, b: Int = 24): DataFrame =
+    probe(NearDup.bandTable(newSh, k, b), newSh, oldBands, oldSh, threshold)
+
+  /** Probe a PERSISTED index with a signed batch: its band rows join
+    * the stored band table for candidates, and the stored shingle sets
+    * verify them. */
+  private[graft] def nearDupsAgainstIndex(root: String, signed: DataFrame,
+                                          threshold: Double): DataFrame = {
+    val newBands = NearDup.bandRows(signed)
+    probe(newBands, signed, stored(root, "bands", newBands),
+      stored(root, "shingles", shingleRows(signed)), threshold)
+  }
+
+  /** Admit only the rows of a signed batch that the index does not hold
+    * yet, per table and by doc_id: completes an admission that stopped
+    * between or before its two writes, and appends nothing after a
+    * complete one. Scans the stored doc ids, so it is the replay path,
+    * not the per-tick one. */
+  private[graft] def appendMissing(signed: DataFrame, root: String): Unit =
+    Seq("bands" -> NearDup.bandRows(signed), "shingles" -> shingleRows(signed)).foreach {
+      case (name, rows) =>
+        rows.join(stored(root, name, rows).select(col("doc_id")), Seq("doc_id"), "left_anti")
+          .write.mode("append").parquet(s"$root/$name")
+    }
+
+  /** An index table, read with the schema of the projection that wrote
+    * it (the batch's own rows of that table), so no read of the index
+    * launches a schema-inference job. */
+  private def stored(root: String, name: String, like: DataFrame): DataFrame =
+    like.sparkSession.read.schema(like.schema).parquet(s"$root/$name")
+
+  private def probe(newBands: DataFrame, newSh: DataFrame, oldBands: DataFrame,
+                    oldSh: DataFrame, threshold: Double): DataFrame = {
+    val nb = newBands
       .select(col("band"), col("bucket"), col("doc_id").as("new_id"), col("n_shingles").as("n_new"))
     val old = oldBands
       .select(col("band"), col("bucket"), col("doc_id").as("old_id"), col("n_shingles").as("n_old"))
-    val cand = newBands.join(old, Seq("band", "bucket"))
+    val cand = nb.join(old, Seq("band", "bucket"))
       .where(col("n_old") >= ceil(col("n_new") * threshold) &&
         col("n_new") >= ceil(col("n_old") * threshold))
       .select(col("new_id"), col("old_id")).distinct()
@@ -89,18 +115,5 @@ object Incremental {
         col("common").cast("double") / (col("n1") + col("n2") - col("common")).cast("double"))
       .where(col("jaccard") >= threshold)
       .select(col("new_id"), col("old_id"), col("common"), col("jaccard"))
-  }
-
-  /** Probe a PERSISTED index: shingle only the new batch, read the
-    * stored band table for candidates and the stored shingle sets for
-    * verification. */
-  def nearDupsAgainstIndex(spark: SparkSession, root: String, newDocs: DataFrame,
-                           textCol: String, n: Int, threshold: Double,
-                           k: Int = 96, b: Int = 24): DataFrame = {
-    val newSh = NearDup.shingled(newDocs, textCol, n)
-    nearDupsAgainstFrom(newSh,
-      spark.read.parquet(s"$root/bands"),
-      spark.read.parquet(s"$root/shingles"),
-      threshold, k, b)
   }
 }

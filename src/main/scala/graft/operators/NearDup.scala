@@ -162,31 +162,37 @@ object NearDup {
     cross.unionByName(intra)
   }
 
-  /** MinHash signatures from the hashed shingle sets: all k affine
-    * min-hashes per document in ONE native codegen'd expression
+  /** Each row's LSH band buckets, signed ONCE: all k min-hashes of the
+    * shingle set in one native codegen'd expression
     * (graft.plans.MinHashSig) — a narrow map-side projection, no
-    * explode/groupBy exchange. Replaced round 1's k-wide min()
-    * aggregate, whose ~10 s one-time Janino compile (k≈96 agg
-    * expression trees) dominated the cold-JVM bench; the tight
-    * JIT-compiled double loop also beats 96 separate expression
-    * evaluations per shingle. Permutation family: mix64(x ⊕ seed_i)
-    * (see MinHashImpl — the affine family it replaces was measurably
-    * biased at 50k-corpus scale). */
-  def minhashSignatures(sh: DataFrame, k: Int): DataFrame =
-    sh.where(size(col("hs")) > 0)
-      .select(col("doc_id"), graft.plans.MinHashSig.minhashSig(col("hs"), k).as("sig"))
+    * explode/groupBy exchange — then one bucket hash per band of
+    * r = k/b slots (murmur-style mix; engine-internal identity, so no
+    * reproducible-md5 requirement). Replaced round 1's k-wide min()
+    * aggregate (~10 s one-time Janino compile per JVM) and its
+    * interpreted transform+md5 band HOFs. Permutation family:
+    * mix64(x ⊕ seed_i) (see MinHashImpl — the affine family it
+    * replaces was measurably biased at 50k-corpus scale). An empty set
+    * has no signature: its `buckets` is null, so it never bands. */
+  private[graft] def withBandBuckets(sh: DataFrame, k: Int = 96, b: Int = 24): DataFrame =
+    sh.withColumn("buckets", when(col("n_shingles") > 0,
+      graft.plans.MinHashSig.bandBuckets(graft.plans.MinHashSig.minhashSig(col("hs"), k), b, k / b)))
 
-  /** LSH banding: (band, bucket-hash) per doc; docs sharing a
-    * (band, bucket) become candidate pairs. b bands of r rows. Bucket
-    * hashes come from one native expression (murmur-style mix of the
-    * band's r slots — engine-internal identity, so no reproducible-md5
-    * requirement), replacing round 1's interpreted transform+md5 HOFs. */
-  def lshBanded(sigs: DataFrame, b: Int, r: Int): DataFrame =
-    sigs.select(
-      col("doc_id"),
-      posexplode(graft.plans.MinHashSig.bandBuckets(col("sig"), b, r))
-        .as(Seq("band", "bucket"))
-    )
+  /** Band rows of a `withBandBuckets` frame, by projection:
+    * (doc_id, band, bucket, n_shingles). */
+  private[graft] def bandRows(signed: DataFrame): DataFrame =
+    signed.select(col("doc_id"), posexplode(col("buckets")).as(Seq("band", "bucket")),
+      col("n_shingles"))
+
+  /** Per-doc band table: (doc_id, band, bucket, n_shingles) — one
+    * narrow native-expression projection, no shuffle and no join
+    * (the set size rides on the row that is signed). THE canonical
+    * banded-candidate shape: corpus-wide pair generation (below), the
+    * incremental index (`Incremental`) and the streaming ingest gate
+    * all build from `withBandBuckets` + `bandRows`, so their candidate
+    * semantics can never drift. Docs sharing a (band, bucket) become
+    * candidate pairs. */
+  def bandTable(sh: DataFrame, k: Int = 96, b: Int = 24): DataFrame =
+    bandRows(withBandBuckets(sh, k, b))
 
   /** Candidate pairs from banding (+ exact length filter), then
     * exact-Jaccard verification — the full sub-quadratic near-dup
@@ -211,15 +217,6 @@ object NearDup {
     * representative space (e.g. clustering, where expanding each
     * near-clone cluster into |A|·|B| clique edges only to contract
     * them again is pure waste). */
-  /** Per-doc band table: (band, bucket, doc_id, n_shingles) — one
-    * narrow native-expression projection, no shuffle. THE canonical
-    * banded-candidate shape: both corpus-wide pair generation (below)
-    * and the incremental index (`Incremental`) build from this one
-    * definition, so their candidate semantics can never drift. */
-  def bandTable(sh: DataFrame, k: Int = 96, b: Int = 24): DataFrame =
-    lshBanded(minhashSignatures(sh, k), b, k / b)
-      .join(sh.select(col("doc_id"), col("n_shingles")), Seq("doc_id"))
-
   def minhashRepPairsFrom(sh: DataFrame, threshold: Double,
                           k: Int = 96, b: Int = 24,
                           maxCandidatePairs: Long = 100000000L): DataFrame = {
@@ -233,10 +230,25 @@ object NearDup {
     // computed once, not once for the guard and again per join side.
     val banded = graft.operators.Similarity.guardedBandTable(
       "minhash-bands", bandTable(sh, k, b), Seq("band", "bucket"), maxCandidatePairs,
-      what = s"minhashRepPairsFrom(k=$k, b=$b)",
-      remedy = "use more rows per band (smaller b for fixed k: r = k/b drives " +
-        "selectivity ~(1/2^r per band) on non-dup content) or raise " +
-        "maxCandidatePairs deliberately")
+      bandGuardWhat(k, b), bandGuardRemedy)
+    bandPairs(banded, sh, threshold)
+  }
+
+  private def bandGuardWhat(k: Int, b: Int) = s"minhashRepPairsFrom(k=$k, b=$b)"
+  private val bandGuardRemedy = "use more rows per band (smaller b for fixed k: r = k/b drives " +
+    "selectivity ~(1/2^r per band) on non-dup content) or raise maxCandidatePairs deliberately"
+
+  /** The same candidate-volume guard, unmemoized, for a caller that
+    * already holds its band rows materialized (the streaming gate). */
+  private[graft] def requireBandVolume(banded: DataFrame, k: Int = 96, b: Int = 24,
+                                       maxCandidatePairs: Long = 100000000L): Unit =
+    graft.operators.Similarity.requireBandVolume(banded, Seq("band", "bucket"),
+      maxCandidatePairs, bandGuardWhat(k, b), bandGuardRemedy)
+
+  /** Verified pairs among the docs of one band table: the
+    * (band, bucket) self-join with the exact length filter, then
+    * exact Jaccard against `sh`'s hash sets. */
+  private[graft] def bandPairs(banded: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
     val l = banded.select(col("band"), col("bucket"), col("doc_id").as("d1"), col("n_shingles").as("n1"))
     val rt = banded.select(col("band"), col("bucket"), col("doc_id").as("d2"), col("n_shingles").as("n2"))
     val cand = l.join(rt, Seq("band", "bucket"))

@@ -264,7 +264,7 @@ private[graft] object DedupQueries {
       val docs = Tables.documents(s, dir)
       val newSh = NearDup.shingled(docs.where(pmod(col("doc_id"), lit(20L)) === 0), "text", 3)
       val oldSh = NearDup.shingled(docs.where(pmod(col("doc_id"), lit(20L)) =!= 0), "text", 3)
-      Incremental.nearDupsAgainstFrom(newSh, Incremental.bandTable(oldSh), oldSh, 0.8)
+      Incremental.nearDupsAgainstFrom(newSh, NearDup.bandTable(oldSh), oldSh, 0.8)
         .orderBy(col("new_id"), col("old_id"))
     },
       // cross-batch exact Jaccard (new = doc_id ≡ 0 mod 20 vs the rest):

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Incremental, NearDup}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import java.nio.file.Files
 
 /** Incremental near-dup: a new batch probed against a persisted
@@ -24,10 +24,12 @@ class IncrementalSpec extends SparkSpec {
     (103L, "weather in bandung is rainy with moderate temperatures all week long")
   ).toDF("doc_id", "text")
 
+  private def signed(docs: DataFrame) = NearDup.withBandBuckets(NearDup.shingled(docs, "text", 3))
+
   test("in-memory probe finds cross near-dups and nothing else") {
     val newSh = NearDup.shingled(batch, "text", 3)
     val oldSh = NearDup.shingled(corpus, "text", 3)
-    val out = Incremental.nearDupsAgainstFrom(newSh, Incremental.bandTable(oldSh), oldSh, 0.5)
+    val out = Incremental.nearDupsAgainstFrom(newSh, NearDup.bandTable(oldSh), oldSh, 0.5)
       .collect().map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("old_id"),
         r.getAs[Double]("jaccard"))).toSeq.sortBy(p => (p._1, p._2))
     assert(out.map(p => (p._1, p._2)) == Seq((101L, 1L), (103L, 3L)), out)
@@ -38,12 +40,12 @@ class IncrementalSpec extends SparkSpec {
   test("persisted index round-trip: probe equals the in-memory result") {
     val root = Files.createTempDirectory("graft-dedup-idx").toString
     Incremental.writeIndex(corpus, "text", 3, root)
-    val fromIndex = Incremental.nearDupsAgainstIndex(spark, root, batch, "text", 3, 0.5)
+    val fromIndex = Incremental.nearDupsAgainstIndex(root, signed(batch), 0.5)
       .select($"new_id", $"old_id", $"common", $"jaccard")
       .as[(Long, Long, Int, Double)].collect().toSet
     val newSh = NearDup.shingled(batch, "text", 3)
     val oldSh = NearDup.shingled(corpus, "text", 3)
-    val inMem = Incremental.nearDupsAgainstFrom(newSh, Incremental.bandTable(oldSh), oldSh, 0.5)
+    val inMem = Incremental.nearDupsAgainstFrom(newSh, NearDup.bandTable(oldSh), oldSh, 0.5)
       .select($"new_id", $"old_id", $"common", $"jaccard")
       .as[(Long, Long, Int, Double)].collect().toSet
     assert(fromIndex == inMem)
@@ -53,11 +55,11 @@ class IncrementalSpec extends SparkSpec {
   test("appendToIndex makes the admitted batch visible to the next tick") {
     val root = Files.createTempDirectory("graft-dedup-idx2").toString
     Incremental.writeIndex(corpus, "text", 3, root)
-    Incremental.appendToIndex(batch, "text", 3, root)
+    Incremental.appendToIndex(signed(batch), root)
     // a copy of batch doc 102 now near-dups against the INDEXED 102
     val next = Seq((201L, "eleven totally fresh tokens that no stored document has seen before"))
       .toDF("doc_id", "text")
-    val out = Incremental.nearDupsAgainstIndex(spark, root, next, "text", 3, 0.8)
+    val out = Incremental.nearDupsAgainstIndex(root, signed(next), 0.8)
       .collect().map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("old_id")))
     assert(out.toSeq == Seq((201L, 102L)))
   }
@@ -67,6 +69,6 @@ class IncrementalSpec extends SparkSpec {
     Incremental.writeIndex(corpus, "text", 3, root)
     val none = Seq((301L, "zx qv wq pj dm nb vc xs ze rt yu io"))
       .toDF("doc_id", "text")
-    assert(Incremental.nearDupsAgainstIndex(spark, root, none, "text", 3, 0.5).isEmpty)
+    assert(Incremental.nearDupsAgainstIndex(root, signed(none), 0.5).isEmpty)
   }
 }

@@ -68,7 +68,7 @@ class TrainingPropertySpec extends SparkSpec {
       val oldSh = NearDup.shingled(old, "text", 3)
       val got = Incremental
         .nearDupsAgainstFrom(NearDup.shingled(batch, "text", 3),
-          Incremental.bandTable(oldSh), oldSh, 0.8)
+          NearDup.bandTable(oldSh), oldSh, 0.8)
         .select($"new_id", $"old_id").as[(Long, Long)].collect().toSet
       val oldIds = all.take(nOld).map(_._1).toSet
       val expected = NearDup
