@@ -1,4 +1,5 @@
 package graft
+import graft.queries.QuerySpec
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -246,7 +247,7 @@ object Bench {
       val infos = spark.sparkContext.getRDDStorageInfo
       (infos.map(_.memSize).sum / 1e6, infos.map(_.diskSize).sum / 1e6)
     }
-    val wNearDup = if (!stageNeeded("neardup")) 0.0 else timed {
+    val wNearDup = if (!stageNeeded(QuerySpec.NearDup)) 0.0 else timed {
       SparkEntry.queries("q_minhash_lsh")(spark, sfDir).count()
       // the shared document clustering (5 consumers: components /
       // pipeline / leak-split / survivorship / dedup-weights) — the
@@ -258,7 +259,7 @@ object Bench {
     // (ops/Graphs.scala) — build them here so the one-time distinct +
     // persist cost is this reported field, not whichever of the 13
     // graph queries happens to run first in name order
-    val wGraphs = if (!stageNeeded("graphs")) 0.0 else timed {
+    val wGraphs = if (!stageNeeded(QuerySpec.Graphs)) 0.0 else timed {
       graft.ops.Graphs.bipartite(spark, sfDir).count()
       graft.ops.Graphs.bipartiteQuarter(spark, sfDir).count()
       graft.ops.Graphs.coocQuarter(spark, sfDir).count()
@@ -267,7 +268,7 @@ object Bench {
     // the shared LPA partition (q_labelprop + q_modularity +
     // q_conductance) is cached the same way — pay the 3 synchronous
     // rounds here, once
-    val wLpa = if (!stageNeeded("lpa")) 0.0
+    val wLpa = if (!stageNeeded(QuerySpec.Lpa)) 0.0
       else timed(graft.ops.Graphs.labelsBipartite(spark, sfDir).count())
     val sLpa = storageNow()
     // ...and the DBSCAN labeling (q_dbscan): its star-contraction
@@ -277,7 +278,7 @@ object Bench {
     // detailed JSON line (`warmup_detail`) because the sf1 run showed
     // warmup_shared growing 26.7 → 118.7 s and an unbroken total
     // can't say WHICH shared artifact grew.
-    val wDbscan = if (!stageNeeded("dbscan")) 0.0
+    val wDbscan = if (!stageNeeded(QuerySpec.Dbscan)) 0.0
       else timed(graft.ops.Graphs.dbscanCustomerGrid(spark, sfDir).count())
     val sDbscan = storageNow()
     // the persisted IVF-PQ index build (r12 verdict item #5): the
@@ -285,7 +286,7 @@ object Bench {
     // measures the directory-pruned PROBE — the production read path —
     // while q_ivfpq_topk stays registered as the fused build+probe
     // receipt
-    val wIvfpq = if (!stageNeeded("ivfpq")) 0.0
+    val wIvfpq = if (!stageNeeded(QuerySpec.IvfPq)) 0.0
       else timed {
         val emb = graft.Tables.embeddings(spark, sfDir)
         val mdl = graft.operators.ProductQuantizer.model(emb, m = 4, k = 16)

@@ -57,8 +57,10 @@ object SparkEntry {
     specs.collect { case q if q.invariant.nonEmpty => q.name -> q.invariant }.toMap
 
   /** Names of the queries that read a Bench shared-warmup stage. */
-  def consumersOf(stage: String): Set[String] =
+  def consumersOf(stage: String): Set[String] = {
+    require(QuerySpec.warmupStages(stage), s"unknown warmup stage '$stage'")
     specs.collect { case q if q.shares(stage) => q.name }.toSet
+  }
 
   /** Parses a comma list of query names (a Bench or Verify filter).
     * Fails loud on an unknown name: a typo'd filter would otherwise

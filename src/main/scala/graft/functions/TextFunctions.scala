@@ -39,13 +39,8 @@ object TextFunctions {
     * CAST('0x'||substr(md5(x),1,15) AS BIGINT).
     * Backed by the native codegen'd expression (graft.plans.Hash60) —
     * one digest, no hex-string materialization; Hash60Spec proves it
-    * equal to the composed form below. */
+    * equal to the composed built-in form. */
   def hash60(c: Column): Column = graft.plans.Hash60.hash60(c)
-
-  /** Composed built-in form of hash60 (reference semantics; used by
-    * the equivalence test and anywhere a pure-builtin plan is wanted). */
-  def hash60Composed(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   /** Rolling polynomial fingerprint over tokens in document order:
     * h := (h*31 + hash60(token) % M) % M, seeded 0. Order-sensitive —

@@ -45,10 +45,6 @@ object WeatherFunctions {
     * (dags/fetch_weather.py:79). */
   def formatTs(ts: Column): Column = date_format(ts, "yyyy-MM-dd HH:mm:ss")
 
-  /** F1: parse the reference's canonical timestamp string format
-    * (dags/transform_raw_weather.py:30-32). */
-  def parseTs(s: Column): Column = to_timestamp(s, "yyyy-MM-dd HH:mm:ss")
-
   /** F4: UTC → zone shift as an explicit operator (the reference pins
     * Asia/Jakarta ambiently, dags/fetch_weather.py:14; we make it
     * explicit per SURVEY §1.3). */

@@ -30,16 +30,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("source", StringType, nullable = true),
-      StructField("declared_bytes", LongType, nullable = true)
-    )), nullable = true)
-  ))
-
   val featureSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("kind", StringType, nullable = false),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multi-source breadth-first search — shortest HOP distances from a
@@ -14,23 +14,14 @@ import org.apache.spark.sql.functions._
   * algorithms there is nothing to stabilize: any execution order
   * yields the same frontier sets, and a FIXED round count ([[hops]])
   * replays verbatim as a bounded recursive CTE — the cross-engine
-  * oracle window (q_bfs_hops). [[shortestHops]] is the production
-  * fixpoint loop on the same step, failing loud at `maxRounds`
-  * rather than looping silently (the KCore policy).
+  * oracle window (q_bfs_hops).
   *
   * Frontier algorithm, one round = dist r → r+1:
   *   next = (edges ⋈ frontier on src) . dst . distinct  ANTI  seen
   * Plan shape per round: one equi-join on src, one distinct and one
   * anti-join both keyed on id (partitioning reused between them).
   * Work is Θ(edges out of the frontier), not Θ(|E|) — rounds touch
-  * only the expanding wave. Two edge layouts, the PageRank trade:
-  *
-  *  - [[hops]]/[[shortestHops]] — ad-hoc: edges shuffle into the
-  *    join every round.
-  *  - [[writeEdges]] + [[hopsBucketed]] — cluster layout: edges
-  *    written once bucketed+sorted by src, every round's join reads
-  *    buckets in place and only the (small) frontier moves. Per-
-  *    round exchange drops from O(|E|) to O(frontier).
+  * only the expanding wave.
   *
   * Every round truncates lineage via [[graft.ops.Checkpoints]]
   * (executor-local by default, reliable under a session checkpoint
@@ -65,45 +56,13 @@ object Bfs {
   }
 
   /** One expansion: nodes first reached at distance `r`, given the
-    * already-seen frame. Package-private so the spec can assert the
-    * bucketed plan keeps the edge side exchange-free. */
-  private[graft] def expand(edges: DataFrame, frontier: DataFrame,
-                            seen: DataFrame, r: Int): DataFrame =
+    * already-seen frame. */
+  private def expand(edges: DataFrame, frontier: DataFrame,
+                     seen: DataFrame, r: Int): DataFrame =
     edges.join(frontier, edges("src") === frontier("id"))
       .select(edges("dst").as("id")).distinct()
       .join(seen, Seq("id"), "left_anti")
       .withColumn("dist", lit(r.toLong))
-
-  private def run(edges: DataFrame, sources: DataFrame, rounds: Int,
-                  toFixpoint: Boolean): DataFrame = {
-    var dist = seed(sources).transform(graft.ops.Checkpoints.truncate)
-    var frontier = dist
-    var r = 0
-    var done = false
-    // fused loop (r15): every round still cuts (the r14 half-cadence
-    // rejection was about UNCUT rounds re-executing the distinct in
-    // dist's three consumers — a lazy cut persists its blocks on
-    // first compute, so each consumer reads blocks), but lazily:
-    // fixed-round runs execute as one job at the consumer's action;
-    // fixpoint runs materialize each round inside the frontier-probe
-    // job. Reliable mode untouched.
-    graft.ops.Checkpoints.fusedLoop(dist) {
-      while (!done && r < rounds) {
-        r += 1
-        dist = dist.unionByName(expand(edges, frontier, dist, r))
-          .transform(graft.ops.Checkpoints.truncateFused)
-        // re-slicing the new wave out of the cut frame is a scan of
-        // its (first-compute-persisted) blocks, not a recompute
-        frontier = dist.where(col("dist") === r)
-        if (toFixpoint) done = frontier.limit(1).collect().isEmpty
-      }
-    }
-    if (toFixpoint)
-      require(done,
-        s"Bfs: frontier still expanding after $rounds rounds - raise maxRounds; " +
-          "convergence needs at most the graph's eccentricity from the seed set")
-    dist
-  }
 
   /** Exactly `rounds` expansions, converged or not: every node within
     * `rounds` hops of a seed, at its exact shortest hop count. The
@@ -116,39 +75,24 @@ object Bfs {
     // the edge scan beats co-partitioned layouts — an up-front edge
     // repartition cost 1.26× here where the same pin won 0.66-0.89×
     // on the register/rank loops whose state is O(|V|)
-    run(normalize(edges).transform(graft.ops.Checkpoints.truncate),
-      sources, rounds, toFixpoint = false)
-  }
-
-  /** The production fixpoint: expand until a round reaches nothing
-    * new — exact shortest hops over the full reachable set. Fails
-    * loud at `maxRounds` (graphs have small eccentricity in
-    * practice; a 50-round BFS still running signals a pathology, not
-    * patience). */
-  def shortestHops(edges: DataFrame, sources: DataFrame, maxRounds: Int = 50): DataFrame = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    run(normalize(edges).transform(graft.ops.Checkpoints.truncate),
-      sources, maxRounds, toFixpoint = true)
-  }
-
-  /** Write-once edge layout for repeated/long BFS runs: (src, dst)
-    * bucketed AND sorted by src in the session catalog. Pays the
-    * edge shuffle exactly once; every later [[hopsBucketed]] round
-    * joins it exchange-free on the edge side. */
-  def writeEdges(edges: DataFrame, table: String, buckets: Int): Unit = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    normalize(edges)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "src").sortBy("src").saveAsTable(table)
-  }
-
-  /** [[shortestHops]] over a pre-bucketed edge table written by
-    * [[writeEdges]]: identical distances, but the per-round join
-    * leaves the (big) edge side where it lies — only the frontier
-    * shuffles to the bucket layout. */
-  def hopsBucketed(spark: SparkSession, edgeTable: String, sources: DataFrame,
-                   maxRounds: Int = 50): DataFrame = {
-    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    run(spark.table(edgeTable), sources, maxRounds, toFixpoint = true)
+    val e = normalize(edges).transform(graft.ops.Checkpoints.truncate)
+    var dist = seed(sources).transform(graft.ops.Checkpoints.truncate)
+    var frontier = dist
+    // fused loop (r15): every round still cuts (the r14 half-cadence
+    // rejection was about UNCUT rounds re-executing the distinct in
+    // dist's three consumers — a lazy cut persists its blocks on
+    // first compute, so each consumer reads blocks), but lazily: the
+    // rounds execute as one job at the consumer's action. Reliable
+    // mode untouched.
+    graft.ops.Checkpoints.fusedLoop(dist) {
+      for (r <- 1 to rounds) {
+        dist = dist.unionByName(expand(e, frontier, dist, r))
+          .transform(graft.ops.Checkpoints.truncateFused)
+        // re-slicing the new wave out of the cut frame is a scan of
+        // its (first-compute-persisted) blocks, not a recompute
+        frontier = dist.where(col("dist") === r)
+      }
+    }
+    dist
   }
 }

@@ -125,12 +125,6 @@ object HyperBall {
     c
   }
 
-  /** Per-node register rows after `rounds` merges — the mergeable
-    * artifact (write it once, estimate many radii downstream).
-    * Bit-identical to row-at-a-time max-merging. */
-  def ballRegisters(edges: DataFrame, rounds: Int, lgK: Int = 7): DataFrame =
-    toRows(denseLoop(edges, rounds, lgK))
-
   /** (id, ball_est): estimated |ball(id, rounds)| for every node —
     * ball_est ≥ 1 (a node always sees itself). */
   def ballSizes(edges: DataFrame, rounds: Int, lgK: Int = 7): DataFrame =

@@ -26,14 +26,12 @@ import org.apache.spark.sql.functions._
   * (reliable when the session has a checkpoint dir — the shared
   * iterative-loop durability contract). Convergence needs at most
   * "degeneracy-ordering depth" rounds — small for real web graphs
-  * (they are low-degeneracy), but [[kCore]] still fails loud at
-  * `maxRounds` rather than looping silently.
+  * (they are low-degeneracy).
   *
   * [[peelRounds]] (exactly R peels, converged or not) is the
   * cross-engine window: a FIXED round count unrolls into plain SQL,
   * so the oracle replicates the exact intermediate state — the
-  * PageRank precedent for iterative operators. [[kCore]] is the
-  * production fixpoint loop on top of the same step.
+  * PageRank precedent for iterative operators.
   */
 object KCore {
 
@@ -64,34 +62,6 @@ object KCore {
     graft.ops.Checkpoints.fusedLoop(e) {
       for (_ <- 0 until rounds)
         e = graft.ops.Checkpoints.truncateFused(peelOnce(e, k))
-    }
-    e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).cast("long").as("deg"))
-  }
-
-  /** The k-core: peel to fixpoint (a round that deletes nothing).
-    * Fails loud if `maxRounds` is hit before convergence. Returns
-    * (id, deg) over the core — every deg ≥ k by definition. */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
-    require(k >= 1 && maxRounds >= 1, s"need k>=1, maxRounds>=1; got k=$k maxRounds=$maxRounds")
-    var e = graft.ops.Checkpoints.truncate(validate(edges))
-    var n = e.count()
-    var converged = n == 0L
-    var round = 0
-    // fused (r15): the lazy cut materializes inside the fixpoint
-    // probe's count job — one job per round instead of checkpoint +
-    // count. Reliable mode untouched.
-    graft.ops.Checkpoints.fusedLoop(e) {
-      while (!converged) {
-        require(round < maxRounds,
-          s"KCore: no fixpoint after $maxRounds rounds (still $n edges) — " +
-            "raise maxRounds; convergence needs at most the graph's degeneracy depth")
-        e = graft.ops.Checkpoints.truncateFused(peelOnce(e, k))
-        val m = e.count() // driver-side fixpoint probe, one count per round
-        converged = m == n || m == 0L
-        n = m
-        round += 1
-      }
     }
     e.select(explode(array(col("src"), col("dst"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).cast("long").as("deg"))

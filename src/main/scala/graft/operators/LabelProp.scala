@@ -99,11 +99,4 @@ object LabelProp {
     e.unpersist(blocking = false)
     lab
   }
-
-  /** Community roll-up: per final label, member count — the usual
-    * summary read of an LPA run. */
-  def communities(edges: DataFrame, iters: Int): DataFrame =
-    labels(edges, iters)
-      .groupBy(col("lab").as("community"))
-      .agg(count(lit(1)).as("n_members"))
 }

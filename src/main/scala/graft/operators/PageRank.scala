@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PageRank in exact fixed-point arithmetic — the iterative graph
@@ -27,19 +27,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one equi-join (edges ⋈ ranks on src) plus one hash
   * aggregate by dst per iteration; the rank frame is one long per
-  * node. Two edge layouts:
-  *
-  *  - `ranks(edges, …)` — ad-hoc: edges are shuffled into the join
-  *    EVERY iteration. Fine locally; at 100 TB the edge table is the
-  *    big side and 20 iterations pay 20 full edge shuffles.
-  *  - `writeEdges` + `ranksBucketed` — the cluster layout: edges are
-  *    written ONCE bucketed+sorted by src (degree pre-joined at
-  *    write time), so every iteration's join reads buckets in place
-  *    and only the small rank frame (one long per node) moves. The
-  *    per-iteration exchange volume drops from O(|E|) to O(|V|);
-  *    PageRankSpec asserts the edge side of the loop join is
-  *    exchange-free, and SCALE_NOTES ("Bucketed PageRank") records
-  *    the effect at 1× and 10× edges.
+  * node. The edge side is pinned to a hash layout on src once, so
+  * the per-iteration join re-exchanges only the O(|V|) rank frame.
   *
   * Every iteration truncates the plan to constant size (the
   * `Components` loop lesson), so 20 iterations cost 20 bounded
@@ -60,10 +49,8 @@ object PageRank {
     e.join(e.groupBy(col("src")).agg(count(lit(1)).as("__deg")), "src")
 
   /** One synchronous iteration's incoming contribution sums:
-    * Σ_{(src,dst) ∈ E} rank(src) div outdeg(src), grouped by dst.
-    * Package-private so the spec can assert the plan shape (bucketed
-    * edge side joins exchange-free). */
-  private[graft] def contribSums(withDeg: DataFrame, r: DataFrame): DataFrame =
+    * Σ_{(src,dst) ∈ E} rank(src) div outdeg(src), grouped by dst. */
+  private def contribSums(withDeg: DataFrame, r: DataFrame): DataFrame =
     withDeg.join(r, withDeg("src") === r("id"))
       .select(col("dst").as("id"), expr("rank div __deg").as("__c"))
       .groupBy(col("id")).agg(sum(col("__c")).as("__s"))
@@ -130,8 +117,7 @@ object PageRank {
     // (r15, §2.4): the per-round join then proves co-partitioning
     // against the previous round's checkpoint (same key, same count)
     // and the edge side never re-exchanges inside the fused loop —
-    // only the O(|V|) rank frame moves, the ranksBucketed trade
-    // without a catalog table.
+    // only the O(|V|) rank frame moves.
     val nodes = graft.ops.Checkpoints.pinPartitioned(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
         .distinct(), col("id"))
@@ -176,40 +162,5 @@ object PageRank {
     checkOverflow(n, scale, dampNum)
     val withDeg = graft.ops.Checkpoints.pinPartitioned(withDegrees(e), col("src"))
     run(withDeg, nodes, iters, base, scale, dampNum, dampDen)
-  }
-
-  /** Write-once edge layout for iterative runs: (src, dst, __deg)
-    * bucketed AND sorted by src into the session catalog (the
-    * `Sinks.writeBucketed` strategy — parquet path tables can't
-    * carry bucket metadata). Pays the edge shuffle and the degree
-    * aggregation exactly once; every later `ranksBucketed` iteration
-    * joins it exchange-free on the edge side. */
-  def writeEdges(edges: DataFrame, table: String, buckets: Int): Unit = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    withDegrees(normalize(edges))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "src").sortBy("src").saveAsTable(table)
-  }
-
-  /** `ranks` over a pre-bucketed edge table written by `writeEdges`:
-    * identical integer arithmetic, bit-identical results, but the
-    * per-iteration join leaves the (big) edge side where it lies —
-    * only the rank frame shuffles to the bucket layout. The edge
-    * table is re-scanned per iteration (a bucketed columnar read, no
-    * exchange); at cluster scale that is the standard trade against
-    * holding |E| in memory for the whole loop. */
-  def ranksBucketed(spark: SparkSession, edgeTable: String, iters: Int = 5,
-                    scale: Long = 1000000000L, dampNum: Long = 17L,
-                    dampDen: Long = 20L): DataFrame = {
-    val base = checkParams(iters, scale, dampNum, dampDen)
-    val withDeg = spark.table(edgeTable)
-    val nodes = graft.ops.Checkpoints.pinPartitioned(
-      withDeg.select(col("src").as("id"))
-        .union(withDeg.select(col("dst").as("id")))
-        .distinct(), col("id"))
-    val n = nodes.count()
-    checkOverflow(n, scale, dampNum)
-    run(withDeg, nodes.withColumn("__seed", lit(true)),
-      iters, base, scale, dampNum, dampDen)
   }
 }

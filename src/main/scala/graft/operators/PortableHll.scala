@@ -52,8 +52,8 @@ object PortableHll {
     * `valueCol`'s distinct values. NULL values are skipped (no
     * distinct identity). This is the stored artifact — write it at
     * the finest rollup grain. */
-  /** Register index (low lgK bits of hash60) — shared with the
-    * streaming build (StreamSketch). */
+  /** Register index (low lgK bits of hash60) — shared with
+    * HyperBall's dense register arrays. */
   private[graft] def regCol(value: Column, lgK: Int): Column =
     (graft.plans.Hash60.hash60(value.cast("string")) % (1L << lgK)).cast("int")
 

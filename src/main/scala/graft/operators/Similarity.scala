@@ -35,10 +35,6 @@ object Similarity {
     * zipped array per pair, which dominates scorer cost. */
   def qdot(a: Column, b: Column): Column = graft.plans.QDotLong.qdot(a, b)
 
-  /** Composed built-in form of qdot (equivalence-tested vs native). */
-  def qdotComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
-
   /** Squared L2 norm of a quantized vector (exact integer). */
   def qnorm2(a: Column): Column = qdot(a, a)
 
@@ -101,32 +97,6 @@ object Similarity {
       .select(col("a_id"), col("b_id"),
         (qdot(col("av"), col("bv")).cast("double") / (col("an") * col("bn"))).as("cosine"))
       .where(col("cosine") >= threshold)
-  }
-
-  /** Banding parameters from first principles: a pair at cosine c
-    * agrees with one sign-plane with p = 1 − acos(c)/π, survives an
-    * r-plane band with p^r, and is missed by all `bands` bands with
-    * (1 − p^r)^bands — so the bands needed for a target miss rate at
-    * the decision threshold is ⌈ln(miss)/ln(1 − p^r)⌉.
-    *
-    * This makes the selectivity/recall trade explicit instead of
-    * folklore: candidate volume on isotropic data is ~bands/2^r of
-    * all pairs, so banding prunes hard only when the threshold is
-    * high (c = 0.9, r = 12 → 28 bands, ~0.7% of pairs) and
-    * DEGENERATES at moderate thresholds (c = 0.5 → p = 2/3; any
-    * (bands, r) meeting a few-percent miss target admits a constant
-    * fraction of all pairs — the shipped default (16, 4) is exactly
-    * this formula at c = 0.5, miss 3%, and its measured 1.6×
-    * candidate cut on isotropic data is the theory holding, not a
-    * tuning bug; see SCALE_NOTES round 6). Use a high threshold for
-    * near-dup detection, or accept ~all-pairs verification cost. */
-  def lshParams(threshold: Double, targetMiss: Double, planesPerBand: Int): Int = {
-    require(threshold > 0.0 && threshold < 1.0, s"threshold in (0,1), got $threshold")
-    require(targetMiss > 0.0 && targetMiss < 1.0, s"targetMiss in (0,1), got $targetMiss")
-    require(planesPerBand >= 1 && planesPerBand <= 62, s"planesPerBand in [1,62]")
-    val p = 1.0 - math.acos(threshold) / math.Pi
-    val bandHit = math.pow(p, planesPerBand)
-    math.ceil(math.log(targetMiss) / math.log1p(-bandHit)).toInt
   }
 
   /** n-scaled planes-per-band (r12 verdict item #2 — "planesPerBand
@@ -495,53 +465,6 @@ object Similarity {
     scored.withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
   }
 
-  /** Persist the inverted-file index: the assigned corpus written
-    * `partitionBy(list_id)` — the on-disk layout that turns the
-    * Scaladoc claim "a probe reads nProbe/nLists of the data" into a
-    * planner-enforced fact (directory-level partition pruning, stronger
-    * than row-group stats). A centroid sidecar (`<path>.centroids`,
-    * nLists rows) makes the index self-describing: probes never touch
-    * the big table to recover the model.
-    *
-    * At 100 TB: the one-time write shuffles by list_id (each list's
-    * files are written together); every later query reads only its
-    * probed directories. IvfIndexSpec measures the skip with scan
-    * metrics (numFiles) the way SinksSpec does for range clustering. */
-  def writeIvfIndex(corpus: DataFrame, path: String, nLists: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    val cents = centroidModel(corpus, nLists)
-    assignLists(corpus, cents)
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    import scala.jdk.CollectionConverters._
-    val rows = cents.map { case (cid, cv, cn) =>
-      org.apache.spark.sql.Row(cid, cv.toSeq, cn)
-    }.toSeq.asJava
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cid", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("cv",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)),
-      org.apache.spark.sql.types.StructField("cn", org.apache.spark.sql.types.DoubleType)))
-    spark.createDataFrame(rows, schema).coalesce(1)
-      .write.mode("overwrite").parquet(path + ".centroids")
-  }
-
-  /** Query a persisted IVF index: rebuild the centroid model from the
-    * sidecar (tiny), compute each query's probe lists, and join — the
-    * broadcast probe side dynamically prunes the scan to the probed
-    * list_id directories. Results are identical to `ivfTopK` run
-    * in-memory with the same nLists/nProbe (spec-checked). */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                     queries: DataFrame, k: Int, nProbe: Int = 4): DataFrame = {
-    val cents: Array[(Int, Array[Long], Double)] =
-      spark.read.parquet(path + ".centroids").collect()
-        .map(r => (r.getInt(0), r.getSeq[Long](1).toArray, r.getDouble(2)))
-        .sortBy(_._1)
-    val index = spark.read.parquet(path)
-      .select(col("corpus_id"), col("cv"), col("cn"), col("list_id").cast("int").as("list_id"))
-    scoreProbedLists(index, probeLists(queries, cents, nProbe), k)
-  }
-
   /** IVF-PQ: the billion-scale ANN layout (Jégou, Douze, Schmid,
     * "Product Quantization for Nearest Neighbor Search", TPAMI 2011
     * — the IVFADC structure): a coarse quantizer routes each corpus
@@ -559,8 +482,8 @@ object Similarity {
     * all. The scan payload of a probed list is (id, m codes): at
     * m=4, k=16 that is ~8 bytes/vector vs 256 for the raw floats —
     * the 100 TB story is nProbe/nLists of the data × 32× smaller
-    * rows, with `writeIvfIndex`-style partitionBy(list_id) making
-    * the probe a directory-pruned scan. Deterministic end to end
+    * rows, with partitionBy(list_id) making the probe a
+    * directory-pruned scan. Deterministic end to end
     * (integer ADC distances; ties → smallest corpus id), so the
     * DuckDB oracle replicates the exact approximation. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
@@ -606,11 +529,10 @@ object Similarity {
   }
 
   /** Persist the IVF-PQ index: the fused code projection written
-    * `partitionBy(list_id)` — the probe-pruned directory layout of
-    * `writeIvfIndex`, but each row is (id, m codes) instead of the
-    * raw vector: the scan that remains after pruning is ALSO ~32×
-    * smaller. Two model-parameter-sized sidecars make the index
-    * self-describing: `<path>.centroids` (the coarse quantizer) and
+    * `partitionBy(list_id)` — a probe-pruned directory layout whose
+    * rows are (id, m codes) instead of the raw vector: the scan that
+    * remains after pruning is ALSO ~32× smaller. Two
+    * model-parameter-sized sidecars make the index self-describing: `<path>.centroids` (the coarse quantizer) and
     * `<path>.codebook` (the PQ codebooks, one row per (subspace,
     * centroid)). */
   def writeIvfPqIndex(corpus: DataFrame, path: String, nLists: Int,

@@ -34,15 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  /** Per-group mergeable sketch of `valueCol`'s distinct values.
-    * Output: groupCols + `sketch` (binary). This is the stored
-    * artifact — write it with any sink, partitioned by the finest
-    * rollup grain (e.g. day). */
-  def distinctSketch(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                     lgK: Int = 12): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"))
-
   /** Re-aggregate stored sketches to a coarser grain (day → month,
     * (source, day) → source, … ) — touches ONLY sketch rows, never
     * raw data. `groupCols` may be empty for a grand total. */

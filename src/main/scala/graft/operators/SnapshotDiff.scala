@@ -22,15 +22,13 @@ import org.apache.spark.sql.functions._
   * sides shuffle once by key, comparisons are null-safe `<=>` on the
   * joined row, and the common case (big snapshots, small delta)
   * emits only the delta downstream. At 100 TB the upgrade path is
-  * writing both snapshots bucketed by the key
-  * (`Sinks.writeBucketed`), which makes this diff exchange-free —
-  * the same mechanism BucketedJoinSpec proves for equi-joins.
+  * writing both snapshots bucketed by the key, which makes this diff
+  * exchange-free.
   *
   * Keys must be unique per snapshot (it is a snapshot, not a log);
   * duplicate keys silently multiply rows through the full-outer
-  * join. `diff` itself stays lazy and does NOT validate — run the
-  * separate `requireUniqueKeys` guard (an action) from ingest
-  * validation when the upstream is untrusted. A null-keyed
+  * join. `diff` itself stays lazy and does NOT validate — check key
+  * uniqueness at ingest when the upstream is untrusted. A null-keyed
   * row never joins: it surfaces as its own 'removed' (old side) or
   * 'added' (new side) row — a null key has no cross-snapshot
   * identity to compare under.
@@ -71,13 +69,5 @@ object SnapshotDiff {
         compareCols.flatMap(c =>
           Seq(col(s"o.$c").as(s"${c}_old"), col(s"n.$c").as(s"${c}_new"))): _*)
     if (keepUnchanged) out else out.where(col("status") =!= "unchanged")
-  }
-
-  /** Fail-fast unique-key guard (an action — call it from ingest
-    * validation, not from inside the diff hot path; `diff` itself
-    * stays lazy). Mirrors `Sinks.enforceUnique`. */
-  def requireUniqueKeys(snap: DataFrame, key: String, side: String): Unit = {
-    val dup = snap.groupBy(col(key)).count().where(col("count") > 1).limit(1).count()
-    require(dup == 0L, s"$side snapshot repeats key '$key' — a snapshot must be keyed")
   }
 }

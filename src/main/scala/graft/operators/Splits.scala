@@ -30,19 +30,12 @@ import org.apache.spark.sql.functions._
   */
 object Splits {
 
-  /** (doc_id, group_key, split) for every document. `group_key` is
-    * the atom the split was decided on: the near-dup cluster label,
-    * or the doc's own id for singletons. */
-  def leakageSafeSplit(docs: DataFrame, textCol: String, n: Int, threshold: Double,
-                       trainPct: Int = 80, validPct: Int = 10,
-                       k: Int = 96, b: Int = 24): DataFrame =
-    leakageSafeSplitFrom(
-      NearDup.minhashDuplicateClusters(docs, textCol, n, threshold, k, b),
-      docs, trainPct, validPct)
-
-  /** Same split, but over a PRE-BUILT clusters frame — so a memoized
-    * clustering (NearDup.documentClusters) is consumed instead of
-    * re-running the component loop per caller. */
+  /** (doc_id, group_key, split) for every document, over a PRE-BUILT
+    * clusters frame — so a memoized clustering
+    * (NearDup.documentClusters) is consumed instead of re-running the
+    * component loop per caller. `group_key` is the atom the split was
+    * decided on: the near-dup cluster label, or the doc's own id for
+    * singletons. */
   def leakageSafeSplitFrom(clusters: DataFrame, docs: DataFrame,
                            trainPct: Int = 80, validPct: Int = 10): DataFrame = {
     val c = clusters.select(col("doc_id"), col("cluster_id"))

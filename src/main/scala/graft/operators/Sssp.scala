@@ -20,9 +20,7 @@ import org.apache.spark.sql.functions._
   * union-min IS the relaxation. After k rounds dist(v) is exactly
   * the shortest path using ≤ k edges — a FIXED round count is a
   * well-defined semantic (not an approximation), replays verbatim as
-  * k unrolled SQL levels (q_sssp), and [[toFixpoint]] runs the same
-  * step until no distance improves (failing loud at maxRounds, the
-  * Bfs/KCore policy).
+  * k unrolled SQL levels (q_sssp).
   *
   * Exactness: distances are integer sums of integer weights — min is
   * order-free, so any partitioning and any engine agree bit-for-bit.
@@ -41,17 +39,7 @@ object Sssp {
   /** (id, dist) for every node reachable within `rounds` edges of
     * the source set. Edge frame columns: src, dst, w. */
   def distances(edges: DataFrame, sources: DataFrame, rounds: Int,
-                partitions: Int = -1): DataFrame =
-    run(edges, sources, rounds, fix = false, partitions)
-
-  /** The production fixpoint: relax until no distance improves;
-    * loud failure at `maxRounds`. */
-  def toFixpoint(edges: DataFrame, sources: DataFrame, maxRounds: Int = 64,
-                 partitions: Int = -1): DataFrame =
-    run(edges, sources, maxRounds, fix = true, partitions)
-
-  private def run(edges: DataFrame, sources: DataFrame, rounds: Int,
-                  fix: Boolean, partitions: Int = -1): DataFrame = {
+                partitions: Int = -1): DataFrame = {
     require(rounds >= 1, s"Sssp: rounds must be >= 1, got $rounds")
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
@@ -72,40 +60,23 @@ object Sssp {
       .transform(graft.ops.Checkpoints.truncate)
     require(dist.limit(1).collect().nonEmpty,
       "Sssp: empty source set — pass at least one seed id")
-    var r = 0
-    var done = false
-    var prevSum: Option[(Long, Long)] = None
     // fused loop (r15): every round still cuts (constant-size plans —
     // and unlike the rejected r14 half-cadence variant the cut frame's
     // blocks persist on first compute, so the min-aggregate never
     // re-executes in the next round's two consumer stages), but the
-    // cut is LAZY: fixed-round runs execute as one job at the
-    // consumer's action; fixpoint runs materialize each round inside
-    // its convergence-probe job instead of in a separate checkpoint
-    // job. Reliable mode (checkpoint dir) is untouched.
+    // cut is LAZY: the rounds execute as one job at the consumer's
+    // action. Reliable mode (checkpoint dir) is untouched.
     graft.ops.Checkpoints.fusedLoop(ec) {
-      while (!done && r < rounds) {
-        r += 1
+      for (_ <- 1 to rounds) {
         val cand = ec
           .join(dist.select(col("id").as("src"), col("dist")), Seq("src"))
           .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
         dist = cand.unionByName(dist)
           .groupBy(col("id")).agg(min(col("dist")).as("dist"))
           .transform(graft.ops.Checkpoints.truncateFused)
-        if (fix) {
-          // distances only decrease and the reached set only grows, so
-          // the (count, sum) pair is a complete convergence witness
-          val row = dist.agg(count(lit(1)), sum(col("dist"))).first()
-          val sig = (row.getLong(0), row.getLong(1))
-          done = prevSum.contains(sig)
-          prevSum = Some(sig)
-        }
       }
     }
     ec.unpersist(blocking = false)
-    if (fix && !done) throw new IllegalStateException(
-      s"Sssp did not converge in $rounds rounds — longest shortest path " +
-        "exceeds the bound; raise maxRounds")
     dist
   }
 }

@@ -49,20 +49,6 @@ object BloomJoin {
   def mightContain(key: Column, filterBytes: Array[Byte]): Column =
     BloomMightContain.mightContain(key, filterBytes)
 
-  /** Exact left-semi join, bloom-pre-filtered: ONE scan of `big`,
-    * the probe drops definite-misses before the shuffle, the real
-    * semi join settles the false positives. */
-  def semiJoin(big: DataFrame, bigKey: String, small: DataFrame, smallKey: String,
-               expectedItems: Long, fpp: Double = 0.01): DataFrame = {
-    require(!big.columns.contains("__bloom_k"), "__bloom_k is reserved internally")
-    val bytes = buildFilter(small, smallKey, expectedItems, fpp)
-    // alias the small side's key: with unresolved col() refs, a
-    // same-named key on both sides would be AMBIGUOUS_REFERENCE
-    big.where(mightContain(col(bigKey), bytes))
-      .join(small.select(col(smallKey).as("__bloom_k")),
-        col(bigKey) === col("__bloom_k"), "left_semi")
-  }
-
   /** Exact left-anti join, bloom-pre-filtered. Two branches over
     * `big`: definite-miss rows (bloom says absent — provably in the
     * anti result) pass straight through with NO shuffle; only the

@@ -28,11 +28,9 @@ import org.apache.spark.sql.functions._
 object Cdc {
 
   /** The per-key winning log entry: (key, __w = struct(__op, __p),
-    * __seq) with the op/NULL-seq/ambiguity guards of `applyLog` —
-    * shared by the batch apply and the streaming generation loop
-    * (`streaming.StreamCdc`), so both resolve "latest" identically. */
-  private[graft] def winners(log: DataFrame, key: String, payloadCols: Seq[String],
-                             opCol: String, seqCol: String): DataFrame = {
+    * __seq) with the op/NULL-seq/ambiguity guards of `applyLog`. */
+  private def winners(log: DataFrame, key: String, payloadCols: Seq[String],
+                      opCol: String, seqCol: String): DataFrame = {
     require(payloadCols.nonEmpty, "payloadCols must name at least one column")
     val payload = struct(payloadCols.map(col): _*)
     val opOk = col(opCol).isin("I", "U", "D")

@@ -56,26 +56,4 @@ object Chunking {
         size(col("__chunk")).as("n_tokens"),
         array_join(col("__chunk"), " ").as("chunk_text"))
   }
-
-  /** Character-budget variant for pipelines that chunk before
-    * tokenization (e.g. OCR text): chunk i covers characters
-    * [i·step, i·step + maxChars). Same start/overlap semantics. */
-  def chunkByChars(df: DataFrame, textCol: String, idCol: String,
-                   maxChars: Int, overlap: Int): DataFrame = {
-    require(maxChars > 0, s"maxChars must be positive, got $maxChars")
-    require(overlap >= 0 && overlap < maxChars,
-      s"overlap must be in [0, maxChars), got $overlap (maxChars=$maxChars)")
-    val step = maxChars - overlap
-    df
-      .withColumn("__starts",
-        when(length(col(textCol)) > 0,
-          sequence(lit(0), length(col(textCol)) - 1, lit(step)))
-          .otherwise(array().cast("array<int>")))
-      .select(col(idCol),
-        posexplode(col("__starts")).as(Seq("chunk_idx", "__start")),
-        col(textCol))
-      .select(col(idCol), col("chunk_idx"),
-        col(textCol).substr(col("__start") + 1, lit(maxChars)).as("chunk_text"))
-      .withColumn("n_chars", length(col("chunk_text")))
-  }
 }

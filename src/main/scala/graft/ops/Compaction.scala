@@ -65,13 +65,6 @@ object Compaction {
         when(small, floor(prior / targetBytes).cast("long")).as("bin_id")): _*)
   }
 
-  /** Per-rewrite-group summary of a `plan`: files and bytes each
-    * compaction task will read — the rewrite work list. */
-  def binSummary(planned: DataFrame, partCols: Seq[String], sizeCol: String): DataFrame =
-    planned.where(col("action") === "compact")
-      .groupBy((partCols.map(col) :+ col("bin_id")): _*)
-      .agg(count(lit(1)).as("n_files"), sum(col(sizeCol)).as("total_bytes"))
-
   /** Execute one table-partition's plan against real parquet files:
     * read each bin's files and rewrite them as ONE file per bin
     * (coalesce inside a per-bin write). Provided for completeness of

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Duplicate detection / removal and incremental-processing kit
@@ -27,35 +26,14 @@ object Dedup {
 
   /** A2/W1: keep exactly the first row per key, ordered by `orderCol`
     * (replaces the reference's insertion-order "first",
-    * dags/transform_raw_weather.py:95). Single shuffle on the keys;
-    * the window sort happens within each hash partition. */
-  def keepFirst(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol).asc)
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
-  }
-
-  /** A2 in aggregation form: same result as `keepFirst`, but as a
-    * hash aggregate (min_by over the full row) — gets map-side partial
-    * aggregation, which the window form cannot, so prefer it when the
-    * input hasn't already been shuffled on the keys. Column order is
-    * preserved. */
+    * dags/transform_raw_weather.py:95). A hash aggregate (min_by over
+    * the full row), so it gets map-side partial aggregation. Column
+    * order is preserved. */
   def keepFirstAgg(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
     val valueCols = df.columns.filterNot(keys.contains)
     df.groupBy(keys.map(col): _*)
       .agg(min_by(struct(valueCols.map(col): _*), col(orderCol)).as("__row"))
       .select(df.columns.map(c => if (keys.contains(c)) col(c) else col(s"__row.$c").as(c)): _*)
-  }
-
-  /** S10/A2 as a set op: the duplicate "losers" (everything except the
-    * first per group) — the rows the reference bulk-deletes
-    * (dags/transform_raw_weather.py:91-101). */
-  def duplicateLosers(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(orderCol).asc)
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") > 1)
-      .drop("__rn")
   }
 
   /** J3: incremental anti join — rows of `incoming` whose key is not

@@ -23,10 +23,8 @@ import org.apache.spark.sql.functions._
   */
 object Funnel {
 
-  /** The conditional-aggregation columns for a stage list — shared by
-    * the batch entry point and the streaming per-window variant
-    * (`streaming.StreamFunnel`). */
-  private[graft] def stageAggs(stages: Seq[(String, Column)]): Seq[Column] = {
+  /** The conditional-aggregation columns for a stage list. */
+  private def stageAggs(stages: Seq[(String, Column)]): Seq[Column] = {
     require(stages.nonEmpty, "at least one stage")
     require(stages.map(_._1).distinct.size == stages.size, "stage names must be unique")
     require(!stages.exists(_._1 == "raw"),

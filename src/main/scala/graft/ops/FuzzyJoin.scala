@@ -53,35 +53,6 @@ object FuzzyJoin {
   def skeletonBlock(text: Column): Column =
     regexp_replace(lower(trim(text)), "[aeiou ]", "")
 
-  /** Loud guard for the blocking trade-off's other failure mode: a
-    * hot block (shared boilerplate name, empty-string skeleton, a
-    * null-ish placeholder) silently degrades the candidate join
-    * toward n² inside that block. This action counts block sizes and
-    * throws with the offending keys instead of letting one task
-    * quietly absorb a quadratic blow-up. Like
-    * `SnapshotDiff.requireUniqueKeys`, it is a separate opt-in
-    * validation step (one count aggregation — cheap next to the
-    * candidate join it protects) so the operators themselves stay
-    * lazy. */
-  def requireBlockCap(df: DataFrame, textCol: String,
-                      blockKey: Column => Column, maxBlockSize: Long): Unit = {
-    require(maxBlockSize > 0, "maxBlockSize must be positive")
-    val offenders = df.where(col(textCol).isNotNull)
-      .groupBy(blockKey(col(textCol)).as("__blk")).count()
-      .where(col("count") > maxBlockSize)
-      .orderBy(col("count").desc)
-      .limit(5)
-      .collect()
-    if (offenders.nonEmpty) {
-      val top = offenders.map(r => s"'${r.get(0)}'=${r.getLong(1)}").mkString(", ")
-      throw new IllegalStateException(
-        s"fuzzy-join block cap exceeded on '$textCol': block(s) over " +
-          s"$maxBlockSize rows: $top. A block of size n costs O(n^2) " +
-          "candidates - pick a finer blockKey (e.g. skeletonBlock, or " +
-          "multi-pass with selfPairsMultiPass) or raise the cap knowingly.")
-    }
-  }
-
   /** The shared candidate→verify step over internally-renamed sides
     * (__id_l/__text_l vs __id_r/__text_r on __blk) — renaming before
     * the join is what keeps same-named input columns unambiguous.
@@ -158,36 +129,6 @@ object FuzzyJoin {
     df.select(col(idCol).as(s"__id$suffix"), col(textCol).as(s"__text$suffix"))
       .where(col(s"__text$suffix").isNotNull)
       .withColumn("__blk", blockKey(col(s"__text$suffix")))
-
-  /** Self-match: pairs (id_l < id_r) from one frame whose `textCol`
-    * values share a block and are within `maxDist` edits. Output:
-    * id_l, id_r, text_l, text_r, dist (INT). */
-  def selfPairs(df: DataFrame, idCol: String, textCol: String, maxDist: Int,
-                blockKey: Column => Column = firstTokenBlock): DataFrame = {
-    require(maxDist >= 0, "maxDist must be non-negative")
-    verify(side(df, idCol, textCol, blockKey, "_l"),
-           side(df, idCol, textCol, blockKey, "_r"), maxDist)
-      .where(col("__id_l") < col("__id_r"))
-      .select(col("__id_l").as("id_l"), col("__id_r").as("id_r"),
-        col("__text_l").as("text_l"), col("__text_r").as("text_r"),
-        col("__dist").cast("int").as("dist"))
-  }
-
-  /** Multi-pass blocking: union `selfPairs` over several block keys
-    * and keep each pair once. Each extra pass buys the recall of its
-    * key at the cost of one more sub-quadratic candidate join — the
-    * standard answer to "first-token blocking misses pairs whose
-    * first tokens differ" (e.g. add a last-token and a
-    * sorted-token-prefix key). A pair found by several passes has the
-    * same exact distance in each, so the dedup is a plain DISTINCT —
-    * no arbitrary pick. */
-  def selfPairsMultiPass(df: DataFrame, idCol: String, textCol: String, maxDist: Int,
-                         blockKeys: Seq[Column => Column]): DataFrame = {
-    require(blockKeys.nonEmpty, "need at least one block key")
-    blockKeys.map(bk => selfPairs(df, idCol, textCol, maxDist, bk))
-      .reduce(_ unionByName _)
-      .distinct()
-  }
 
   /** Two-frame variant (link records of `left` to `right`). Output
     * columns keep the callers' names; when the right-side name

@@ -34,18 +34,6 @@ object HashedFeatures {
   private def bucket(t: Column, dim: Int): Column =
     pmod(graft.plans.Hash60.hash60(t), lit(dim.toLong)).cast("int")
 
-  /** Sparse hashed term counts — the TRAINING-side artifact: one
-    * (id, bucket, cnt) triple per document × distinct bucket. Longs
-    * only through the shuffle; token strings never leave the map
-    * side. */
-  def featurize(docs: DataFrame, idCol: String, textCol: String, dim: Int): DataFrame = {
-    require(dim > 0, "dim must be positive")
-    docs.select(col(idCol), explode(cleanTokens(col(textCol))).as("__t"))
-      .select(col(idCol), bucket(col("__t"), dim).as("bucket"))
-      .groupBy(col(idCol), col("bucket"))
-      .agg(count(lit(1)).as("cnt"))
-  }
-
   /** INFERENCE: append `out` = bias + Σ_token weights(h(token) mod
     * D). Row-local (no explode, no shuffle); NULL text scores the
     * bare bias. `weights.size` is the hash dimension D. */

@@ -50,15 +50,4 @@ object Intervals {
         count(lit(1)).as("n_merged"))
       .drop("__island")
   }
-
-  /** Total covered extent per key (sum of merged interval lengths —
-    * numeric bounds). The double-counting-free "how much of the
-    * timeline is covered" aggregate. */
-  def coveredLength(df: DataFrame, key: String,
-                    startCol: String, endCol: String): DataFrame =
-    mergeOverlapping(df, key, startCol, endCol)
-      .groupBy(col(key))
-      .agg(
-        sum(col("end") - col("start")).as("covered"),
-        count(lit(1)).as("n_islands"))
 }

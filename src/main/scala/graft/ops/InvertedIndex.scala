@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Inverted text index — the retrieval primitive behind keyword
@@ -11,16 +11,7 @@ import org.apache.spark.sql.functions._
   * corpus text.
   *
   * Scale shape: `postings` is one explode + one (token, doc) hash
-  * aggregate — the shuffle carries (token, doc_id, positions), and
-  * `writePostings` lands it on disk hash-bucketed BY TOKEN (one
-  * `tok_bucket=` directory per hash bucket, the classic on-disk
-  * inverted index): a query computes its terms' buckets driver-side
-  * with the same md5 arithmetic and reads ≤ |terms| of the nBuckets
-  * partitions — a partition-pruned scan of a few tokens' rows out of
-  * a 100 TB corpus (PostingsIndexSpec measures files read, the
-  * IvfIndexSpec treatment). Corpus-wide BM25 statistics (doc
-  * lengths, N, Σtokens) are computed once at write time into
-  * sidecars, so `bm25Indexed` never rescans the corpus either.
+  * aggregate — the shuffle carries (token, doc_id, positions).
   * `conjunctive` is a groupBy-count over those rows (no join at all
   * — the degenerate-but-optimal posting intersection); `phrase` is
   * the positional merge join, narrow after the per-term posting
@@ -85,11 +76,8 @@ object InvertedIndex {
     scoreBm25(post, dl, scal, ts, k, k1, b)
   }
 
-  /** The shared BM25 scoring core: identical arithmetic whether the
-    * postings/statistics come from an in-memory build (`bm25`) or the
-    * persisted layout (`bm25Indexed`) — bit-equal scores by
-    * construction. `post` needs only the query terms' rows; `dl` is
-    * (doc_id, dl); `scal` is one row (n, toktotal). */
+  /** The BM25 scoring core. `post` needs only the query terms' rows;
+    * `dl` is (doc_id, dl); `scal` is one row (n, toktotal). */
   private def scoreBm25(post: DataFrame, dl: DataFrame, scal: DataFrame,
                         ts: Seq[String], k: Int, k1: Double, b: Double): DataFrame = {
     val dft = post.where(col("token").isin(ts: _*))
@@ -129,74 +117,5 @@ object InvertedIndex {
     }
     matches.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_occurrences"))
-  }
-
-  /** Persist the posting lists hash-bucketed BY TOKEN: one
-    * `tok_bucket=` directory per `hash60(token) mod nBuckets` (a
-    * directory PER TOKEN would explode the namespace at vocabulary
-    * scale; hash buckets keep the layout at a fixed fan-out while
-    * still pruning to ≤ |terms| directories per query). Two sidecars
-    * make queries corpus-scan-free: ".doclen" = (doc_id, dl) and
-    * ".meta" = one row (n_buckets, n_docs, tok_total) — the BM25
-    * statistics, paid once at write time. nBuckets sizing: postings
-    * volume / target file size; 100 TB of text → ~thousands of
-    * buckets, each a parquet directory a couple of files deep. */
-  def writePostings(post: DataFrame, path: String, nBuckets: Int = 64): Unit = {
-    require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
-    post.withColumn("tok_bucket",
-        pmod(graft.plans.Hash60.hash60(col("token")), lit(nBuckets.toLong)))
-      .repartition(col("tok_bucket"))
-      .write.mode("overwrite").partitionBy("tok_bucket").parquet(path)
-    val dl = post.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    dl.write.mode("overwrite").parquet(path + ".doclen")
-    dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("tok_total"))
-      .withColumn("n_buckets", lit(nBuckets))
-      .coalesce(1).write.mode("overwrite").parquet(path + ".meta")
-  }
-
-  /** Pruned posting read: the query terms' buckets are computed
-    * DRIVER-side with the same md5 hash60 arithmetic the writer used
-    * (`Hash60Impl.hash` is plain JVM code), so the scan carries a
-    * literal `tok_bucket IN (...)` partition filter — only those
-    * directories are listed and read. Returns the same
-    * (token, doc_id, tf, positions) shape as `postings`, restricted
-    * to `terms`. */
-  def readPostings(spark: SparkSession, path: String, terms: Seq[String]): DataFrame = {
-    val ts = terms.distinct
-    require(ts.nonEmpty, "need at least one term")
-    val nBuckets = spark.read.parquet(path + ".meta")
-      .select(col("n_buckets")).collect()(0).getInt(0)
-    val buckets = ts.map(t => graft.plans.Hash60Impl.hash(
-      t.getBytes(java.nio.charset.StandardCharsets.UTF_8)) % nBuckets).distinct
-    spark.read.parquet(path)
-      .where(col("tok_bucket").isin(buckets: _*) && col("token").isin(ts: _*))
-      .drop("tok_bucket")
-  }
-
-  /** AND search over the persisted index — identical results to
-    * `conjunctive` over the full in-memory postings (the pruned read
-    * keeps every posting row of every query term). */
-  def conjunctiveIndexed(spark: SparkSession, path: String, terms: Seq[String]): DataFrame =
-    conjunctive(readPostings(spark, path, terms), terms)
-
-  /** Phrase search over the persisted index. */
-  def phraseIndexed(spark: SparkSession, path: String, terms: Seq[String]): DataFrame =
-    phrase(readPostings(spark, path, terms), terms)
-
-  /** BM25 over the persisted index: pruned postings + the write-time
-    * sidecar statistics through the same scoring core as `bm25` —
-    * bit-equal scores, but query cost is |terms' postings| + |doclen
-    * sidecar|, with the corpus text and the full posting set never
-    * touched. */
-  def bm25Indexed(spark: SparkSession, path: String, terms: Seq[String], k: Int,
-                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val ts = terms.distinct
-    require(ts.nonEmpty, "need at least one term")
-    require(k > 0, "k must be positive")
-    val pruned = readPostings(spark, path, ts)
-    val dl = spark.read.parquet(path + ".doclen")
-    val scal = spark.read.parquet(path + ".meta")
-      .select(col("n_docs").as("n"), col("tok_total").as("toktotal"))
-    scoreBm25(pruned, dl, scal, ts, k, k1, b)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering for
@@ -28,9 +28,7 @@ import org.apache.spark.sql.functions._
   * magic-bits construction, no UDF, fully inside whole-stage
   * codegen, and therefore carrying an exact cross-engine oracle
   * (q_zorder) the quantile-ranked form cannot (approxQuantile cuts
-  * are engine-private). `fileEnvelopes` is the shared measurement
-  * surface: the per-file min/max rectangles either write path
-  * produces, surfaced as data so layout quality is testable.
+  * are engine-private).
   */
 object Layout {
 
@@ -120,44 +118,5 @@ object Layout {
       .sortWithinPartitions(col("__z"))
       .drop("__z")
       .write.mode("overwrite").parquet(path)
-  }
-
-  /** Per-file min/max envelopes of two columns — the same stats a
-    * parquet reader's file-skipping consults, surfaced as data so
-    * layout quality is measurable (LayoutSpec asserts z-ordered
-    * envelopes prune where linear-sorted ones cannot). One narrow
-    * aggregation keyed by input file. */
-  def fileEnvelopes(spark: SparkSession, path: String,
-                    aCol: String, bCol: String): DataFrame =
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(
-        min(col(aCol)).as("a_min"), max(col(aCol)).as("a_max"),
-        min(col(bCol)).as("b_min"), max(col(bCol)).as("b_max"),
-        count(lit(1)).as("rows"))
-
-  /** N-key twin of `writeZOrdered`: range-partition by the `zKeyN`
-    * key into `numFiles` files so each file covers one tight
-    * hyper-BOX in every z-dimension at once. */
-  def writeZOrderedN(df: DataFrame, path: String, keys: Seq[Column],
-                     bits: Int, numFiles: Int = 32): Unit = {
-    require(numFiles >= 1, "numFiles must be positive")
-    df.withColumn("__z", zKeyN(keys, bits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** N-column `fileEnvelopes`: per-file min/max per named column
-    * (`<col>_min`/`<col>_max`), the stats file-skipping consults. */
-  def fileEnvelopesN(spark: SparkSession, path: String, cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "need at least one column")
-    val aggs = cols.flatMap(c =>
-      Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"))) :+
-      count(lit(1)).as("rows")
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
   }
 }

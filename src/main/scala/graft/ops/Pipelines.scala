@@ -29,29 +29,24 @@ object Pipelines {
 
   /** Stage 1 — ingest shaping: union of live + backfill observation
     * batches, cutoff of future rows, dedup against existing bronze
-    * keys, append to bronze. Returns the appended batch. */
+    * keys, append to bronze. */
   def ingest(live: DataFrame, backfill: DataFrame, now: Column,
-             existingKeys: DataFrame, bronzePath: String): DataFrame = {
+             existingKeys: DataFrame, bronzePath: String): Unit = {
     val unioned = Shaping.discriminatedUnion(live, "current", backfill, "history")
     val cut = Observations.cutoffAfter(unioned, now)
     val fresh = Dedup.notYetProcessed(cut, existingKeys, Seq("location_id", "ts"))
     Sinks.append(fresh.withColumn("ingest_date", to_date(col("ts"))), bronzePath, Seq("ingest_date"))
-    fresh
   }
 
   /** Stage 2 — flatten bronze → silver: guards, time buckets,
     * unique-key keep-first, append. */
-  def flatten(bronze: DataFrame, silverPath: String): DataFrame = {
+  def flatten(bronze: DataFrame, silverPath: String): Unit = {
     val flat = Observations.withTimeBuckets(Observations.guardValid(bronze))
     val unique = Sinks.enforceUnique(flat, Seq("location_id", "ts"), "obs_id")
     Sinks.append(unique, silverPath, Seq("obs_date"))
-    unique
   }
 
   /** Stage 3 — gold daily recap with idempotent per-day upsert. */
-  def recap(silver: DataFrame, dim: DataFrame, goldPath: String): DataFrame = {
-    val gold = Recap.pipeline(silver, dim)
-    Sinks.upsertPartitions(gold, goldPath, Seq("obs_date"))
-    gold
-  }
+  def recap(silver: DataFrame, dim: DataFrame, goldPath: String): Unit =
+    Sinks.upsertPartitions(Recap.pipeline(silver, dim), goldPath, Seq("obs_date"))
 }

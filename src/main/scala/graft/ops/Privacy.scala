@@ -35,19 +35,4 @@ object Privacy {
         count_distinct(col(sensitiveCol)).as("distinct_sensitive"))
       .withColumn("k_ok", col("class_size") >= k)
   }
-
-  /** One-row release summary: total rows, number of equivalence
-    * classes, the table's anonymity level (min class size — the k it
-    * actually achieves), rows at risk (in classes below k), and the
-    * minimum l-diversity across classes. The number a release gate
-    * thresholds on. */
-  def kAnonymitySummary(df: DataFrame, qiCols: Seq[String], sensitiveCol: String,
-                        k: Long): DataFrame =
-    kAnonymity(df, qiCols, sensitiveCol, k)
-      .agg(sum(col("class_size")).as("n_rows"),
-        count(lit(1)).as("n_classes"),
-        min(col("class_size")).as("anonymity_k"),
-        sum(when(col("class_size") < k, col("class_size")).otherwise(lit(0L)))
-          .as("rows_at_risk"),
-        min(col("distinct_sensitive")).as("min_l_diversity"))
 }

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.functions.DeterministicMode.modeDet
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -59,7 +58,7 @@ object Recap {
         .as("avg_temp_c"),
       min(col("temp_c")).as("min_temp_c"),
       max(col("temp_c")).as("max_temp_c"),
-      modeDet(col("condition")).as("dominant_condition"),
+      mode(col("condition"), deterministic = true).as("dominant_condition"),
       // reference: sum over empty ⇒ 0, unlike avg/min/max ⇒ null
       // (dags/daily_compile_weather.py:78 vs :71-75); exact cents again
       (coalesce(sum(round(col("precip_mm") * 100).cast("long")), lit(0L)) / 100.0)

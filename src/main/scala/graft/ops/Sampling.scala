@@ -75,12 +75,6 @@ object Sampling {
         "canonical string form across engines (cast explicitly first)")
   }
 
-  /** Keep ~pct% of rows, deterministically by key. */
-  def sampleByHash(df: DataFrame, key: String, pct: Int): DataFrame = {
-    requirePortableKey(df, key)
-    df.where(hashBucket(col(key)) < pct)
-  }
-
   /** Stratified deterministic sampling: a different keep-percentage
     * per stratum (e.g. downsample boilerplate-heavy languages, keep
     * all of a rare one) — the deterministic form of `df.sampleBy`.
@@ -233,14 +227,10 @@ object Sampling {
     * Membership is a pure function of (key, the group's key SET):
     * re-runs agree, and — unlike percentage sampling — adding rows to
     * a group can displace the highest-ranked survivors (a cap is a
-    * top-k, not a coin flip; use `sampleByHash` when insert-stable
-    * membership matters more than an exact quota).
+    * top-k, not a coin flip).
     *
     * Scale shape: one hash-partition shuffle on the group column, then
-    * a per-group sort — O(|group| log |group|) in the hot partition.
-    * Fine while groups fit a task's spill budget; for the 100 TB
-    * corpus with billion-row groups use `capPerGroupPruned`, which
-    * bounds the sorted volume to ~`maxPerGroup` per group first. */
+    * a per-group sort — O(|group| log |group|) in the hot partition. */
   def capPerGroup(df: DataFrame, key: String, groupCol: String,
                   maxPerGroup: Int): DataFrame = {
     require(maxPerGroup > 0, "maxPerGroup must be positive")
@@ -248,54 +238,5 @@ object Sampling {
     val w = Window.partitionBy(col(groupCol)).orderBy(selectionOrder(key): _*)
     df.withColumn("sel_rank", row_number().over(w))
       .where(col("sel_rank") <= maxPerGroup)
-  }
-
-  /** `capPerGroup` for groups too large to sort whole: prune first,
-    * rank after. The 60-bit hash is range-bucketed by its HIGH bits
-    * (`hash >> (60 - bucketBits)`) — an order-PRESERVING coarsening,
-    * so per-(group, bucket) counts give each group a cutoff bucket
-    * (the first whose running count reaches the cap) and every row
-    * ranked ≤ `maxPerGroup` provably lives at-or-before it. Only rows
-    * up to the cutoff — ~`maxPerGroup` + one bucket's tail — reach
-    * the exact row_number; the billion-row group never sorts.
-    *
-    * Cost: one extra count aggregation (map-side-combined to at most
-    * groups × 2^bucketBits rows) and a cutoff join on the group key
-    * (one row per group — AQE broadcasts it when the group count is
-    * small; at huge group cardinality it hash-joins on the same key
-    * the rank shuffle needs anyway), bought back by the hot partition
-    * shrinking from |group| to ~cap. Output is row-identical to
-    * `capPerGroup` (spec-proven). */
-  def capPerGroupPruned(df: DataFrame, key: String, groupCol: String,
-                        maxPerGroup: Int, bucketBits: Int = 13): DataFrame = {
-    require(maxPerGroup > 0, "maxPerGroup must be positive")
-    require(bucketBits > 0 && bucketBits < 60, "bucketBits must be in (0, 60)")
-    requirePortableKey(df, key)
-    // NULL keys hash to NULL; coalesce their bucket to -1 so they
-    // occupy a bucket BEFORE every real one — the same position the
-    // rank window's nulls-first ordering gives them, keeping this
-    // variant row-identical to capPerGroup on null keys too
-    val bucketed = df.withColumn("__b", coalesce(
-      shiftright(graft.plans.Hash60.hash60(col(key).cast("string")), 60 - bucketBits),
-      lit(-1L)))
-    val wCum = Window.partitionBy(col(groupCol)).orderBy(col("__b"))
-    val cutoff = bucketed.groupBy(col(groupCol), col("__b"))
-      .agg(count(lit(1)).as("__n"))
-      .withColumn("__cum", sum(col("__n")).over(wCum))
-      // buckets strictly before this one hold < cap rows, so rank
-      // maxPerGroup can still fall here — keep through the first
-      // bucket whose running count reaches the cap
-      .where(col("__cum") - col("__n") < maxPerGroup)
-      .groupBy(col(groupCol)).agg(max(col("__b")).as("__bmax"))
-      .withColumnRenamed(groupCol, "__g")
-    val wRank = Window.partitionBy(col(groupCol)).orderBy(selectionOrder(key): _*)
-    bucketed
-      // null-SAFE group match: a NULL group is a group like any other
-      // to Window.partitionBy, so the cutoff join must not drop it
-      .join(cutoff, col(groupCol) <=> col("__g"))
-      .where(col("__b") <= col("__bmax"))
-      .withColumn("sel_rank", row_number().over(wRank))
-      .where(col("sel_rank") <= maxPerGroup)
-      .select(df.columns.map(col) :+ col("sel_rank"): _*)
   }
 }

@@ -31,20 +31,9 @@ object Shuffle {
     graft.plans.Hash60.hash60(concat_ws(":", lit(seed), key.cast("string")))
 
   /** Attach the shuffle order as `shuffle_key` (narrow projection —
-    * ordering/writing is the caller's step; see `writeShuffled`). */
+    * ordering/writing is the caller's step). */
   def withOrder(df: DataFrame, key: String, seed: Long): DataFrame = {
     Sampling.requirePortableKey(df, key)
     df.withColumn("shuffle_key", orderKey(col(key), seed))
-  }
-
-  /** Write the corpus in shuffled order as `nShards` range-disjoint,
-    * internally-sorted parquet shards. */
-  def writeShuffled(df: DataFrame, key: String, seed: Long,
-                    nShards: Int, path: String): Unit = {
-    require(nShards > 0, "nShards must be positive")
-    withOrder(df, key, seed)
-      .repartitionByRange(nShards, col("shuffle_key"), col(key))
-      .sortWithinPartitions(col("shuffle_key"), col(key))
-      .write.mode("overwrite").parquet(path)
   }
 }

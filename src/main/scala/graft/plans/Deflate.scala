@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -69,19 +67,4 @@ case class DeflateSize(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): DeflateSize =
     copy(child = newChild)
-}
-
-object Deflate {
-  /** Compressed byte length of the UTF-8 encoding. */
-  def deflateSize(c: Column): Column =
-    GraftSqlShim.column(DeflateSize(GraftSqlShim.expression(c)))
-
-  /** deflate bytes / raw UTF-8 bytes, NULL for the empty string
-    * (a 0/0 ratio would read as "maximally compressible"). */
-  def deflateRatio(c: Column): Column = {
-    import org.apache.spark.sql.functions._
-    val raw = octet_length(c)
-    when(raw === 0, lit(null).cast("double"))
-      .otherwise(deflateSize(c).cast("double") / raw.cast("double"))
-  }
 }

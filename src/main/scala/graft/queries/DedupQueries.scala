@@ -87,7 +87,7 @@ private[graft] object DedupQueries {
         |  CAST(1000000000 // coalesce(s.n, 1) AS BIGINT) AS weight_nano
         |FROM documents d
         |LEFT JOIN clusters c USING (doc_id)
-        |LEFT JOIN sizes s USING (cluster_id)""".stripMargin, shares = Set("neardup")),
+        |LEFT JOIN sizes s USING (cluster_id)""".stripMargin, shares = Set(QuerySpec.NearDup)),
     // ---- ER survivorship: the near-dup clusters of
     // q_dup_components re-resolved to QUALITY-best golden records
     // (longest text, ties to smallest id) instead of id-min ----
@@ -112,7 +112,7 @@ private[graft] object DedupQueries {
         |  FROM scored
         |)
         |SELECT cluster_id, n_members, doc_id AS survivor_id, tlen AS survivor_len
-        |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin, shares = Set("neardup")),
+        |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin, shares = Set(QuerySpec.NearDup)),
     // ---- SimHash banded Hamming pairs (fully oracle-mirrored) ----
     QuerySpec("q_simhash_pairs", (s, dir) => {
       graft.operators.SimHash.hammingPairs(
@@ -186,7 +186,7 @@ private[graft] object DedupQueries {
       graft.operators.NearDup.documentClusters(s, dir).orderBy(col("doc_id")),
       s"""$closurePrefix
         |SELECT id AS doc_id, min(r) AS cluster_id, (id = min(r)) AS is_canonical
-        |FROM reach GROUP BY 1""".stripMargin, shares = Set("neardup")),
+        |FROM reach GROUP BY 1""".stripMargin, shares = Set(QuerySpec.NearDup)),
     // ---- the COMPLETE dedup pipeline as one query: near-dup
     // clusters (subsumes exact dups at jaccard 1) → drop every
     // non-canonical member → surviving-corpus stats per lang ----
@@ -210,7 +210,7 @@ private[graft] object DedupQueries {
         |       CAST(sum(d.n_chars) AS BIGINT) AS sum_chars
         |FROM documents d LEFT JOIN losers l ON d.doc_id = l.id
         |WHERE l.id IS NULL
-        |GROUP BY 1""".stripMargin, shares = Set("neardup")),
+        |GROUP BY 1""".stripMargin, shares = Set(QuerySpec.NearDup)),
     // ---- exact dedup by content hash (double-ingest simulation —
     // the distributed form of the reference's at-least-once dedup ST7) ----
     QuerySpec("q_dedup_exact", (s, dir) => {
@@ -226,18 +226,18 @@ private[graft] object DedupQueries {
         |)
         |SELECT md5(text) AS content_hash, count(*) AS dup_count,
         |  min(doc_id) AS doc_id, arg_min(lang, doc_id) AS lang
-        |FROM u GROUP BY 1""".stripMargin, shares = Set("neardup")),
+        |FROM u GROUP BY 1""".stripMargin, shares = Set(QuerySpec.NearDup)),
     // ---- exact n-gram Jaccard near-dup pairs (inverted index) ----
     QuerySpec("q_ngram_jaccard", (s, dir) => {
       graft.operators.NearDup.jaccardPairs(Tables.documents(s, dir), "text", 3, 0.8)
         .orderBy(col("d1"), col("d2"))
-    }, exactJaccardSql, shares = Set("neardup")),
+    }, exactJaccardSql, shares = Set(QuerySpec.NearDup)),
     // ---- MinHash + LSH banding, exact-verified (the 100 TB path;
     // recall at j>=0.8 is 1-2e-8 so the exact-Jaccard oracle holds) ----
     QuerySpec("q_minhash_lsh", (s, dir) => {
       graft.operators.NearDup.minhashNearDupPairs(Tables.documents(s, dir), "text", 3, 0.8)
         .orderBy(col("d1"), col("d2"))
-    }, exactJaccardSql, shares = Set("neardup")),
+    }, exactJaccardSql, shares = Set(QuerySpec.NearDup)),
     // ---- SimHash fingerprints (md5-derived 60-bit, engine-reproducible) ----
     QuerySpec("q_simhash", (s, dir) => {
       graft.operators.SimHash.fingerprints(Tables.documents(s, dir), "text")
@@ -392,7 +392,7 @@ private[graft] object DedupQueries {
         |  SELECT doc_id, group_key,
         |    CAST(concat('0x', substr(md5(CAST(group_key AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS bucket
         |  FROM keyed
-        |)""".stripMargin, shares = Set("neardup")),
+        |)""".stripMargin, shares = Set(QuerySpec.NearDup)),
     // ---- exact repeated-substring removal (Lee et al. 2021): every
     // duplicated 3-gram keeps its first occurrence, all other
     // occurrences' tokens are masked out ----
@@ -436,5 +436,5 @@ private[graft] object DedupQueries {
          |  coalesce(k.text_clean, '') AS text_clean,
          |  CAST(len(t.toks) AS BIGINT) AS n_tokens,
          |  CAST(len(t.toks) - coalesce(k.n_kept, 0) AS BIGINT) AS n_removed
-         |FROM tok t LEFT JOIN kept k USING (doc_id)""".stripMargin, shares = Set("neardup")))
+         |FROM tok t LEFT JOIN kept k USING (doc_id)""".stripMargin, shares = Set(QuerySpec.NearDup)))
 }

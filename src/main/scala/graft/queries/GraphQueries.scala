@@ -36,7 +36,7 @@ private[graft] object GraphQueries {
         |)
         |SELECT deg, n_nodes,
         |  CAST(round(1e9 * CAST(n_nodes AS DOUBLE) / CAST(n_total AS DOUBLE)) AS BIGINT) AS share_nano
-        |FROM dist, t ORDER BY deg""".stripMargin, shares = Set("graphs")),
+        |FROM dist, t ORDER BY deg""".stripMargin, shares = Set(QuerySpec.Graphs)),
     // ---- per-community conductance of the labelprop partition:
     // the boundary-leakiness score modularity misses (Cheeger's
     // quantity); exact integer cut/volume sums over the shared
@@ -98,7 +98,7 @@ private[graft] object GraphQueries {
         |      / CAST(least(vol, m2 - vol) AS DOUBLE)) AS BIGINT)
         |  END AS phi_nano
         |FROM parts, m2t ORDER BY lab""".stripMargin, invariant = InvariantOracles.conductance,
-      shares = Set("graphs", "lpa")),
+      shares = Set(QuerySpec.Graphs, QuerySpec.Lpa)),
     // ---- DBSCAN density clustering over the q_geo_radius point
     // cloud: grid-bucketed radius join → core points → components
     // over core-core edges → deterministic min-cluster border
@@ -151,7 +151,7 @@ private[graft] object GraphQueries {
         |  coalesce(cc.cluster_id, b.cluster_id) AS cluster_id
         |FROM p LEFT JOIN core_clusters cc ON cc.id = p.id
         |LEFT JOIN border b ON b.id = p.id
-        |ORDER BY p.id""".stripMargin, invariant = InvariantOracles.dbscan, shares = Set("dbscan")),
+        |ORDER BY p.id""".stripMargin, invariant = InvariantOracles.dbscan, shares = Set(QuerySpec.Dbscan)),
     // ---- weighted shortest paths: 4 Bellman-Ford relaxation
     // rounds from the %202 seed parts, integer weights
     // 1 + (src+dst)%7 — the union-min relaxation replays as 4
@@ -197,7 +197,7 @@ private[graft] object GraphQueries {
         |  ) GROUP BY id
         |)
         |SELECT CAST(id AS BIGINT) AS id, CAST(dist AS BIGINT) AS dist
-        |FROM d4 ORDER BY id""".stripMargin, shares = Set("graphs")),
+        |FROM d4 ORDER BY id""".stripMargin, shares = Set(QuerySpec.Graphs)),
     // ---- Adamic-Adar link prediction: wedge pairs on the (eighth
     // of parts) bipartite graph scored by shared-neighbor obscurity;
     // wedge volume checked loudly before the join ----
@@ -235,7 +235,7 @@ private[graft] object GraphQueries {
       // wedge-volume guard trips by design at sf10 (781M wedges), so
       // its -1 must publish as a receipt refusal, not an engine
       // failure — the capped twin is the production path
-      regime = Some("refusal-reference"), shares = Set("graphs")),
+      regime = Some("refusal-reference"), shares = Set(QuerySpec.Graphs)),
     // ---- hub-capped Adamic-Adar: the PRODUCTION twin on the same
     // instance (r12 verdict item #4 — the exact form above is the
     // refusing receipt at sf10's 781M wedges). Each node keeps its 16
@@ -275,7 +275,7 @@ private[graft] object GraphQueries {
         |FROM sc
         |WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.src = sc.u AND e.dst = sc.v)
         |ORDER BY aa_nano DESC, u, v LIMIT 100""".stripMargin, regime = Some("production-twin"),
-      shares = Set("graphs")),
+      shares = Set(QuerySpec.Graphs)),
     // ---- the cap's explicit cost: dropped-wedge accounting from one
     // degree aggregate — published as its own oracle-gated row so the
     // cap is a judged trade, not a trusted one ----
@@ -300,7 +300,7 @@ private[graft] object GraphQueries {
         |  CAST(sum(d * (d - 1) // 2) AS BIGINT) AS wedges_exact,
         |  CAST(sum(least(d, 16) * (least(d, 16) - 1) // 2) AS BIGINT) AS wedges_kept,
         |  CAST(sum(d * (d - 1) // 2) - sum(least(d, 16) * (least(d, 16) - 1) // 2) AS BIGINT) AS wedges_dropped
-        |FROM deg""".stripMargin, shares = Set("graphs")),
+        |FROM deg""".stripMargin, shares = Set(QuerySpec.Graphs)),
     // ---- Newman modularity of the labelprop partition: integer
     // intra-edge and degree-mass sums per community, one IEEE
     // formula per community row — grades the community structure
@@ -370,7 +370,7 @@ private[graft] object GraphQueries {
         |    (CAST(degree_mass AS DOUBLE) / CAST(m2 AS DOUBLE)))) AS BIGINT) AS q_nano
         |FROM mass LEFT JOIN intra USING (lab), m2t
         |ORDER BY lab""".stripMargin, invariant = InvariantOracles.modularity,
-      shares = Set("graphs", "lpa")),
+      shares = Set(QuerySpec.Graphs, QuerySpec.Lpa)),
     // ---- degree assortativity of the bipartite graph: exact
     // integer moment sums over one degree join, Pearson formula as
     // the only IEEE step ----
@@ -403,7 +403,7 @@ private[graft] object GraphQueries {
         |      sqrt((CAST(m2 AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
         |           (CAST(m2 AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))) AS BIGINT)
         |  END AS r_nano
-        |FROM s""".stripMargin, shares = Set("graphs")),
+        |FROM s""".stripMargin, shares = Set(QuerySpec.Graphs)),
     // ---- HITS hubs & authorities (2 iterations) over the DIRECTED
     // part -> supplier graph: integer half-step sums with a
     // ceil(max/1e9) rescale div — replays as an unrolled SQL replica
@@ -454,7 +454,7 @@ private[graft] object GraphQueries {
         |SELECT CAST(h2.id AS BIGINT) AS id, CAST(h2.hub AS BIGINT) AS hub,
         |  CAST(a2.auth AS BIGINT) AS auth
         |FROM h2 JOIN a2 ON a2.id = h2.id
-        |ORDER BY id""".stripMargin, invariant = InvariantOracles.hits, shares = Set("graphs")),
+        |ORDER BY id""".stripMargin, invariant = InvariantOracles.hits, shares = Set(QuerySpec.Graphs)),
     // ---- synchronous label-propagation communities (3 rounds,
     // deterministic (count DESC, label ASC) votes) over the
     // part<->supplier bipartite graph — replays as a 3x-unrolled
@@ -507,7 +507,7 @@ private[graft] object GraphQueries {
         |FROM l3 ORDER BY id""".stripMargin,
       // sf10 tier, second wave (r14): CTE-re-inlining spill victims —
       // replays green through sf1, >40 GiB DuckDB spill at sf10
-      invariant = InvariantOracles.labelProp, shares = Set("graphs", "lpa")),
+      invariant = InvariantOracles.labelProp, shares = Set(QuerySpec.Graphs, QuerySpec.Lpa)),
     // ---- PageRank over the part<->supplier bipartite graph
     // (node id = 2*partkey for parts, 2*suppkey+1 for suppliers;
     // symmetric edges). Exact fixed-point arithmetic — floor-divided
@@ -555,7 +555,7 @@ private[graft] object GraphQueries {
         |                    FROM ewd ed JOIN i4 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
         |)
         |SELECT id, CAST(r AS BIGINT) AS rank FROM i5 ORDER BY id""".stripMargin,
-      shares = Set("graphs")),
+      shares = Set(QuerySpec.Graphs)),
     // ---- triangle counting with degree-ordered orientation over
     // the parts-bought-together co-occurrence graph (edge = two
     // parts in the same order). Exact integers end to end; the
@@ -598,7 +598,7 @@ private[graft] object GraphQueries {
         |)
         |SELECT id, CAST(count(*) AS BIGINT) AS n_triangles
         |FROM (SELECT a AS id FROM tri UNION ALL SELECT b FROM tri UNION ALL SELECT c FROM tri)
-        |GROUP BY id ORDER BY id""".stripMargin, shares = Set("graphs")),
+        |GROUP BY id ORDER BY id""".stripMargin, shares = Set(QuerySpec.Graphs)),
     // ---- local clustering coefficients over the same graph: every
     // node with degree, triangle count, and cc = 2T/(deg·(deg−1))
     // (NULL below degree 2 — undefined, not zero). Exact integers
@@ -640,7 +640,7 @@ private[graft] object GraphQueries {
         |  CASE WHEN d.d >= 2
         |       THEN CAST(2 * COALESCE(t.n, 0) AS DOUBLE) / (d.d * (d.d - 1)) END AS cc
         |FROM deg d LEFT JOIN tc t ON t.id = d.id
-        |ORDER BY d.id""".stripMargin, shares = Set("graphs")),
+        |ORDER BY d.id""".stripMargin, shares = Set(QuerySpec.Graphs)),
     // ---- k-core peeling (Seidman 1983) on the same co-occurrence
     // graph: three fixed peel rounds at k=8 — the fixed-round form
     // (engine fixpoint loop spec-gated in KCoreSpec) unrolls into an
@@ -684,7 +684,7 @@ private[graft] object GraphQueries {
         |SELECT id, CAST(count(*) AS BIGINT) AS deg
         |FROM (SELECT src AS id FROM e3 UNION ALL SELECT dst FROM e3)
         |GROUP BY id
-        |ORDER BY id""".stripMargin, invariant = InvariantOracles.kcore, shares = Set("graphs")),
+        |ORDER BY id""".stripMargin, invariant = InvariantOracles.kcore, shares = Set(QuerySpec.Graphs)),
     // ---- multi-source BFS: shortest hop distances from the
     // partkey%101==0 seed parts over the part<->supplier bipartite
     // graph (the q_pagerank instance). Exact small integers, so the
@@ -713,7 +713,7 @@ private[graft] object GraphQueries {
         |  WHERE walk.dist < 4
         |)
         |SELECT id, CAST(min(dist) AS BIGINT) AS dist
-        |FROM walk GROUP BY id ORDER BY id""".stripMargin, shares = Set("graphs")),
+        |FROM walk GROUP BY id ORDER BY id""".stripMargin, shares = Set(QuerySpec.Graphs)),
     // ---- personalized PageRank (TrustRank): teleport mass pinned
     // to the suppkey%10==0 "trusted" suppliers (node id ≡ 1 mod 20)
     // over the same bipartite graph. Exact integers → 5x-unrolled
@@ -763,7 +763,7 @@ private[graft] object GraphQueries {
         |                    FROM ewd ed JOIN i4 p ON p.id = ed.src GROUP BY 1) s ON s.id = n.id
         |)
         |SELECT id, CAST(r AS BIGINT) AS rank FROM i5 ORDER BY id""".stripMargin,
-      shares = Set("graphs")),
+      shares = Set(QuerySpec.Graphs)),
     // ---- HyperBall: per-node 2-hop ball-size estimates (lgK=7)
     // over the bipartite graph. Deterministic integer registers ⇒
     // the APPROXIMATE estimates themselves replay exactly in SQL —
@@ -825,7 +825,7 @@ private[graft] object GraphQueries {
         |  CAST(round(CASE WHEN zeros > 0 AND rawE <= 320.0::DOUBLE
         |                  THEN 128.0::DOUBLE * ln(128.0::DOUBLE / CAST(zeros AS DOUBLE))
         |                  ELSE rawE END) AS BIGINT) AS ball_est
-        |FROM est ORDER BY id""".stripMargin, shares = Set("graphs")),
+        |FROM est ORDER BY id""".stripMargin, shares = Set(QuerySpec.Graphs)),
     // ---- harmonic centrality from the same machinery: Σ_r
     // shell_r/r over per-round incoming-ball estimates, in exact
     // nano-units (shells are already-rounded longs). Gate instance
@@ -907,5 +907,5 @@ private[graft] object GraphQueries {
         |  CAST((greatest(e1.est - e0.est, 0) * 1000000000) // 1
         |     + (greatest(e2.est - e1.est, 0) * 1000000000) // 2 AS BIGINT) AS harmonic_e9
         |FROM e0 JOIN e1 ON e1.id = e0.id JOIN e2 ON e2.id = e0.id
-        |ORDER BY e0.id""".stripMargin, shares = Set("graphs")))
+        |ORDER BY e0.id""".stripMargin, shares = Set(QuerySpec.Graphs)))
 }

@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   *                  twin instead of grading the receipt as a defect;
   *                  None for a plain production path
   * @param shares    the Bench shared-warmup stages whose memo this query
-  *                  reads ("neardup", "graphs", "lpa", "dbscan",
-  *                  "ivfpq"); a stage runs only when one of its
-  *                  consumers is selected
+  *                  reads, each one of [[QuerySpec.warmupStages]]; a
+  *                  stage runs only when one of its consumers is
+  *                  selected
   */
 final case class QuerySpec(
     name: String,
@@ -34,6 +34,11 @@ final case class QuerySpec(
     invariant: Seq[String] = Nil,
     regime: Option[String] = None,
     shares: Set[String] = Set.empty) {
+  // a misspelt stage would silently drop this query from the stage's
+  // consumers, and a filtered Bench run would then skip its warmup
+  require(shares.subsetOf(QuerySpec.warmupStages),
+    s"$name shares unknown warmup stage(s) " +
+      s"${(shares -- QuerySpec.warmupStages).toSeq.sorted.mkString(", ")}")
 
   /** Reference instances prove a scaling law, not a throughput: Bench
     * measures and publishes them per query but keeps them out of the
@@ -43,6 +48,15 @@ final case class QuerySpec(
 }
 
 object QuerySpec {
+  /** The Bench shared-warmup stages, by the names `warmup_detail`
+    * reports them under. */
+  val NearDup = "neardup"
+  val Graphs = "graphs"
+  val Lpa = "lpa"
+  val Dbscan = "dbscan"
+  val IvfPq = "ivfpq"
+  val warmupStages: Set[String] = Set(NearDup, Graphs, Lpa, Dbscan, IvfPq)
+
   val receiptRegimes: Set[String] = Set(
     "degenerate-reference", "sequential-reference", "build-reference", "refusal-reference")
 }

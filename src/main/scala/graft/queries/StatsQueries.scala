@@ -1282,7 +1282,7 @@ private[graft] object StatsQueries {
     QuerySpec("q_mode_det", (s, dir) => {
       Tables.events(s, dir).where(col("user_id").isNotNull)
         .groupBy(col("user_id"))
-        .agg(graft.functions.DeterministicMode.modeDet(col("event_type")).as("dominant_type"),
+        .agg(mode(col("event_type"), deterministic = true).as("dominant_type"),
           count(lit(1)).as("n_rows"))
         .orderBy(col("user_id"))
     }, """WITH c AS (

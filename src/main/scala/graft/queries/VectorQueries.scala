@@ -437,8 +437,8 @@ private[graft] object VectorQueries {
       regime = Some("degenerate-reference")),
     // ---- tuned high-threshold near-dup: the config banding theory
     // actually prescribes for dup DETECTION (threshold 0.9, bands =
-    // lshParams(0.9, 0.01, 12) = 28, vs the degenerate selectivity
-    // any config has at 0.5 — see Similarity.lshParams). The corpus
+    // ⌈ln(0.01)/ln(1 − p^12)⌉ = 28 with p = 1 − acos(0.9)/π, vs the
+    // degenerate selectivity any config has at 0.5). The corpus
     // is seeded with a deterministic near-dup twin per vector
     // (per-dim factors 1 + k/128, exactly representable doubles, so
     // the oracle rebuilds the same twins bit-for-bit).
@@ -786,7 +786,7 @@ private[graft] object VectorQueries {
       // staged list ALSO reconciles the persisted index's per-list
       // layout via the engine's q_ivfpq_layout dump (see ivfpqIndexed).
       invariant = InvariantOracles.ivfpqIndexed, regime = Some("production-twin"),
-      shares = Set("ivfpq")),
+      shares = Set(QuerySpec.IvfPq)),
     // ---- the index LAYOUT certificate (r13 verdict item #5): one
     // row per coarse centroid in the PERSISTED index's sidecar, with
     // the row count of its list_id partition directory — read from
@@ -837,7 +837,7 @@ private[graft] object VectorQueries {
         |SELECT CAST(c.cid AS BIGINT) AS list_id, CAST(COALESCE(g.n, 0) AS BIGINT) AS n_rows
         |FROM (SELECT vec_id AS cid FROM embeddings WHERE vec_id < 8) c
         |LEFT JOIN (SELECT list_id, count(*) AS n FROM corpus_assign GROUP BY 1) g ON g.list_id = c.cid
-        |ORDER BY list_id""".stripMargin, shares = Set("ivfpq")),
+        |ORDER BY list_id""".stripMargin, shares = Set(QuerySpec.IvfPq)),
     // ---- cross-corpus SEMANTIC contamination: eval rows (natural
     // tail + planted copies of train rows) banded against the train
     // side — the paraphrase-leak check n-gram contamination can't
@@ -922,7 +922,7 @@ private[graft] object VectorQueries {
          |JOIN nrm x ON x.vec_id = a.vec_id
          |JOIN nrm y ON y.vec_id = b.vec_id
          |WHERE CAST(CAST(list_sum(list_transform(generate_series(1, len(x.v)), i -> x.v[i]*y.v[i])) AS BIGINT) AS DOUBLE)/(x.nv*y.nv) >= 0.4""".stripMargin,
-      shares = Set("neardup")),
+      shares = Set(QuerySpec.NearDup)),
     // ---- brute-force cosine top-k over embeddings (quantized-exact) ----
     QuerySpec("q_cosine_topk", (s, dir) => {
       val emb = Tables.embeddings(s, dir)

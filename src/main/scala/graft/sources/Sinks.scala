@@ -15,7 +15,6 @@ import org.apache.spark.sql.functions._
   *  - S8 unique-key guard → dropDuplicates before write (reference
   *    unique index + dup-key tolerance,
   *    dags/transform_raw_weather.py:66-76,107-111)
-  *  - S9 truncate+reload  → `overwrite` (static)
   *
   * At 100 TB, partition columns are the pruning keys (date first,
   * then coarse location bucket); dynamic overwrite touches only the
@@ -26,31 +25,6 @@ object Sinks {
   /** S6 — append to a date-partitioned table. */
   def append(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.write.mode("append").partitionBy(partitionCols: _*).parquet(path)
-
-  /** Small-file compaction: rewrite a parquet dataset into
-    * ~`targetBytes`-sized files. Streaming micro-batch sinks and
-    * per-partition appends accrete thousands of KB-sized files; at
-    * 100 TB that is an open()-dominated scan and a NameNode/listing
-    * tax, and the fix is this periodic rewrite. File count =
-    * ceil(current on-disk bytes / targetBytes) (parquet encoding is
-    * preserved, so on-disk size predicts output size well);
-    * `repartition(n)` round-robins rows for evenly sized output.
-    * Content is preserved exactly (spec-checked); row order is not
-    * (parquet readers must not assume one). Returns the output file
-    * count. */
-  def compactTo(spark: org.apache.spark.sql.SparkSession, srcPath: String,
-                dstPath: String, targetBytes: Long): Int = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    require(srcPath != dstPath,
-      "compact to a NEW path, then swap — overwriting the source you are reading is undefined")
-    val fs = new org.apache.hadoop.fs.Path(srcPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(srcPath)).getLength
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(srcPath).repartition(nFiles)
-      .write.mode("overwrite").parquet(dstPath)
-    nFiles
-  }
 
   /** S7 — keyed upsert via dynamic partition overwrite: replaces only
     * the partitions present in `df`, leaving the rest of the table
@@ -67,23 +41,6 @@ object Sinks {
     * distributed meaning). */
   def enforceUnique(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame =
     graft.ops.Dedup.keepFirstAgg(df, keys, orderCol)
-
-  /** S9 — truncate-and-reload (dimension seed). */
-  def truncateReload(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  /** Co-located (bucketed) layout — the 100 TB join strategy: pay the
-    * shuffle ONCE at write time (`bucketBy` on the join/dedup key),
-    * and every later equi-join or aggregation on that key reads
-    * buckets pairwise with NO exchange. Two fact tables bucketed the
-    * same way join shuffle-free at any size; `sortBy` additionally
-    * lets sort-merge join skip its sort. BucketedJoinSpec asserts the
-    * exchange-free plan. (Parquet path tables can't carry bucket
-    * metadata, so this sink goes through the session catalog —
-    * `saveAsTable` — which is where Spark records bucket specs.) */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
 
   /** Range-clustered layout — the 100 TB data-SKIPPING strategy for
     * range predicates (time travel, date slices, id ranges):
@@ -125,8 +82,7 @@ object Sinks {
     * written files; readers filter on the original columns and the
     * parquet min/max stats do the skipping. At 100 TB: nFiles =
     * volume / target file size; the quantile pass amortizes over
-    * every later pruned read, the same trade as writeBucketed's
-    * one-time shuffle.
+    * every later pruned read.
     *
     * Keys already in a small integer range (ids, enum codes, day
     * numbers) don't need the quantile pass — use `ops.Layout`'s

@@ -717,8 +717,8 @@ object Snapshots {
 
   /** Erase a column's widen history — for the rewrite verbs that bake
     * every physical byte to the record type (retypeRewrite): stale
-    * history would misclassify a later schemaDiff as 'widened' and
-    * route reads through the upcast path for nothing. */
+    * history would route reads through the upcast path for
+    * nothing. */
   private def clearWidenedFrom(
       f: org.apache.spark.sql.types.StructField): org.apache.spark.sql.types.StructField =
     if (!f.metadata.contains(WidenKey)) f
@@ -1070,16 +1070,15 @@ object Snapshots {
     * physical bytes, so it is deliberately a WHOLE-TABLE rewrite you
     * must name: every live file rewrites with the cast baked in, and
     * any value the cast cannot ROUND-TRIP raises inside the write
-    * projection (the commitChecked shape — one scan, the manifest
-    * never lands, the table is untouched). The type ladder may be
-    * lossy in general; this verb succeeds only when the DATA survives
+    * projection (one scan, the manifest never lands, the table is
+    * untouched). The type ladder may be lossy in general; this verb succeeds only when the DATA survives
     * it exactly — a genuinely value-changing transform (accepting
     * truncation) stays out of scope by design: cast into a NEW
     * column, where the loss is visible in the schema.
     *
     * Time travel before the retype shows the old type over the old
     * bytes, exactly as committed (each manifest carries its own
-    * schema record); [[schemaDiff]] reports the column as `retyped`.
+    * schema record).
     * The column keeps its id (it is the same column, new physical
     * type), and its widen history clears — the rewrite bakes every
     * byte to the record type, so there is no narrow history left to
@@ -1189,8 +1188,7 @@ object Snapshots {
   // [[reconciledScan]] — the one seam all reads (full, pruned,
   // incremental, COW-rewrite) already route through. `optimize`
   // BAKES DVs (a dv-carrying file always rewrites, clean), `vacuum`
-  // expires DV dirs with the manifests that reference them, and
-  // `gcStaged` age-collects orphaned DV dirs from crashed deletes.
+  // expires DV dirs with the manifests that reference them.
   //
   // Positions are parquet row indices (`_metadata.row_index`) —
   // stable for immutable files, which manifest-referenced files are
@@ -1394,57 +1392,6 @@ object Snapshots {
     (df, head)
   }
 
-  /** Row-level diff between two retained versions — the full CDC
-    * feed `changesSince` deliberately is not: works across
-    * overwrite/optimize rewrites because it diffs ROWS (one
-    * full-outer key join via [[graft.operators.SnapshotDiff]]), not
-    * file lists. Output: (key, status ∈ added|removed|changed,
-    * old/new payloads). Cost |v1| + |v2| — the price of rewriting history
-    * into a row feed; use `changesSince` on append-only ranges where
-    * the file diff is free. */
-  def diffVersions(spark: SparkSession, tableDir: String, fromV: Int, toV: Int,
-                   key: String, payloadCols: Seq[String]): DataFrame =
-    graft.operators.SnapshotDiff.diff(
-      read(spark, tableDir, fromV), read(spark, tableDir, toV), key, payloadCols)
-
-  /** The committed offset of a named consumer over this table, 0 if
-    * the consumer has never committed. Offsets live in the table's
-    * `_consumers/` dir — one tiny file per consumer, the Kafka
-    * consumer-group idea over snapshot versions. */
-  def consumerOffset(tableDir: String, consumer: String): Int = {
-    val p = consumerPath(tableDir, consumer)
-    if (Files.exists(p)) Files.readString(p).trim.toInt else 0
-  }
-
-  private def consumerPath(tableDir: String, consumer: String): Path = {
-    require(consumer.matches("[A-Za-z0-9._-]+"), s"bad consumer name: '$consumer'")
-    Paths.get(tableDir, "_consumers", s"$consumer.offset")
-  }
-
-  /** Advance a consumer's offset AFTER its processing of the range
-    * succeeded — the at-least-once contract: crash before commit →
-    * the range redelivers; idempotent processors therefore get
-    * exactly-once, the same ledger idea `StreamSnapshot.sink` uses
-    * on the write side. Never moves backwards (a stale worker
-    * cannot rewind a faster one). */
-  def commitConsumer(tableDir: String, consumer: String, version: Int): Unit = {
-    val p = consumerPath(tableDir, consumer)
-    Files.createDirectories(p.getParent)
-    val cur = consumerOffset(tableDir, consumer)
-    require(version >= cur,
-      s"Snapshots: consumer '$consumer' offset moving backwards ($cur -> $version)")
-    val tmp = Files.createTempFile(p.getParent, s".$consumer-", ".tmp")
-    Files.writeString(tmp, version.toString)
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** One consumer poll: the rows appended since the consumer's last
-    * committed offset, plus the HEAD to commit after processing.
-    * `(empty, same offset)` when caught up. */
-  def poll(spark: SparkSession, tableDir: String, consumer: String): (DataFrame, Int) =
-    changesSince(spark, tableDir, consumerOffset(tableDir, consumer))
-
   /** Delete data files referenced by NO retained version (the last
     * `keepLast` versions stay readable) and the manifests of expired
     * versions. Time travel to expired versions then fails loud —
@@ -1464,10 +1411,8 @@ object Snapshots {
     // commit: files staged between `df.write.parquet` and the
     // manifest link are in no manifest yet, so the walk deleted them
     // and the commit then published a manifest pointing at deleted
-    // bytes — a committed row silently lost. Unreferenced garbage
-    // from CRASHED writers is a different, age-gated verb
-    // ([[gcStaged]]): vacuum's contract is history expiry, not
-    // orphan collection.
+    // bytes — a committed row silently lost. Vacuum's contract is
+    // history expiry, not collection of crashed writers' orphans.
     val expiring = (1 until keepFrom)
       .filter(v => Files.exists(manifestPath(tableDir, v)))
       .flatMap(v => liveFiles(tableDir, v)).toSet
@@ -1537,74 +1482,6 @@ object Snapshots {
           "metadata-only commit) first, then vacuum.")
     }
     (1 until keepFrom).foreach(v => Files.deleteIfExists(manifestPath(tableDir, v)))
-  }
-
-  /** Age-gated orphan collection — the half of cleanup [[vacuum]]
-    * deliberately does NOT do: delete data files under `data/` that
-    * no EXISTING manifest references and whose mtime is older than
-    * `olderThanMillis`. Orphans come from crashed or aborted writers
-    * (staged parquet whose manifest never linked) and from COW
-    * rewrites that lost the publish race. The age gate is the race
-    * guard: an IN-FLIGHT writer's staged files are by definition
-    * young, so any threshold comfortably above the longest plausible
-    * stage-to-publish window (minutes; default 24h) can never eat a
-    * commit in progress — the object-store-retention pattern. Returns
-    * the deleted file count. */
-  def gcStaged(tableDir: String, olderThanMillis: Long = 24L * 3600 * 1000): Int = {
-    require(olderThanMillis > 0, s"olderThanMillis must be positive, got $olderThanMillis")
-    val snap = snapPath(tableDir)
-    if (!Files.isDirectory(snap)) return 0
-    // a concurrent VACUUM may expire a manifest between this listing
-    // and its read (the two maintenance verbs are documented as
-    // composable — r11 advice): a vanished manifest's references are
-    // simply the empty set, exactly as if the listing had run a
-    // moment later. Only missing-file conditions are swallowed;
-    // anything else stays loud.
-    def linesIfPresent(v: Int): Seq[String] =
-      try { if (Files.exists(manifestPath(tableDir, v))) fileLines(tableDir, v) else Seq.empty }
-      catch {
-        case _: java.nio.file.NoSuchFileException => Seq.empty
-        case e: IllegalArgumentException if e.getMessage != null &&
-          e.getMessage.contains("does not exist") => Seq.empty
-      }
-    val allLines = Files.list(snap).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d{8}\\.txt") => s.substring(1, 9).toInt }
-      .toSeq.flatMap(linesIfPresent)
-    val referenced = allLines.map(_.split('\t')(0))
-      .map(p => Paths.get(p).toAbsolutePath.normalize.toString).toSet
-    val cutoff = System.currentTimeMillis - olderThanMillis
-    var nDeleted = 0
-    def sweep(root: Path, keep: Path => Boolean): Unit = {
-      if (!Files.isDirectory(root)) return
-      val doomed = Files.walk(root).iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .filterNot(keep)
-        .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-        .toSeq
-      doomed.foreach(Files.delete)
-      nDeleted += doomed.size
-      doomed.map(_.toAbsolutePath.normalize.getParent).filter(_ != null)
-        .distinct.foreach { d0 =>
-          var d = d0
-          while (d != null && d.startsWith(root) && d != root &&
-            Files.isDirectory(d) && !Files.list(d).iterator().hasNext) {
-            Files.delete(d)
-            d = d.getParent
-          }
-        }
-    }
-    sweep(Paths.get(tableDir, "data").toAbsolutePath.normalize,
-      p => referenced.contains(p.toAbsolutePath.normalize.toString))
-    // orphaned DV sidecars (a MOR delete that staged its sidecar and
-    // then lost the publish race or crashed): same age-gated rule,
-    // keyed on the sidecar DIR any existing manifest references
-    val referencedDv = dvRefs(allLines).values.flatten.map(_._2)
-      .map(p => Paths.get(p).toAbsolutePath.normalize.toString).toSet
-    sweep(Paths.get(tableDir, "_dv").toAbsolutePath.normalize,
-      p => Option(p.toAbsolutePath.normalize.getParent)
-        .exists(d => referencedDv.contains(d.toString)))
-    nDeleted
   }
 
   /** Lakehouse OPTIMIZE over a snapshot table: stat the live files,
@@ -1750,32 +1627,6 @@ object Snapshots {
       .getOrElse(Files.getLastModifiedTime(p).toMillis)
   }
 
-  /** Time travel by TIMESTAMP: the newest version committed at or
-    * before `epochMillis` (Delta's `TIMESTAMP AS OF`). Versions are
-    * scanned in order and the LAST one whose commit time ≤ the ask
-    * wins — robust to small clock skew between writers (version
-    * order, not timestamp order, is the commit order; the hard-link
-    * protocol guarantees it). Fails loud when the ask predates the
-    * oldest RETAINED version (vacuum may have expired earlier ones —
-    * the documented time-travel trade). */
-  def versionAt(tableDir: String, epochMillis: Long): Int = {
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
-    val vs = (1 to head).filter(v => Files.exists(manifestPath(tableDir, v)))
-    val at = vs.foldLeft(0) { (acc, v) =>
-      if (commitTimeMillis(tableDir, v) <= epochMillis) v else acc
-    }
-    require(at > 0,
-      s"Snapshots: no retained version of $tableDir at or before epoch $epochMillis " +
-        s"(oldest retained: v${vs.head} @ ${commitTimeMillis(tableDir, vs.head)})")
-    at
-  }
-
-  /** Read the snapshot as of a wall-clock instant. */
-  def readAsOf(spark: SparkSession, tableDir: String, epochMillis: Long,
-               mergeSchema: Boolean = false): DataFrame =
-    read(spark, tableDir, versionAt(tableDir, epochMillis), mergeSchema)
-
   /** Commit history as a DataFrame (DESCRIBE HISTORY): one row per
     * RETAINED version — (version, parent, op, ts_millis, tag,
     * n_files, has_schema). Reads manifests only (listing-sized);
@@ -1793,110 +1644,6 @@ object Snapshots {
     }
     import spark.implicits._
     rows.toDF("version", "parent", "op", "ts_millis", "tag", "n_files", "has_schema")
-  }
-
-  /** Schema drift report between two versions, from the per-manifest
-    * schema records: one row per changed column — change ∈
-    * added | removed | retyped, with both types for retypes. Versions
-    * without a record fail loud (a silent empty diff would read as
-    * "no drift"). Together with the additive commit gate this closes
-    * the evolution story: the gate blocks accidents at write time,
-    * the diff EXPLAINS history after the fact (an overwrite may
-    * legitimately reshape — the diff is how its consumers find out
-    * what changed). */
-  def schemaDiff(spark: SparkSession, tableDir: String, fromV: Int, toV: Int): DataFrame = {
-    def schemaOf(v: Int): org.apache.spark.sql.types.StructType = {
-      val j = manifestSchema(tableDir, v).getOrElse(throw new IllegalArgumentException(
-        s"Snapshots: version $v of $tableDir carries no schema record " +
-          "(pre-record manifest) — a silent empty diff would read as 'no drift'"))
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
-    val fromSt = schemaOf(fromV)
-    val toSt = schemaOf(toV)
-    // column-id matching upgrades the report: a rename (same id, new
-    // name) is one "renamed" row, not a misleading added+removed pair;
-    // id-less records (pre-upgrade) keep the name-keyed classification
-    val fromIds = fromSt.fields.flatMap(f => colIdOf(f).map(_ -> f)).toMap
-    val toIds = toSt.fields.flatMap(f => colIdOf(f).map(_ -> f)).toMap
-    val renamed = (fromIds.keySet & toIds.keySet).toSeq.sorted.flatMap { id =>
-      val (a, b) = (fromIds(id), toIds(id))
-      if (a.name != b.name)
-        Some((s"${a.name}->${b.name}", "renamed",
-          a.dataType.catalogString, b.dataType.catalogString))
-      else None
-    }
-    val renamedOld = renamed.map(_._1.split("->")(0)).toSet
-    val renamedNew = renamed.map(_._1.split("->")(1)).toSet
-    val from = fromSt.fields.map(f => f.name -> f.dataType.catalogString).toMap
-    val to = toSt.fields.map(f => f.name -> f.dataType.catalogString).toMap
-    val added = (to.keySet -- from.keySet -- renamedNew).toSeq.sorted
-      .map(c => (c, "added", null: String, to(c)))
-    // a column whose id sits in toV's RETIRED record was dropped (the
-    // explicit metadata-only verb); a disappearance WITHOUT a retire
-    // record is an overwrite reshape — "removed". The reader of the
-    // diff needs the distinction: dropped history reconciles, reshapes
-    // don't.
-    val toRetiredIds = manifestRetired(tableDir, toV).map(parseStruct)
-      .map(_.fields.flatMap(colIdOf).toSet).getOrElse(Set.empty[Long])
-    val removed = (from.keySet -- to.keySet -- renamedOld).toSeq.sorted.map { c =>
-      val wasDropped = fromSt.fields.find(_.name == c).flatMap(colIdOf)
-        .exists(toRetiredIds.contains)
-      (c, if (wasDropped) "dropped" else "removed", from(c), null: String)
-    }
-    // same name, new type: "widened" when toV's record carries the
-    // old type in the fold-forward widen history (the explicit verb —
-    // reads reconcile); a type change WITHOUT that history is an
-    // overwrite reshape — "retyped" (reads of old versions don't)
-    val retyped = (from.keySet & to.keySet).toSeq.sorted
-      .filter(c => from(c) != to(c)).map { c =>
-        val viaWiden = toSt.fields.find(_.name == c)
-          .exists(f => widenedFrom(f).contains(from(c)))
-        (c, if (viaWiden) "widened" else "retyped", from(c), to(c))
-      }
-    import spark.implicits._
-    (added ++ removed ++ retyped ++ renamed)
-      .toDF("column", "change", "from_type", "to_type")
-  }
-
-  /** Shallow clone (Delta's CLONE): a NEW table whose v1 manifest
-    * references the SOURCE version's data files by path — zero bytes
-    * copied, metadata-only, O(manifest) work. The clone is
-    * immediately readable and independently appendable; its history
-    * starts fresh. The caveat is the same as the real feature's and
-    * stated loudly: the clone borrows the source's files, so a
-    * `vacuum` on the SOURCE that expires the referenced version can
-    * orphan the clone — deep-copy (read + commit) when the source's
-    * retention is not under your control. */
-  def shallowClone(srcDir: String, dstDir: String, version: Int = -1): Int = {
-    val v = if (version >= 0) version else currentVersion(srcDir)
-    require(v > 0, s"Snapshots: $srcDir has no committed versions")
-    require(currentVersion(dstDir) == 0,
-      s"Snapshots: clone target $dstDir already has commits — refusing to mix histories")
-    // the clone's v1 has no parent chain to walk, so any rename/drop
-    // history must ride IN what the clone carries: the FOLDED schema
-    // record, the retired header, and the per-line null: markers are
-    // all copied below, making the clone self-contained — the same
-    // invariant vacuum's guard enforces. Only PRE-FOLD history (records
-    // written before alias folding existed) cannot cross; that refuses
-    // with the one-commit fix named.
-    val liveIds = manifestSchema(srcDir, v).map(parseStruct)
-      .map(_.fields.flatMap(colIdOf).toSet).getOrElse(Set.empty[Long])
-    val folded = foldedHistory(srcDir, v)
-    val unfolded = idNameHistory(srcDir, v).collect {
-      case (id, names) if liveIds.contains(id) &&
-        !names.subsetOf(folded.getOrElse(id, Set.empty)) => id
-    }
-    require(unfolded.isEmpty,
-      s"Snapshots: $srcDir@v$v has rename history (column id(s) " +
-        s"${unfolded.toSeq.sorted.mkString(", ")}) not folded into its schema " +
-        "record — the clone could not reconcile it (no parent chain to walk). " +
-        "Run Snapshots.foldHistory(srcDir) first, or deep-copy: " +
-        "commit(read(spark, src), dst)")
-    Files.createDirectories(snapPath(dstDir))
-    writeManifest(dstDir, 1, 0, s"clone($srcDir@v$v)", fileLines(srcDir, v),
-      schema = manifestSchema(srcDir, v), retired = manifestRetired(srcDir, v))
-    1
   }
 
   /** Lakehouse OPTIMIZE ZORDER BY: rewrite the live data clustered
@@ -1947,14 +1694,6 @@ object Snapshots {
     else Files.list(dataDir).iterator().asScala
       .map(_.toString).filter(_.matches(".*part-.*\\.parquet")).toSeq.sorted
 
-  /** Publish `v = readV + 1` or fail loud when the table advanced
-    * past `readV` since the caller's read: a mutation's REWRITE SET
-    * was planned against `readV`'s files, so rebasing it onto a
-    * newer HEAD could silently resurrect rows a concurrent commit
-    * removed (or drop ones it added). This is the classic
-    * serializable-conflict abort — the caller re-runs the whole
-    * operation against the new HEAD. Appends have no read set and
-    * rebase automatically instead ([[commitWithRetry]]). */
   /** COW-verb source gate: the injected rows' TYPES must match the
     * table's read schema exactly, not just its column names. Without
     * this, an arithmetic widening in the caller (`intCol + 1L`)
@@ -1977,6 +1716,13 @@ object Snapshots {
     }
   }
 
+  /** Publish `v = readV + 1` or fail loud when the table advanced
+    * past `readV` since the caller's read: a mutation's REWRITE SET
+    * was planned against `readV`'s files, so rebasing it onto a
+    * newer HEAD could silently resurrect rows a concurrent commit
+    * removed (or drop ones it added). This is the classic
+    * serializable-conflict abort — the caller re-runs the whole
+    * operation against the new HEAD. */
   private def publishOrConflict(tableDir: String, readV: Int, op: String,
                                 lines: Seq[String], tag: Option[String] = None,
                                 schema: Option[String] = None,
@@ -2075,8 +1821,8 @@ object Snapshots {
       }
     }
     beforePublish()
-    // a lost publish race orphans the staged sidecar — gcStaged's
-    // _dv walk age-collects it, same as a crashed COW rewrite's dir
+    // a lost publish race orphans the staged sidecar, the same as a
+    // crashed COW rewrite's dir
     publishOrConflict(tableDir, head, "delete-mor", newLines)
     v
   }
@@ -2123,8 +1869,8 @@ object Snapshots {
     * carry with their stats. Every INSERTED row must itself satisfy
     * the predicate — a row outside the replaced scope would silently
     * survive the next reload of a different scope, so violations
-    * raise inside the write projection (the `commitChecked` guard
-    * shape: one scan, the manifest never lands, table untouched).
+    * raise inside the write projection (one scan, the manifest
+    * never lands, table untouched).
     * Schema must match the table (this verb is not evolution).
     * Publishes with the serializable-conflict abort of the other
     * mutation verbs. */
@@ -2148,7 +1894,7 @@ object Snapshots {
       .collect().map(r => localPath(r.getString(0))).toSet // listing-sized
     val kept = lines.filterNot(l => hit.contains(l.split('\t')(0)))
     // inserted rows must live INSIDE the replaced scope — raise in
-    // the write projection, one scan (see commitChecked)
+    // the write projection, one scan
     val c0 = tableCols.head
     val c0Type = df.schema(c0).dataType
     val guardedNew = df.select(tableCols.map(col): _*)
@@ -2246,117 +1992,6 @@ object Snapshots {
     survivors.write.parquet(outDir.toString)
     publishOrConflict(tableDir, head, "merge", kept ++ listParts(outDir), tag)
     head + 1
-  }
-
-  /** Commit with WRITE CONTRACTS — the Delta-style guardrails:
-    *
-    *  - **Schema enforcement**: an append whose column set or types
-    *    differ from the table's is rejected BEFORE any data is
-    *    written (metadata-only check). Widening the schema is an
-    *    explicit choice — use plain `commit` and read with
-    *    `mergeSchema`, or overwrite.
-    *  - **CHECK constraints**: each (name, predicate) must hold for
-    *    every row. The checks ride INSIDE the write projection as
-    *    conditional raise_errors — one scan total, no separate
-    *    validation pass (the cost posture real writers take). A
-    *    violating row fails the write job, so the manifest never
-    *    lands and the table is untouched (crash-before-publish
-    *    invisibility); the staged partial files are vacuum fodder.
-    *    NULL predicate results are violations (a check that cannot
-    *    evaluate did not pass). For violation COUNTS and diagnosis,
-    *    run `ops.Expectations.report` on the batch first — this verb
-    *    optimizes the expected-pass path. */
-  def commitChecked(df: DataFrame, tableDir: String, mode: String = "append",
-                    checks: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-                    tag: Option[String] = None, statsCols: Seq[String] = Nil): Int = {
-    // named import: functions._ would shadow the `mode` parameter
-    import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error, when}
-    require(checks.map(_._1).distinct.size == checks.size, "check names must be unique")
-    val head = currentVersion(tableDir)
-    if (mode == "append" && head > 0) {
-      val tableSig = read(df.sparkSession, tableDir, head).schema
-        .fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-      val dfSig = df.schema.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq
-      require(dfSig == tableSig,
-        s"Snapshots: schema enforcement rejected the append — table " +
-          s"[${tableSig.map(t => s"${t._1}:${t._2.simpleString}").mkString(", ")}] vs batch " +
-          s"[${dfSig.map(t => s"${t._1}:${t._2.simpleString}").mkString(", ")}]; " +
-          "schema evolution is an explicit commit(mergeSchema-read) or overwrite choice")
-    }
-    // the raise_error guards REPLACE the first column (an unused
-    // guard column would be pruned away by the optimizer)
-    val c0 = df.columns.head
-    val c0Type = df.schema(c0).dataType
-    val guarded = checks.foldLeft(df) { case (d, (name, pred)) =>
-      d.withColumn(c0,
-        when(!coalesce(pred, lit(false)),
-          raise_error(lit(s"Snapshots: CHECK constraint '$name' violated — commit " +
-            "rejected, table untouched; diagnose with Expectations.report")).cast(c0Type))
-          .otherwise(col(c0)))
-    }
-    commit(guarded, tableDir, mode, tag, statsCols)
-  }
-
-  /** Append with automatic rebase on a lost version race: the data
-    * files are STAGED ONCE, then the manifest publish loop re-reads
-    * HEAD and re-carries its lines until the link lands (append has
-    * no read set, so rebasing is always sound — the commutativity
-    * that makes optimistic concurrency cheap for the by-far-most-
-    * common write). Bytes are never rewritten across retries.
-    * `maxRetries` bounds livelock under pathological contention;
-    * losing that many races fails loud with the staged dir named so
-    * the caller can vacuum or retry. */
-  def commitWithRetry(df: DataFrame, tableDir: String, maxRetries: Int = 5,
-                      tag: Option[String] = None, statsCols: Seq[String] = Nil): Int =
-    commitWithRetryHook(df, tableDir, maxRetries, tag, statsCols, _ => ())
-
-  /** Test seam: `beforePublish(attempt)` runs AFTER attempt's HEAD
-    * read, BEFORE its manifest link — the race window itself. The
-    * spec lands a real interloper commit there, forcing the EEXIST
-    * path `commitWithRetry` cannot reopen on demand. */
-  private[graft] def commitWithRetryHook(df: DataFrame, tableDir: String,
-                                         maxRetries: Int, tag: Option[String],
-                                         statsCols: Seq[String],
-                                         beforePublish: Int => Unit): Int = {
-    Files.createDirectories(snapPath(tableDir))
-    val dataDir = stageDataDir(tableDir, "s")
-    df.write.parquet(dataDir.toString)
-    val newFiles = listParts(dataDir)
-    val newLines =
-      if (statsCols.isEmpty) newFiles
-      else statLines(df.sparkSession, newFiles, statsCols)
-    var attempt = 0
-    while (true) {
-      val prev = currentVersion(tableDir)
-      // re-checked per attempt: a lost race rebases onto a NEW parent
-      // whose schema may differ from the one attempt 0 checked
-      if (prev > 0) checkAdditiveAgainst(tableDir, prev, df.schema)
-      if (prev > 0) requireNoAliasReuse(tableDir, prev, df.schema)
-      // same record discipline as commit(): ids assigned against THIS
-      // attempt's parent (a rebase may change them), history folded,
-      // rebirth markers stamped — the retrying append previously wrote
-      // an ID-LESS record, silently downgrading streamed tables out of
-      // rename/drop evolution
-      val parentJson = if (prev > 0) manifestSchema(tableDir, prev) else None
-      val retiredJson = if (prev > 0) manifestRetired(tableDir, prev) else None
-      val recordSchema = foldAliases(tableDir, prev,
-        schemaWithIds(parentJson, df.schema, retiredJson))
-      val carried = rebirthMarked(
-        if (prev > 0) fileLines(tableDir, prev) else Seq.empty,
-        recordSchema, parentJson, retiredJson)
-      beforePublish(attempt)
-      try {
-        writeManifest(tableDir, prev + 1, prev, "append", carried ++ newLines, tag,
-          schema = Some(recordSchema.json))
-        return prev + 1
-      } catch { case _: java.nio.file.FileAlreadyExistsException =>
-        attempt += 1
-        require(attempt <= maxRetries,
-          s"Snapshots: lost the version race $attempt times on $tableDir; " +
-            s"staged data retained at $dataDir")
-      }
-    }
-    -1 // unreachable
   }
 
   // ---- demo-fixture lifecycle (r14 optimization) ----

@@ -19,10 +19,8 @@ import org.apache.spark.sql.DataFrame
   * lands leaves only invisible un-manifested data files (vacuum
   * fodder), never a torn version.
   *
-  * This is the same idempotence contract `StreamScd2`/`StreamCdc`
-  * get from generation-versioned state, expressed at the TABLE
-  * layer: downstream readers time-travel micro-batch history for
-  * free (version N = the table after batch N), and `vacuum` bounds
+  * Downstream readers time-travel micro-batch history for free
+  * (version N = the table after batch N), and `vacuum` bounds
   * retention.
   *
   * Scale: one manifest per micro-batch is the real-world Delta/

@@ -11,10 +11,4 @@ package org.apache.spark
 object GraftSparkShim {
   def drainListeners(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
-
-  /** Unset a test-set checkpoint dir (there is no public API to clear
-    * it): a leaked dir would silently switch every iterative loop in
-    * later suites to reliable per-round checkpointing. */
-  def clearCheckpointDir(sc: SparkContext): Unit =
-    sc.checkpointDir = None
 }

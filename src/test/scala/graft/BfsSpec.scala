@@ -1,11 +1,8 @@
 package graft
 
 import graft.operators.Bfs
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.functions._
 
-class BfsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class BfsSpec extends SparkSpec {
   import spark.implicits._
 
   // directed: 1→2→3→4, a shortcut 1→3, a back-edge 4→1 (cycle), and
@@ -17,13 +14,19 @@ class BfsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def src(ids: Long*) = ids.toDF("id")
 
+  // 5 rounds exceed every shortest path in `g`, so the fixed-round
+  // form returns the full reachable set
+  private def hops(edges: org.apache.spark.sql.DataFrame,
+                   sources: org.apache.spark.sql.DataFrame) =
+    Bfs.hops(edges, sources, rounds = 5)
+
   test("single-source: shortcut wins, cycle does not shorten, island unreached") {
-    val d = Bfs.shortestHops(g, src(1L)).as[(Long, Long)].collect().toMap
+    val d = hops(g, src(1L)).as[(Long, Long)].collect().toMap
     assert(d == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 2L))
   }
 
   test("multi-source: each node at min distance over seeds; seeds at 0") {
-    val d = Bfs.shortestHops(g, src(1L, 8L)).as[(Long, Long)].collect().toMap
+    val d = hops(g, src(1L, 8L)).as[(Long, Long)].collect().toMap
     assert(d == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 8L -> 0L, 9L -> 1L))
   }
 
@@ -31,70 +34,29 @@ class BfsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val r1 = Bfs.hops(g, src(1L), rounds = 1).as[(Long, Long)].collect().toMap
     assert(r1 == Map(1L -> 0L, 2L -> 1L, 3L -> 1L))
     val r5 = Bfs.hops(g, src(1L), rounds = 5).as[(Long, Long)].collect().toMap
-    assert(r5 == Bfs.shortestHops(g, src(1L)).as[(Long, Long)].collect().toMap)
+    val r9 = Bfs.hops(g, src(1L), rounds = 9).as[(Long, Long)].collect().toMap
+    assert(r5 == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 2L) && r9 == r5)
   }
 
   test("a seed missing from the graph still reports itself at dist 0") {
-    val d = Bfs.shortestHops(g, src(42L)).as[(Long, Long)].collect().toMap
+    val d = hops(g, src(42L)).as[(Long, Long)].collect().toMap
     assert(d == Map(42L -> 0L))
   }
 
   test("results are partitioning-independent") {
-    val a = Bfs.shortestHops(g.repartition(13), src(1L, 8L))
+    val a = hops(g.repartition(13), src(1L, 8L))
       .orderBy($"id").collect()
-    val b = Bfs.shortestHops(g, src(1L, 8L)).orderBy($"id").collect()
+    val b = hops(g, src(1L, 8L)).orderBy($"id").collect()
     assert(a.nonEmpty && a.sameElements(b))
   }
 
-  test("guards: NULL endpoints, empty seed set, maxRounds exhaustion fail loud") {
+  test("guards: NULL endpoints and an empty seed set fail loud") {
     val withNull = Seq((Some(1L), Some(2L)), (Some(3L), None))
       .toDF("src", "dst")
-    assert(intercept[IllegalArgumentException](Bfs.shortestHops(withNull, src(1L)))
+    assert(intercept[IllegalArgumentException](hops(withNull, src(1L)))
       .getMessage.contains("NULL edge endpoint"))
     assert(intercept[IllegalArgumentException](
-        Bfs.shortestHops(g, spark.emptyDataset[Long].toDF("id")))
+        hops(g, spark.emptyDataset[Long].toDF("id")))
       .getMessage.contains("empty source set"))
-    // a 4-chain from node 1 needs 3 rounds; 2 must raise, not return a prefix
-    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-    assert(intercept[IllegalArgumentException](
-        Bfs.shortestHops(chain, src(1L), maxRounds = 2))
-      .getMessage.contains("still expanding"))
-  }
-
-  test("hopsBucketed: identical distances, edge side of the round join exchange-free") {
-    // a deep-ish random digraph so several rounds run
-    val edges = (1L to 300L).map(i => (i, (i * 17) % 290 + 1)).toDF("src", "dst")
-    val plain = Bfs.shortestHops(edges, src(1L)).orderBy($"id").collect()
-    Bfs.writeEdges(edges, "bfs_edges", buckets = 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val bucketed = Bfs.hopsBucketed(spark, "bfs_edges", src(1L))
-        .orderBy($"id").collect()
-      assert(plain.nonEmpty && plain.sameElements(bucketed))
-
-      // One expansion step against the bucketed layout: the edge scan
-      // joins in place, so the exchanges are the frontier moving to
-      // the bucket layout, the distinct, and the anti-join — the
-      // ad-hoc layout pays one MORE, shuffling the edges themselves
-      // (the O(|E|)-per-round cost at scale).
-      def exchanges(step: org.apache.spark.sql.DataFrame): Int = {
-        step.count() // materialize so AQE settles the final plan
-        collectWithSubqueries(step.queryExecution.executedPlan) {
-          case e: ShuffleExchangeLike => e
-        }.size
-      }
-      val seen = src(1L).withColumn("dist", lit(0L)).localCheckpoint(true)
-      val bucketedStep = Bfs.expand(spark.table("bfs_edges"), seen, seen, 1)
-      val adhocEdges = spark.table("bfs_edges").localCheckpoint(true) // bucket info erased
-      val adhocStep = Bfs.expand(adhocEdges, seen, seen, 1)
-      val (nBucketed, nAdhoc) = (exchanges(bucketedStep), exchanges(adhocStep))
-      assert(nAdhoc == nBucketed + 1,
-        s"expected the ad-hoc step to pay exactly one extra (edge-side) exchange; " +
-          s"got bucketed=$nBucketed adhoc=$nAdhoc")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS bfs_edges")
-    }
   }
 }

@@ -30,7 +30,7 @@ class CheckpointsSpec extends SparkSpec {
       assert(files > 0, s"no checkpoint files landed under $dir — the " +
         "reliable path did not persist to the checkpoint filesystem")
     } finally {
-      org.apache.spark.GraftSparkShim.clearCheckpointDir(spark.sparkContext)
+      org.apache.spark.GraftTestShim.clearCheckpointDir(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.delete)
@@ -52,7 +52,7 @@ class CheckpointsSpec extends SparkSpec {
     } finally {
       // unset: a checkpoint dir leaking into other suites would switch
       // every loop to reliable mode
-      org.apache.spark.GraftSparkShim.clearCheckpointDir(spark.sparkContext)
+      org.apache.spark.GraftTestShim.clearCheckpointDir(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.delete)

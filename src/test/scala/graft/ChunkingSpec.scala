@@ -42,14 +42,4 @@ class ChunkingSpec extends SparkSpec {
     intercept[IllegalArgumentException](Chunking.chunkByTokens(df, "text", "doc_id", 0, 0))
     intercept[IllegalArgumentException](Chunking.chunkByTokens(df, "text", "doc_id", 4, 4))
   }
-
-  test("chunkByChars: overlapping character windows cover the text") {
-    val df = Seq((1L, "abcdefghij")).toDF("doc_id", "text")
-    val out = Chunking.chunkByChars(df, "text", "doc_id", maxChars = 4, overlap = 2)
-      .orderBy($"chunk_idx").collect()
-    // step 2: starts 0,2,4,6,8
-    assert(out.map(_.getAs[String]("chunk_text")).toSeq ==
-      Seq("abcd", "cdef", "efgh", "ghij", "ij"))
-    assert(out.map(_.getAs[Int]("n_chars")).toSeq == Seq(4, 4, 4, 4, 2))
-  }
 }

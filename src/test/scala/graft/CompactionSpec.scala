@@ -34,8 +34,10 @@ class CompactionSpec extends SparkSpec {
     val rnd = new scala.util.Random(3)
     val files = (1L to 400L).map(i => ("p", i, (rnd.nextInt(500) + 1).toLong))
       .toDF("part", "file", "bytes")
-    val sums = Compaction.binSummary(
-        Compaction.plan(files, Seq("part"), "file", "bytes", 1000L), Seq("part"), "bytes")
+    val sums = Compaction.plan(files, Seq("part"), "file", "bytes", 1000L)
+      .where($"action" === "compact")
+      .groupBy($"part", $"bin_id")
+      .agg(count(lit(1)).as("n_files"), sum($"bytes").as("total_bytes"))
       .orderBy($"bin_id").as[(String, Long, Long, Long)].collect()
     val lastBin = sums.map(_._2).max
     sums.foreach { case (_, bin, _, total) =>

@@ -1,13 +1,24 @@
 package graft
 
-import graft.plans.Deflate
+import graft.plans.DeflateSize
+import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.functions._
 
 class DeflateSpec extends SparkSpec {
   import spark.implicits._
 
+  private def deflateSize(c: Column): Column =
+    GraftSqlShim.column(DeflateSize(GraftSqlShim.expression(c)))
+
+  /** deflate bytes / raw UTF-8 bytes, NULL for the empty string. */
+  private def deflateRatio(c: Column): Column = {
+    val raw = octet_length(c)
+    when(raw === 0, lit(null).cast("double"))
+      .otherwise(deflateSize(c).cast("double") / raw.cast("double"))
+  }
+
   private def ratios(ss: String*): Seq[Option[Double]] =
-    ss.toDF("s").select(Deflate.deflateRatio(col("s")))
+    ss.toDF("s").select(deflateRatio(col("s")))
       .as[Option[Double]].collect().toSeq
 
   test("structure compresses: padding < repeated phrase < prose < hex noise") {
@@ -31,13 +42,13 @@ class DeflateSpec extends SparkSpec {
     val a = ratios("some stable text", "some stable text")
     assert(a(0) == a(1))
     val e = Seq[Option[String]](None, Some("")).toDF("s")
-      .select(Deflate.deflateRatio(col("s"))).as[Option[Double]].collect().toSeq
+      .select(deflateRatio(col("s"))).as[Option[Double]].collect().toSeq
     assert(e == Seq(None, None))
   }
 
   test("deflateSize stays inside whole-stage codegen") {
     val q = Seq("abc").toDF("s").repartition(2)
-      .select(Deflate.deflateSize(col("s")))
+      .select(deflateSize(col("s")))
     q.collect()
     assert(q.queryExecution.executedPlan.toString.contains("*(1) Project"))
   }

@@ -1,11 +1,15 @@
 package graft
 
-import graft.functions.{DeterministicModeAgg, WeatherFunctions => WF}
-import graft.functions.DeterministicMode.modeDet
+import graft.functions.{WeatherFunctions => WF}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** A6 deterministic mode as Recap.hourly and q_mode_det compute it:
+    * the oracle's `ORDER BY n DESC, value ASC`. */
+  private def modeDet(c: Column): Column = mode(c, deterministic = true)
 
   test("deterministic mode: majority wins") {
     val df = Seq(("a", "rain"), ("a", "rain"), ("a", "sun")).toDF("k", "v")
@@ -14,8 +18,15 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("deterministic mode: tie broken by lexicographically smallest") {
-    val df = Seq(("a", "sun"), ("a", "rain"), ("a", "rain"), ("a", "sun")).toDF("k", "v")
-    assert(df.groupBy($"k").agg(modeDet($"v").as("m")).head().getAs[String]("m") == "rain")
+    // group b ties U+FFFD with U+1F600: in UTF-8 byte order (DuckDB's
+    // ORDER BY) U+FFFD is smaller, while UTF-16 order (Scala String
+    // comparison) would pick U+1F600's surrogate pair
+    val (fffd, grin) = ("\uFFFD", "\uD83D\uDE00")
+    val df = Seq(("a", "sun"), ("a", "rain"), ("a", "rain"), ("a", "sun"),
+      ("b", grin), ("b", fffd), ("b", grin), ("b", fffd)).toDF("k", "v")
+    val m = df.groupBy($"k").agg(modeDet($"v").as("m")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(m == Map("a" -> "rain", "b" -> fffd))
   }
 
   test("deterministic mode: nulls ignored; all-null group yields null") {
@@ -23,15 +34,6 @@ class FunctionsSpec extends SparkSpec {
     val m = df.groupBy($"k").agg(modeDet($"v").as("m")).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m("a") == "x" && m("b") == null)
-  }
-
-  test("mode Aggregator merge is order-insensitive") {
-    val b1 = Seq("x", "x", "y").foldLeft(DeterministicModeAgg.zero)(DeterministicModeAgg.reduce)
-    val b2 = Seq("y", "y").foldLeft(DeterministicModeAgg.zero)(DeterministicModeAgg.reduce)
-    assert(DeterministicModeAgg.finish(DeterministicModeAgg.merge(b1, b2)) ==
-      DeterministicModeAgg.finish(DeterministicModeAgg.merge(b2, b1)))
-    // x:2, y:3 → y
-    assert(DeterministicModeAgg.finish(DeterministicModeAgg.merge(b1, b2)) == "y")
   }
 
   test("heat index matches a known NWS table point (±1.5°F tolerance)") {
@@ -54,7 +56,8 @@ class FunctionsSpec extends SparkSpec {
 
   test("timestamp parse/format round-trips the reference format") {
     val df = Seq("2024-01-02 03:04:05").toDF("s")
-    val r = df.select(WF.formatTs(WF.parseTs($"s")).as("rt")).head().getString(0)
+    val r = df.select(WF.formatTs(to_timestamp($"s", "yyyy-MM-dd HH:mm:ss")).as("rt"))
+      .head().getString(0)
     assert(r == "2024-01-02 03:04:05")
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.FuzzyJoin
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class FuzzyJoinSpec extends SparkSpec {
@@ -15,8 +16,16 @@ class FuzzyJoinSpec extends SparkSpec {
     (6L, null.asInstanceOf[String])
   ).toDF("id", "name")
 
+  /** Self-match of an (id, name) frame through the two-frame `pairs`:
+    * each unordered pair once, as (id_l < id_r). */
+  private def selfPairs(df: DataFrame, maxDist: Int,
+                        blockKey: Column => Column = FuzzyJoin.firstTokenBlock): DataFrame =
+    FuzzyJoin.pairs(df, df, "id", "id", "name", "name", maxDist, blockKey)
+      .where($"id" < $"id_r")
+      .select($"id".as("id_l"), $"id_r", $"name".as("text_l"), $"name_r".as("text_r"), $"dist")
+
   test("selfPairs finds within-block pairs inside the edit budget") {
-    val got = FuzzyJoin.selfPairs(catalog, "id", "name", maxDist = 2)
+    val got = selfPairs(catalog, maxDist = 2)
       .select($"id_l", $"id_r", $"dist").as[(Long, Long, Int)].collect().toSet
     // (1,2)=1, (1,3)=1, (2,3)=2; 4 is in block "blue"; 5 too far; 6 null
     assert(got == Set((1L, 2L, 1), (1L, 3L, 1), (2L, 3L, 2)))
@@ -25,7 +34,7 @@ class FuzzyJoinSpec extends SparkSpec {
   test("blocking is the documented recall boundary: cross-block pair missed") {
     // "blue widget" vs "red widget" is 4 edits anyway, but even an
     // identical-suffix pair across blocks must not appear
-    val got = FuzzyJoin.selfPairs(catalog, "id", "name", maxDist = 10)
+    val got = selfPairs(catalog, maxDist = 10)
       .where($"id_l" === 1L && $"id_r" === 4L)
     assert(got.count() == 0)
   }
@@ -41,7 +50,7 @@ class FuzzyJoinSpec extends SparkSpec {
   test("length pre-filter never changes the result, only prunes") {
     // a pair differing by >maxDist in length cannot pass levenshtein
     val df = Seq((1L, "ab"), (2L, "abcdefgh")).toDF("id", "name")
-    assert(FuzzyJoin.selfPairs(df, "id", "name", maxDist = 3).count() == 0)
+    assert(selfPairs(df, maxDist = 3).count() == 0)
   }
 
   test("pairs tolerates identical column names on both sides (two catalog versions)") {
@@ -52,26 +61,6 @@ class FuzzyJoinSpec extends SparkSpec {
     assert(hits == Set((1L, 10L, 1), (2L, 10L, 0), (3L, 10L, 2)))
   }
 
-  test("multi-pass blocking unions recall across keys without duplicate pairs") {
-    // "red widgett" / "rad widgett": first TOKENS differ (1 edit in
-    // the token), so the default single pass misses the pair; a
-    // last-token second pass recovers it
-    val df = Seq((1L, "red widgett"), (2L, "rad widgett"), (3L, "red widget"))
-      .toDF("id", "name")
-    val lastToken = (t: org.apache.spark.sql.Column) =>
-      lower(element_at(split(trim(t), " +"), -1))
-    val onePass = FuzzyJoin.selfPairs(df, "id", "name", maxDist = 2)
-      .select($"id_l", $"id_r").as[(Long, Long)].collect().toSet
-    assert(!onePass.contains((1L, 2L)))
-    val multi = FuzzyJoin.selfPairsMultiPass(df, "id", "name", maxDist = 2,
-      Seq(FuzzyJoin.firstTokenBlock, lastToken))
-    val pairs = multi.select($"id_l", $"id_r").as[(Long, Long)].collect()
-    // (1,2) recovered by the last-token pass; (1,3) found by BOTH
-    // passes but emitted once
-    assert(pairs.toSet.contains((1L, 2L)) && pairs.toSet.contains((1L, 3L)))
-    assert(pairs.length == pairs.distinct.length)
-  }
-
   test("skeletonBlock keys vowel-dropped corruptions into their source's block") {
     // leading-vowel loss ("emerald" -> "mrald") changes the first
     // char AND the first token, so both classic keys miss the pair;
@@ -79,32 +68,17 @@ class FuzzyJoinSpec extends SparkSpec {
     val df = Seq((1L, "emerald bolt"), (2L, "mrald bolt"), (3L, "cobalt bolt"))
       .toDF("id", "name")
     val firstChar = (t: org.apache.spark.sql.Column) => lower(t.substr(lit(1), lit(1)))
-    val viaChar = FuzzyJoin.selfPairs(df, "id", "name", maxDist = 3, blockKey = firstChar)
+    val viaChar = selfPairs(df, maxDist = 3, blockKey = firstChar)
       .select($"id_l", $"id_r").as[(Long, Long)].collect().toSet
     assert(!viaChar.contains((1L, 2L)))
-    val viaSkel = FuzzyJoin.selfPairs(df, "id", "name", maxDist = 3,
-        blockKey = FuzzyJoin.skeletonBlock)
+    val viaSkel = selfPairs(df, maxDist = 3, blockKey = FuzzyJoin.skeletonBlock(_))
       .select($"id_l", $"id_r", $"dist").as[(Long, Long, Int)].collect().toSet
     assert(viaSkel == Set((1L, 2L, 2))) // drop 'e','e'; cobalt's skeleton differs
   }
 
-  test("requireBlockCap throws loudly on a hot block and names it") {
-    val df = (1L to 20L).map(i => (i, "same name")).toDF("id", "name")
-      .union(Seq((21L, "rare name")).toDF("id", "name"))
-    val ex = intercept[IllegalStateException] {
-      FuzzyJoin.requireBlockCap(df, "name", FuzzyJoin.firstTokenBlock, maxBlockSize = 10)
-    }
-    assert(ex.getMessage.contains("'same'=20"))
-    // under the cap: silent pass (and null texts never count)
-    FuzzyJoin.requireBlockCap(df, "name", FuzzyJoin.firstTokenBlock, maxBlockSize = 20)
-    intercept[IllegalArgumentException] {
-      FuzzyJoin.requireBlockCap(df, "name", FuzzyJoin.firstTokenBlock, maxBlockSize = 0)
-    }
-  }
-
   test("rejects negative maxDist") {
     intercept[IllegalArgumentException] {
-      FuzzyJoin.selfPairs(catalog, "id", "name", maxDist = -1)
+      selfPairs(catalog, maxDist = -1)
     }
   }
 
@@ -119,7 +93,7 @@ class FuzzyJoinSpec extends SparkSpec {
       (11L, "aabbccddeeff")
     ).toDF("id", "name")
     val firstChar = (t: org.apache.spark.sql.Column) => lower(t.substr(lit(1), lit(1)))
-    val banded = FuzzyJoin.selfPairs(rows, "id", "name", maxDist = 2, blockKey = firstChar)
+    val banded = selfPairs(rows, maxDist = 2, blockKey = firstChar)
       .select($"id_l", $"id_r", $"dist").as[(Long, Long, Int)].collect().toSet
     // unbanded baseline: block join + length filter + levenshtein
     val l = rows.select($"id".as("il"), $"name".as("nl"))
@@ -133,7 +107,7 @@ class FuzzyJoinSpec extends SparkSpec {
       .select($"il", $"ir", $"d".cast("int")).as[(Long, Long, Int)].collect().toSet
     assert(banded == want && want.nonEmpty)
     // each pair exactly once (the explode must not duplicate)
-    val ids = FuzzyJoin.selfPairs(rows, "id", "name", maxDist = 2, blockKey = firstChar)
+    val ids = selfPairs(rows, maxDist = 2, blockKey = firstChar)
       .select($"id_l", $"id_r").as[(Long, Long)].collect()
     assert(ids.length == ids.distinct.length)
   }
@@ -145,14 +119,14 @@ class FuzzyJoinSpec extends SparkSpec {
     // maxDist 2 levenshtein (not the bag bound) rejects it.
     val df = Seq((1L, "abcde"), (2L, "edcba")).toDF("id", "name")
     val oneBlock = (_: org.apache.spark.sql.Column) => lit("x")
-    assert(FuzzyJoin.selfPairs(df, "id", "name", maxDist = 4, blockKey = oneBlock).count() == 1)
-    assert(FuzzyJoin.selfPairs(df, "id", "name", maxDist = 2, blockKey = oneBlock).count() == 0)
+    assert(selfPairs(df, maxDist = 4, blockKey = oneBlock).count() == 1)
+    assert(selfPairs(df, maxDist = 2, blockKey = oneBlock).count() == 0)
   }
 
   test("maxDist = 0 degenerates to exact within-block equality") {
     val df = Seq((1L, "same name"), (2L, "same name"), (3L, "same namez"))
       .toDF("id", "name")
-    val got = FuzzyJoin.selfPairs(df, "id", "name", maxDist = 0)
+    val got = selfPairs(df, maxDist = 0)
       .select($"id_l", $"id_r", $"dist").as[(Long, Long, Int)].collect().toSet
     assert(got == Set((1L, 2L, 0)))
   }

@@ -32,18 +32,6 @@ class HashedFeaturesSpec extends SparkSpec {
     assert(plan.collect { case e: Exchange => e }.isEmpty, s"unexpected shuffle:\n$plan")
   }
 
-  test("featurize emits sparse (id, bucket, cnt) triples that rebuild token counts") {
-    val docs = Seq((1L, "aa bb aa"), (2L, "cc")).toDF("doc_id", "text")
-    val rows = HashedFeatures.featurize(docs, "doc_id", "text", dim = 4)
-      .as[(Long, Int, Long)].collect().toSet
-    val want = Set(
-      (1L, bucketOf("aa"), if (bucketOf("aa") == bucketOf("bb")) 3L else 2L),
-      (1L, bucketOf("bb"), if (bucketOf("aa") == bucketOf("bb")) 3L else 1L),
-      (2L, bucketOf("cc"), 1L)
-    ).groupBy(t => (t._1, t._2)).map(_._2.head).toSet
-    assert(rows == want)
-  }
-
   test("score is partitioning-independent") {
     val docs = (1L to 200L).map(i => (i, s"tok$i common tok${i % 7}"))
       .toDF("doc_id", "text")

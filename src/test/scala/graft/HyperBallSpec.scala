@@ -12,21 +12,24 @@ class HyperBallSpec extends SparkSpec {
     (8L, 9L)
   ).toDF("src", "dst")
 
-  test("hyperball registers equal PortableHll registers of the EXACT ball") {
-    // ball(v, r) computed exactly by per-node BFS; building registers
-    // over that membership set must be bit-identical to the r-round
-    // HyperBall merge — max-merge makes the two constructions one.
+  test("hyperball ball sizes equal the PortableHll estimate of the EXACT ball") {
+    // ball(v, r) computed exactly by per-node BFS; registers built over
+    // that membership set are bit-identical to the r-round HyperBall
+    // merge (max-merge makes the two constructions one), and both
+    // paths estimate through the same expression.
     for (r <- 1 to 3) {
-      val hb = HyperBall.ballRegisters(g, rounds = r)
-        .as[(Long, Int, Int)].collect().toSet
+      val hb = HyperBall.ballSizes(g, rounds = r)
+        .as[(Long, Long)].collect().toSet
       val ids = g.select($"src").union(g.select($"dst")).distinct().as[Long].collect()
       val exact = ids.flatMap { v =>
         Bfs.hops(g, Seq(v).toDF("id"), rounds = r)
           .select(lit(v).as("node"), $"id".as("member"))
           .as[(Long, Long)].collect()
       }.toSeq.toDF("id", "member")
-      val want = PortableHll.registers(exact, Seq("id"), "member", lgK = 7)
-        .as[(Long, Int, Int)].collect().toSet
+      val want = PortableHll.estimate(
+          PortableHll.registers(exact, Seq("id"), "member", lgK = 7), Seq("id"),
+          lgK = 7, out = "ball_est")
+        .as[(Long, Long)].collect().toSet
       assert(hb == want, s"rounds=$r")
     }
   }

@@ -32,13 +32,6 @@ class IntervalsSpec extends SparkSpec {
     assert(got == List((1L, 0L, 10L, 3L)))
   }
 
-  test("coveredLength sums merged extents without double counting") {
-    val got = Intervals.coveredLength(iv, "k", "s", "e")
-      .as[(Long, Long, Long)].collect()
-      .map { case (k, c, n) => k -> ((c, n)) }.toMap
-    assert(got == Map(1L -> ((30L, 2L)), 2L -> ((200L, 2L))))
-  }
-
   test("malformed interval (start > end) raises instead of merging") {
     val bad = Seq((1L, 10L, 0L)).toDF("k", "s", "e")
     val ex = intercept[Exception] {

@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.Sinks
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -33,9 +32,9 @@ class JsonSourceSpec extends SparkSpec {
       col("coords.lon").as("lon"),
       col("source.api").as("source_api"))
     val out = dir.resolve("dim").toString
-    Sinks.truncateReload(dim, out)
+    dim.write.mode("overwrite").parquet(out)
     // reload over it (truncate semantics): second write fully replaces
-    Sinks.truncateReload(dim.where($"location_id" === 3088089), out)
+    dim.where($"location_id" === 3088089).write.mode("overwrite").parquet(out)
     val back = spark.read.parquet(out)
     assert(back.count() == 1)
     val r = back.head()

@@ -73,11 +73,4 @@ class LabelPropSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(a == b)
   }
-
-  test("communities rolls labels up to sizes") {
-    val edges = sym(Seq((1L, 2L), (10L, 11L)))
-    val got = LabelProp.communities(edges, iters = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 2L, 10L -> 2L))
-  }
 }

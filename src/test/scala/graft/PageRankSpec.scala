@@ -1,11 +1,9 @@
 package graft
 
 import graft.operators.PageRank
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
-class PageRankSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class PageRankSpec extends SparkSpec {
   import spark.implicits._
 
   test("a cycle is the exact fixed point: every rank stays at scale") {
@@ -30,45 +28,6 @@ class PageRankSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val a = PageRank.ranks(edges.repartition(3), iters = 4).orderBy($"id").collect()
     val b = PageRank.ranks(edges.repartition(17), iters = 4).orderBy($"id").collect()
     assert(a.nonEmpty && a.sameElements(b))
-  }
-
-  test("ranksBucketed: bit-identical to ranks, edge side of the loop join exchange-free") {
-    // a graph with hubs, leaves, and a dangling node — every arithmetic path
-    val edges = (1L to 400L).map(i => (i, (i * 7) % 90)).toDF("src", "dst")
-    val plain = PageRank.ranks(edges, iters = 4).orderBy($"id").collect()
-    PageRank.writeEdges(edges, "pr_edges", buckets = 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val bucketed = PageRank.ranksBucketed(spark, "pr_edges", iters = 4)
-        .orderBy($"id").collect()
-      assert(plain.nonEmpty && plain.sameElements(bucketed))
-
-      // Plan shape of one iteration step. Since the r15 fused loop,
-      // the rank frame's checkpoint PRESERVES its hash(id, parallelism)
-      // layout, so the rank side joins exchange-free against BOTH edge
-      // layouts; what remains is:
-      //  - bucketed: exactly 1 exchange — the contribution aggregate
-      //    (the fundamental per-iteration shuffle);
-      //  - ad-hoc: 2 — the same aggregate plus the edge-side shuffle,
-      //    the one that costs O(|E|) per iteration at scale.
-      val r0 = PageRank.ranksBucketed(spark, "pr_edges", iters = 1)
-      def exchanges(step: org.apache.spark.sql.DataFrame): Int = {
-        step.count() // materialize so AQE settles the final plan
-        collectWithSubqueries(step.queryExecution.executedPlan) {
-          case e: ShuffleExchangeLike => e
-        }.size
-      }
-      val bucketedStep = PageRank.contribSums(spark.table("pr_edges"), r0)
-      assert(exchanges(bucketedStep) == 1,
-        "bucketed step: expected only the contribution-aggregate exchange")
-      val adhocDeg = spark.table("pr_edges").localCheckpoint(true) // same data, bucket info erased
-      assert(exchanges(PageRank.contribSums(adhocDeg, r0)) == 2,
-        "ad-hoc step: expected edge-side + aggregate exchanges")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS pr_edges")
-    }
   }
 
   test("guards: iteration bounds and exact-base divisibility") {

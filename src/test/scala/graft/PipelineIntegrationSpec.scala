@@ -31,18 +31,18 @@ class PipelineIntegrationSpec extends SparkSpec {
     val now = lit("2024-01-01 23:59:59").cast("timestamp")
     val empty = obsFrame(Seq()).select("location_id", "ts")
 
-    val fresh = Pipelines.ingest(live, backfill, now, empty, bronze)
+    Pipelines.ingest(live, backfill, now, empty, bronze)
     // anti-join dedups only against STORED keys (reference J4); the
     // intra-batch duplicate passes through and is fenced at flatten (S8)
-    assert(fresh.count() == 5) // 6 rows - 1 future
+    assert(spark.read.parquet(bronze).count() == 5) // 6 rows - 1 future
 
-    val silverDf = Pipelines.flatten(spark.read.parquet(bronze), silver)
-    assert(silverDf.count() == 4) // unique-key enforcement drops the dup
+    Pipelines.flatten(spark.read.parquet(bronze), silver)
+    assert(spark.read.parquet(silver).count() == 4) // unique-key enforcement drops the dup
 
     val dim = Seq((1L, "Bandung"), (2L, "Bogor")).toDF("c_custkey", "c_name")
       .withColumn("c_nationkey", lit(0)).withColumn("c_acctbal", lit(0.0))
       .withColumn("c_mktsegment", lit(""))
-    val goldDf = Pipelines.recap(spark.read.parquet(silver), dim, gold)
+    Pipelines.recap(spark.read.parquet(silver), dim, gold)
     val g = spark.read.parquet(gold)
     assert(g.count() == 2) // (loc 1, day 1), (loc 2, day 1)
     val loc1 = g.where($"location_id" === 1).head()
@@ -60,15 +60,17 @@ class PipelineIntegrationSpec extends SparkSpec {
       (6L, 1L, ts("2024-01-01 05:31:00"), 99.0, "hail", None) // existing key (loc1@05:31)
     ))
     val existing = spark.read.parquet(bronze).select("location_id", "ts")
-    val fresh2 = Pipelines.ingest(lateBatch, obsFrame(Seq()), now, existing, bronze)
-    assert(fresh2.count() == 1)
-    assert(fresh2.head().getAs[Long]("obs_id") == 5L)
+    Pipelines.ingest(lateBatch, obsFrame(Seq()), now, existing, bronze)
+    val stored = spark.read.parquet(bronze)
+    assert(stored.count() == 6)
+    assert(stored.where($"obs_id".isin(5L, 6L)).select($"obs_id").as[Long].collect().toSeq ==
+      Seq(5L))
 
     // recap after catchup updates only the affected day partition
     Pipelines.flatten(spark.read.parquet(bronze), silver)
     // silver now has appended duplicates across batches; recap dedups by slot
-    val gold2 = Pipelines.recap(
-      graft.ops.Dedup.keepFirst(spark.read.parquet(silver), Seq("location_id", "ts"), "obs_id"),
+    Pipelines.recap(
+      graft.ops.Dedup.keepFirstAgg(spark.read.parquet(silver), Seq("location_id", "ts"), "obs_id"),
       dim, gold)
     val loc2 = spark.read.parquet(gold).where($"location_id" === 2).head()
     assert(loc2.getAs[Long]("hours_present") == 1)
@@ -94,11 +96,10 @@ class PipelineIntegrationSpec extends SparkSpec {
     val live = obs.where($"fetch_method" === "current").drop("fetch_method")
     val backfill = obs.where($"fetch_method" === "history").drop("fetch_method")
     val bronze = tmp()
-    val fresh = Pipelines.ingest(live, backfill,
+    Pipelines.ingest(live, backfill,
       lit("2024-01-01 23:59:59").cast("timestamp"),
       obs.limit(0).select("location_id", "ts"), bronze)
     // 6 lines: -1 error doc, -1 malformed, -1 future cutoff = 3 ingested
-    assert(fresh.count() == 3)
     val stored = spark.read.parquet(bronze)
     assert(stored.count() == 3)
     assert(stored.select($"location_id").as[Long].collect().sorted.toSeq == Seq(1L, 1L, 2L))

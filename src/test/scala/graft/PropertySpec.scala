@@ -43,8 +43,8 @@ class PropertySpec extends SparkSpec {
     forAllSamples(obsGen) { rows =>
       if (rows.nonEmpty) {
         val obs = toObs(rows)
-        val once = Dedup.keepFirst(obs, keys, "obs_id")
-        val twice = Dedup.keepFirst(once, keys, "obs_id")
+        val once = Dedup.keepFirstAgg(obs, keys, "obs_id")
+        val twice = Dedup.keepFirstAgg(once, keys, "obs_id")
         assert(once.exceptAll(twice).isEmpty && twice.exceptAll(once).isEmpty)
       }
     }

@@ -2,10 +2,16 @@ package graft
 
 import graft.operators.Similarity
 import graft.plans.QDotLong
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class QDotSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Composed built-in form of qdot: the reference semantics the
+    * native expression must reproduce. */
+  private def qdotComposed(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
   private lazy val vecs = Seq(
     (1L, Seq(1L, 2L, 3L), Seq(4L, 5L, 6L)),
@@ -17,7 +23,7 @@ class QDotSpec extends SparkSpec {
   test("native QDotLong ≡ composed aggregate(zip_with) form") {
     val rows = vecs.select(
       QDotLong.qdot($"a", $"b").as("native"),
-      Similarity.qdotComposed($"a", $"b").as("composed")
+      qdotComposed($"a", $"b").as("composed")
     ).collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
   }

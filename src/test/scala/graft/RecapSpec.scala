@@ -65,11 +65,11 @@ class RecapSpec extends SparkSpec {
     assert(!d2.getAs[Boolean]("is_full_recap"))
   }
 
-  test("dedup keepFirst/duplicateLosers partition the duplicates") {
-    val first = Dedup.keepFirst(obs, Seq("location_id", "obs_date", "obs_hour", "obs_slot"), "obs_id")
-    val losers = Dedup.duplicateLosers(obs, Seq("location_id", "obs_date", "obs_hour", "obs_slot"), "obs_id")
+  test("dedup keepFirstAgg drops exactly the duplicate losers") {
+    val first = Dedup.keepFirstAgg(obs, Seq("location_id", "obs_date", "obs_hour", "obs_slot"), "obs_id")
+    val losers = obs.select("obs_id").except(first.select("obs_id"))
     assert(first.count() + losers.count() == obs.count())
-    assert(losers.select("obs_id").as[Long].collect().toSeq == Seq(11L))
+    assert(losers.as[Long].collect().toSeq == Seq(11L))
   }
 
   test("flagship entry returns rows") {

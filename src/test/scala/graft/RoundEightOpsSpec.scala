@@ -98,18 +98,6 @@ class RoundEightOpsSpec extends SparkSpec {
       (Some("us"), "b", 1L, 1L, false)))
   }
 
-  test("kAnonymitySummary: the release-gate scalar row") {
-    val df = Seq(
-      ("us", "a", 1.0), ("us", "a", 2.0), ("us", "b", 3.0),
-      ("de", "a", 4.0), ("de", "a", 4.0), ("de", "a", 4.0)
-    ).toDF("country", "seg", "bal")
-    val r = Privacy.kAnonymitySummary(df, Seq("country", "seg"), "bal", k = 2L)
-      .as[(Long, Long, Long, Long, Long)].collect().head
-    // classes: (us,a)=2, (us,b)=1, (de,a)=3 → anonymity 1, 1 row at
-    // risk, min l-diversity 1 (de/a has one distinct balance)
-    assert(r == ((6L, 3L, 1L, 1L, 1L)))
-  }
-
   // ---- CorpusStats.gramNovelty ----
 
   test("gramNovelty: first introduction, partial reuse, short doc, exact copy") {

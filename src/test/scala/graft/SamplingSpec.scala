@@ -8,6 +8,10 @@ class SamplingSpec extends SparkSpec {
 
   private def ids = (1L to 5000L).toDF("id")
 
+  /** Keep ~pct% of rows, deterministically by `id`'s hash bucket. */
+  private def sampleByHash(df: org.apache.spark.sql.DataFrame, pct: Int) =
+    df.where(Sampling.hashBucket($"id") < pct)
+
   private def allMessages(t: Throwable): String =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
       .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
@@ -26,15 +30,15 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("sampleByHash(pct) is the pct-prefix of the same bucket space") {
-    val s10 = Sampling.sampleByHash(ids, "id", 10).as[Long].collect().toSet
-    val s20 = Sampling.sampleByHash(ids, "id", 20).as[Long].collect().toSet
+    val s10 = sampleByHash(ids, 10).as[Long].collect().toSet
+    val s20 = sampleByHash(ids, 20).as[Long].collect().toSet
     assert(s10.subsetOf(s20), "growing pct must only ADD rows (stable membership)")
     assert(s10.nonEmpty && s20.size < 5000)
   }
 
   test("membership is stable under corpus growth") {
-    val small = Sampling.sampleByHash(ids.where($"id" <= 1000), "id", 50).as[Long].collect().toSet
-    val large = Sampling.sampleByHash(ids, "id", 50).as[Long].collect().toSet
+    val small = sampleByHash(ids.where($"id" <= 1000), 50).as[Long].collect().toSet
+    val large = sampleByHash(ids, 50).as[Long].collect().toSet
     assert(small == large.filter(_ <= 1000L), "adding rows must not reshuffle old assignments")
   }
 
@@ -48,7 +52,7 @@ class SamplingSpec extends SparkSpec {
     assert(byStratum("a").size == 5000 / 3 + 1 || byStratum("a").size == 5000 / 3)
     assert(!byStratum.contains("b"))
     // stratum c at 20% = exactly the global 20% sample restricted to c
-    val global20 = Sampling.sampleByHash(df, "id", 20)
+    val global20 = sampleByHash(df, 20)
       .where($"stratum" === "c").select($"id").as[Long].collect().toSet
     assert(byStratum.getOrElse("c", Set.empty) == global20)
   }
@@ -147,40 +151,6 @@ class SamplingSpec extends SparkSpec {
   test("capPerGroup with a quota above the group size keeps the whole group") {
     val out = Sampling.capPerGroup(grouped, "id", "g", 1000)
     assert(out.where($"g" === "small").count() == 500L)
-  }
-
-  test("capPerGroupPruned is row-identical to capPerGroup (skewed groups, tiny buckets)") {
-    // bucketBits=3 → 8 coarse buckets, so the cutoff logic is actually
-    // exercised (most buckets hold far more than the cap)
-    val simple = Sampling.capPerGroup(grouped, "id", "g", 37)
-    val pruned = Sampling.capPerGroupPruned(grouped, "id", "g", 37, bucketBits = 3)
-    assert(simple.exceptAll(pruned).isEmpty && pruned.exceptAll(simple).isEmpty)
-    assert(pruned.count() == 74L)
-  }
-
-  test("capPerGroupPruned: groups smaller than the cap survive whole (cutoff never drops short groups)") {
-    val out = Sampling.capPerGroupPruned(grouped, "id", "g", 1000, bucketBits = 3)
-    assert(out.where($"g" === "small").count() == 500L)
-    assert(out.where($"g" === "big").count() == 1000L)
-    val full = Sampling.capPerGroup(grouped, "id", "g", 1000)
-    assert(out.exceptAll(full).isEmpty && full.exceptAll(out).isEmpty)
-  }
-
-  test("capPerGroupPruned equals capPerGroup on NULL groups and NULL keys too") {
-    // a NULL group is a partition like any other to the rank window;
-    // NULL keys hash to NULL and rank FIRST — the pruned variant's
-    // cutoff join and bucket filter must not drop either
-    val df = (
-      (1L to 200L).map(i => (Some(i), Option("g1"))) ++
-        (201L to 400L).map(i => (Some(i), Option.empty[String])) ++ // null group
-        Seq((Option.empty[Long], Option("g1")), (Option.empty[Long], Option.empty[String]))
-      ).toDF("id", "g")
-    val simple = Sampling.capPerGroup(df, "id", "g", 50)
-    val pruned = Sampling.capPerGroupPruned(df, "id", "g", 50, bucketBits = 3)
-    assert(simple.exceptAll(pruned).isEmpty && pruned.exceptAll(simple).isEmpty)
-    // null keys took rank 1 in their groups (nulls-first contract)
-    assert(simple.where($"id".isNull && $"sel_rank" === 1).count() == 2L)
-    assert(pruned.where($"id".isNull && $"sel_rank" === 1).count() == 2L)
   }
 
   test("rendezvousShard: stable under resharding except the removed shard's keys") {

@@ -65,22 +65,6 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(e3.getMessage.contains("retyped"))
   }
 
-  test("schemaDiff classifies an explicit drop as 'dropped', an overwrite reshape as 'removed'") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a", 10L)).toDF("id", "s", "x"), t)
-    Snapshots.drop(t, "x") // v2
-    val d = Snapshots.schemaDiff(spark, t, 1, 2)
-      .select("column", "change").as[(String, String)].collect().toSeq
-    assert(d == Seq(("x", "dropped")))
-    // overwrite reshape away a column: no retire record -> "removed"
-    val t2 = freshTable()
-    Snapshots.commit(Seq((1L, "a", 10L)).toDF("id", "s", "x"), t2)
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t2, mode = "overwrite")
-    val d2 = Snapshots.schemaDiff(spark, t2, 1, 2)
-      .select("column", "change").as[(String, String)].collect().toSeq
-    assert(d2 == Seq(("x", "removed")))
-  }
-
   test("optimize after drop+rebirth reconciles the rewrite: no resurrected values") {
     val t = freshTable()
     // many small files so optimize has bins to pack
@@ -189,23 +173,6 @@ class SchemaEvolutionSpec extends SparkSpec {
       Seq((1L, 100L), (2L, 200L)))
   }
 
-  test("shallow clone carries folded rename + drop history and reconciles standalone") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "s", "x"), t)
-    Snapshots.rename(t, "s", "label")
-    Snapshots.drop(t, "x")
-    val dst = freshTable()
-    Snapshots.shallowClone(t, dst)
-    assert(Snapshots.read(spark, dst).columns.toSeq == Seq("id", "label"))
-    assert(Snapshots.read(spark, dst).orderBy("id").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a"), (2L, "b")))
-    // rebirth marking works in the CLONE's own history too
-    Snapshots.commit(Seq((3L, "c", 300L)).toDF("id", "label", "x"), dst)
-    assert(Snapshots.read(spark, dst).orderBy("id")
-      .as[(Long, String, Option[Long])].collect().toSeq ==
-      Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some(300L))))
-  }
-
   // ---- WIDEN ladder (the evolution verb after rename + drop) ----
 
   test("widen is metadata-only: same files, old narrow files upcast at scan; time travel keeps narrow") {
@@ -292,21 +259,6 @@ class SchemaEvolutionSpec extends SparkSpec {
       Seq((1, 30L), (2, 20L)))
   }
 
-  test("schemaDiff says 'widened' for the explicit verb, 'retyped' for an overwrite reshape") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1, "a")).toDF("n", "s"), t)
-    Snapshots.widen(t, "n", org.apache.spark.sql.types.LongType) // v2
-    val d = Snapshots.schemaDiff(spark, t, 1, 2)
-      .select("column", "change").as[(String, String)].collect().toSeq
-    assert(d == Seq(("n", "widened")))
-    val t2 = freshTable()
-    Snapshots.commit(Seq((1, "a")).toDF("n", "s"), t2)
-    Snapshots.commit(Seq(("wat", "a")).toDF("n", "s"), t2, mode = "overwrite")
-    val d2 = Snapshots.schemaDiff(spark, t2, 1, 2)
-      .select("column", "change").as[(String, String)].collect().toSeq
-    assert(d2 == Seq(("n", "retyped")))
-  }
-
   test("optimize after widen bakes the wide type into rewritten files") {
     val t = freshTable()
     Snapshots.commit(Seq((1, 10), (2, 20)).toDF("id", "v").repartition(3), t)
@@ -322,7 +274,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(raw.schema("v").dataType == org.apache.spark.sql.types.LongType)
   }
 
-  test("widen history survives vacuum and shallow clone (folded into every record)") {
+  test("widen history survives vacuum (folded into every record)") {
     val t = freshTable()
     Snapshots.commit(Seq((1, 10)).toDF("id", "v"), t)            // v1, narrow file
     Snapshots.widen(t, "v", org.apache.spark.sql.types.LongType) // v2
@@ -331,11 +283,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     Snapshots.vacuum(t, keepLast = 1) // expires v1..v3 manifests incl. the widen
     assert(Snapshots.read(spark, t).orderBy("id").select($"v").as[Long].collect().toSeq ==
       Seq(10L, 20L, 30L))
-    val dst = freshTable()
-    Snapshots.shallowClone(t, dst)
-    val r = Snapshots.read(spark, dst)
-    assert(r.schema("v").dataType == org.apache.spark.sql.types.LongType)
-    assert(r.orderBy("id").select($"v").as[Long].collect().toSeq == Seq(10L, 20L, 30L))
+    assert(Snapshots.read(spark, t).schema("v").dataType == org.apache.spark.sql.types.LongType)
   }
 
   // ---- RETYPE-REWRITE ladder (r10 verdict item #5) ----
@@ -359,10 +307,6 @@ class SchemaEvolutionSpec extends SparkSpec {
     val old = Snapshots.read(spark, t, version = 2)
     assert(old.schema("v").dataType == org.apache.spark.sql.types.LongType)
     assert(old.orderBy("id").select($"v").as[Long].collect().toSeq == Seq(10L, 20L, 30L))
-    // schemaDiff reports 'retyped' (no widen history — bytes are baked)
-    val d = Snapshots.schemaDiff(spark, t, 2, 3)
-      .select("column", "change").as[(String, String)].collect().toSeq
-    assert(d == Seq(("v", "retyped")))
     // appends with the new type land; the old type is now the mismatch
     Snapshots.commit(Seq((4, 40)).toDF("id", "v"), t)
     assert(Snapshots.read(spark, t).count() == 4)
@@ -441,16 +385,5 @@ class SchemaEvolutionSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       Snapshots.commit(Seq((2, 20)).toDF("id", "v"), t)) // int where table says long
     assert(e.getMessage.contains("retypeRewrite"))
-  }
-
-  test("commitWithRetry writes the same id'd+folded record as commit (rename works after it)") {
-    val t = freshTable()
-    Snapshots.commitWithRetry(Seq((1L, "a")).toDF("id", "s"), t)
-    // the retrying append used to write an ID-LESS record, which made
-    // rename fail with "pre-upgrade record"
-    Snapshots.rename(t, "s", "label")
-    Snapshots.commitWithRetry(Seq((2L, "b")).toDF("id", "label"), t)
-    assert(Snapshots.read(spark, t).orderBy("id").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a"), (2L, "b")))
   }
 }

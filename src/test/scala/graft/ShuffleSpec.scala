@@ -32,43 +32,4 @@ class ShuffleSpec extends SparkSpec {
     }.sum / (n * (n * n - 1.0))
     assert(math.abs(spearman) < 0.05, s"spearman=$spearman — order still id-correlated")
   }
-
-  test("writeShuffled: shards are range-disjoint in shuffle_key and sorted inside") {
-    val dir = java.nio.file.Files.createTempDirectory("shuffled").toString
-    Shuffle.writeShuffled(corpus, "id", 7L, nShards = 8, path = dir)
-    val files = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).map(_.getPath).sorted
-    assert(files.length == 8, s"expected 8 shards, got ${files.length}")
-    // per-file envelopes from the data itself
-    val envelopes = files.map { f =>
-      val keys = spark.read.parquet(f).select($"shuffle_key").as[Long].collect()
-      assert(keys.sameElements(keys.sorted), s"$f is not internally sorted")
-      (keys.min, keys.max)
-    }
-    // files sorted by name are NOT necessarily sorted by range — check
-    // disjointness pairwise
-    val byMin = envelopes.sortBy(_._1)
-    byMin.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) => assert(hi <= lo2, s"overlapping shard envelopes: $hi > $lo2")
-      case _ =>
-    }
-    // nothing lost or duplicated
-    val total = spark.read.parquet(dir).count()
-    assert(total == 5000L)
-  }
-
-  test("reading shards in range order reproduces the exact global shuffle order") {
-    val dir = java.nio.file.Files.createTempDirectory("shuffled2").toString
-    Shuffle.writeShuffled(corpus, "id", 3L, nShards = 4, path = dir)
-    val files = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).map(_.getPath)
-    val byRange = files.map { f =>
-      val rows = spark.read.parquet(f)
-        .select($"shuffle_key", $"id").as[(Long, Long)].collect()
-      (rows.head._1, rows)
-    }.sortBy(_._1).flatMap(_._2).map(_._2).toSeq
-    val expected = Shuffle.withOrder(corpus, "id", 3L)
-      .orderBy($"shuffle_key", $"id").select($"id").as[Long].collect().toSeq
-    assert(byRange == expected)
-  }
 }

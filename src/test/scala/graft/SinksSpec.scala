@@ -54,7 +54,7 @@ class SinksSpec extends SparkSpec {
     val path = tmp()
     val df = Seq((1L, "k1", 1.0), (2L, "k1", 2.0), (3L, "k2", 3.0)).toDF("id", "k", "v")
     val unique = Sinks.enforceUnique(df, Seq("k"), "id")
-    Sinks.truncateReload(unique, path)
+    unique.write.mode("overwrite").parquet(path)
     val out = spark.read.parquet(path).collect().map(r => r.getAs[String]("k") -> r.getAs[Long]("id")).toMap
     assert(out == Map("k1" -> 1L, "k2" -> 3L))
   }
@@ -142,34 +142,6 @@ class SinksSpec extends SparkSpec {
     assert(!spark.read.parquet(zpath).columns.contains("__z"))
     // and the data survives intact
     assert(spark.read.parquet(zpath).count() == 20000)
-  }
-
-  test("compactTo: many small files collapse to the byte-targeted count with identical content") {
-    val src = tmp() + "/frag"
-    val dst = tmp() + "/compact"
-    // 64 tiny files
-    spark.range(0, 20000).selectExpr("id", "id % 7 as k", "repeat('x', 20) as pad")
-      .repartition(64).write.parquet(src)
-    val srcFiles = new java.io.File(src).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(srcFiles == 64)
-    val fs = new org.apache.hadoop.fs.Path(src)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(src)).getLength
-    val n = graft.sources.Sinks.compactTo(spark, src, dst, targetBytes = bytes / 4)
-    val dstFiles = new java.io.File(dst).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(n == 5 || n == 4, s"expected ~4-5 target files, got $n") // ceil on rounded bytes
-    assert(dstFiles == n)
-    // content identical (as multisets)
-    val a = spark.read.parquet(src).collect().map(_.toString).sorted
-    val b = spark.read.parquet(dst).collect().map(_.toString).sorted
-    assert(a.sameElements(b))
-  }
-
-  test("compactTo refuses in-place compaction") {
-    val src = tmp()
-    intercept[IllegalArgumentException] {
-      graft.sources.Sinks.compactTo(spark, src, src, 1000)
-    }
   }
 
   test("writeZOrdered rejects degenerate configs") {

@@ -62,12 +62,4 @@ class SnapshotDiffSpec extends SparkSpec {
       (None, "removed", "B", null),
       (None, "added", null, "C")))
   }
-
-  test("requireUniqueKeys rejects a key-repeating snapshot") {
-    val dup = Seq((1L, "A", 1), (1L, "B", 2)).toDF("k", "s", "v")
-    intercept[IllegalArgumentException] {
-      SnapshotDiff.requireUniqueKeys(dup, "k", "old")
-    }
-    SnapshotDiff.requireUniqueKeys(oldSnap, "k", "old") // does not throw
-  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Merge-on-read deletion vectors (r11 verdict item #1) — the spec
   * ladder prescribed by the verdict: delete visible immediately, time
   * travel shows pre-delete, zero data bytes rewritten, optimize bakes,
-  * vacuum respects DV references, gcStaged collects orphans, conflict
+  * vacuum respects DV references, conflict
   * semantics unchanged — plus composition with COW verbs, pruned
   * reads, countRows, and the minMaxFromStats refusal. */
 class SnapshotDvSpec extends SparkSpec {
@@ -138,29 +138,6 @@ class SnapshotDvSpec extends SparkSpec {
     // retain only the baked HEAD: the sidecar expires with v4
     Snapshots.vacuum(t, keepLast = 1)
     assert(sidecars().isEmpty)
-    assert(ids(Snapshots.read(spark, t)) == Seq(1L, 2L, 11L, 20L, 21L))
-  }
-
-  test("gcStaged age-collects an orphaned sidecar but never a referenced one") {
-    val t = threeFileTable()
-    Snapshots.deleteWhere(spark, t, $"id" === 10L, mode = "mor")
-    // plant an orphan (a crashed delete's staged sidecar) and age it
-    val orphan = java.nio.file.Paths.get(t, "_dv", "v9-orphan")
-    java.nio.file.Files.createDirectories(orphan)
-    val f = orphan.resolve("part-orphan.parquet")
-    java.nio.file.Files.writeString(f, "x")
-    val old = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis - 48L * 3600 * 1000)
-    java.nio.file.Files.setLastModifiedTime(f, old)
-    assert(Snapshots.gcStaged(t) == 1)
-    assert(!java.nio.file.Files.exists(orphan))
-    // the referenced sidecar (also older than any cutoff? no — young;
-    // age it too to prove reference-protection, not age-protection)
-    import scala.jdk.CollectionConverters._
-    val kept = java.nio.file.Files.walk(java.nio.file.Paths.get(t, "_dv"))
-      .iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).toSeq
-    kept.foreach(p => java.nio.file.Files.setLastModifiedTime(p, old))
-    assert(Snapshots.gcStaged(t) == 0)
     assert(ids(Snapshots.read(spark, t)) == Seq(1L, 2L, 11L, 20L, 21L))
   }
 

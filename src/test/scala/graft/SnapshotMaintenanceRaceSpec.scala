@@ -16,8 +16,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *  - vacuum deletes ONLY files the expiring manifests reference
   *    (positive list) — staged-but-unpublished files survive any
   *    interleaving, so commit/vacuum serialize by construction;
-  *  - crashed-writer orphans are collected by the separate age-gated
-  *    [[Snapshots.gcStaged]], whose age threshold is the race guard;
   *  - optimize publishes through the same conditional no-clobber
   *    link as every COW verb: losing the race to an append is a loud
   *    ConcurrentModificationException and the appended row is never
@@ -69,26 +67,6 @@ class SnapshotMaintenanceRaceSpec extends SparkSpec {
     Snapshots.writeManifest(t, 4, 3, "append",
       Snapshots.liveFiles(t, 3) ++ Seq(staged))
     assert(ids(Snapshots.read(spark, t)) == Seq(3L, 4L))
-  }
-
-  test("gcStaged collects old orphans, spares young stagings and referenced files") {
-    val t = freshTable()
-    Snapshots.commit(Seq(1L).toDF("id"), t)
-    val live = Snapshots.liveFiles(t, 1).head
-    val young = stageOrphan(t, 2, Seq(9L))
-    val old = stageOrphan(t, 3, Seq(8L))
-    // age the orphan past the threshold
-    Files.setLastModifiedTime(Paths.get(old),
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis - 7200 * 1000))
-    // ...and age the LIVE file too: referenced files are immune to age
-    Files.setLastModifiedTime(Paths.get(live),
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis - 7200 * 1000))
-    val n = Snapshots.gcStaged(t, olderThanMillis = 3600 * 1000)
-    assert(n == 1)
-    assert(!Files.exists(Paths.get(old)), "aged orphan survived gcStaged")
-    assert(Files.exists(Paths.get(young)), "young staging eaten — the race guard is the age gate")
-    assert(Files.exists(Paths.get(live)), "referenced file eaten by gcStaged")
-    assert(ids(Snapshots.read(spark, t)) == Seq(1L))
   }
 
   test("optimize loses the race to a concurrent append LOUDLY; the appended row survives; retry succeeds") {

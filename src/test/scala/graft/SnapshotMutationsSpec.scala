@@ -165,53 +165,6 @@ class SnapshotMutationsSpec extends SparkSpec {
     }.getMessage.contains("duplicate"))
   }
 
-  test("commitChecked: schema enforcement rejects a drifted append before writing") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
-    val drifted = Seq((2L, "b", 9)).toDF("id", "s", "extra")
-    val e = intercept[IllegalArgumentException] {
-      Snapshots.commitChecked(drifted, t)
-    }
-    assert(e.getMessage.contains("schema enforcement"))
-    assert(Snapshots.currentVersion(t) == 1) // nothing committed
-    // a type change is also drift, not just a column-set change
-    val retyped = Seq(("2", "b")).toDF("id", "s")
-    assert(intercept[IllegalArgumentException] {
-      Snapshots.commitChecked(retyped, t)
-    }.getMessage.contains("schema enforcement"))
-  }
-
-  test("commitChecked: a CHECK violation fails the write; the table is untouched") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
-    val checks = Seq[(String, org.apache.spark.sql.Column)](
-      "id_positive" -> ($"id" > 0L),
-      "s_nonempty" -> (length($"s") > 0))
-    // passing batch commits normally
-    assert(Snapshots.commitChecked(Seq((2L, "b")).toDF("id", "s"), t, checks = checks) == 2)
-    // violating batch: write job fails, no new version, rows unchanged
-    val e = intercept[Exception] {
-      Snapshots.commitChecked(Seq((3L, "c"), (-7L, "d")).toDF("id", "s"), t, checks = checks)
-    }
-    assert(e.getMessage.contains("id_positive") ||
-      Option(e.getCause).exists(_.getMessage.contains("id_positive")), e.getMessage)
-    assert(Snapshots.currentVersion(t) == 2)
-    assert(ids(Snapshots.read(spark, t)) == Seq(1L, 2L))
-  }
-
-  test("commitChecked: a NULL check result is a violation, not a pass") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, Option("a"))).toDF("id", "s"), t)
-    val e = intercept[Exception] {
-      Snapshots.commitChecked(
-        Seq((2L, Option.empty[String])).toDF("id", "s"), t,
-        checks = Seq[(String, org.apache.spark.sql.Column)]("s_short" -> (length($"s") < 10)))
-    }
-    assert(e.getMessage.contains("s_short") ||
-      Option(e.getCause).exists(_.getMessage.contains("s_short")), e.getMessage)
-    assert(Snapshots.currentVersion(t) == 1)
-  }
-
   test("a mutation publishing after a concurrent commit aborts loudly (stale rewrite set)") {
     val t = threeFileTable()
     // a real interloper append lands INSIDE deleteWhere's window —
@@ -225,35 +178,5 @@ class SnapshotMutationsSpec extends SparkSpec {
     // the interloper's commit survives untouched; no half-delete landed
     assert(Snapshots.currentVersion(t) == 4)
     assert(ids(Snapshots.read(spark, t)) == Seq(1L, 2L, 10L, 11L, 20L, 21L, 30L))
-  }
-
-  test("commitWithRetry rebases onto an interloper's HEAD without losing either write") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
-    val v = Snapshots.commitWithRetryHook(
-      Seq((2L, "b")).toDF("id", "s"), t, maxRetries = 5, tag = None, statsCols = Nil,
-      beforePublish = { n =>
-        // a real interloper lands inside attempt 0's race window
-        // (post-read, pre-link): we lose v2, rebase, win v3
-        if (n == 0) Snapshots.commit(Seq((9L, "z")).toDF("id", "s"), t)
-      })
-    assert(v == 3)
-    assert(ids(Snapshots.read(spark, t)) == Seq(1L, 2L, 9L))
-  }
-
-  test("commitWithRetry fails loud after exhausting retries, naming the staged dir") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
-    val e = intercept[IllegalArgumentException] {
-      Snapshots.commitWithRetryHook(
-        Seq((2L, "b")).toDF("id", "s"), t, maxRetries = 2, tag = None, statsCols = Nil,
-        // every attempt loses: an interloper beats us to each slot
-        beforePublish = { _ =>
-          val head = Snapshots.currentVersion(t)
-          Snapshots.writeManifest(t, head + 1, head, "append",
-            manifestFileLines(t, head))
-        })
-    }
-    assert(e.getMessage.contains("version race"))
   }
 }

@@ -184,39 +184,6 @@ class SnapshotsSpec extends SparkSpec {
     assert(ids(d) == Seq(3L) && v == 3)
   }
 
-  test("consumer offsets: at-least-once poll/commit, independent groups, no rewind") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
-    Snapshots.commit(Seq((2L, "b")).toDF("id", "s"), t)
-    // poll without commit = redelivery (crash before commit)
-    val (p1, v1) = Snapshots.poll(spark, t, "etl")
-    assert(ids(p1) == Seq(1L, 2L) && v1 == 2)
-    val (p1again, _) = Snapshots.poll(spark, t, "etl")
-    assert(ids(p1again) == Seq(1L, 2L))
-    // commit, then only new data delivers
-    Snapshots.commitConsumer(t, "etl", v1)
-    Snapshots.commit(Seq((3L, "c")).toDF("id", "s"), t)
-    val (p2, v2) = Snapshots.poll(spark, t, "etl")
-    assert(ids(p2) == Seq(3L) && v2 == 3)
-    // a second consumer group starts from scratch
-    val (q1, _) = Snapshots.poll(spark, t, "audit")
-    assert(ids(q1) == Seq(1L, 2L, 3L))
-    // offsets never rewind
-    intercept[IllegalArgumentException](Snapshots.commitConsumer(t, "etl", 1))
-    intercept[IllegalArgumentException](Snapshots.commitConsumer(t, "bad/name", 1))
-  }
-
-  test("diffVersions: row-level change feed across a rewrite (where changesSince refuses)") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t)
-    // the rewrite: 1 changed, 2 removed, 3 added
-    Snapshots.commit(Seq((1L, "a2"), (3L, "c")).toDF("id", "s"), t, mode = "overwrite")
-    intercept[IllegalArgumentException](Snapshots.changesSince(spark, t, 1))
-    val d = Snapshots.diffVersions(spark, t, 1, 2, "id", Seq("s"))
-      .select($"id", $"status").as[(Long, String)].collect().toSet
-    assert(d == Set((1L, "changed"), (2L, "removed"), (3L, "added")))
-  }
-
   test("schema evolution: appended columns surface under mergeSchema, old rows NULL") {
     val t = freshTable()
     Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
@@ -269,20 +236,6 @@ class SnapshotsSpec extends SparkSpec {
       Snapshots.commit(Seq((1L, "x")).toDF("id", "s"), t, bloomCols = Seq("id"))
     }
     assert(e.getMessage.contains("STRING"))
-  }
-
-  test("time travel by timestamp: readAsOf resolves the newest version at-or-before the instant") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
-    val afterV1 = System.currentTimeMillis
-    Thread.sleep(20) // separate the commit instants measurably
-    Snapshots.commit(Seq((2L, "b")).toDF("id", "s"), t)
-    assert(Snapshots.versionAt(t, afterV1) == 1)
-    assert(ids(Snapshots.readAsOf(spark, t, afterV1)) == Seq(1L))
-    assert(ids(Snapshots.readAsOf(spark, t, System.currentTimeMillis)) == Seq(1L, 2L))
-    // an ask predating the oldest retained version fails loud
-    val e = intercept[IllegalArgumentException](Snapshots.versionAt(t, 0L))
-    assert(e.getMessage.contains("at or before"))
   }
 
   test("optimizeZOrder: a range predicate on EITHER clustered dimension prunes files") {
@@ -385,9 +338,6 @@ class SnapshotsSpec extends SparkSpec {
       Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t) // full commit path through CAS
       assert(ids(Snapshots.read(spark, t)) == Seq(1L))
       assert(raceOnce(t) == ((1, 7)))
-      // and commitWithRetry rebases past the interloper as usual
-      val v = Snapshots.commitWithRetry(Seq((3L, "c")).toDF("id", "s"), t)
-      assert(v == 3)
     } finally Snapshots.setCommitPublisher(prev)
   }
 
@@ -404,9 +354,6 @@ class SnapshotsSpec extends SparkSpec {
       Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
       assert(ids(Snapshots.read(spark, t)) == Seq(1L))
       assert(raceOnce(t) == ((1, 7)))
-      // and commitWithRetry rebases past the interloper as usual
-      val v = Snapshots.commitWithRetry(Seq((3L, "c")).toDF("id", "s"), t)
-      assert(v == 3)
     } finally Snapshots.setCommitPublisher(prev)
   }
 
@@ -472,10 +419,6 @@ class SnapshotsSpec extends SparkSpec {
       Seq((1L, "a"), (2L, "b"), (3L, "c")))
     // time travel BEFORE the rename still shows the old name
     assert(Snapshots.read(spark, t, version = 1).columns.toSeq == Seq("id", "s"))
-    // schemaDiff reports ONE renamed row, not a misleading added+removed pair
-    val d = Snapshots.schemaDiff(spark, t, 1, 3).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(d == Seq(("s->label", "renamed")))
   }
 
   test("rename guards: retype still loud with both types; alias reuse and stale names rejected") {
@@ -504,15 +447,6 @@ class SnapshotsSpec extends SparkSpec {
     // reads chase the id across BOTH renames
     assert(Snapshots.read(spark, t).columns.toSeq == Seq("id", "title"))
     assert(Snapshots.read(spark, t).orderBy("id").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a")))
-    // shallow clone across rename history now WORKS: the alias history
-    // is folded into the schema record every commit writes (r10 — the
-    // r9-advice vacuum fix), so the clone's copied record reconciles
-    // standalone, with no parent chain to walk
-    val dst = freshTable()
-    Snapshots.shallowClone(t, dst)
-    assert(Snapshots.read(spark, dst).columns.toSeq == Seq("id", "title"))
-    assert(Snapshots.read(spark, dst).orderBy("id").as[(Long, String)].collect().toSeq ==
       Seq((1L, "a")))
   }
 
@@ -579,47 +513,6 @@ class SnapshotsSpec extends SparkSpec {
       (3, 2, "overwrite", None, true)))
     assert(h.map(_._6) == Seq(1L, 2L, 1L)) // file counts: 1, 1+1 carried, overwrite 1
     assert(h.forall(_._4 > 0L)) // commit timestamps recorded
-  }
-
-  test("schemaDiff: added / removed / retyped columns between versions; record-less versions fail loud") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)                     // v1
-    Snapshots.commit(Seq((2L, "b", 9L)).toDF("id", "s", "extra"), t)        // v2 additive
-    Snapshots.commit(Seq(("x", 7.5)).toDF("s", "id"), t, mode = "overwrite") // v3 reshapes
-    val d12 = Snapshots.schemaDiff(spark, t, 1, 2)
-      .as[(String, String, Option[String], Option[String])].collect().toSeq
-    assert(d12 == Seq(("extra", "added", None, Some("bigint"))))
-    val d13 = Snapshots.schemaDiff(spark, t, 1, 3)
-      .orderBy($"column").as[(String, String, Option[String], Option[String])].collect().toSeq
-    assert(d13 == Seq(("id", "retyped", Some("bigint"), Some("double"))))
-    assert(Snapshots.schemaDiff(spark, t, 2, 2).count() == 0) // self-diff empty
-    // a hand-written record-less manifest refuses to diff
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(t, "_snapshots", "v00000009.txt"),
-      "version=9\nparent=3\nop=append\nts=0\n")
-    val e = intercept[IllegalArgumentException](Snapshots.schemaDiff(spark, t, 1, 9))
-    assert(e.getMessage.contains("no schema record"))
-  }
-
-  test("shallowClone: metadata-only copy reads identically, appends independently") {
-    val src = freshTable()
-    Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), src)
-    Snapshots.commit(Seq((3L, "c")).toDF("id", "s"), src)
-    val dst = freshTable()
-    assert(Snapshots.shallowClone(src, dst) == 1)
-    assert(ids(Snapshots.read(spark, dst)) == Seq(1L, 2L, 3L))
-    // no bytes copied: the clone's manifest references the SOURCE paths
-    assert(Snapshots.liveFiles(dst, 1).forall(_.contains(src)))
-    // independent histories: appending to the clone leaves the source alone
-    Snapshots.commit(Seq((9L, "z")).toDF("id", "s"), dst)
-    assert(ids(Snapshots.read(spark, dst)) == Seq(1L, 2L, 3L, 9L))
-    assert(ids(Snapshots.read(spark, src)) == Seq(1L, 2L, 3L))
-    // the schema record traveled: a retyped append to the clone is rejected
-    intercept[IllegalArgumentException] {
-      Snapshots.commit(Seq(("bad", "b")).toDF("id", "s"), dst)
-    }
-    // refusing to clone over an existing table
-    intercept[IllegalArgumentException](Snapshots.shallowClone(src, dst))
   }
 
   test("schema records survive pre-record manifests: checks degrade to unchecked, then resume") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Splits
+import graft.operators.{NearDup, Splits}
 import graft.ops.Sampling
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,14 @@ class SplitsSpec extends SparkSpec {
     rows.toDF("doc_id", "text")
   }
 
+  /** The leakage-safe split over a fresh 3-shingle minhash clustering
+    * at jaccard 0.8. */
+  private def leakageSafeSplit(docs: org.apache.spark.sql.DataFrame) =
+    Splits.leakageSafeSplitFrom(
+      NearDup.minhashDuplicateClusters(docs, "text", 3, 0.8, 96, 24), docs)
+
   test("every near-dup cluster lands in exactly one split (the no-leakage invariant)") {
-    val out = Splits.leakageSafeSplit(docs, "text", 3, 0.8).cache()
+    val out = leakageSafeSplit(docs).cache()
     try {
       // all docs assigned, exactly once
       assert(out.count() == docs.count())
@@ -37,7 +43,7 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("singleton docs get exactly the plain assignSplit(doc_id) assignment") {
-    val out = Splits.leakageSafeSplit(docs, "text", 3, 0.8)
+    val out = leakageSafeSplit(docs)
       .where($"doc_id".between(300L, 340L))
     val plain = Sampling.assignSplit(
       docs.where($"doc_id".between(300L, 340L)).select($"doc_id"), "doc_id")
@@ -49,7 +55,7 @@ class SplitsSpec extends SparkSpec {
   }
 
   test("cluster members inherit the CLUSTER's split, not their own doc_id's") {
-    val out = Splits.leakageSafeSplit(docs, "text", 3, 0.8)
+    val out = leakageSafeSplit(docs)
     // whatever split doc 500 (the canonical rep) got, docs 501-503 share it —
     // even though their own ids would hash elsewhere
     val fam = out.where($"doc_id" >= 500L && $"doc_id" <= 503L)

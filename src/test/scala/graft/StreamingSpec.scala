@@ -5,9 +5,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
-/** Runs the streaming recap transforms on a real MemoryStream →
-  * memory-sink query, proving the transforms are streaming-legal
-  * (watermark accepted, incremental execution, update mode). */
+/** Runs the streaming recap transform on a real MemoryStream →
+  * memory-sink query, proving it is streaming-legal (watermark
+  * accepted, incremental execution, update mode). */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,34 +15,6 @@ class StreamingSpec extends SparkSpec {
 
   case class Obs(obs_id: Long, location_id: Long, ts: Timestamp, temp_c: Double,
                  condition: String, precip_mm: Option[Double])
-
-  test("hourlyToGold: update-mode re-emission upserts the gold table (ST6)") {
-    implicit val sqlCtx = spark.sqlContext
-    val goldDir = java.nio.file.Files.createTempDirectory("gold_stream").toString
-    val input = MemoryStream[Obs]
-    val query = StreamingRecap.hourlyToGold(input.toDF(), goldDir)
-    try {
-      input.addData(
-        Obs(1, 1, ts("2024-01-01 05:03:00"), 20.0, "rain", Some(1.0)),
-        Obs(2, 1, ts("2024-01-01 05:31:00"), 22.0, "sun", None),
-        Obs(3, 2, ts("2024-01-01 06:10:00"), 30.0, "sun", None)
-      )
-      query.processAllAvailable()
-      // late row re-emits ONLY loc 1 hour 05; the overwrite must not
-      // disturb loc 2 hour 06
-      input.addData(Obs(4, 1, ts("2024-01-01 05:55:00"), 24.0, "sun", Some(0.5)))
-      query.processAllAvailable()
-      // partition columns come back type-inferred (int), not the
-      // writer's long — read numerically
-      val gold = spark.read.parquet(goldDir)
-        .collect().map(r => (r.getAs[Number]("location_id").longValue,
-          r.getAs[Number]("obs_hour").intValue) ->
-          (r.getAs[Long]("n_obs"), r.getAs[Double]("avg_temp_c"))).toMap
-      assert(gold((1L, 5)) == ((3L, 22.0)))
-      assert(gold((2L, 6)) == ((1L, 30.0)))
-      assert(gold.size == 2)
-    } finally query.stop()
-  }
 
   test("hourlyWindowed runs incrementally over a MemoryStream") {
     implicit val sqlCtx = spark.sqlContext
@@ -69,140 +41,6 @@ class StreamingSpec extends SparkSpec {
         .collect().last
       assert(updated.getAs[Long]("n_obs") == 3L)
       assert(updated.getAs[Double]("avg_temp_c") == 22.0)
-    } finally query.stop()
-  }
-
-  case class Ev(user_id: Long, ts: Timestamp, value: Option[Double])
-
-  test("sessionWindowed: gaps split sessions, close events merge, append emits on watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    // session windows are append-only in streaming: a session is
-    // emitted once, when the watermark passes its end
-    val query = StreamingRecap.sessionWindowed(input.toDF(), gap = "30 minutes")
-      .writeStream.format("memory").queryName("sess_out").outputMode("append").start()
-    try {
-      input.addData(
-        Ev(1, ts("2024-01-01 05:00:00"), Some(1.0)),
-        Ev(1, ts("2024-01-01 05:20:00"), Some(2.0)),  // within gap: same session
-        Ev(1, ts("2024-01-01 07:00:00"), Some(4.0)),  // 100-min gap: new session
-        Ev(1, ts("2024-01-01 07:10:00"), Some(1.0)),  // merges into + extends it
-        Ev(2, ts("2024-01-01 05:10:00"), None)        // other key, own session
-      )
-      query.processAllAvailable()
-      // advance the watermark far past every session end to flush them
-      input.addData(Ev(3, ts("2024-01-01 20:00:00"), Some(0.0)))
-      query.processAllAvailable()
-      val out = spark.table("sess_out")
-        .collect().map(r => (r.getAs[Long]("user_id"), r.getAs[Timestamp]("sess_start").toString) ->
-          (r.getAs[Timestamp]("sess_end").toString, r.getAs[Long]("n_events"), r.getAs[Double]("sum_value"))).toMap
-      assert(out((1L, "2024-01-01 05:00:00.0")) == (("2024-01-01 05:50:00.0", 2L, 3.0)))
-      // 07:00 and 07:10 merged; session end = last event + gap
-      assert(out((1L, "2024-01-01 07:00:00.0")) == (("2024-01-01 07:40:00.0", 2L, 5.0)))
-      assert(out((2L, "2024-01-01 05:10:00.0")) == (("2024-01-01 05:40:00.0", 1L, 0.0)))
-      // the flush event's own session is still open -> not emitted
-      assert(out.size == 3)
-    } finally query.stop()
-  }
-
-  case class Click(user_id: Long, click_ts: Timestamp, page: String)
-  case class Buy(user_id: Long, buy_ts: Timestamp, amount: Double)
-
-  test("stream-stream interval join matches within tolerance, evicts beyond it") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Click]
-    val buys = MemoryStream[Buy]
-    val joined = graft.streaming.StreamJoins.withinTolerance(
-      buys.toDF(), clicks.toDF(), "user_id", "buy_ts", "click_ts", "30 MINUTES")
-    val query = joined.select($"user_id", $"page", $"amount")
-      .writeStream.format("memory").queryName("ssj_out").outputMode("append").start()
-    try {
-      clicks.addData(
-        Click(1, ts("2024-01-01 05:00:00"), "home"),
-        Click(1, ts("2024-01-01 03:00:00"), "old"),   // 2h before the buy: outside
-        Click(2, ts("2024-01-01 05:05:00"), "promo"))
-      buys.addData(
-        Buy(1, ts("2024-01-01 05:20:00"), 9.99),      // joins 'home' only
-        Buy(3, ts("2024-01-01 05:20:00"), 1.0))       // no clicks for user 3
-      clicks.addData(Click(9, ts("2024-01-01 12:00:00"), "wm"))
-      buys.addData(Buy(9, ts("2024-01-01 12:00:00"), 0.0))
-      query.processAllAvailable()
-      val out = spark.table("ssj_out")
-        .select($"user_id", $"page", $"amount").as[(Long, String, Double)].collect().toSet
-      assert(out.contains((1L, "home", 9.99)))
-      assert(!out.exists(r => r._2 == "old"), "click outside the tolerance must not join")
-      assert(!out.exists(_._1 == 2L), "click without a buy emits nothing (inner join)")
-      assert(!out.exists(_._1 == 3L), "buy without a click emits nothing (inner join)")
-    } finally query.stop()
-  }
-
-  test("stream-stream LEFT OUTER interval join: matches emit; no-match rows emit with NULLs once the watermark closes their window") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Click]
-    val buys = MemoryStream[Buy]
-    val joined = graft.streaming.StreamJoins.withinToleranceOuter(
-      buys.toDF(), clicks.toDF(), "user_id", "buy_ts", "click_ts", "30 MINUTES")
-    val query = joined.select($"user_id", $"page", $"amount")
-      .writeStream.format("memory").queryName("ssoj_out").outputMode("append").start()
-    try {
-      clicks.addData(Click(1, ts("2024-01-01 05:00:00"), "home"))
-      buys.addData(
-        Buy(1, ts("2024-01-01 05:20:00"), 9.99), // match -> emits now
-        Buy(3, ts("2024-01-01 05:20:00"), 1.0)) // no click: decidable only later
-      query.processAllAvailable()
-      val early = spark.table("ssoj_out").select($"user_id").as[Long].collect().toSet
-      assert(early.contains(1L))
-      assert(!early.contains(3L),
-        "unmatched left row must NOT emit before the watermark proves no match can arrive")
-      // advance both watermarks far past 05:50 (buy_ts + tolerance)
-      clicks.addData(Click(9, ts("2024-01-01 12:00:00"), "wm"))
-      buys.addData(Buy(9, ts("2024-01-01 12:00:00"), 0.0))
-      query.processAllAvailable()
-      clicks.addData(Click(8, ts("2024-01-01 13:00:00"), "wm2"))
-      buys.addData(Buy(8, ts("2024-01-01 13:00:00"), 0.0))
-      query.processAllAvailable()
-      val out = spark.table("ssoj_out")
-        .select($"user_id", $"page", $"amount").as[(Long, Option[String], Double)]
-        .collect().toSet
-      assert(out.contains((1L, Some("home"), 9.99)))
-      assert(out.contains((3L, None, 1.0)),
-        s"watermark-closed unmatched row must emit with NULL right side: $out")
-    } finally query.stop()
-  }
-
-  test("stream-static dim enrichment joins each micro-batch against the dim") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val query = graft.streaming.StreamJoins.enrichWithDim(input.toDF(), dim, "user_id")
-      .writeStream.format("memory").queryName("dim_out").outputMode("append").start()
-    try {
-      input.addData(
-        Ev(1, ts("2024-01-01 05:00:00"), Some(1.0)),
-        Ev(7, ts("2024-01-01 05:01:00"), None))     // no dim row -> null tier
-      query.processAllAvailable()
-      val out = spark.table("dim_out")
-        .select($"user_id", $"tier").collect()
-        .map(r => r.getAs[Long]("user_id") -> Option(r.getAs[String]("tier"))).toMap
-      assert(out(1L) == Some("gold"))
-      assert(out(7L) == None)
-    } finally query.stop()
-  }
-
-  test("slotWindowed keeps the first observation per 10-minute slot") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Obs]
-    val query = StreamingRecap.slotWindowed(input.toDF())
-      .writeStream.format("memory").queryName("slot_out").outputMode("update").start()
-    try {
-      input.addData(
-        Obs(10, 1, ts("2024-01-01 05:03:00"), 20.0, "rain", None),
-        Obs(11, 1, ts("2024-01-01 05:07:00"), 99.0, "hail", None)
-      )
-      query.processAllAvailable()
-      val r = spark.table("slot_out").head()
-      assert(r.getAs[Double]("temp_c") == 20.0) // min obs_id wins
-      assert(r.getAs[Long]("n_obs") == 2L)
     } finally query.stop()
   }
 }

@@ -259,16 +259,6 @@ class TrainingOpsSpec extends SparkSpec {
       Option(e.getCause).exists(_.getMessage.contains("wider than")), e.toString)
   }
 
-  test("lshParams reproduces the shipped configs from the banding formula") {
-    // the default (16, 4) config IS lshParams at c=0.5, miss 3%
-    assert(Similarity.lshParams(0.5, 0.03, 4) == 16)
-    // the tuned near-dup config at c=0.9, miss 1%, r=12
-    assert(Similarity.lshParams(0.9, 0.01, 12) == 28)
-    // monotonicity: higher threshold -> fewer bands needed at fixed r
-    assert(Similarity.lshParams(0.95, 0.01, 12) < Similarity.lshParams(0.9, 0.01, 12))
-    intercept[IllegalArgumentException](Similarity.lshParams(1.5, 0.01, 12))
-  }
-
   test("autoPlanesPerBand: n-scaled r pins random collisions linear (r12 verdict #2)") {
     // exact integer ceil-log2 + slack, floored and capped
     assert(Similarity.autoPlanesPerBand(1L) == 12) // floor
@@ -303,7 +293,7 @@ class TrainingOpsSpec extends SparkSpec {
   test("tuned high-threshold LSH equals the exhaustive baseline on a twin-seeded corpus") {
     // the q_embed_neardup_hi shape: every vector gets a deterministic
     // near-dup twin (exact-double 1 + k/128 factors); banded LSH at
-    // 0.9 with the lshParams-tuned (28, 12) config must find exactly
+    // 0.9 with the tuned (28, 12) config must find exactly
     // the pairs the all-pairs crossJoin finds
     val src = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val corpus = Similarity.twinSeeded(src)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** End-to-end curation pipeline: the composition proof that a user
   * can run the whole training-data pass with this library alone —
   * boilerplate strip → quality funnel audit → filter → leakage-safe
-  * split → train slice → chunk → pack → shuffled shard export — with
+  * split → train slice → chunk → pack — with
   * row-conservation and invariant checks at every stage boundary.
   */
 class TrainingPipelineSpec extends SparkSpec {
@@ -43,8 +43,9 @@ class TrainingPipelineSpec extends SparkSpec {
     // 3. apply the audited filter, split leakage-safely on the RAW
     // text (near-dup families must move atomically)
     val kept = clean.where(size(split($"text", " +")) >= 5)
-    val splits = graft.operators.Splits.leakageSafeSplit(
-      kept.select($"doc_id", $"text"), "text", 3, 0.8)
+    val keptDocs = kept.select($"doc_id", $"text")
+    val splits = graft.operators.Splits.leakageSafeSplitFrom(
+      graft.operators.NearDup.minhashDuplicateClusters(keptDocs, "text", 3, 0.8), keptDocs)
     assert(splits.count() == kept.count(), "every kept doc gets a split")
     for (base <- Seq(100L, 200L)) {
       val fam = splits.where($"group_key" === base)
@@ -72,13 +73,6 @@ class TrainingPipelineSpec extends SparkSpec {
       max($"bin").as("mx"), countDistinct($"bin").as("nd")).collect()
     binsPerShard.foreach(r =>
       assert(r.getAs[Long]("mx") == r.getAs[Long]("nd") - 1, s"bins not dense: $r"))
-
-    // 5. shuffled shard export of the train slice, read-back conserved
-    val dir = java.nio.file.Files.createTempDirectory("pipeline").toString
-    graft.ops.Shuffle.writeShuffled(train.select($"doc_id", $"text"), "doc_id", 1L, 4, dir)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == train.count())
-    assert(back.select($"doc_id").exceptAll(train.select($"doc_id")).isEmpty)
   }
 
   test("round-4 additions compose: expectations gate -> gopher filter -> exact dedup -> BPE token budget") {
