@@ -3,15 +3,6 @@ import graft.queries.QuerySpec
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // decoupled from cpus for memory-constrained runs: fewer
-    // concurrent tasks but MORE (smaller) shuffle partitions is how a
-    // real cluster sizes per-task aggregate state to its heap — with
-    // partitions pinned = cpus, an 8-thread 2 GiB run at sf1 put 1/8
-    // of a 6M-row aggregate in one task and died in the hash map
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     // targeted-run filter (r11 verdict item #7 needs per-family sf10
     // measurements without paying the whole suite): a comma list of
     // query names; unset = full suite. Shared warmup stages whose
@@ -20,12 +11,7 @@ object Bench {
       .map(SparkEntry.queryFilter(_, "SPARK_GRAFT_BENCH_ONLY"))
     def stageNeeded(stage: String): Boolean =
       benchOnly.forall(only => (only & SparkEntry.consumersOf(stage)).nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, sfDir) = GraftSession.fromEnv("graft-bench")
     // warm the session (JVM/codegen/FS init, parquet reader, broadcast
     // + shuffle machinery) so the first query's time measures the
     // query, not executor startup: the first bench entry was absorbing

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-job / per-stage wall-time attribution for one registered query
   * — the measurement tool behind the r14 optimization round (guide
@@ -15,20 +14,12 @@ import org.apache.spark.sql.SparkSession
   * per-job rollup. Stage rows make "5 iterations × 3 exchanges" vs
   * "one big scan" immediately visible where a single total cannot.
   *
-  * Reads the same env contract as Bench (SPARK_GRAFT_SF_DIR /
-  * SPARK_GRAFT_CPUS) so numbers line up with bench rows.
+  * Builds its session like Bench (`GraftSession.fromEnv`) so numbers
+  * line up with bench rows.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, sfDir) = GraftSession.fromEnv("graft-jobprofile")
     // same session warm-up as Bench so the cold run is comparable
     spark.range(1000).selectExpr("sum(id)").collect()
 

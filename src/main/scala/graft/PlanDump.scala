@@ -1,16 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registered queries to files
   * — the r14 optimization round's plan-evidence tool (the judge
   * checks plan-shape claims against the committed files in
   * `plans/r14/`).
   *
   * `runMain graft.PlanDump <outDir> <suffix> <q_name...>` writes
-  * `<outDir>/<q_name>_<suffix>.txt` per query. Same env contract as
-  * Bench (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS) so the plans match
-  * the benched configuration.
+  * `<outDir>/<q_name>_<suffix>.txt` per query. Builds its
+  * session like Bench (`GraftSession.fromEnv`) so the plans match the
+  * benched configuration.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,15 +16,7 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     java.nio.file.Files.createDirectories(outDir)
     val suffix = args(1)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, sfDir) = GraftSession.fromEnv("graft-plandump")
     args.drop(2).foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"PlanDump: unknown query '$name'"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming throughput micro-benchmark (r13 verdict item #8): runs
   * the end-to-end streaming composition — paged source → near-dup
   * ingest gate → event-time hourly windows → exactly-once snapshot
@@ -24,19 +22,10 @@ import org.apache.spark.sql.SparkSession
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val volumes = sys.env.getOrElse("SPARK_GRAFT_STREAM_VOLUMES", "20000,100000")
       .split(",").map(_.trim.toInt).toSeq
     val pages = sys.env.getOrElse("SPARK_GRAFT_STREAM_PAGES", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, _) = GraftSession.fromEnv("graft-streambench")
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     volumes.foreach { volume =>

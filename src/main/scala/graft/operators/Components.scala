@@ -212,15 +212,8 @@ object Components {
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
-  /** Components + canonical pick: every doc in a duplicate cluster,
-    * its cluster id (min member), and whether it is the keeper. */
-  def duplicateClusters(pairs: DataFrame): DataFrame =
-    connectedComponents(pairs)
-      .select(col("id").as("doc_id"), col("comp").as("cluster_id"),
-        (col("id") === col("comp")).as("is_canonical"))
-
   /** Survivorship (golden-record selection): per duplicate cluster,
-    * keep the QUALITY-best member instead of [[duplicateClusters]]'
+    * keep the QUALITY-best member instead of the components'
     * id-min convention — the ER step after clustering, where "best"
     * is a deterministic policy, here (longest `textCol`, ties to the
     * smallest id; NULL text sorts as length 0). One window over the

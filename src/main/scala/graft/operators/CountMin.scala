@@ -4,14 +4,14 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Count-min sketch — the mergeable FREQUENCY summary, companion to
-  * `Sketches` (distinct counts): a depth×width grid of counters where
+  * `PortableHll` (distinct counts): a depth×width grid of counters where
   * key k increments cell (r, hash_r(k) mod width) for each row r, and
   * freq̂(k) = min_r cell(r, hash_r(k)) — an overestimate by at most
   * ε·N with probability 1−δ (ε = e/width, δ = e^−depth; Cormode &
   * Muthukrishnan 2005). The heavy-hitter / frequency-cap primitive a
   * pipeline stores per shard and merges later: cell grids add
   * element-wise, so per-day sketches roll up to any coarser grain
-  * without raw rescans — same artifact contract as `Sketches`, but
+  * without raw rescans — same artifact contract as `PortableHll`, but
   * for "how often", not "how many distinct".
   *
   * Unlike HLL registers, EVERYTHING here is deterministic integer
@@ -70,12 +70,6 @@ object CountMin {
       .groupBy(col("r"), col("c"))
       .agg(sum(col("__n")).as("cnt"))
   }
-
-  /** Element-wise merge of two cell grids built with the same
-    * (depth, width) — the rollup step over stored sketch frames. */
-  def merge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("r"), col("c"))
-      .agg(sum(col("cnt")).as("cnt"))
 
   /** freq̂ for each distinct probe key: min over rows of its cells
     * (an absent cell is 0 — no key ever hashed there). Output:

@@ -43,13 +43,4 @@ object ExactDedup {
       .select((Seq(col("content_hash"), lit(1L).as("dup_count")) ++ valueCols.map(col)): _*)
     deduped.unionByName(nullContent)
   }
-
-  /** Duplicate-cluster summary: content hashes appearing >1 time, their
-    * cardinality and canonical (min) id. Null content excluded (see
-    * keepCanonical). */
-  def duplicateClusters(df: DataFrame, contentCol: String, idCol: String): DataFrame =
-    withContentHash(df.where(col(contentCol).isNotNull), contentCol)
-      .groupBy(col("content_hash"))
-      .agg(count(lit(1)).as("dup_count"), min(col(idCol)).as("canonical_id"))
-      .where(col("dup_count") > 1)
 }

@@ -239,9 +239,11 @@ object NearDup {
     "selectivity ~(1/2^r per band) on non-dup content) or raise maxCandidatePairs deliberately"
 
   /** The same candidate-volume guard, unmemoized, for a caller that
-    * already holds its band rows materialized (the streaming gate). */
+    * already holds its band rows materialized (the streaming gate).
+    * Returns the exact candidate volume: Σ m·(m−1)/2 over the
+    * (band, bucket) groups. */
   private[graft] def requireBandVolume(banded: DataFrame, k: Int = 96, b: Int = 24,
-                                       maxCandidatePairs: Long = 100000000L): Unit =
+                                       maxCandidatePairs: Long = 100000000L): Long =
     graft.operators.Similarity.requireBandVolume(banded, Seq("band", "bucket"),
       maxCandidatePairs, bandGuardWhat(k, b), bandGuardRemedy)
 

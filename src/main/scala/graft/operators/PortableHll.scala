@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Portable HyperLogLog — the ENGINE-INDEPENDENT distinct-count
-  * sketch, companion to `Sketches` (which stores Spark's native
-  * Datasketches binaries) and `CountMin` (frequencies).
+  * sketch, companion to `CountMin` (frequencies).
   *
   * The native `hll_sketch_agg` binaries are compact and fast but
   * engine-private: only Datasketches-compatible readers can merge or

@@ -54,18 +54,4 @@ object SemDedup {
           (col("an") * col("bn"))).as("cosine"))
       .where(col("cosine") >= threshold)
   }
-
-  /** The dedup decision: one survivor per semantic-duplicate
-    * component (pairs → connected components → keep the smallest
-    * vec_id), everything else listed for removal. Composes the
-    * library's own Components step, same as the MinHash pipeline. */
-  def survivors(corpus: DataFrame, threshold: Double,
-                k: Int = 8, iters: Int = 2): DataFrame = {
-    val p = pairs(corpus, threshold, k, iters)
-      .select(col("a_id").as("d1"), col("b_id").as("d2"))
-    val losers = Components.connectedComponents(p)
-      .where(col("id") =!= col("comp"))
-      .select(col("id").as("vec_id"))
-    corpus.join(losers, Seq("vec_id"), "left_anti")
-  }
 }

@@ -696,7 +696,7 @@ object Similarity {
     * turning that into a crash of the GUARD would be the wrong loud. */
   private[graft] def requireBandVolume(bandTable: DataFrame, groupCols: Seq[String],
                                        budget: Long, what: String,
-                                       remedy: String): Unit = {
+                                       remedy: String): Long = {
     val volRow = bandTable.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("m")).where(col("m") > 1)
       .agg(sum((col("m").cast("decimal(38,0)") * (col("m") - 1)) / 2).as("vol"))
@@ -708,6 +708,7 @@ object Similarity {
         s"$what: banded candidate volume $vol pairs (exact, from the bucket count " +
           s"frame) exceeds maxCandidatePairs=$budget — this parameter regime is " +
           s"degenerate for this corpus density; $remedy")
+    vol.longValueExact
   }
 
   /** Guard + materialize in ONE pass (the r10 verdict's fuse): the

@@ -3,15 +3,15 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Byte-pair-encoding tokenizer training primitives, split along the
-  * line that matters at 100 TB: the CORPUS-sized work (word
-  * frequency dictionary, weighted symbol-pair counts) is
-  * distributed; the MERGE LOOP runs driver-side over the collected
-  * dictionary — which is vocabulary-sized (millions of distinct
-  * words after the frequency cap), not corpus-sized. That split is
-  * how production tokenizer training actually works: one pass over
-  * the corpus builds the dict, training never touches the corpus
-  * again.
+/** Byte-pair-encoding tokenizer primitives, split along the line
+  * that matters at 100 TB: the CORPUS-sized work (word frequency
+  * dictionary, weighted symbol-pair counts) is distributed here; the
+  * MERGE LOOP that turns them into a merge table runs driver-side
+  * over the collected dictionary — which is vocabulary-sized
+  * (millions of distinct words after the frequency cap), not
+  * corpus-sized — and the encoders take that table as a model
+  * parameter. One pass over the corpus builds the dict; training
+  * never touches the corpus again.
   *
   * Word model: whitespace tokens, each word a sequence of
   * code-point symbols plus a terminal `</w>` marker (the Sennrich
@@ -76,31 +76,6 @@ object Bpe {
         col("sym"))
       .select(col("freq"), col("a"), element_at(col("sym"), col("i") + 2).as("b"))
       .groupBy(col("a"), col("b")).agg(sum(col("freq")).as("cnt"))
-  }
-
-  /** Driver-side exact BPE training over a collected dictionary:
-    * `numMerges` iterations of (count pairs, merge the argmax pair
-    * everywhere). Ties break (count desc, pair lexicographic asc).
-    * Cost is O(numMerges × Σ word lengths of the DICT) — the dict is
-    * the `maxWords`-capped vocabulary, so this is model-training
-    * cost, not data cost. Returns merges in rank order. */
-  def train(dict: Seq[(String, Long)], numMerges: Int): Seq[(String, String)] = {
-    require(numMerges >= 0, "numMerges must be non-negative")
-    var words: Seq[(Array[String], Long)] =
-      dict.map { case (w, f) => (symbols(w), f) }
-    val merges = Seq.newBuilder[(String, String)]
-    var k = 0
-    while (k < numMerges) {
-      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      for ((sym, f) <- words; i <- 0 until sym.length - 1)
-        counts.updateWith((sym(i), sym(i + 1)))(c => Some(c.getOrElse(0L) + f))
-      if (counts.isEmpty) return merges.result()
-      val best = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }._1
-      merges += best
-      words = words.map { case (sym, f) => (mergeOnce(sym, best), f) }
-      k += 1
-    }
-    merges.result()
   }
 
   /** One merge applied left-to-right greedily (the standard BPE

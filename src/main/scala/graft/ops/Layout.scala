@@ -18,17 +18,13 @@ import org.apache.spark.sql.functions._
   * ~√files vs its dedicated linear sort, in exchange for the second
   * dimension going from no pruning to √-scale pruning.
   *
-  * Division of labor with `sources.Sinks.writeZOrdered` (the GENERAL
-  * sink): that path spends a GK-quantile pass to rank-bucket
-  * arbitrary numeric/date columns before interleaving — right when
-  * value distributions are unknown. This module is the EXACT-KEY
-  * layer underneath: `zKey2` interleaves keys already in [0, 2^bits)
-  * (ids, enum codes, day numbers, `rankBits` output) with no stats
-  * pass, as pure shift/mask column arithmetic — the classic
-  * magic-bits construction, no UDF, fully inside whole-stage
-  * codegen, and therefore carrying an exact cross-engine oracle
-  * (q_zorder) the quantile-ranked form cannot (approxQuantile cuts
-  * are engine-private).
+  * This module builds EXACT keys: `zKey2` interleaves keys already
+  * in [0, 2^bits) (ids, enum codes, day numbers, `rankBits` output)
+  * with no stats pass, as pure shift/mask column arithmetic — the
+  * classic magic-bits construction, no UDF, fully inside
+  * whole-stage codegen, and therefore carrying an exact cross-engine
+  * oracle (q_zorder) that a quantile-ranked key cannot
+  * (approxQuantile cuts are engine-private).
   */
 object Layout {
 
@@ -67,8 +63,8 @@ object Layout {
     * this general form serves (q_zorder3 carries the exact 3-dim
     * cross-engine oracle). No magic-bits constants exist for general
     * n, so the interleave unrolls the bits explicitly — still pure
-    * shift/mask column arithmetic inside whole-stage codegen (the
-    * `Sinks.writeZOrdered` construction), n·bits OR-terms instead of
+    * shift/mask column arithmetic inside whole-stage codegen,
+    * n·bits OR-terms instead of
     * 4 masked doublings; Catalyst's subexpression elimination keeps
     * the range check per key, not per bit. The bit budget shrinks
     * with n (n·bits ≤ 63): more dimensions = coarser per-dimension
@@ -101,22 +97,5 @@ object Layout {
     if (hi == lo) lit(0L)
     else least(lit(buckets - 1),
       floor((col(c).cast("double") - lit(lo)) / lit(hi - lo) * buckets).cast("long"))
-  }
-
-  /** Write `df` Z-ordered on exact keys (a, b) — the no-stats-pass
-    * twin of `Sinks.writeZOrdered` (see class doc): range-partition
-    * by the z-key into `numFiles` output files, sort within each
-    * partition, write parquet. Each file then covers one contiguous
-    * z-range = one tight (a, b) rectangle, which is exactly what
-    * min/max file skipping needs. The z-key is dropped from the
-    * files — layout is physical, the schema stays clean. */
-  def writeZOrdered(df: DataFrame, path: String, a: Column, b: Column,
-                    bits: Int = 16, numFiles: Int = 32): Unit = {
-    require(numFiles >= 1, "numFiles must be positive")
-    df.withColumn("__z", zKey2(a, b, bits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
   }
 }

@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
   * order key + an in-partition sort: Spark's range partitioner
   * samples cut-points, every shard sorts independently, and shard i
   * holds order-contiguous rows entirely BELOW shard i+1 — a total
-  * order at any scale with no serial step, the same mechanism as
-  * `Sinks.writeRangeClustered`. Readers stream shards in file order
+  * order at any scale with no serial step. Readers stream shards in file order
   * and see one global shuffled sequence.
   */
 object Shuffle {

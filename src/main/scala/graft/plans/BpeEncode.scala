@@ -18,14 +18,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Merge application is the SEQUENTIAL chain (merge k applied
   * everywhere over the state left by merges 1..k-1) — by
-  * construction identical to the training-time evolution in
-  * `Bpe.train`, so dictionary words segment exactly as trained
+  * construction identical to the training-time evolution of the
+  * BPE merge loop, so dictionary words segment exactly as trained
   * (spec-pinned). For OUT-OF-DICTIONARY words the segmentation may
   * differ from reference BPE encoders (e.g. HuggingFace) that
   * iteratively re-scan for the lowest-rank applicable merge after
   * each application: when the same symbol string is producible by
   * two different merges, the sequential chain can pick the other
-  * one, so OOV token counts are self-consistent with `Bpe.train`
+  * one, so OOV token counts are self-consistent with the merge loop
   * but not guaranteed identical to external tokenizers. Cost is
   * O(merges × word length) per word; the
   * merge table is a model parameter carried in the expression (task

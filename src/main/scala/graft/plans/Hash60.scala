@@ -1,12 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd 60-bit md5 hash: the first 60 bits of md5(s) as a
@@ -62,85 +60,4 @@ case class Hash60(child: Expression) extends UnaryExpression {
 object Hash60 {
   /** Column form for direct library use (no registration needed). */
   def hash60(c: Column): Column = GraftSqlShim.column(Hash60(GraftSqlShim.expression(c)))
-}
-
-/** Session extension registering graft's native functions for SQL use:
-  * `spark.sql.extensions=graft.plans.GraftExtensions` or
-  * `GraftExtensions.register(spark)` at runtime. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.descriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => ThresholdLevenshteinRule)
-  }
-}
-
-object GraftExtensions {
-  private[graft] val hash60Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_hash60"),
-    new ExpressionInfo(classOf[Hash60].getName, "graft_hash60"),
-    (children: Seq[Expression]) => Hash60(children.head)
-  )
-
-  private def intArg(e: Expression, fn: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal INT argument, got $other")
-  }
-
-  private[graft] val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    hash60Descriptor,
-    QDotLong.descriptor,
-    (FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (children: Seq[Expression]) =>
-        ShingleHashes(children.head, intArg(children(1), "graft_shingle_hashes"))),
-    (FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      (children: Seq[Expression]) =>
-        MinHashSig(children.head, intArg(children(1), "graft_minhash_sig"))),
-    (FunctionIdentifier("graft_band_buckets"),
-      new ExpressionInfo(classOf[BandBuckets].getName, "graft_band_buckets"),
-      (children: Seq[Expression]) => BandBuckets(children.head,
-        intArg(children(1), "graft_band_buckets"), intArg(children(2), "graft_band_buckets"))),
-    (FunctionIdentifier("graft_floor_log2"),
-      new ExpressionInfo(classOf[FloorLog2].getName, "graft_floor_log2"),
-      (children: Seq[Expression]) => FloorLog2(children.head)),
-    (FunctionIdentifier("graft_simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash60"),
-      (children: Seq[Expression]) => SimHash60(children.head)),
-    (FunctionIdentifier("graft_sign_bands"),
-      new ExpressionInfo(classOf[SignBands].getName, "graft_sign_bands"),
-      (children: Seq[Expression]) => SignBands(children.head,
-        intArg(children(1), "graft_sign_bands"), intArg(children(2), "graft_sign_bands"),
-        intArg(children(3), "graft_sign_bands"))),
-    (FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (children: Seq[Expression]) => JaroWinkler(children.head, children(1))),
-    (FunctionIdentifier("graft_hilbert_key2"),
-      new ExpressionInfo(classOf[HilbertKey2].getName, "graft_hilbert_key2"),
-      (children: Seq[Expression]) => HilbertKey2(children.head, children(1),
-        intArg(children(2), "graft_hilbert_key2"))),
-    (FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children.head)),
-    (FunctionIdentifier("graft_strip_accents"),
-      new ExpressionInfo(classOf[StripAccents].getName, "graft_strip_accents"),
-      (children: Seq[Expression]) => StripAccents(children.head)),
-    (FunctionIdentifier("graft_deflate_size"),
-      new ExpressionInfo(classOf[DeflateSize].getName, "graft_deflate_size"),
-      (children: Seq[Expression]) => DeflateSize(children.head)),
-    (FunctionIdentifier("graft_damerau"),
-      new ExpressionInfo(classOf[DamerauLevenshtein].getName, "graft_damerau"),
-      (children: Seq[Expression]) => DamerauLevenshtein(children.head, children(1)))
-  )
-
-  /** Runtime registration on an existing session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    descriptors.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(ThresholdLevenshteinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ThresholdLevenshteinRule
-  }
 }

@@ -2,10 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlShim
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -69,10 +68,4 @@ case class QDotLong(left: Expression, right: Expression) extends BinaryExpressio
 object QDotLong {
   def qdot(a: Column, b: Column): Column =
     GraftSqlShim.column(QDotLong(GraftSqlShim.expression(a), GraftSqlShim.expression(b)))
-
-  private[graft] val descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_qdot"),
-    new ExpressionInfo(classOf[QDotLong].getName, "graft_qdot"),
-    (children: Seq[Expression]) => QDotLong(children.head, children(1))
-  )
 }

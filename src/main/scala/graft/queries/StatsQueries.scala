@@ -1312,7 +1312,7 @@ private[graft] object StatsQueries {
         |  count(DISTINCT CAST(ts AS DATE)) AS n_days
         |FROM events WHERE user_id IS NOT NULL GROUP BY 1""".stripMargin),
     // ---- sketches & stubs. The native-Datasketches approximate
-    // distinct path (operators.Sketches / approx_count_distinct) is
+    // distinct path (hll_sketch_agg / approx_count_distinct) is
     // deliberately NOT registered: its sketch bytes are
     // engine-private, so it can never carry a cross-engine oracle —
     // its accuracy is spec-bounded instead (SketchSpec: estimate

@@ -1222,7 +1222,7 @@ private[graft] object TextQueries {
     // ---- BPE training statistics: frequency-weighted adjacent
     // symbol-pair counts over the corpus word dictionary (the
     // distributed half of tokenizer training; the merge loop is
-    // local over the vocab-sized dict — ops.Bpe.train) ----
+    // local over the vocab-sized dict) ----
     QuerySpec("q_bpe_pairs", (s, dir) => {
       graft.ops.Bpe.pairCounts(graft.ops.Bpe.wordFreqs(Tables.documents(s, dir), "text"))
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)

@@ -50,7 +50,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Page pruning happens on the DRIVER against manifest stats
   *    only: a `key BETWEEN a AND b` query opens exactly the pages
   *    whose [key_min, key_max] envelope intersects — the same
-  *    skip-index move as `Layout.writeZOrdered`'s file envelopes,
+  *    skip-index move as a z-ordered write's file envelopes,
   *    applied to raw JSON before any columnar rewrite exists.
   *  - Column pruning skips Jackson field reads for dropped columns;
   *    an empty required schema (`count(*)`) skips JSON parsing

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * holds user ids in [i·width, (i+1)·width)), matching how a real
   * fetcher pages a keyed API (`?from_id=&to_id=`); that is what makes
   * the manifest's [key_min, key_max] envelopes disjoint and page
-  * pruning effective, the same way `Layout.writeZOrdered` makes file
+  * pruning effective, the same way a z-ordered write makes file
   * envelopes tight before measuring pruning.
   *
   * Determinism: page membership is a pure function of user_id, page

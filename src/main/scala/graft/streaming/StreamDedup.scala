@@ -20,7 +20,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * and that one cut frame feeds all three steps. Its band rows
   * (`NearDup.bandRows`, a projection) pass the same candidate-volume
   * guard as `NearDup.minhashRepPairsFrom`, self-join into verified
-  * representative pairs for `Components`, and probe the index — every
+  * representative pairs for `Components` (skipped when the guard
+  * counts no candidate pair), and probe the index — every
   * representative is probed, since whether a set near-dups stored
   * content does not depend on the rest of its batch. The kept
   * documents are cut once more, and the clean rows (a semi-join of
@@ -96,18 +97,25 @@ object StreamDedup {
     val sets = Checkpoints.truncate(
       NearDup.withBandBuckets(NearDup.clusteredSets(NearDup.shingled(b, textCol, n))))
     val bands = NearDup.bandRows(sets)
-    NearDup.requireBandVolume(bands)
     // (1) intra-batch: a representative survives iff it is the min id
-    // of its component (members of a set never survive their rep)
-    val losers = Components.connectedComponents(NearDup.bandPairs(bands, sets, threshold))
-      .where(col("id") =!= col("comp")).select(col("id").as("doc_id"))
-    // (2) cross-corpus: drop anything near-duplicating the index
+    // of its component (members of a set never survive their rep). A
+    // candidate volume of 0 means no two representatives share a
+    // bucket, so there are no pairs and every representative survives.
+    val survivors =
+      if (NearDup.requireBandVolume(bands) == 0L) sets
+      else sets.join(
+        Components.connectedComponents(NearDup.bandPairs(bands, sets, threshold))
+          .where(col("id") =!= col("comp")).select(col("id").as("doc_id")),
+        Seq("doc_id"), "left_anti")
+    // (2) cross-corpus: drop anything near-duplicating the index. The
+    // drop list holds at most the batch's representative ids, so it is
+    // broadcast and the signed set frame is not shuffled for the cut.
     val indexDups = Incremental.nearDupsAgainstIndex(indexRoot, sets, threshold)
       .select(col("new_id").as("doc_id"))
     // (3) the kept documents: surviving representatives, plus every
     // member of the empty set
     val kept = Checkpoints.truncate(
-      sets.join(losers, Seq("doc_id"), "left_anti").join(indexDups, Seq("doc_id"), "left_anti")
+      survivors.join(broadcast(indexDups), Seq("doc_id"), "left_anti")
         .select(explode(when(col("n_shingles") > 0, array(col("doc_id"))).otherwise(col("ids")))
           .as("doc_id"), col("hs"), col("n_shingles"), col("buckets")))
     graft.sources.Sinks.upsertPartitions(

@@ -12,7 +12,7 @@ class BpeSpec extends SparkSpec {
     ("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L))
 
   test("train: the toy corpus produces the textbook first merges with deterministic ties") {
-    val merges = Bpe.train(toyDict, 4)
+    val merges = BpeTraining.train(toyDict, 4)
     assert(merges(0) == (("e", "s"))) // 6+3=9 occurrences
     assert(merges(1) == (("es", "t"))) // 9
     assert(merges(2) == (("est", "</w>"))) // 9
@@ -21,15 +21,15 @@ class BpeSpec extends SparkSpec {
   }
 
   test("train: zero merges, empty dict, and merge exhaustion are safe") {
-    assert(Bpe.train(toyDict, 0).isEmpty)
-    assert(Bpe.train(Seq.empty, 5).isEmpty)
+    assert(BpeTraining.train(toyDict, 0).isEmpty)
+    assert(BpeTraining.train(Seq.empty, 5).isEmpty)
     // single 1-char word: "a</w>" has one pair, then nothing to merge
-    val m = Bpe.train(Seq(("a", 1L)), 10)
+    val m = BpeTraining.train(Seq(("a", 1L)), 10)
     assert(m == Seq(("a", "</w>")))
   }
 
   test("encodeWord reproduces the trained segmentation of dictionary words") {
-    val merges = Bpe.train(toyDict, 6)
+    val merges = BpeTraining.train(toyDict, 6)
     // after enough merges, high-freq words collapse to single tokens
     val enc = Bpe.encodeWord("newest", merges)
     assert(enc.mkString("|").replace("|", "") == "newest" + Bpe.EndOfWord)
@@ -67,7 +67,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("bpeTokenCount: native expression counts trained segments; NULL text -> 0") {
-    val merges = Bpe.train(toyDict, 3) // es, est, est</w>
+    val merges = BpeTraining.train(toyDict, 3) // es, est, est</w>
     val docs = Seq(
       (1L, "newest widest"), // n,e,w,est</w> (4) + w,i,d,est</w> (4)
       (2L, "low"), // l,o,w,</w> = 4
@@ -83,7 +83,7 @@ class BpeSpec extends SparkSpec {
     val emoji = new String(Character.toChars(0x1F389)) // one astral code point
     val word = emoji + "x"
     // driver-side: [emoji, x, </w>] — no lone surrogates
-    val m = Bpe.train(Seq((word, 1L)), 1)
+    val m = BpeTraining.train(Seq((word, 1L)), 1)
     assert(m.head._1 == emoji || m.head._1 == "x" || m.head._2 == "x",
       s"merge symbols must be whole code points: $m")
     assert(Bpe.encodeWord(word, Seq.empty).head == emoji)
@@ -95,7 +95,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("bpeTokenCount stays row-local and codegen-compatible") {
-    val merges = Bpe.train(toyDict, 3)
+    val merges = BpeTraining.train(toyDict, 3)
     val docs = Seq((1L, "low newest")).toDF("doc_id", "text")
     val df = docs.select(Bpe.bpeTokenCount($"text", merges).as("n"))
     assert(!df.queryExecution.executedPlan.toString.contains("Exchange"))

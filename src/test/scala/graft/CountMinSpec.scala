@@ -31,15 +31,6 @@ class CountMinSpec extends SparkSpec {
     assert(est.exists { case (k, e) => e > truth(k) }, "width 8 over 45 keys must collide somewhere")
   }
 
-  test("merge of per-shard sketches equals the sketch of the union") {
-    val a = keys(1L -> 4, 2L -> 2)
-    val b = keys(2L -> 5, 3L -> 1)
-    val merged = CountMin.merge(
-      CountMin.build(a, "k", 4, 64), CountMin.build(b, "k", 4, 64))
-    val whole = CountMin.build(a.unionByName(b), "k", 4, 64)
-    assert(merged.exceptAll(whole).isEmpty && whole.exceptAll(merged).isEmpty)
-  }
-
   test("cell grid is bounded by depth x width regardless of input size") {
     val big = (1L to 5000L).map(k => k -> 1).toDF("k", "one").select($"k")
     val cells = CountMin.build(big, "k", depth = 4, width = 32)

@@ -60,7 +60,7 @@ class FilterPropertySpec extends SparkSpec {
       word <- wordGen
     } yield (dict, k, word)
     forAllSamples(gen) { case (dict, k, word) =>
-      val merges = Bpe.train(dict, k)
+      val merges = BpeTraining.train(dict, k)
       val enc = Bpe.encodeWord(word, merges)
       assert(enc.mkString == word + Bpe.EndOfWord, s"dict=$dict k=$k word=$word")
       assert(enc.nonEmpty && enc.forall(_.nonEmpty))

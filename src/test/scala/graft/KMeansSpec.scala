@@ -94,28 +94,6 @@ class KMeansSpec extends SparkSpec {
     assert(sem == sameCluster)
   }
 
-  test("semdedup survivors drop exactly the non-canonical side of each component") {
-    val cents = KMeans.train(emb, 8, 2)
-    val pairs = SemDedup.pairsWithModel(emb, cents, 0.4)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.nonEmpty, "need at least one pair for the test to bite")
-    val surv = SemDedup.survivors(emb, 0.4, 8, 2)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val all = emb.select("vec_id").collect().map(_.getLong(0)).toSet
-    // union-find the pairs driver-side: survivors = all minus non-min ids
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElse(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val losers = (pairs.flatMap(p => Seq(p._1, p._2)).toSet).filter(x => find(x) != x)
-    assert(surv == all -- losers)
-  }
-
   test("train rejects k larger than the seedable corpus and bad args") {
     intercept[IllegalArgumentException](KMeans.train(emb, 0, 1))
     intercept[IllegalArgumentException](KMeans.train(emb, 8, -1))

@@ -2,7 +2,6 @@ package graft
 
 import graft.ops.Layout
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -84,47 +83,5 @@ class LayoutSpec extends SparkSpec {
     assert(ranked.forall { case (_, r) => r >= 0 && r < 256 })
     assert(ranked.sliding(2).forall { case Array((_, r1), (_, r2)) => r1 <= r2; case _ => true })
     assert(ranked.last._2 == 255 && ranked.head._2 == 0)
-  }
-
-  /** Per-file min/max envelopes of two columns — the stats a parquet
-    * reader's file skipping consults, surfaced as data. */
-  private def fileEnvelopes(path: String, aCol: String, bCol: String) =
-    spark.read.parquet(path)
-      .groupBy(input_file_name().as("file"))
-      .agg(
-        min(col(aCol)).as("a_min"), max(col(aCol)).as("a_max"),
-        min(col(bCol)).as("b_min"), max(col(bCol)).as("b_max"),
-        count(lit(1)).as("rows"))
-
-  test("z-ordered files prune on BOTH dimensions where a linear sort prunes on one") {
-    // uniform 2-d corpus: 100k rows over a 1024x1024 key space
-    val df = spark.range(100000).select(
-      (pmod(hash($"id"), lit(1024))).cast("long").as("x"),
-      (pmod(hash($"id" * 31 + 7), lit(1024))).cast("long").as("y"),
-      $"id".as("payload"))
-    val base = Files.createTempDirectory("graft-layout").toString
-    Layout.writeZOrdered(df, s"$base/z", $"x", $"y", bits = 10, numFiles = 16)
-    df.repartitionByRange(16, $"x").sortWithinPartitions($"x")
-      .write.parquet(s"$base/linear_x")
-
-    // query box: a narrow slice in y (the dimension the linear layout
-    // did NOT sort by)
-    def filesHit(path: String): (Long, Long) = {
-      val env = fileEnvelopes(path, "x", "y").collect()
-      val hit = env.count(r => r.getAs[Long]("b_min") <= 40L && r.getAs[Long]("b_max") >= 20L)
-      (hit.toLong, env.length.toLong)
-    }
-    val (zHit, zTotal) = filesHit(s"$base/z")
-    val (lHit, lTotal) = filesHit(s"$base/linear_x")
-    assert(zTotal == 16 && lTotal == 16)
-    // linear-by-x layout: every file spans all of y -> no pruning
-    assert(lHit == lTotal)
-    // z-ordered: the y-slice intersects only a fraction of files
-    assert(zHit <= zTotal / 2, s"z layout hit $zHit of $zTotal")
-
-    // and the z layout still prunes on x too (both dims bounded):
-    val envZ = fileEnvelopes(s"$base/z", "x", "y").collect()
-    val xHit = envZ.count(r => r.getAs[Long]("a_min") <= 40L && r.getAs[Long]("a_max") >= 20L)
-    assert(xHit <= 16 / 2, s"x-slice hit $xHit files in z layout")
   }
 }

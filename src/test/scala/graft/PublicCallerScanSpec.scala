@@ -5,14 +5,15 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every public member of a top-level object in `src/main` must have a
-  * caller in `src/main`: a use of its name in another file, or a
-  * second use in its own file (comments do not count). Code that only
-  * specs reach is deleted together with those specs; the few members
-  * kept without a production caller are listed below with the reason
-  * they stay. The scan matches names, not symbols, so a member whose
-  * name is also used for something else passes — it finds code with
-  * no caller at all, not every dead overload. */
+  * caller in `src/main`. Code that only specs reach is deleted together
+  * with those specs; the few members kept without a production caller
+  * are listed below with the reason they stay.
+  *
+  * A caller is resolved through the object, not by the member's name
+  * alone (see [[PublicCallerScan]]), so two objects that each define a
+  * member of the same name do not vouch for each other. */
 class PublicCallerScanSpec extends AnyFunSuite {
+  import PublicCallerScan._
 
   /** `Object.member` → why it stays without a `src/main` caller. */
   private val allowlist: Map[String, String] = Map(
@@ -29,12 +30,109 @@ class PublicCallerScanSpec extends AnyFunSuite {
         "object-store publisher for the hard-link default"),
     "ObjectStoreCommitPublisher.rooted" ->
       ("the conditional-PUT publisher the object-store race specs and " +
-        "RacePutMain install through setCommitPublisher"))
+        "RacePutMain install through setCommitPublisher"),
+    "Pipelines.ingest" ->
+      ("the reference ETL's stage 1 (landing JSON → bronze): the library's " +
+        "batch entry point, run by perfbench's etl_batch and PipelineIntegrationSpec"),
+    "Pipelines.flatten" ->
+      ("the reference ETL's stage 2 (bronze → silver): the library's " +
+        "batch entry point, run by perfbench's etl_batch and PipelineIntegrationSpec"),
+    "Pipelines.recap" ->
+      ("the reference ETL's stage 3 (silver → nested daily gold): the library's " +
+        "batch entry point, run by perfbench's etl_batch and PipelineIntegrationSpec"))
 
+  private lazy val sources: Map[String, String] = {
+    val root = Paths.get("src/main")
+    Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map((f: Path) => f.toString -> Files.readString(f)).toMap
+  }
+
+  private lazy val members: Seq[(String, String)] = publicMembers(sources)
+  private lazy val missing: Set[String] = uncalled(sources)
+
+  test("the scan sees the library's public surface") {
+    // a broken parse would find nothing and pass vacuously
+    val names = members.map(_._2).toSet
+    assert(names.size > 400, s"only ${names.size} public members found")
+    assert(Set("Pipelines.ingest", "Sinks.upsertPartitions", "Snapshots.commit").subsetOf(names))
+  }
+
+  test("every public member has a src/main caller or an allowlisted reason") {
+    val outside = missing -- allowlist.keySet
+    assert(outside.isEmpty,
+      s"public members with no src/main caller: ${outside.toSeq.sorted.mkString(", ")} — " +
+        "delete them with the specs that only exercise them, or allowlist them with a reason")
+  }
+
+  test("the allowlist has no stale entries and names a reason for each") {
+    allowlist.toSeq.sorted.foreach { case (name, why) => info(s"$name: $why") }
+    assert(allowlist.values.forall(_.trim.nonEmpty))
+    val stale = allowlist.keySet -- missing
+    assert(stale.isEmpty,
+      s"allowlisted members that now have a caller or no longer exist: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("self-test: callers resolve through the object, not the member name") {
+    def src(body: String) = s"package p\n\n$body\n"
+    val scanned = uncalled(Map(
+      // two objects sharing a member name that nothing calls: a name
+      // match would take each definition for a use of the other
+      "C.scala" -> src("object C {\n  def twin: Int = 1\n}"),
+      "D.scala" -> src("object D {\n  def twin: Int = 2\n  def other: Int = C.hashCode\n}"),
+      "E.scala" -> src(
+        "import p.{Aliased => AL}\nimport p.Wild._\nimport p.Picked.{kept, renamed => rn}\n" +
+          "object E {\n  def run(): Int = AL.viaAlias + viaWildcard + kept + rn + Companion(1) +\n" +
+          "    Picked.twin + D.other\n}"),
+      "F.scala" -> src(
+        "object Aliased {\n  def viaAlias: Int = 1\n  def unused: Int = 2\n}\n" +
+          "object Wild {\n  def viaWildcard: Int = 1\n}\n" +
+          "object Picked {\n  def kept: Int = 1\n  def renamed: Int = 2\n  def twin: Int = 3\n" +
+          "  def notImported: Int = 4\n}"),
+      "G.scala" -> src(
+        "class Companion(x: Int) {\n  def y: Int = Companion.helper(x)\n}\n" +
+          "object Companion {\n  def helper(x: Int): Int = x\n  def apply(x: Int): Int = x\n}\n" +
+          "object Unused {\n  def notImported: Int = 0\n}"),
+      "H.scala" -> src("// Picked.notImported in a comment is no caller\n" +
+        "import p.Picked.{kept}\nobject H {\n  def z: Int = kept + notImported\n}")))
+    assert(scanned.contains("C.twin") && scanned.contains("D.twin"),
+      "objects sharing a member name do not vouch for each other")
+    assert(!scanned.contains("Aliased.viaAlias"), "an import alias resolves to the object")
+    assert(scanned.contains("Aliased.unused"))
+    assert(!scanned.contains("Wild.viaWildcard"), "a wildcard import brings every member")
+    assert(!scanned.contains("Picked.kept") && !scanned.contains("Picked.renamed"),
+      "a selector import (plain or renamed) brings the named members")
+    assert(!scanned.contains("Picked.twin"))
+    assert(scanned.contains("Picked.notImported"),
+      "a bare name in a file that imports other members of the object is no caller")
+    assert(scanned.contains("Unused.notImported"))
+    assert(!scanned.contains("Companion.helper"), "a use in the defining file counts")
+    assert(!scanned.contains("Companion.apply"), "Obj(…) calls apply")
+    assert(!scanned.contains("D.other"))
+  }
+}
+
+/** The caller scan, over a map of file → source text.
+  *
+  * A public member `Obj.m` (a `def`, `val`, `var`, nested `object`,
+  * class or type at the object's top level; overrides are skipped)
+  * has a caller when, with comments blanked:
+  *   - another file names it through the object: `Obj.m` (any package
+  *     prefix), or `A.m` after `import …{Obj => A}`;
+  *   - another file imports the object's members (`Obj._`,
+  *     `Obj.{…, m}`, `Obj.{m => n}`, `Obj.m`) and uses the name (`m`,
+  *     or `n`) outside an import, not as a selection `x.m`;
+  *   - any file calls `Obj(…)`, for `apply`;
+  *   - it is a `main`: the JVM calls it;
+  *   - its own file uses it a second time, as a bare `m` or as
+  *     `Obj.m` — which covers the object's own body and companion
+  *     classes. A use that selects the name from another object
+  *     (`Other.m`) does not count. */
+object PublicCallerScan {
   private val ident = "[A-Za-z_][A-Za-z0-9_]*".r
   private val objectStart = "^(?:private\\[\\w+\\]\\s+|case\\s+)*object\\s+(\\w+)".r
   private val member = ("^  (?:@\\w+\\s+)*(?:final\\s+|implicit\\s+|lazy\\s+)*" +
     "(?:def|val|var|object|case\\s+class|class|trait|type)\\s+([A-Za-z_][A-Za-z0-9_]*)").r
+  private val importStmt = "(?m)^[ \\t]*import\\s+([\\w.]+)(\\{[^}]*\\})?".r
 
   /** The source with comments blanked (newlines kept); string and
     * character literals are kept, so a comment marker inside a string
@@ -71,17 +169,74 @@ class PublicCallerScanSpec extends AnyFunSuite {
     out.toString
   }
 
-  private lazy val sources: Map[String, String] = {
-    val root = Paths.get("src/main")
-    Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      .map((f: Path) => f.toString -> stripComments(Files.readString(f))).toMap
+  /** One file, parsed once: what it imports, and the names its code
+    * (imports blanked) uses bare, selects from a qualifier, or applies. */
+  private final case class Parsed(
+      aliases: Map[String, Set[String]], // object → names it is imported as (itself included)
+      wildcards: Set[String], // objects whose members are all imported
+      picked: Map[String, Map[String, String]], // object → member → local name
+      bare: Map[String, Int], // name → uses not written as a selection `x.name`
+      selected: Set[(String, String)], // (qualifier, name) for every `qualifier.name`
+      applied: Set[String]) { // names followed by `(`
+
+    def selects(obj: String, name: String): Boolean =
+      aliases.getOrElse(obj, Set(obj)).exists(o => selected((o, name)))
+
+    def calls(obj: String): Boolean = aliases.getOrElse(obj, Set(obj)).exists(applied)
+
+    def imports(obj: String, name: String): Option[String] =
+      if (wildcards(obj)) Some(name) else picked.get(obj).flatMap(_.get(name))
+  }
+
+  private def parse(src: String): Parsed = {
+    val stripped = stripComments(src)
+    val aliases = scala.collection.mutable.Map.empty[String, Set[String]]
+    val wildcards = scala.collection.mutable.Set.empty[String]
+    val picked = scala.collection.mutable.Map.empty[String, Map[String, String]]
+    importStmt.findAllMatchIn(stripped).foreach { m =>
+      val (path, selectors) = Option(m.group(2)) match {
+        case Some(braces) =>
+          (m.group(1).stripSuffix("."), braces.drop(1).dropRight(1).split(',').map(_.trim).toSeq)
+        case None =>
+          val p = m.group(1)
+          (p.take(math.max(0, p.lastIndexOf('.'))), Seq(p.drop(p.lastIndexOf('.') + 1)))
+      }
+      val owner = path.split('.').last
+      selectors.filter(_.nonEmpty).foreach { sel =>
+        val (name, local) = sel.split("=>").map(_.trim) match {
+          case Array(n, l) => (n, l)
+          case Array(n) => (n, n)
+        }
+        if (name == "_") wildcards += owner
+        else picked(owner) = picked.getOrElse(owner, Map.empty) + (name -> local)
+        if (name.headOption.exists(_.isUpper) && local != "_")
+          aliases(name) = aliases.getOrElse(name, Set(name)) + local
+      }
+    }
+    val code = importStmt.replaceAllIn(stripped, mm => " " * mm.matched.length)
+    val bare = scala.collection.mutable.Map.empty[String, Int]
+    val selected = scala.collection.mutable.Set.empty[(String, String)]
+    val applied = scala.collection.mutable.Set.empty[String]
+    var prev: Option[scala.util.matching.Regex.Match] = None
+    ident.findAllMatchIn(code).foreach { m =>
+      var j = m.start - 1
+      while (j >= 0 && code(j).isWhitespace) j -= 1
+      if (j < 0 || code(j) != '.') bare(m.matched) = bare.getOrElse(m.matched, 0) + 1
+      else prev.filter(p => code.substring(p.end, m.start).trim == ".")
+        .foreach(p => selected += (p.matched -> m.matched))
+      var k = m.end
+      while (k < code.length && code(k).isWhitespace) k += 1
+      if (k < code.length && code(k) == '(') applied += m.matched
+      prev = Some(m)
+    }
+    Parsed(aliases.toMap, wildcards.toSet, picked.toMap, bare.toMap, selected.toSet, applied.toSet)
   }
 
   /** (file, `Object.member`) for every public member of a top-level object. */
-  private lazy val publicMembers: Seq[(String, String)] =
+  def publicMembers(sources: Map[String, String]): Seq[(String, String)] =
     sources.toSeq.sortBy(_._1).flatMap { case (file, src) =>
       var obj: Option[String] = None
-      src.split("\n").toSeq.flatMap { line =>
+      stripComments(src).split("\n").toSeq.flatMap { line =>
         objectStart.findFirstMatchIn(line) match {
           case Some(m) => obj = Some(m.group(1)); None
           case None =>
@@ -91,39 +246,19 @@ class PublicCallerScanSpec extends AnyFunSuite {
       }
     }
 
-  private lazy val tokenCounts: Map[String, Map[String, Int]] =
-    sources.map { case (file, src) =>
-      file -> ident.findAllIn(src).toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+  /** Every public member of a top-level object that has no caller. */
+  def uncalled(sources: Map[String, String]): Set[String] = {
+    val parsed = sources.map { case (f, s) => f -> parse(s) }
+    def hasCaller(file: String, qualified: String): Boolean = {
+      val Array(obj, name) = qualified.split('.')
+      val own = parsed(file)
+      name == "main" ||
+        own.bare.getOrElse(name, 0) + (if (own.selects(obj, name)) 1 else 0) > 1 ||
+        (name == "apply" && parsed.values.exists(_.calls(obj))) ||
+        parsed.exists { case (f, p) =>
+          f != file && (p.selects(obj, name) || p.imports(obj, name).exists(p.bare.contains))
+        }
     }
-
-  private def hasCaller(file: String, qualified: String): Boolean = {
-    val name = qualified.split('.').last
-    tokenCounts(file).getOrElse(name, 0) > 1 ||
-      tokenCounts.exists { case (f, counts) => f != file && counts.contains(name) }
-  }
-
-  private lazy val uncalled: Set[String] =
-    publicMembers.collect { case (f, q) if !hasCaller(f, q) => q }.toSet
-
-  test("the scan sees the library's public surface") {
-    // a broken parse would find nothing and pass vacuously
-    val names = publicMembers.map(_._2).toSet
-    assert(names.size > 400, s"only ${names.size} public members found")
-    assert(Set("Pipelines.ingest", "Sinks.upsertPartitions", "Snapshots.commit").subsetOf(names))
-  }
-
-  test("every public member has a src/main caller or an allowlisted reason") {
-    val outside = uncalled -- allowlist.keySet
-    assert(outside.isEmpty,
-      s"public members with no src/main caller: ${outside.toSeq.sorted.mkString(", ")} — " +
-        "delete them with the specs that only exercise them, or allowlist them with a reason")
-  }
-
-  test("the allowlist has no stale entries and names a reason for each") {
-    allowlist.toSeq.sorted.foreach { case (name, why) => info(s"$name: $why") }
-    assert(allowlist.values.forall(_.trim.nonEmpty))
-    val stale = allowlist.keySet -- uncalled
-    assert(stale.isEmpty,
-      s"allowlisted members that now have a caller or no longer exist: ${stale.toSeq.sorted.mkString(", ")}")
+    publicMembers(sources).collect { case (f, q) if !hasCaller(f, q) => q }.toSet
   }
 }

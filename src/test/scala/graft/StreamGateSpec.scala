@@ -144,13 +144,15 @@ class StreamGateSpec extends SparkSpec {
   // inside DataFrameReader; reads given a schema launch none
   private def inferring(callSites: Seq[String]) = callSites.filter(_.contains("DataFrameReader"))
 
+  // every tenth row copies its predecessor, as in StreamPipelineBench;
+  // no two distinct texts share a shingle
+  private def page(lo: Long) = docs((lo until lo + 250).map { id =>
+    val src = if (id % 10 == 9) id - 1 else id
+    id -> (0 until 12).map(j => s"w${src}x$j").mkString(" ")
+  }: _*)
+
   test("one 250-row micro-batch launches at most 30 jobs and never infers the index schema") {
     val (idx, clean) = fresh("jobs")
-    // every tenth row copies its predecessor, as in StreamPipelineBench
-    def page(lo: Long) = docs((lo until lo + 250).map { id =>
-      val src = if (id % 10 == 9) id - 1 else id
-      id -> (0 until 12).map(j => s"w${src}x$j").mkString(" ")
-    }: _*)
     gate(page(0), 0, idx, clean)
     val jobs = jobsDuring(gate(page(250), 1, idx, clean))
     info(s"${jobs.size} jobs")
@@ -159,5 +161,14 @@ class StreamGateSpec extends SparkSpec {
     assert(cleanIds(clean).size == 2 * 225)
     // the detector sees an inferring read of the same index
     assert(inferring(jobsDuring(spark.read.parquet(s"$idx/bands"))).nonEmpty)
+  }
+
+  test("a micro-batch with no near-dups launches no connected-components job") {
+    val (idx, clean) = fresh("no-pairs")
+    gate(page(0), 0, idx, clean)
+    val jobs = jobsDuring(gate(page(250), 1, idx, clean))
+    val components = jobs.filter(_.contains("graft.operators.Components"))
+    assert(components.isEmpty, components.mkString("\n---\n"))
+    assert(cleanIds(clean).size == 2 * 225)
   }
 }

@@ -29,7 +29,7 @@ class TrainingOpsSpec extends SparkSpec {
     // 4 deduped content rows + BOTH null rows untouched
     assert(out.count() == 6)
     assert(out.where($"text".isNull).count() == 2)
-    assert(ExactDedup.duplicateClusters(withNulls, "text", "doc_id").count() == 1)
+    assert(out.where($"dup_count" > 1).count() == 1)
   }
 
   test("simhash drops token-less docs instead of assigning a sentinel") {
@@ -110,7 +110,7 @@ class TrainingOpsSpec extends SparkSpec {
 
   test("connectedComponents: empty pair graph yields an empty result") {
     val empty = Seq.empty[(Long, Long)].toDF("d1", "d2")
-    assert(graft.operators.Components.duplicateClusters(empty).count() == 0)
+    assert(graft.operators.Components.connectedComponents(empty).count() == 0)
   }
 
   test("connectedComponents: throws instead of emitting unconverged labels") {
@@ -164,13 +164,12 @@ class TrainingOpsSpec extends SparkSpec {
     // path 7-5-3-1 (diameter 3) + disjoint pair (2,8) + clique (4,6,9)
     val pairs = Seq((5L, 7L), (3L, 5L), (1L, 3L), (2L, 8L), (4L, 6L), (4L, 9L), (6L, 9L))
       .toDF("d1", "d2")
-    val comps = graft.operators.Components.duplicateClusters(pairs)
-      .as[(Long, Long, Boolean)].collect().toMap2b
-    assert(Seq(1L, 3L, 5L, 7L).map(comps(_)._1).forall(_ == 1L))
-    assert(Seq(2L, 8L).map(comps(_)._1).forall(_ == 2L))
-    assert(Seq(4L, 6L, 9L).map(comps(_)._1).forall(_ == 4L))
-    assert(comps(1L)._2 && comps(2L)._2 && comps(4L)._2)
-    assert(!comps(3L)._2 && !comps(8L)._2 && !comps(9L)._2)
+    val comps = graft.operators.Components.connectedComponents(pairs)
+      .as[(Long, Long)].collect().toMap
+    assert(comps.size == 9)
+    assert(Seq(1L, 3L, 5L, 7L).map(comps).forall(_ == 1L))
+    assert(Seq(2L, 8L).map(comps).forall(_ == 2L))
+    assert(Seq(4L, 6L, 9L).map(comps).forall(_ == 4L))
   }
 
   implicit private class TupleMapOps(arr: Array[(Long, Long, Boolean)]) {
@@ -186,8 +185,9 @@ class TrainingOpsSpec extends SparkSpec {
     ).toDF("doc_id", "text"))
     val viaReps = NearDup.minhashDuplicateClusters(corpus, "text", 3, 0.5)
       .as[(Long, Long, Boolean)].collect().toMap2b
-    val viaPairs = graft.operators.Components.duplicateClusters(
+    val viaPairs = graft.operators.Components.connectedComponents(
         NearDup.minhashNearDupPairs(corpus, "text", 3, 0.5))
+      .select($"id", $"comp", $"id" === $"comp")
       .as[(Long, Long, Boolean)].collect().toMap2b
     assert(viaReps == viaPairs)
     assert(viaReps(6L) == ((6L, true)) && viaReps(7L) == ((6L, false)))

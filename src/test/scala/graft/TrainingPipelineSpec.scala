@@ -102,7 +102,7 @@ class TrainingPipelineSpec extends SparkSpec {
     // dict, count exact tokens with the native expression, pack
     val dict = graft.ops.Bpe.wordFreqs(deduped, "text")
       .as[(String, Long)].collect().toSeq
-    val merges = graft.ops.Bpe.train(dict, 20)
+    val merges = BpeTraining.train(dict, 20)
     val weighted = deduped.select($"doc_id",
       graft.ops.Bpe.bpeTokenCount($"text", merges).as("w"),
       pmod($"doc_id", lit(2)).as("shard"))
