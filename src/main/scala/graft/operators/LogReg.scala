@@ -103,17 +103,4 @@ object LogReg {
     import spark.implicits._
     ("intercept" +: features).zip(w.toSeq).toDF("term", "weight")
   }
-
-  /** Score a frame with a trained model: adds `scoreCol` (the
-    * algebraic-sigmoid probability) — one narrow projection, the
-    * corpus never shuffles. */
-  def score(df: DataFrame, w: Array[Double], features: Seq[String],
-            scoreCol: String = "score"): DataFrame = {
-    require(w.length == features.length + 1,
-      s"LogReg.score: ${w.length} weights for ${features.length} features (+intercept)")
-    val z = features.zipWithIndex.foldLeft(lit(w(0))) { case (acc, (f, j)) =>
-      acc + lit(w(j + 1)) * col(f).cast("double")
-    }
-    df.withColumn(scoreCol, lit(0.5) + lit(0.5) * (z / (lit(1.0) + abs(z))))
-  }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.TextFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,30 +33,11 @@ object SimHash {
   val SelBlocks = 3
   private val BlockBits = Bits / Blocks
 
-  /** 60-bit simhash over distinct tokens: bit i is set iff the count
-    * of tokens with bit i set exceeds half the token count. */
-  def simhash(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val toks = array_distinct(TextFunctions.tokens(text))
-    val hashes = transform(toks, t => TextFunctions.hash60(t))
-    // per bit: #tokens with bit set vs cleared; set ⇔ sum(±1) >= 0.
-    // Bit index is a compile-time constant, so this unrolls to 60
-    // codegen'd when-expressions rather than a lambda over bits.
-    val bitVals = (0 until Bits).map { i =>
-      when(
-        aggregate(hashes, lit(0L),
-          (acc, h) => acc + when(shiftright(h, i).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)) >= 0L,
-        lit(1L << i)
-      ).otherwise(lit(0L))
-    }
-    bitVals.reduce(_ + _)
-  }
-
   /** doc_id + simhash fingerprint.
     *
     * Physical shape: ONE native codegen'd expression per document
     * (graft.plans.SimHash60) — a narrow projection, no explode, no
-    * groupBy exchange. Bit-compatible with the column-level
-    * `simhash()` form (kept for composability) and the DuckDB oracle;
+    * groupBy exchange. Bit-compatible with the DuckDB oracle;
     * round 1's explode → 60-column sum aggregate shape paid a
     * 60-expression Janino compile plus a full corpus-token shuffle.
     * Null-text docs are dropped (no comparable content ⇒ no

@@ -122,8 +122,4 @@ object BoundedMemo {
     get(spark, kind, subKey).getOrElse {
       put(spark, kind, Slot(subKey, build, persisted = false))
     }
-
-  /** Test/bench hook: number of live memo kinds for a session. */
-  private[graft] def sizeFor(spark: SparkSession): Int =
-    sessions.synchronized { Option(sessions.get(spark)).map(_.size).getOrElse(0) }
 }

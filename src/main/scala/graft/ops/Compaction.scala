@@ -64,16 +64,4 @@ object Compaction {
         when(small, lit("compact")).otherwise(lit("keep")).as("action"),
         when(small, floor(prior / targetBytes).cast("long")).as("bin_id")): _*)
   }
-
-  /** Execute one table-partition's plan against real parquet files:
-    * read each bin's files and rewrite them as ONE file per bin
-    * (coalesce inside a per-bin write). Provided for completeness of
-    * the story — the planner is the tested contract; execution is a
-    * thin loop over bins, each a narrow read→write. */
-  def rewriteBin(spark: org.apache.spark.sql.SparkSession,
-                 paths: Seq[String], outDir: String, binId: Long): Unit = {
-    require(paths.nonEmpty, "rewriteBin: empty bin")
-    spark.read.parquet(paths: _*).coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/bin=$binId")
-  }
 }

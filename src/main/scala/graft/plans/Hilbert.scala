@@ -59,26 +59,6 @@ object HilbertImpl {
     }
     d
   }
-
-  /** Inverse walk d → (x, y) — provided for completeness and as the
-    * independent round-trip check the spec uses. */
-  def d2xy(d: Long, bits: Int): (Long, Long) = {
-    val n = 1L << bits
-    require(d >= 0 && d < n * n, s"hilbert d2xy: d outside [0, ${n * n - 1}]: $d")
-    var x = 0L; var y = 0L; var t = d; var s = 1L
-    while (s < n) {
-      val rx = (t / 2) & 1
-      val ry = (t ^ rx) & 1
-      if (ry == 0) {
-        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
-        val tmp = x; x = y; y = tmp
-      }
-      x += s * rx; y += s * ry
-      t /= 4
-      s <<= 1
-    }
-    (x, y)
-  }
 }
 
 case class HilbertKey2(left: Expression, right: Expression, bits: Int)

@@ -13,11 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * as graft.plans.ShingleImpl), md5-hash each first-seen token, vote
   * each of the 60 bits ±1, fold the bit signs into the fingerprint.
   *
-  * Bit-compatible with the composed form in
-  * graft.operators.SimHash.simhash (and therefore with the DuckDB
-  * oracle): the per-token hash is Hash60Impl.hash = first 60 bits of
-  * md5 (the `conv(substring(md5(t),1,15),16,10)` identity), bit i of
-  * the fingerprint is set iff #tokens-with-bit-set ≥ #tokens-with-bit
+  * Bit-compatible with the DuckDB oracle's composed simhash: the
+  * per-token hash is Hash60Impl.hash = first 60 bits of md5 (the
+  * `conv(substring(md5(t),1,15),16,10)` identity), bit i of the
+  * fingerprint is set iff #tokens-with-bit-set ≥ #tokens-with-bit
   * -cleared. The ONLY divergence is token dedup identity: the composed
   * form dedups on the token string, this one on the full 128-bit md5
   * digest — a within-document md5 collision (≈2⁻¹²⁸) would differ.

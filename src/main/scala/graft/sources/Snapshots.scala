@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** Versioned-snapshot table layout — the minimal lakehouse commit
   * protocol (Iceberg/Delta's core idea) from plain parquet + an
-  * atomic manifest swap, with time travel, rollback, optimistic
-  * concurrency, and vacuum.
+  * atomic manifest swap, with time travel, rollback and optimistic
+  * concurrency.
   *
   * Layout:
   * {{{
@@ -32,27 +32,21 @@ import scala.jdk.CollectionConverters._
   * file list (the object-store point: LIST on a 100 TB prefix is
   * the operation that doesn't scale; manifests make reads O(files
   * actually live)). Appends write only new files; overwrites write
-  * new files and drop references (old bytes stay until `vacuum`,
-  * which is what makes time travel free). The publish step is the
+  * new files and drop references (old bytes stay, which is what
+  * makes time travel free). The publish step is the
   * one storage-dependent piece and lives behind [[CommitPublisher]]:
   * hard-link no-clobber by default (single-filesystem), a
   * conditional-PUT adapter on S3-style stores (HTTP 412 maps to the
   * same EEXIST signal — the spec proves the protocol against the
   * staged conditional-PUT publisher [[ObjectStoreCommitPublisher]]
   * with racing writers in separate threads and separate JVMs).
-  * Schema evolution is ADDITIVE plus the explicit metadata-only
-  * verbs [[rename]] (same id, new name), [[drop]] (retire the id;
-  * rebirth mints a fresh one with NULL history), and [[widen]]
-  * (lossless type widening; old files upcast at scan), plus the one
-  * deliberately NON-metadata verb [[retypeRewrite]] (lossy retype as
-  * an explicit round-trip-guarded whole-table COW rewrite) — and
-  * ENFORCED: each manifest records its writer schema WITH stable
-  * column ids, an append that retypes or drops a parent column
-  * fails loud naming the offense and the right verb
-  * ([[requireAdditive]]), and the read path reconciles the full
-  * history across old files; `read(mergeSchema =
-  * true)` resolves the additive union schema. Manifests CAN
-  * carry
+  * Schema evolution is ADDITIVE, plus one explicit verb,
+  * [[retypeRewrite]] (a retype as a round-trip-guarded whole-table
+  * COW rewrite) — and ENFORCED: each manifest records its writer
+  * schema, an append that retypes or drops a parent column fails
+  * loud naming the offense ([[requireAdditive]]), and
+  * `read(mergeSchema = true)` resolves the additive union schema.
+  * An overwrite may reshape the table. Manifests CAN carry
   * per-file integral column envelopes (`commit(statsCols = …)`), and
   * `readPruned` turns them into zone-map file skipping — skipped
   * only on provably disjoint envelopes, so pruning is never lossy.
@@ -79,16 +73,15 @@ object Snapshots {
   // header lines are exactly these keys — file PATHS may legally
   // contain '=' (hive-style bin=0/ dirs), so discrimination must be
   // by known key, never by "contains a '='"
-  private val HeaderKeys = Seq("version", "parent", "op", "tag", "ts", "schema", "retired")
+  private val HeaderKeys = Seq("version", "parent", "op", "tag", "ts", "schema")
 
   /** Raw file lines of `version`'s manifest: `<path>` optionally
     * followed by tab-separated `<col>=<min>:<max>` integral stats.
-    * Fails loud on a vacuumed-away or never-committed version. */
+    * Fails loud on a never-committed version. */
   private def fileLines(tableDir: String, version: Int): Seq[String] = {
     val p = manifestPath(tableDir, version)
     require(Files.exists(p),
-      s"Snapshots: version $version of $tableDir does not exist " +
-        "(never committed, or its manifest was removed)")
+      s"Snapshots: version $version of $tableDir does not exist (never committed)")
     Files.readAllLines(p).asScala.toSeq
       .filterNot(l => l.startsWith("#") || l.isEmpty)
       .filterNot(l => HeaderKeys.exists(k => l.startsWith(k + "=")))
@@ -139,11 +132,8 @@ object Snapshots {
     // retype/rename would poison the union read; an overwrite replaces
     // every live file and may legitimately reshape the table.
     if (mode == "append" && prev > 0) checkAdditiveAgainst(tableDir, prev, df.schema)
-    // both modes: a new column may never reuse a renamed-away name
-    // (it would alias into the WRONG id under read reconciliation)
-    if (prev > 0) requireNoAliasReuse(tableDir, prev, df.schema)
     // data lands under a nonce'd dir so a racing loser's files never
-    // collide with the winner's; unreferenced ones are vacuum fodder
+    // collide with the winner's, and no manifest ever lists the loser's
     val nonce = java.util.UUID.randomUUID.toString.take(8)
     val dataDir = Paths.get(tableDir, "data", s"c$v-$nonce")
     df.write.parquet(dataDir.toString)
@@ -158,42 +148,10 @@ object Snapshots {
         withBloomParts(df.sparkSession, l, bloomCols, bloomExpectedItems, bloomFpp))
     // append carries the previous version's full lines — stats travel
     // with their files
-    val carried0 = if (mode == "append" && prev > 0) fileLines(tableDir, prev) else Seq.empty
-    // the recorded schema carries stable column ids (parent's by
-    // name, fresh above-max — live AND retired — for new columns)
-    // with the full alias history folded in, so the record is
-    // self-contained across vacuum
-    val parentJson = if (prev > 0) manifestSchema(tableDir, prev) else None
-    val retiredJson = if (prev > 0) manifestRetired(tableDir, prev) else None
-    val recordSchema = foldAliases(tableDir, prev,
-      schemaWithIds(parentJson, df.schema, retiredJson))
-    val carried = rebirthMarked(carried0, recordSchema, parentJson, retiredJson)
+    val carried = if (mode == "append" && prev > 0) fileLines(tableDir, prev) else Seq.empty
     writeManifest(tableDir, v, prev, mode, carried ++ newLines, tag,
-      schema = Some(recordSchema.json))
+      schema = Some(df.schema.json))
     v
-  }
-
-  /** Stamp `null:<id>` markers for REBORN columns — fresh ids whose
-    * name matches a RETIRED column's name history — onto every
-    * carried line: those files predate the rebirth, and whatever
-    * physical bytes they hold under that name belong to the dropped
-    * column, so reads must surface NULL (fresh column, NULL history).
-    * Lines travel whole through later commits, so the markers are as
-    * vacuum-proof as the stats. */
-  private def rebirthMarked(carried: Seq[String],
-                            record: org.apache.spark.sql.types.StructType,
-                            parentJson: Option[String],
-                            retiredJson: Option[String]): Seq[String] = {
-    if (carried.isEmpty || retiredJson.isEmpty) return carried
-    val parentNames = parentJson.map(parseStruct).map(_.fieldNames.toSet).getOrElse(Set.empty)
-    val retiredNames = retiredJson.map(parseStruct)
-      .map(_.fields.flatMap(f => aliasesOf(f).toSet + f.name).toSet)
-      .getOrElse(Set.empty[String])
-    val rebornIds = record.fields
-      .filter(f => !parentNames.contains(f.name) && retiredNames.contains(f.name))
-      .flatMap(colIdOf)
-    if (rebornIds.isEmpty) carried
-    else carried.map(l => (l +: rebornIds.map(id => s"null:$id").toSeq).mkString("\t"))
   }
 
   /** Append per-file Bloom parts (`bloom:<col>=<base64>`) to a
@@ -284,7 +242,7 @@ object Snapshots {
     val pred = box.map { case (c, lo, hi) => col(c).between(lo, hi) }.reduce(_ && _)
     val files = prunedFilesBox(tableDir, v, box)
     if (files.isEmpty) read(spark, tableDir, v).where(pred).limit(0)
-    else reconciledScan(spark, tableDir, v, files).where(pred) // alias-safe (see readPruned)
+    else reconciledScan(spark, tableDir, v, files).where(pred)
   }
 
   /** Point-lookup read with Bloom file skipping: reads only files
@@ -298,7 +256,7 @@ object Snapshots {
     require(v > 0, s"Snapshots: $tableDir has no committed versions")
     val files = prunedFilesEq(tableDir, v, c, value)
     if (files.isEmpty) read(spark, tableDir, v).where(col(c) === value).limit(0)
-    else reconciledScan(spark, tableDir, v, files).where(col(c) === value) // alias-safe
+    else reconciledScan(spark, tableDir, v, files).where(col(c) === value)
   }
 
   /** Order-preserving Long encoding of a collected stat value — the
@@ -361,20 +319,13 @@ object Snapshots {
     * column's NATIVE type and the two resulting values encode
     * through [[encodeStat]] — so date/timestamp/double columns get
     * first-class envelopes (event-time pruning at 100 TB), while the
-    * manifest format stays plain longs. An all-NULL file records no
-    * stat for that column and pruning stays conservative. */
+    * manifest format stays plain longs. An all-NULL or empty file
+    * records no stat for that column and pruning stays conservative. */
   private def statLines(spark: SparkSession,
                         newFiles: Seq[String], statsCols: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions._
-    // the read-back pass also records each file's ROW COUNT
-    // (`rows=<n>` part — no ':' so the min/max parser skips it):
-    // metadata-only COUNT(*) / incremental sizing come free with it
     val aggs = statsCols.flatMap(c => Seq(
-      min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"))) :+
-      count(lit(1)).as("__rows")
-    // explicit file list, not a directory read: optimize's staging dir
-    // nests bin=/dvbake= subdirs whose mixed keys partition discovery
-    // would reject, and the commit path's newFiles are the same set
+      min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
     val rows = spark.read.parquet(newFiles: _*)
       .groupBy(input_file_name().as("__f")).agg(aggs.head, aggs.tail: _*)
       .collect() // one row per new file — listing-sized
@@ -387,11 +338,11 @@ object Snapshots {
           case (Some(a), Some(b)) => Some(s"$c=$a:$b")
           case _ => None
         }
-      } :+ s"rows=${r.getAs[Long]("__rows")}"
+      }
       path -> stats
     }.toMap
-    // a file that produced no groupBy row is EMPTY (zero rows)
-    newFiles.map(f => (f +: byPath.getOrElse(f, Seq("rows=0"))).mkString("\t"))
+    // a file that produced no groupBy row is empty: no envelope
+    newFiles.map(f => (f +: byPath.getOrElse(f, Seq.empty)).mkString("\t"))
   }
 
   /** Typed-bound pruned read: the [[readPruned]] shape for ANY
@@ -412,82 +363,7 @@ object Snapshots {
     val pred = col(c).between(lit(lo), lit(hi))
     val files = prunedFilesEncoded(tableDir, v, c, loE, hiE)
     if (files.isEmpty) read(spark, tableDir, v).where(pred).limit(0)
-    else reconciledScan(spark, tableDir, v, files).where(pred) // alias-safe (see readPruned)
-  }
-
-  /** Per-file row counts of `version`: path → rows, for files whose
-    * commit recorded them (`statsCols` commits do). */
-  def fileRowCounts(tableDir: String, version: Int): Seq[(String, Option[Long])] =
-    fileLines(tableDir, version).map { line =>
-      val parts = line.split('\t')
-      (parts(0), parts.drop(1).find(_.startsWith("rows=")).map(_.substring(5).toLong))
-    }
-
-  /** Metadata-only COUNT(*): the sum of per-file row counts — zero
-    * data IO, the classic stats-pushdown answer. Fails loud when any
-    * live file lacks a recorded count (committed without stats):
-    * guessing would silently undercount. */
-  def countRows(tableDir: String, version: Int = -1): Long = {
-    val v = if (version >= 0) version else currentVersion(tableDir)
-    require(v > 0, s"Snapshots: $tableDir has no committed versions")
-    // MOR deletes subtract exactly: each delete's positions were
-    // computed over the MOR read (already-deleted rows invisible), so
-    // a file's DV counts are disjoint across deletes and additive
-    val dv = dvCounts(tableDir, v)
-    fileRowCounts(tableDir, v).map {
-      case (path, Some(n)) => n - dv.getOrElse(path, 0L)
-      case (path, None) => throw new IllegalArgumentException(
-        s"Snapshots: countRows needs per-file row counts but $path was committed " +
-          "without stats — re-commit with statsCols (or count by scanning)")
-    }.sum
-  }
-
-  /** Metadata-only MIN/MAX of an integral column: folded from the
-    * per-file envelopes — exact, because each envelope is the exact
-    * min/max of its file. Fails loud when any live NON-EMPTY file
-    * lacks the column's stat (empty files constrain nothing). */
-  def minMaxFromStats(tableDir: String, c: String, version: Int = -1): (Long, Long) = {
-    val v = if (version >= 0) version else currentVersion(tableDir)
-    require(v > 0, s"Snapshots: $tableDir has no committed versions")
-    // a DV-masked file's envelope is still a valid BOUND (pruning
-    // stays conservative) but may no longer be ATTAINED — the row
-    // holding the min may be deleted. This verb promises exactness,
-    // so it refuses rather than silently over-reporting the range.
-    val dv = dvCounts(tableDir, v)
-    require(dv.isEmpty,
-      s"Snapshots: minMaxFromStats('$c') on $tableDir@v$v — ${dv.size} live file(s) " +
-        "carry merge-on-read deletion vectors, so recorded envelopes may not be " +
-        "attained; run optimize() to bake the DVs first, or compute by scanning")
-    // typed zone maps store ENCODED envelopes (epoch days/micros,
-    // sign-folded double bits) — valid for pruning, but this verb
-    // returns VALUES and promises exactness, so it stays
-    // integral-only; a record schema that knows better refuses loud
-    manifestSchema(tableDir, v).map(parseStruct).foreach { st =>
-      st.fields.find(_.name == c).map(_.dataType).foreach {
-        case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => ()
-        case dt => throw new IllegalArgumentException(
-          s"Snapshots: minMaxFromStats('$c') is integral-only (column is " +
-            s"${dt.catalogString}); typed envelopes serve PRUNING " +
-            "(readPrunedTyped) — compute value min/max by scanning")
-      }
-    }
-    val counts = fileRowCounts(tableDir, v).toMap
-    val envs = fileStats(tableDir, v).flatMap { case (path, stats) =>
-      stats.get(c) match {
-        case Some(mm) => Some(mm)
-        case None if counts.get(path).flatten.contains(0L) => None // empty file
-        case None =>
-          // a stats-commit records every requested column unless the
-          // file's values are all NULL / non-integral — either way
-          // the true min/max is unknowable from metadata
-          throw new IllegalArgumentException(
-            s"Snapshots: minMaxFromStats('$c') — $path carries no envelope for it " +
-              "(committed without that statsCol, or the file has no castable values)")
-      }
-    }
-    require(envs.nonEmpty, s"Snapshots: no '$c' envelopes in version $v (empty table?)")
-    (envs.map(_._1).min, envs.map(_._2).max)
+    else reconciledScan(spark, tableDir, v, files).where(pred)
   }
 
   /** Long-bound → encoded-bound translator for the RAW pruning API:
@@ -538,12 +414,6 @@ object Snapshots {
     require(v > 0, s"Snapshots: $tableDir has no committed versions")
     val files = prunedFiles(tableDir, v, c, lo, hi)
     if (files.isEmpty) read(spark, tableDir, v).where(col(c).between(lo, hi)).limit(0)
-    // reconciledScan, not a raw read: after a rename, pre-rename files
-    // carry the old physical name and a raw read filtered on the
-    // current name would silently drop their rows (r9 advice). Stats
-    // key on physical names, so alias-era files are never skipped
-    // (no stat for the current name -> always kept) — pruning stays
-    // conservative and the predicate applies to the reconciled column.
     else reconciledScan(spark, tableDir, v, files).where(col(c).between(lo, hi))
   }
 
@@ -595,38 +465,21 @@ object Snapshots {
     * same v — the window `commit` itself cannot reopen
     * deterministically). `schema` records the writer schema (json) in
     * the manifest; when None, the parent's record is carried so
-    * schema history survives rollback/optimize/COW rewrites that
+    * schema history survives rollback and the COW rewrites that
     * never change it. */
   private[graft] def writeManifest(tableDir: String, v: Int, parent: Int,
                                    op: String, files: Seq[String],
                                    tag: Option[String] = None,
-                                   schema: Option[String] = None,
-                                   retired: Option[String] = None): Unit = {
+                                   schema: Option[String] = None): Unit = {
     tag.foreach(t => require(!t.contains("\n") && t.nonEmpty, s"bad tag: '$t'"))
     val sch = schema.orElse(if (parent > 0) manifestSchema(tableDir, parent) else None)
     sch.foreach(s => require(!s.contains("\n"), "schema record must be single-line json"))
-    // the retired-column record folds forward like the schema record:
-    // every manifest is self-contained, so vacuum can never expire
-    // the drop history a live read still needs
-    val ret = retired.orElse(if (parent > 0) manifestRetired(tableDir, parent) else None)
-    ret.foreach(s => require(!s.contains("\n"), "retired record must be single-line json"))
     val body = (Seq(s"version=$v", s"parent=$parent", s"op=$op",
       s"ts=${System.currentTimeMillis}") ++
       tag.map(t => s"tag=$t").toSeq ++
-      sch.map(s => s"schema=$s").toSeq ++
-      ret.map(s => s"retired=$s").toSeq ++ files)
+      sch.map(s => s"schema=$s").toSeq ++ files)
       .mkString("", "\n", "\n")
     commitPublisher.publish(manifestPath(tableDir, v), body)
-  }
-
-  /** Recorded RETIRED-column record (json StructType of every column
-    * ever dropped, each field still carrying its column id and alias
-    * history in metadata) — folded forward into every manifest like
-    * the schema record, so it survives vacuum. */
-  def manifestRetired(tableDir: String, version: Int): Option[String] = {
-    val p = manifestPath(tableDir, version)
-    if (!Files.exists(p)) None
-    else headerValue(Files.readAllLines(p).asScala.toSeq, "retired")
   }
 
   /** Recorded writer schema (json) of `version`'s manifest, if any —
@@ -643,8 +496,9 @@ object Snapshots {
     * the carried old files and the new ones disagree under the union
     * read — fail loud naming both types), and no parent column may
     * disappear (a rename looks like drop+add; additive-only evolution
-    * tracks neither — write NULLs for a retired column instead).
-    * Adding new columns is the additive path and passes untouched. */
+    * tracks neither — write NULLs for an unused column instead, or
+    * reshape with an overwrite). Adding new columns is the additive
+    * path and passes untouched. */
   private[graft] def requireAdditive(parent: org.apache.spark.sql.types.StructType,
                                      next: org.apache.spark.sql.types.StructType,
                                      tableDir: String): Unit = {
@@ -654,440 +508,44 @@ object Snapshots {
         throw new IllegalArgumentException(
           s"Snapshots: column '${f.name}' retyped ${pt.catalogString} -> " +
             s"${f.dataType.catalogString} in append to $tableDir — appends are " +
-            "ADDITIVE-only (new columns). Intentional lossless widening is " +
-            "Snapshots.widen() (metadata-only; then append with the wide type); " +
-            "an intentional lossy retype is Snapshots.retypeRewrite() (explicit " +
-            "whole-table COW rewrite, round-trip-guarded); anything else needs " +
-            "an explicit cast into a NEW column or table")
+            "ADDITIVE-only (new columns). An intentional retype is " +
+            "Snapshots.retypeRewrite() (explicit whole-table COW rewrite, " +
+            "round-trip-guarded; then append with the new type); anything else " +
+            "needs an explicit cast into a NEW column or table")
       }
     }
     val dropped = parent.fieldNames.filterNot(next.fieldNames.contains)
     if (dropped.nonEmpty) throw new IllegalArgumentException(
       s"Snapshots: append to $tableDir drops parent column(s) " +
         dropped.mkString("'", "', '", "'") +
-        " — an append may not drop implicitly (keep the column; NULLs are fine). " +
-        "Intentional retirement is Snapshots.drop(), intentional renaming is " +
-        "Snapshots.rename() — both metadata-only verbs that track the column id")
+        " — an append may not drop a column (keep it; NULLs are fine). " +
+        "Reshaping the table is an overwrite commit")
   }
-
-  // ---- column ids: rename-capable schema evolution (r8 item #4) ----
-  //
-  // Every schema record now carries a stable per-column id in the
-  // field metadata (the Iceberg idea: names are labels, ids are
-  // identity). Ids make RENAME a metadata-only commit — same files,
-  // same id, new name — and make the read path reconcile old files'
-  // physical names onto the current name. DROP (r10) retires the id
-  // into the fold-forward retired record, and WIDEN (r10) retypes
-  // losslessly with scan-time upcast; IMPLICIT retype/drop on append
-  // stays rejected-with-message naming the right verb. Scope note:
-  // zone-map
-  // stats and bloom parts key on PHYSICAL column names inside
-  // manifest lines; a rename does not rewrite history, so pruned
-  // reads keep working on files written before the rename only via
-  // their old physical names — readPruned predicates therefore take
-  // the CURRENT name and are documented to skip alias-era stats.
-
-  private val ColIdKey = "graft.col_id"
-  // full alias history of the column id, IN the field metadata of
-  // every schema record (r9 advice, the high item): the id→name
-  // history used to live only in pre-rename manifests, which a
-  // vacuum past the rename point silently expired — after which
-  // pre-rename files' values surfaced as NULL under the current
-  // name. Folding the history forward into each new record makes
-  // every manifest self-contained; the chain walk below survives
-  // only as the upgrade path for records written before the fold.
-  private val AliasKey = "graft.col_aliases"
-  // physical types this column's LIVE files may still hold narrower
-  // than the record type (set by widen(), folded forward like the
-  // alias history — the record stays self-contained across vacuum)
-  private val WidenKey = "graft.col_widened_from"
-
-  private def colIdOf(f: org.apache.spark.sql.types.StructField): Option[Long] =
-    if (f.metadata.contains(ColIdKey)) Some(f.metadata.getLong(ColIdKey)) else None
-
-  private def widenedFrom(f: org.apache.spark.sql.types.StructField): Seq[String] =
-    if (f.metadata.contains(WidenKey)) f.metadata.getStringArray(WidenKey).toSeq
-    else Seq.empty
-
-  private def withWidenedFrom(f: org.apache.spark.sql.types.StructField,
-                              types: Set[String]): org.apache.spark.sql.types.StructField =
-    if (types.isEmpty) f
-    else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(f.metadata).putStringArray(WidenKey, types.toArray.sorted).build())
-
-  /** Erase a column's widen history — for the rewrite verbs that bake
-    * every physical byte to the record type (retypeRewrite): stale
-    * history would route reads through the upcast path for
-    * nothing. */
-  private def clearWidenedFrom(
-      f: org.apache.spark.sql.types.StructField): org.apache.spark.sql.types.StructField =
-    if (!f.metadata.contains(WidenKey)) f
-    else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(f.metadata).remove(WidenKey).build())
-
-  private def aliasesOf(f: org.apache.spark.sql.types.StructField): Seq[String] =
-    if (f.metadata.contains(AliasKey)) f.metadata.getStringArray(AliasKey).toSeq
-    else Seq.empty
-
-  private def withAliases(f: org.apache.spark.sql.types.StructField,
-                          aliases: Set[String]): org.apache.spark.sql.types.StructField =
-    if (aliases.isEmpty) f
-    else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(f.metadata).putStringArray(AliasKey, aliases.toArray.sorted).build())
 
   private def parseStruct(json: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(json)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
 
-  /** Assign column ids for the next schema record: columns sharing a
-    * name with the parent record keep the parent's id (and inherit
-    * its folded alias history); new columns get fresh ids above the
-    * max of every id EVER minted — live or retired, so a reborn name
-    * can never collide with the id it replaced. A parent without ids
-    * (pre-upgrade manifest) initializes ids 1..n — upgrades are one
-    * commit away, never a migration. */
-  private[graft] def schemaWithIds(parentJson: Option[String],
-                                   next: org.apache.spark.sql.types.StructType,
-                                   retiredJson: Option[String] = None)
-      : org.apache.spark.sql.types.StructType = {
-    val pFields: Map[String, org.apache.spark.sql.types.StructField] =
-      parentJson.map(parseStruct)
-        .map(_.fields.flatMap(f => colIdOf(f).map(_ => f.name -> f)).toMap)
-        .getOrElse(Map.empty)
-    val retiredIds: Seq[Long] = retiredJson.map(parseStruct)
-      .map(_.fields.flatMap(colIdOf).toSeq).getOrElse(Seq.empty)
-    var nextId = (pFields.values.flatMap(colIdOf) ++ retiredIds ++ Seq(0L)).max
-    org.apache.spark.sql.types.StructType(next.fields.map { f =>
-      pFields.get(f.name) match {
-        case Some(pf) =>
-          // the widen history folds forward like the alias history:
-          // an append after a widen must keep knowing the old files
-          // hold narrow bytes
-          withWidenedFrom(withAliases(
-            f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata).putLong(ColIdKey, colIdOf(pf).get).build()),
-            aliasesOf(pf).toSet), widenedFrom(pf).toSet)
-        case None =>
-          nextId += 1
-          f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata).putLong(ColIdKey, nextId).build())
-      }
-    })
-  }
-
-  /** id → every name it ever carried, from `fromV`'s FOLDED records
-    * only (live fields' name + alias metadata, plus the retired
-    * record) — the vacuum-safe source: reads exactly one manifest. */
-  private def foldedHistory(tableDir: String, fromV: Int): Map[Long, Set[String]] = {
-    val live = manifestSchema(tableDir, fromV).map(parseStruct)
-      .map(_.fields.toSeq).getOrElse(Seq.empty)
-    val retired = manifestRetired(tableDir, fromV).map(parseStruct)
-      .map(_.fields.toSeq).getOrElse(Seq.empty)
-    (live ++ retired).flatMap { f =>
-      colIdOf(f).map(_ -> (aliasesOf(f).toSet + f.name))
-    }.groupBy(_._1).view.mapValues(_.map(_._2).reduce(_ ++ _)).toMap
-  }
-
-  // manifest files are immutable once published (no-clobber commit
-  // protocol), so a version's id→name history can be memoized
-  // forever: without this, the COW verbs' multiple reconciling scans
-  // each re-walk the ever-growing manifest chain — O(versions²)
-  // metadata reads over a mutation-heavy table's life. Bounded FIFO
-  // (512 table-versions) — entries are tiny maps.
-  private val historyMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[Long, Set[String]]]()
-
-  /** Every name each column id has carried: the folded record of
-    * `fromV` (vacuum-safe, complete for any table whose history was
-    * written by this library version) merged with the manifest chain
-    * walk (the upgrade path for pre-fold records — one small manifest
-    * read per RETAINED version; the walk stopping at a vacuumed
-    * manifest is exactly why the fold exists, and `vacuum` refuses to
-    * create that situation for un-folded history). */
-  private def idNameHistory(tableDir: String, fromV: Int): Map[Long, Set[String]] = {
-    // the commit ts in the key detects a table DELETED AND REBUILT at
-    // the same path (test fixtures do; production tables never) — a
-    // bare (dir, version) key would serve the old table's history
-    val memoKey = s"$tableDir#v$fromV@${commitTimeMillis(tableDir, fromV)}"
-    val hit = historyMemo.get(memoKey)
-    if (hit != null) return hit
-    val computed = idNameHistoryUncached(tableDir, fromV)
-    if (historyMemo.size() > 512) historyMemo.clear() // crude, correct: recompute
-    historyMemo.put(memoKey, computed)
-    computed
-  }
-
-  private def idNameHistoryUncached(tableDir: String, fromV: Int): Map[Long, Set[String]] = {
-    val acc = scala.collection.mutable.Map[Long, Set[String]]()
-    foldedHistory(tableDir, fromV).foreach { case (id, names) =>
-      acc(id) = acc.getOrElse(id, Set.empty) ++ names
-    }
-    var v = fromV
-    while (v > 0 && Files.exists(manifestPath(tableDir, v))) {
-      val lines = Files.readAllLines(manifestPath(tableDir, v)).asScala.toSeq
-      headerValue(lines, "schema").foreach { j =>
-        parseStruct(j).fields.foreach { f =>
-          colIdOf(f).foreach(id => acc(id) = acc.getOrElse(id, Set.empty) + f.name)
-        }
-      }
-      v = headerValue(lines, "parent").map(_.toInt).getOrElse(0)
-    }
-    acc.toMap
-  }
-
-  /** Fold the full id→name history into `st`'s field metadata (alias
-    * arrays), so the record is self-contained without the chain walk.
-    * No-op for fields whose history is a single name. */
-  private def foldAliases(tableDir: String, fromV: Int,
-                          st: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    if (fromV <= 0) return st
-    lazy val hist = idNameHistory(tableDir, fromV)
-    org.apache.spark.sql.types.StructType(st.fields.map { f =>
-      colIdOf(f) match {
-        case Some(id) =>
-          val aliases = hist.getOrElse(id, Set.empty) - f.name ++ aliasesOf(f).toSet
-          withAliases(f, aliases)
-        case None => f
-      }
-    })
-  }
-
-  /** Metadata-only commit that folds the full rename/drop history of
-    * HEAD into a fresh self-contained record — the one-commit upgrade
-    * for tables whose renames predate folded records, and what
-    * `vacuum`'s history guard asks for by name when it refuses. */
-  def foldHistory(tableDir: String): Int = {
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
-    val j = manifestSchema(tableDir, head).getOrElse(throw new IllegalArgumentException(
-      s"Snapshots: version $head of $tableDir carries no schema record — " +
-        "nothing to fold (commit once with this library version first)"))
-    val folded = foldAliases(tableDir, head, parseStruct(j))
-    publishOrConflict(tableDir, head, "fold", fileLines(tableDir, head),
-      schema = Some(folded.json))
-    head + 1
-  }
-
-  /** current name → its historical aliases (old physical names) at
-    * `version`; empty when no live column has ever been renamed. */
-  private def renameAliases(tableDir: String, version: Int): Map[String, Seq[String]] =
-    manifestSchema(tableDir, version) match {
-      case None => Map.empty
-      case Some(j) =>
-        lazy val hist = idNameHistory(tableDir, version)
-        parseStruct(j).fields.flatMap { f =>
-          colIdOf(f).flatMap { id =>
-            val aliases = hist.getOrElse(id, Set.empty) - f.name
-            if (aliases.isEmpty) None else Some(f.name -> aliases.toSeq.sorted)
-          }
-        }.toMap
-    }
-
-  /** A NEW column may not reuse a name some LIVE column id carried
-    * earlier: read reconciliation coalesces a column with its
-    * historical aliases, and a reused name would silently mix two
-    * columns' values. Loud, at commit time, before any bytes land.
-    * A name whose every prior carrier is RETIRED (dropped) is exempt —
-    * that is the rebirth path: the re-added column mints a fresh id
-    * and old files' physical values are masked to NULL via per-file
-    * `null:` markers (see [[drop]] / `rebirthMarked`). */
-  private def requireNoAliasReuse(tableDir: String, prev: Int,
-                                  next: org.apache.spark.sql.types.StructType): Unit =
-    manifestSchema(tableDir, prev).map(parseStruct).foreach { pst =>
-      val pNames = pst.fieldNames.toSet
-      val fresh = next.fieldNames.filterNot(pNames.contains)
-      if (fresh.nonEmpty) {
-        val liveIds = pst.fields.flatMap(colIdOf).toSet
-        val hist = idNameHistory(tableDir, prev)
-        fresh.foreach { n =>
-          hist.collectFirst {
-            case (id, names) if names.contains(n) && liveIds.contains(id) => id
-          }.foreach { id =>
-            throw new IllegalArgumentException(
-              s"Snapshots: new column '$n' reuses a historical name of live column id $id " +
-                s"(renamed away) in $tableDir — rename reconciliation would mix the two " +
-                "columns; pick a fresh name")
-          }
-        }
-      }
-    }
-
-  /** Metadata-only column rename: commits a new version with the SAME
-    * file list and the same column id under the new name. Reads at or
-    * after this version surface the column as `newName` even from
-    * files written under `oldName` (coalesce over the id's aliases);
-    * time travel before it still shows `oldName`. Retype and drop
-    * remain rejected-with-message — rename is the only supported
-    * non-additive evolution, because it is the only one that loses
-    * nothing. */
-  def rename(tableDir: String, oldName: String, newName: String): Int = {
-    require(oldName != newName, s"Snapshots: rename to the same name '$oldName'")
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
-    val j = manifestSchema(tableDir, head).getOrElse(throw new IllegalArgumentException(
-      s"Snapshots: version $head of $tableDir carries no schema record — " +
-        "rename needs one (commit once with this library version first)"))
-    val st = parseStruct(j)
-    require(st.fieldNames.contains(oldName),
-      s"Snapshots: no column '$oldName' in $tableDir (have: ${st.fieldNames.mkString(", ")})")
-    require(!st.fieldNames.contains(newName),
-      s"Snapshots: column '$newName' already exists in $tableDir")
-    val oldId = colIdOf(st(oldName)).getOrElse(throw new IllegalArgumentException(
-      s"Snapshots: column '$oldName' carries no column id (pre-upgrade record) — " +
-        "commit once with this library version first"))
-    idNameHistory(tableDir, head).collectFirst {
-      case (id, names) if id != oldId && names.contains(newName) => id
-    }.foreach { id =>
-      throw new IllegalArgumentException(
-        s"Snapshots: '$newName' was a historical name of column id $id — reusing it " +
-          "would corrupt rename reconciliation; pick a fresh name")
-    }
-    val renamed = org.apache.spark.sql.types.StructType(
-      st.fields.map(f =>
-        if (f.name == oldName)
-          // the alias history rides IN the record (fold-forward): the
-          // read path never needs the pre-rename manifest again
-          withAliases(f.copy(name = newName), aliasesOf(f).toSet + oldName)
-        else f))
-    publishOrConflict(tableDir, head, "rename", fileLines(tableDir, head),
-      schema = Some(foldAliases(tableDir, head, renamed).json))
-    head + 1
-  }
-
-  /** Metadata-only column DROP (r9 verdict item #5): commits a new
-    * version with the SAME file list, the schema record minus the
-    * column, and the column's id+alias history appended to the
-    * RETIRED record (folded forward into every later manifest, so the
-    * history survives vacuum). Reads at or after this version project
-    * the column out of old files; time travel before it still shows
-    * it. Re-adding the same NAME later is allowed and mints a FRESH
-    * id — never aliasing the dropped one — with the old files'
-    * physical values masked to NULL (per-file `null:<id>` manifest
-    * markers written by the re-adding commit), so the reborn column
-    * has NULL history by construction. Retype remains
-    * rejected-with-message ([[requireAdditive]]): it is the one
-    * evolution verb that would poison the union read. */
-  def drop(tableDir: String, name: String): Int = {
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
-    val j = manifestSchema(tableDir, head).getOrElse(throw new IllegalArgumentException(
-      s"Snapshots: version $head of $tableDir carries no schema record — " +
-        "drop needs one (commit once with this library version first)"))
-    val st = parseStruct(j)
-    require(st.fieldNames.contains(name),
-      s"Snapshots: no column '$name' in $tableDir (have: ${st.fieldNames.mkString(", ")})")
-    require(st.fields.length > 1,
-      s"Snapshots: refusing to drop the last column '$name' of $tableDir")
-    val f = st(name)
-    colIdOf(f).getOrElse(throw new IllegalArgumentException(
-      s"Snapshots: column '$name' carries no column id (pre-upgrade record) — " +
-        "commit once with this library version first"))
-    // the retired field carries its FULL alias history so the name
-    // (and every old name) stays reserved-with-history forever
-    val hist = idNameHistory(tableDir, head)
-    val retiredField = withAliases(f, hist.getOrElse(colIdOf(f).get, Set.empty) - name)
-    val prevRetired = manifestRetired(tableDir, head).map(parseStruct)
-      .map(_.fields).getOrElse(Array.empty[org.apache.spark.sql.types.StructField])
-    val newRetired = org.apache.spark.sql.types.StructType(prevRetired :+ retiredField)
-    val remaining = org.apache.spark.sql.types.StructType(st.fields.filterNot(_.name == name))
-    publishOrConflict(tableDir, head, "drop", fileLines(tableDir, head),
-      schema = Some(foldAliases(tableDir, head, remaining).json),
-      retired = Some(newRetired.json))
-    head + 1
-  }
-
-  /** The lossless type-widening ladder — exactly the conversions the
-    * parquet vectorized reader upcasts at scan time (probed on this
-    * Spark build: byte→short/int/long, short→int/long, int→long,
-    * int→double, float→double). Everything else — including
-    * long→double (loses precision above 2^53) and every narrowing —
-    * is NOT a widening and stays rejected. */
-  private def widensTo(from: org.apache.spark.sql.types.DataType,
-                       to: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    (from, to) match {
-      case (ByteType, ShortType | IntegerType | LongType) => true
-      case (ShortType, IntegerType | LongType) => true
-      case (IntegerType, LongType | DoubleType) => true
-      case (FloatType, DoubleType) => true
-      case _ => false
-    }
-  }
-
-  /** Metadata-only column TYPE WIDENING (the evolution verb after
-    * rename and drop): commits a new version with the SAME file list
-    * and the schema record's field retyped to `to`, recording the old
-    * physical type in the field's fold-forward metadata. Old files
-    * keep their narrow bytes; every live read routes through
-    * [[reconciledScan]], which reads with the RECORD schema so the
-    * parquet reader upcasts narrow physical columns at scan time —
-    * no rewrite, no union mismatch. Only the lossless ladder in
-    * [[widensTo]] is accepted; a narrowing or lossy retype fails loud
-    * naming both types. After widening, appends must use the wide
-    * type ([[requireAdditive]] checks against the record). Zone-map
-    * stats stay valid: integral stats are (Long, Long) envelopes, and
-    * a widened column's old values are unchanged. Time travel before
-    * the widen shows the narrow type, exactly as committed. */
-  def widen(tableDir: String, name: String,
-            to: org.apache.spark.sql.types.DataType): Int = {
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
-    val j = manifestSchema(tableDir, head).getOrElse(throw new IllegalArgumentException(
-      s"Snapshots: version $head of $tableDir carries no schema record — " +
-        "widen needs one (commit once with this library version first)"))
-    val st = parseStruct(j)
-    require(st.fieldNames.contains(name),
-      s"Snapshots: no column '$name' in $tableDir (have: ${st.fieldNames.mkString(", ")})")
-    val f = st(name)
-    colIdOf(f).getOrElse(throw new IllegalArgumentException(
-      s"Snapshots: column '$name' carries no column id (pre-upgrade record) — " +
-        "commit once with this library version first"))
-    if (f.dataType == to) throw new IllegalArgumentException(
-      s"Snapshots: column '$name' already has type ${to.catalogString}")
-    if (!widensTo(f.dataType, to)) throw new IllegalArgumentException(
-      s"Snapshots: ${f.dataType.catalogString} -> ${to.catalogString} is not a " +
-        s"lossless widening for column '$name' — supported: byte->short/int/long, " +
-        "short->int/long, int->long/double, float->double. Narrowings and lossy " +
-        "retypes are Snapshots.retypeRewrite() (explicit whole-table COW rewrite, " +
-        "round-trip-guarded); value-changing transforms need an explicit cast " +
-        "into a NEW column (or a new table)")
-    val widened = org.apache.spark.sql.types.StructType(
-      st.fields.map(g =>
-        if (g.name == name)
-          withWidenedFrom(g.copy(dataType = to),
-            widenedFrom(g).toSet + g.dataType.catalogString)
-        else g))
-    publishOrConflict(tableDir, head, "widen", fileLines(tableDir, head),
-      schema = Some(foldAliases(tableDir, head, widened).json))
-    head + 1
-  }
-
-  /** Explicit LOSSY retype — the whole-table COW rewrite verb behind
-    * the evolution ladder's last door. [[widen]] covers the lossless
-    * ladder metadata-only; everything else a real user eventually
-    * needs (long→int, double→decimal, string→long, …) changes
-    * physical bytes, so it is deliberately a WHOLE-TABLE rewrite you
-    * must name: every live file rewrites with the cast baked in, and
-    * any value the cast cannot ROUND-TRIP raises inside the write
-    * projection (one scan, the manifest never lands, the table is
-    * untouched). The type ladder may be lossy in general; this verb succeeds only when the DATA survives
-    * it exactly — a genuinely value-changing transform (accepting
+  /** Explicit retype — the whole-table COW rewrite verb behind the
+    * additive gate: a retype (int→long, long→int, double→decimal,
+    * string→long, …) changes physical bytes, so it is deliberately a
+    * WHOLE-TABLE rewrite you must name: every live file rewrites with
+    * the cast baked in, and any value the cast cannot ROUND-TRIP
+    * raises inside the write projection (one scan, the manifest never
+    * lands, the table is untouched). The type change may be lossy in
+    * general; this verb succeeds only when the DATA survives it
+    * exactly — a genuinely value-changing transform (accepting
     * truncation) stays out of scope by design: cast into a NEW
     * column, where the loss is visible in the schema.
     *
     * Time travel before the retype shows the old type over the old
     * bytes, exactly as committed (each manifest carries its own
-    * schema record).
-    * The column keeps its id (it is the same column, new physical
-    * type), and its widen history clears — the rewrite bakes every
-    * byte to the record type, so there is no narrow history left to
-    * reconcile. Publishes with the serializable-conflict abort of the
-    * other mutation verbs. Returns the committed version.
+    * schema record). Publishes with the serializable-conflict abort
+    * of the other mutation verbs. Returns the committed version.
     *
-    * Scale: one reconciling scan + one write of the table — the price
-    * the verb's NAME advertises (contrast the metadata-only verbs).
-    * Rewrite parallelism is the scan's; nothing collects. */
+    * Scale: one scan + one write of the table — the price the verb's
+    * NAME advertises. Rewrite parallelism is the scan's; nothing
+    * collects. */
   def retypeRewrite(spark: SparkSession, tableDir: String, name: String,
                     to: org.apache.spark.sql.types.DataType): Int = {
     import org.apache.spark.sql.functions._
@@ -1100,15 +558,8 @@ object Snapshots {
     require(st.fieldNames.contains(name),
       s"Snapshots: no column '$name' in $tableDir (have: ${st.fieldNames.mkString(", ")})")
     val f = st(name)
-    colIdOf(f).getOrElse(throw new IllegalArgumentException(
-      s"Snapshots: column '$name' carries no column id (pre-upgrade record) — " +
-        "commit once with this library version first"))
     if (f.dataType == to) throw new IllegalArgumentException(
       s"Snapshots: column '$name' already has type ${to.catalogString}")
-    if (widensTo(f.dataType, to)) throw new IllegalArgumentException(
-      s"Snapshots: ${f.dataType.catalogString} -> ${to.catalogString} is a LOSSLESS " +
-        s"widening for column '$name' — use Snapshots.widen() (metadata-only, " +
-        "no rewrite) instead of paying a whole-table rewrite")
     // the ANSI cast-rule set: this build runs ANSI-on, where the
     // analyzer would reject a legacy-only cast anyway — gate with the
     // same rules so the refusal is OUR message, not an analysis error
@@ -1144,10 +595,8 @@ object Snapshots {
       .select(cols.map(c => if (c == name) guarded.as(c) else col(c)): _*)
       .write.parquet(outDir.toString)
     val retyped = org.apache.spark.sql.types.StructType(
-      st.fields.map(g =>
-        if (g.name == name) clearWidenedFrom(g.copy(dataType = to)) else g))
-    publishOrConflict(tableDir, head, "retype", listParts(outDir),
-      schema = Some(foldAliases(tableDir, head, retyped).json))
+      st.fields.map(g => if (g.name == name) g.copy(dataType = to) else g))
+    publishOrConflict(tableDir, head, "retype", listParts(outDir), schema = Some(retyped.json))
     head + 1
   }
 
@@ -1155,46 +604,28 @@ object Snapshots {
     * record-less parent (pre-schema-record manifest) checks nothing. */
   private def checkAdditiveAgainst(tableDir: String, parentV: Int,
                                    next: org.apache.spark.sql.types.StructType): Unit =
-    manifestSchema(tableDir, parentV).foreach { pj =>
-      requireAdditive(org.apache.spark.sql.types.DataType.fromJson(pj)
-        .asInstanceOf[org.apache.spark.sql.types.StructType], next, tableDir)
-    }
-
-  /** Per-file rebirth markers of a manifest: `null:<colId>` parts on
-    * a file line mean "this file predates column <colId>; its physical
-    * bytes under that NAME belong to a retired column — read NULL".
-    * Written by the commit that re-adds a dropped name onto every
-    * line it carries; they travel WITH the lines through later
-    * appends/optimize keeps, and rewritten files (which bake the
-    * reconciliation in) simply drop out. Namespaced like `bloom:` —
-    * no '=', so the stat parser skips them. */
-  private def nullMarkerFiles(lines: Seq[String]): Map[Long, Set[String]] =
-    lines.flatMap { l =>
-      val parts = l.split('\t')
-      parts.drop(1).filter(_.startsWith("null:"))
-        .map(p => p.substring(5).toLong -> parts(0))
-    }.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    manifestSchema(tableDir, parentV)
+      .foreach(pj => requireAdditive(parseStruct(pj), next, tableDir))
 
   // ---- merge-on-read deletion vectors (r11 verdict item #1) ----
   //
   // A MOR delete never rewrites data bytes: it records the deleted
   // rows' (file, row-position) pairs in a DV sidecar parquet dir
   // under `<table>/_dv/` and stamps each hit file's manifest line
-  // with a `dv:<count>:<dir>` part (a namespace like `bloom:` /
-  // `null:` — no '=', so the stat parser skips it; count BEFORE path
-  // because a path may legally contain ':'). Lines travel whole
-  // through later appends/optimize keeps, so DVs persist exactly as
-  // long as the files they mask; every live read folds them in at
-  // [[reconciledScan]] — the one seam all reads (full, pruned,
-  // incremental, COW-rewrite) already route through. `optimize`
-  // BAKES DVs (a dv-carrying file always rewrites, clean), `vacuum`
-  // expires DV dirs with the manifests that reference them.
+  // with a `dv:<count>:<dir>` part (a namespace like `bloom:` — no
+  // '=', so the stat parser skips it; count BEFORE path because a
+  // path may legally contain ':'). Lines travel whole through later
+  // appends, so DVs persist exactly as long as the files they mask;
+  // every live read folds them in at [[reconciledScan]] — the one
+  // seam all reads (full, pruned, incremental, COW-rewrite) already
+  // route through. A COW verb that rewrites a dv-carrying file bakes
+  // its DVs into the clean rewritten bytes.
   //
   // Positions are parquet row indices (`_metadata.row_index`) —
   // stable for immutable files, which manifest-referenced files are
   // by protocol. Successive MOR deletes compute hits over the MOR
   // read itself, so a file's DV position sets are DISJOINT across
-  // deletes and per-file counts add exactly (countRows relies on it).
+  // deletes and per-file counts add exactly.
 
   /** DV references of each file in `lines`: path → (count, dvDir)*. */
   private def dvRefs(lines: Seq[String]): Map[String, Seq[(Long, String)]] =
@@ -1207,14 +638,6 @@ object Snapshots {
       }
     }.groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
 
-  /** Every DV sidecar dir `version`'s manifest references. */
-  private[graft] def dvDirs(tableDir: String, version: Int): Set[String] =
-    dvRefs(fileLines(tableDir, version)).values.flatten.map(_._2).toSet
-
-  /** Total DV-deleted row count per file of `version`. */
-  private[graft] def dvCounts(tableDir: String, version: Int): Map[String, Long] =
-    dvRefs(fileLines(tableDir, version)).view.mapValues(_.map(_._1).sum).toMap
-
   // stamped-column names: double-underscored and graft-prefixed so
   // they can never collide with a user column the record schema holds
   private val GFile = "__graft_dv_file"
@@ -1224,7 +647,7 @@ object Snapshots {
     * deleted positions of `dvm`. The deleted side is tiny relative to
     * data (trickle deletes — that is MOR's use case), so it
     * broadcasts below 1M positions; past that the plain join is the
-    * honest shuffle (and `optimize` is overdue). */
+    * honest shuffle (and a COW rewrite of the hit files is overdue). */
   private def applyDv(spark: SparkSession, df: DataFrame,
                       dvm: Map[String, Seq[(Long, String)]]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
@@ -1237,46 +660,30 @@ object Snapshots {
     df.join(deleted, Seq(GFile, GPos), "left_anti")
   }
 
-  /** THE reconciling file scan: every read of live data files —
-    * full reads, pruned reads, incremental reads, and the COW verbs'
-    * rewrite scans — routes through here (r9 advice, the medium item:
-    * the pruned reads used to read selected files RAW and silently
-    * dropped pre-rename rows). Semantics:
-    *   - no evolution history (the overwhelmingly common case): a
-    *     plain parquet read of `files`, byte-for-byte the old plan;
-    *   - rename history: union-schema read + coalesce(current name,
-    *     aliases…) per the recorded schema — each row has a value
-    *     under exactly one name (ids never share names — the
-    *     commit-time alias-reuse gate);
-    *   - drop history: the projection selects only the RECORD's
-    *     fields, so retired columns' physical bytes never surface;
-    *   - rebirth (re-added dropped name): rows from `null:`-marked
-    *     files read NULL for the reborn column — fresh column, NULL
-    *     history — via a codegen'd file-path guard over
-    *     input_file_name(). */
+  /** THE file scan: every read of live data files — full reads,
+    * pruned reads, incremental reads, and the COW verbs' rewrite
+    * scans — routes through here: a plain parquet read of `files`
+    * (with parquet's `mergeSchema` when asked) with the deletion
+    * vectors of those files folded in. `withRowPos` keeps the
+    * stamped (file, row index) columns for the verbs that need them. */
   private[graft] def reconciledScan(spark: SparkSession, tableDir: String, v: Int,
                                     files: Seq[String],
                                     mergeSchema: Boolean = false,
                                     withRowPos: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, regexp_replace, url_decode, when}
+    import org.apache.spark.sql.functions.{col, input_file_name, regexp_replace, url_decode}
     if (files.isEmpty) return spark.emptyDataFrame
-    val allLines = fileLines(tableDir, v)
-    val recordOpt = manifestSchema(tableDir, v).map(parseStruct)
-    val aliases = renameAliases(tableDir, v)
-    val hasRetired = manifestRetired(tableDir, v).isDefined
-    val hasWiden = recordOpt.exists(_.fields.exists(widenedFrom(_).nonEmpty))
-    val markers: Map[Long, Set[String]] =
-      if (recordOpt.isDefined && hasRetired) nullMarkerFiles(allLines)
-      else Map.empty
     // DV fold (merge-on-read deletes): stamp (plain file path, row
-    // index) over the scan, anti-join the deleted positions, then
-    // project. Stamping happens BEFORE any join because
+    // index) over the scan and anti-join the deleted positions.
+    // Stamping happens BEFORE any join because
     // input_file_name()/_metadata resolve only in the scan stage.
     // With no DVs on the requested files (and no withRowPos ask) the
-    // plan is byte-for-byte the old one — the common path pays zero.
+    // plan is a plain parquet scan — the common path pays zero.
     val wanted = files.toSet
-    val dvm = dvRefs(allLines).filter { case (f, _) => wanted(f) }
-    val needStamp = dvm.nonEmpty || withRowPos
+    val dvm = dvRefs(fileLines(tableDir, v)).filter { case (f, _) => wanted(f) }
+    val scan =
+      if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(files: _*)
+      else spark.read.parquet(files: _*)
+    if (dvm.isEmpty && !withRowPos) return scan
     // input_file_name() is a percent-encoded URI: stripping the scheme
     // alone left "%20" where the manifest (plain Paths) has " ", so on
     // a URI-escapable tableDir every GFile consumer mismatched — the
@@ -1292,57 +699,9 @@ object Snapshots {
     val plainFile = regexp_replace(
       url_decode(regexp_replace(input_file_name(), "\\+", "%2B")),
       "^file:/+", "/")
-    def stamp(df: DataFrame): DataFrame =
-      if (!needStamp) df
-      else applyDv(spark, df.withColumn(GFile, plainFile)
-        .withColumn(GPos, col("_metadata.row_index")), dvm)
-    if (recordOpt.isEmpty ||
-        (aliases.isEmpty && !hasRetired && markers.isEmpty && !hasWiden)) {
-      val base = stamp(
-        if (mergeSchema) spark.read.option("mergeSchema", "true").parquet(files: _*)
-        else spark.read.parquet(files: _*))
-      if (withRowPos) base
-      else if (needStamp) base.drop(GFile, GPos)
-      else base
-    } else {
-      // explicit READ schema instead of mergeSchema: the record's
-      // (possibly widened) type per live column PLUS each alias at
-      // the same type — the parquet reader upcasts narrow physical
-      // bytes at scan time (widen) and nulls absent columns (rename/
-      // additive history), where mergeSchema would FAIL merging an
-      // int file with a bigint record. Retired columns are simply
-      // not requested, so their bytes never surface.
-      val record = recordOpt.get
-      val readSchema = org.apache.spark.sql.types.StructType(
-        record.fields.flatMap { f =>
-          org.apache.spark.sql.types.StructField(f.name, f.dataType) +:
-            aliases.getOrElse(f.name, Seq.empty)
-              .map(a => org.apache.spark.sql.types.StructField(a, f.dataType))
-        })
-      val df0 = spark.read.schema(readSchema).parquet(files: _*)
-      val present = df0.columns.toSet
-      val df = stamp(df0)
-      // input_file_name() is URI-formed; manifest lines are plain
-      // paths — normalize the scheme away once, codegen'd per row.
-      // After a DV anti-join the scan stage is gone, so the marker
-      // guard must read the STAMPED file column instead.
-      val fileCol = if (needStamp) col(GFile) else plainFile
-      val projected = recordOpt.get.fields.map { f =>
-        val alts = (f.name +: aliases.getOrElse(f.name, Seq.empty)).filter(present)
-        val base =
-          if (alts.isEmpty) lit(null).cast(f.dataType)
-          else if (alts.size == 1) col(alts.head)
-          else coalesce(alts.map(col): _*)
-        val guarded = colIdOf(f).flatMap(markers.get) match {
-          case Some(marked) if alts.nonEmpty =>
-            when(fileCol.isInCollection(marked.toSeq.sorted), lit(null).cast(f.dataType))
-              .otherwise(base)
-          case _ => base
-        }
-        guarded.as(f.name)
-      }.toIndexedSeq ++ (if (withRowPos) Seq(col(GFile), col(GPos)) else Nil)
-      df.select(projected: _*)
-    }
+    val stamped = applyDv(spark, scan.withColumn(GFile, plainFile)
+      .withColumn(GPos, col("_metadata.row_index")), dvm)
+    if (withRowPos) stamped else stamped.drop(GFile, GPos)
   }
 
   /** Read a committed snapshot: HEAD by default, any retained
@@ -1350,8 +709,7 @@ object Snapshots {
     * union schema across commits (an appended commit may add
     * columns; older files surface them as NULL) — additive schema
     * evolution, parquet's native mechanism. Without it the schema
-    * comes from one sampled footer, the plain-parquet default.
-    * Rename/drop/rebirth history reconciles via [[reconciledScan]]. */
+    * comes from one sampled footer, the plain-parquet default. */
   def read(spark: SparkSession, tableDir: String, version: Int = -1,
            mergeSchema: Boolean = false): DataFrame = {
     val v = if (version >= 0) version else currentVersion(tableDir)
@@ -1367,8 +725,8 @@ object Snapshots {
     * same offsets-are-versions idea a streaming source would use.
     * Returns (new rows, HEAD version) so the caller persists HEAD as
     * its next offset. Every version in the range must be an append
-    * (or a no-file-change rollback): overwrite/optimize rewrite
-    * files, so "new files since v" would double-count rewritten
+    * (or a no-file-change rollback): overwrites and the COW verbs
+    * rewrite files, so "new files since v" would double-count rewritten
     * rows — those ranges fail loud instead of silently lying.
     * Cost: manifest reads + a scan of the NEW files only. */
   def changesSince(spark: SparkSession, tableDir: String,
@@ -1388,262 +746,8 @@ object Snapshots {
       else liveFiles(tableDir, sinceVersion).toSet
     val added = liveFiles(tableDir, head).filterNot(before)
     val df = if (added.isEmpty) read(spark, tableDir, head).limit(0)
-             else reconciledScan(spark, tableDir, head, added) // alias-safe (see readPruned)
+             else reconciledScan(spark, tableDir, head, added)
     (df, head)
-  }
-
-  /** Delete data files referenced by NO retained version (the last
-    * `keepLast` versions stay readable) and the manifests of expired
-    * versions. Time travel to expired versions then fails loud —
-    * that is the documented trade for reclaiming bytes. */
-  def vacuum(tableDir: String, keepLast: Int): Unit = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
-    val keepFrom = math.max(1, head - keepLast + 1)
-    val retained = (keepFrom to head)
-      .filter(v => Files.exists(manifestPath(tableDir, v)))
-      .flatMap(v => liveFiles(tableDir, v)).toSet
-    // POSITIVE deletion list (r10 verdict item #6 — the silent-loss
-    // race): delete only files the EXPIRING manifests reference and
-    // no retained manifest carries. The old negative-list walk
-    // ("anything under data/ not retained") raced an in-flight
-    // commit: files staged between `df.write.parquet` and the
-    // manifest link are in no manifest yet, so the walk deleted them
-    // and the commit then published a manifest pointing at deleted
-    // bytes — a committed row silently lost. Vacuum's contract is
-    // history expiry, not collection of crashed writers' orphans.
-    val expiring = (1 until keepFrom)
-      .filter(v => Files.exists(manifestPath(tableDir, v)))
-      .flatMap(v => liveFiles(tableDir, v)).toSet
-    val doomed = (expiring -- retained).map(Paths.get(_)).filter(Files.isRegularFile(_))
-    doomed.foreach(Files.delete)
-    // DV sidecars expire with their manifests by the same positive-
-    // list rule: a sidecar dir referenced by ANY retained manifest
-    // survives (a retained version's read needs its anti-join rows);
-    // one referenced only by expiring manifests goes with them
-    val retainedDv = (keepFrom to head)
-      .filter(v => Files.exists(manifestPath(tableDir, v)))
-      .flatMap(v => dvDirs(tableDir, v)).toSet
-    val expiringDv = (1 until keepFrom)
-      .filter(v => Files.exists(manifestPath(tableDir, v)))
-      .flatMap(v => dvDirs(tableDir, v)).toSet
-    (expiringDv -- retainedDv).map(Paths.get(_)).filter(Files.isDirectory(_))
-      .foreach(d => Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete))
-    // drop now-emptied ancestor dirs of deleted files ONLY (walking
-    // up to but never including data/): an empty dir under data/ may
-    // be a racing writer's just-created staging dir whose parquet
-    // bytes have not landed yet — never touch dirs we did not empty.
-    // A dir whose last DATA file we deleted still holds the write's
-    // sidecars (_SUCCESS, .crc markers) — sweep those too, they
-    // cannot belong to anyone else once the dir has no data files
-    val dataRoot = Paths.get(tableDir, "data").toAbsolutePath.normalize
-    def sidecar(p: Path): Boolean = {
-      val n = p.getFileName.toString
-      n == "_SUCCESS" || (n.startsWith(".") && n.endsWith(".crc"))
-    }
-    doomed.map(_.toAbsolutePath.normalize.getParent).filter(_ != null)
-      .toSeq.distinct.foreach { d0 =>
-        var d = d0
-        var emptied = true
-        while (emptied && d != null && d.startsWith(dataRoot) && d != dataRoot &&
-          Files.isDirectory(d)) {
-          val left = Files.list(d).iterator().asScala.toSeq
-          if (left.forall(p => Files.isRegularFile(p) && sidecar(p))) {
-            left.foreach(Files.delete)
-            Files.delete(d)
-            d = d.getParent
-          } else emptied = false
-        }
-      }
-    // history guard (r9 advice, the high item): rename/drop history a
-    // LIVE read still needs must be folded into HEAD's self-contained
-    // record before the manifests that carry it expire — otherwise
-    // renameAliases() silently comes back empty after vacuum and
-    // pre-rename files' values surface as NULL under the current name.
-    // Tables written by this library version always pass (every commit
-    // folds); a pre-fold rename history refuses with the one-commit
-    // fix named. Scoped to LIVE column ids: an id overwritten away
-    // has no live files left to reconcile.
-    if (keepFrom > 1) {
-      val liveIds = manifestSchema(tableDir, head).map(parseStruct)
-        .map(_.fields.flatMap(colIdOf).toSet).getOrElse(Set.empty[Long])
-      val folded = foldedHistory(tableDir, head)
-      val walked = idNameHistory(tableDir, head)
-      val unfolded = walked.collect {
-        case (id, names) if liveIds.contains(id) &&
-          !names.subsetOf(folded.getOrElse(id, Set.empty)) => id
-      }
-      require(unfolded.isEmpty,
-        s"Snapshots: vacuum of $tableDir would expire manifests carrying rename " +
-          s"alias history for live column id(s) ${unfolded.toSeq.sorted.mkString(", ")} " +
-          "that is NOT folded into HEAD's schema record — pre-rename files would " +
-          "silently stop reconciling. Run Snapshots.foldHistory(tableDir) (one " +
-          "metadata-only commit) first, then vacuum.")
-    }
-    (1 until keepFrom).foreach(v => Files.deleteIfExists(manifestPath(tableDir, v)))
-  }
-
-  /** Lakehouse OPTIMIZE over a snapshot table: stat the live files,
-    * bin-pack the small ones with [[graft.ops.Compaction.plan]],
-    * rewrite each bin as one file, and commit the compacted layout
-    * as a NEW version (kept files are carried by reference — their
-    * bytes are not rewritten). Readers before/after see identical
-    * rows; history (and time travel to the fragmented versions)
-    * survives until `vacuum`. Returns the committed version, or -1
-    * when nothing needed compacting (no empty commits).
-    *
-    * Scale: planning is metadata-sized (one stat per live file);
-    * rewrite IO is proportional to the SMALL fraction only — the
-    * whole point vs truncate-and-rewrite. The streaming sink's
-    * one-manifest-per-batch accumulation composes with this:
-    * optimize periodically, vacuum after the retention horizon. */
-  def optimize(spark: SparkSession, tableDir: String, targetBytes: Long): Int =
-    optimizeHook(spark, tableDir, targetBytes, () => ())
-
-  /** Test seam: `beforePublish` runs after the bins are rewritten and
-    * staged, before the manifest link — the window where a racing
-    * append can advance HEAD (the deleteWhereHook pattern). */
-  private[graft] def optimizeHook(spark: SparkSession, tableDir: String,
-                                  targetBytes: Long,
-                                  beforePublish: () => Unit): Int = {
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
-    val lines = fileLines(tableDir, head)
-    // a dv-carrying file ALWAYS rewrites regardless of size — OPTIMIZE
-    // is the verb that bakes merge-on-read deletion vectors into clean
-    // bytes (Delta's PURGE): reads stop paying the anti-join, and the
-    // expired sidecars become vacuum fodder with their manifests
-    def hasDv(l: String) = l.split('\t').drop(1).exists(_.startsWith("dv:"))
-    val (dvLines, plain) = lines.partition(hasDv)
-    val stats = plain.map(l => (l, Files.size(Paths.get(l.split('\t')(0)))))
-    val small = stats.filter(_._2 < targetBytes)
-      .map { case (l, sz) => (l.split('\t')(0), sz) }
-    if (small.size < 2 && dvLines.isEmpty) return -1 // nothing to merge or bake
-    import spark.implicits._
-    val bins: Map[Long, Seq[String]] =
-      if (small.size < 2) Map.empty
-      else {
-        val planned = graft.ops.Compaction.plan(
-          small.toDF("file", "bytes").withColumn("part", org.apache.spark.sql.functions.lit("t")),
-          Seq("part"), "file", "bytes", targetBytes)
-        planned.where(org.apache.spark.sql.functions.col("action") === "compact")
-          .select($"file", $"bin_id").as[(String, Long)].collect() // listing-sized
-          .groupBy(_._2).view.mapValues(_.map(_._1).toSeq).toMap
-      }
-    val v = head + 1
-    val nonce = java.util.UUID.randomUUID.toString.take(8)
-    val outDir = Paths.get(tableDir, "data", s"c$v-$nonce")
-    // with rename/drop/widen history, the rewrite must reconcile
-    // (canonical current names; reborn columns NULLed per their
-    // markers; widened columns baked to the record type): a raw
-    // re-concat would carry retired physical columns into a post-
-    // rebirth commit dir and resurrect their values — or write a
-    // narrow-typed file into a post-widen commit dir
-    val needsReconcile = renameAliases(tableDir, head).nonEmpty ||
-      manifestRetired(tableDir, head).isDefined ||
-      manifestSchema(tableDir, head).map(parseStruct)
-        .exists(_.fields.exists(widenedFrom(_).nonEmpty))
-    bins.toSeq.sortBy(_._1).foreach { case (bin, paths) =>
-      if (needsReconcile)
-        reconciledScan(spark, tableDir, head, paths).coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/bin=$bin")
-      else graft.ops.Compaction.rewriteBin(spark, paths, outDir.toString, bin)
-    }
-    // DV bake: each dv-carrying file rewrites 1:1 through the
-    // reconciling scan, which folds its deletion vectors (and any
-    // evolution history) into clean bytes — the output file has no
-    // dv parts, so reads stop paying the anti-join
-    dvLines.map(_.split('\t')(0)).sorted.zipWithIndex.foreach { case (path, i) =>
-      reconciledScan(spark, tableDir, head, Seq(path)).coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/dvbake=$i")
-    }
-    // carried lines = everything neither bin-compacted nor dv-baked
-    // (full lines — column stats travel). Derived from the ACTUAL
-    // compacted set, so a small file the planner declined still
-    // carries instead of silently dropping.
-    val compacted = bins.values.flatten.toSet
-    val keep = plain.filterNot(l => compacted.contains(l.split('\t')(0)))
-    val rewritten0 = Files.walk(outDir).iterator().asScala
-      .filter(p => Files.isRegularFile(p) && p.toString.matches(".*part-.*\\.parquet"))
-      .map(_.toString).toSeq.sorted
-    // re-stat the rewritten/baked outputs when their SOURCE lines
-    // carried stats (r12 advice): publishing them bare traded
-    // minMaxFromStats' "run optimize() first" remedy for a fresh
-    // "carries no envelope" refusal and silently dropped countRows'
-    // rows= counts. Stat columns = the union of the source lines'
-    // envelope keys, translated through the rename-alias history
-    // (rewrites bake canonical names) and filtered to the record's
-    // encodable types (a retype to string after a stats commit must
-    // not crash the compactor — that column's envelope is simply not
-    // re-recordable).
-    val sourceLines = plain.filter(l => compacted.contains(l.split('\t')(0))) ++ dvLines
-    val carriedRows = sourceLines.exists(_.split('\t').drop(1).exists(_.startsWith("rows=")))
-    val srcStatKeys = sourceLines.flatMap(_.split('\t').drop(1))
-      .filterNot(p => p.startsWith("bloom:") || p.startsWith("dv:"))
-      .flatMap { p =>
-        val eq = p.indexOf('='); val co = p.indexOf(':', eq)
-        if (eq < 0 || co < 0) None else Some(p.substring(0, eq))
-      }.distinct
-    val record = manifestSchema(tableDir, head).map(parseStruct)
-    val aliasesNow = renameAliases(tableDir, head)
-    def currentNameOf(k: String): Option[String] =
-      record match {
-        case None => Some(k) // record-less table: physical names persist
-        case Some(st) if st.fieldNames.contains(k) => Some(k)
-        case Some(_) =>
-          aliasesNow.collectFirst { case (cur, olds) if olds.contains(k) => cur }
-      }
-    def encodable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.DateType | org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.TimestampNTZType | org.apache.spark.sql.types.FloatType |
-           org.apache.spark.sql.types.DoubleType => true
-      case _ => false
-    }
-    val restatCols = srcStatKeys.flatMap(currentNameOf).distinct.filter(c =>
-      record.forall(_.fields.find(_.name == c).forall(f => encodable(f.dataType))))
-    val rewritten =
-      if (rewritten0.isEmpty || (restatCols.isEmpty && !carriedRows)) rewritten0
-      else statLines(spark, rewritten0, restatCols)
-    beforePublish()
-    // civil conflict (r10 verdict item #6): a racing append/COW verb
-    // that won `v` makes this a loud ConcurrentModificationException
-    // naming the stale rewrite set, not a raw EEXIST — the compacted
-    // listing was planned against `head` and must not rebase
-    publishOrConflict(tableDir, head, s"optimize($targetBytes)", keep ++ rewritten)
-    v
-  }
-
-  /** Wall-clock commit time of `version` (epoch millis) — the `ts=`
-    * manifest header; manifests from before the header existed fall
-    * back to the manifest file's mtime (same clock, coarser). */
-  def commitTimeMillis(tableDir: String, version: Int): Long = {
-    val p = manifestPath(tableDir, version)
-    require(Files.exists(p),
-      s"Snapshots: version $version of $tableDir does not exist")
-    headerValue(Files.readAllLines(p).asScala.toSeq, "ts").map(_.toLong)
-      .getOrElse(Files.getLastModifiedTime(p).toMillis)
-  }
-
-  /** Commit history as a DataFrame (DESCRIBE HISTORY): one row per
-    * RETAINED version — (version, parent, op, ts_millis, tag,
-    * n_files, has_schema). Reads manifests only (listing-sized);
-    * vacuumed-away versions simply do not appear. */
-  def history(spark: SparkSession, tableDir: String): DataFrame = {
-    val head = currentVersion(tableDir)
-    val rows = (1 to head).filter(v => Files.exists(manifestPath(tableDir, v))).map { v =>
-      val lines = Files.readAllLines(manifestPath(tableDir, v)).asScala.toSeq
-      (v, headerValue(lines, "parent").map(_.toInt).getOrElse(0),
-        headerValue(lines, "op").getOrElse(""),
-        headerValue(lines, "ts").map(_.toLong).getOrElse(0L),
-        headerValue(lines, "tag").orNull,
-        fileLines(tableDir, v).size.toLong,
-        headerValue(lines, "schema").isDefined)
-    }
-    import spark.implicits._
-    rows.toDF("version", "parent", "op", "ts_millis", "tag", "n_files", "has_schema")
   }
 
   /** Lakehouse OPTIMIZE ZORDER BY: rewrite the live data clustered
@@ -1656,10 +760,9 @@ object Snapshots {
     * partition sort gives each output file a tight z-range, hence
     * tight min/max envelopes on every clustered dimension.
     *
-    * Unlike [[optimize]] (bin-packing, rewrites only small files)
-    * this rewrites ALL live bytes — the expensive, occasional
+    * This rewrites ALL live bytes — the expensive, occasional
     * operation real lakehouses schedule; history stays
-    * time-travelable until vacuum. */
+    * time-travelable. */
   def optimizeZOrder(spark: SparkSession, tableDir: String, cols: Seq[String],
                      nFiles: Int): Int = {
     require(cols.size >= 2, "optimizeZOrder needs >= 2 columns (sort linearly for 1)")
@@ -1677,7 +780,7 @@ object Snapshots {
   }
 
   // ---------------------------------------------------------------
-  // Row-level mutation verbs (copy-on-write) + retrying appends.
+  // Row-level mutation verbs (copy-on-write).
   // ---------------------------------------------------------------
 
   private def localPath(uriOrPath: String): String =
@@ -1710,8 +813,8 @@ object Snapshots {
         throw new IllegalArgumentException(
           s"Snapshots: $verb source column '${f.name}' is " +
             s"${f.dataType.catalogString} but the table records ${tt.catalogString} — " +
-            "cast the source explicitly; for a lossless table-side widening run " +
-            "Snapshots.widen() first")
+            "cast the source explicitly, or retype the table with " +
+            "Snapshots.retypeRewrite() first")
       }
     }
   }
@@ -1725,9 +828,8 @@ object Snapshots {
     * operation against the new HEAD. */
   private def publishOrConflict(tableDir: String, readV: Int, op: String,
                                 lines: Seq[String], tag: Option[String] = None,
-                                schema: Option[String] = None,
-                                retired: Option[String] = None): Unit =
-    try writeManifest(tableDir, readV + 1, readV, op, lines, tag, schema, retired)
+                                schema: Option[String] = None): Unit =
+    try writeManifest(tableDir, readV + 1, readV, op, lines, tag, schema)
     catch { case _: java.nio.file.FileAlreadyExistsException =>
       throw new java.util.ConcurrentModificationException(
         s"Snapshots: $tableDir advanced past version $readV during $op — " +
@@ -1738,7 +840,7 @@ object Snapshots {
     * `predicate` is TRUE (NULL-predicate rows SURVIVE — SQL DELETE
     * semantics), rewriting ONLY the files that contain a matching
     * row. Untouched files are carried by reference with their
-    * manifest stats; history stays time-travelable until `vacuum`.
+    * manifest stats; history stays time-travelable.
     * Returns the committed version, or -1 when nothing matched (no
     * empty commits).
     *
@@ -1764,8 +866,8 @@ object Snapshots {
     * 1 GB file costs the sidecar, not the gigabyte; the COW mode
     * rewrites the file). NULL-predicate rows survive (SQL DELETE
     * semantics, same as COW). Reads fold DVs at [[reconciledScan]];
-    * `optimize` bakes them into clean files. Returns the committed
-    * version, or -1 when nothing matched.
+    * a COW verb that rewrites a hit file bakes them into clean bytes.
+    * Returns the committed version, or -1 when nothing matched.
     *
     * Scale: the find pass is one MOR-aware scan (so re-deleting an
     * already-deleted row is impossible and per-file DV counts stay
@@ -1773,9 +875,10 @@ object Snapshots {
     * carries the same serializable-conflict abort as the other
     * mutation verbs (the planned line set is a read set — a racing
     * commit aborts this one loudly). Trade-off vs COW, stated: every
-    * subsequent read pays the anti-join until `optimize` bakes —
-    * MOR buys cheap writes with slightly dearer reads, the right
-    * trade for trickle deletes on a 100 TB table. */
+    * subsequent read of a hit file pays the anti-join until a COW
+    * rewrite of that file bakes its DVs — MOR buys cheap writes with
+    * slightly dearer reads, the right trade for trickle deletes on a
+    * 100 TB table. */
   private[graft] def deleteWhereMorHook(spark: SparkSession, tableDir: String,
                                         predicate: org.apache.spark.sql.Column,
                                         beforePublish: () => Unit): Int = {
@@ -1840,12 +943,10 @@ object Snapshots {
     if (lines.isEmpty) return -1
     val files = lines.map(_.split('\t')(0))
     // reconciledScan everywhere a COW verb touches live files: the
-    // predicate references CURRENT column names, which pre-rename
-    // files only carry as aliases; and the rewrite must bake the
-    // reconciliation in (canonical names, reborn columns NULLed) so
-    // rewritten files are clean of history. withRowPos stamps the
-    // file path INSIDE the scan stage — input_file_name() on top of
-    // the scan is illegal (and wrong) once a DV anti-join is present
+    // rewrite must bake the files' DVs in, so rewritten files are
+    // clean. withRowPos stamps the file path INSIDE the scan stage —
+    // input_file_name() on top of the scan is illegal (and wrong) once
+    // a DV anti-join is present
     val hit = reconciledScan(spark, tableDir, head, files, withRowPos = true)
       .where(predicate)
       .select(col(GFile).as("__f")).distinct()
@@ -1887,7 +988,7 @@ object Snapshots {
         s"vs replacement [${df.columns.sorted.mkString(",")}]")
     requireSourceTypes(spark, tableDir, head, df, "replaceWhere")
     val files = lines.map(_.split('\t')(0))
-    val hit = reconciledScan(spark, tableDir, head, files, // alias-safe (see deleteWhere)
+    val hit = reconciledScan(spark, tableDir, head, files,
         withRowPos = true) // stamped file col — DV-join-safe (see deleteWhere)
       .where(predicate)
       .select(col(GFile).as("__f")).distinct()
@@ -1975,7 +1076,7 @@ object Snapshots {
     val srcKeys = src.select(keys.map(col): _*).distinct()
     val hit =
       if (candidates.isEmpty) Set.empty[String]
-      else reconciledScan(spark, tableDir, head, candidates, // alias-safe (see deleteWhere)
+      else reconciledScan(spark, tableDir, head, candidates,
         withRowPos = true) // stamped file col — DV-join-safe (see deleteWhere)
         .select(keys.map(col) :+ col(GFile).as("__f"): _*)
         .join(srcKeys, keys, "left_semi")

@@ -16,18 +16,15 @@ import org.apache.spark.sql.DataFrame
   * double-write window every foreachBatch sink has — re-runs the
   * batch as a no-op instead of double-appending. The commit itself
   * is the atomic hard-link publish, so a crash BEFORE the manifest
-  * lands leaves only invisible un-manifested data files (vacuum
-  * fodder), never a torn version.
+  * lands leaves only invisible un-manifested data files, never a
+  * torn version.
   *
   * Downstream readers time-travel micro-batch history for free
-  * (version N = the table after batch N), and `vacuum` bounds
-  * retention.
+  * (version N = the table after batch N). Every version stays on
+  * disk: the library has no retention or compaction verb.
   *
   * Scale: one manifest per micro-batch is the real-world Delta/
   * Iceberg streaming-sink shape; the ledger read is metadata-sized.
-  * Compact the accumulated small files periodically with
-  * `ops.Compaction.plan` over `Snapshots.liveFiles` + an `overwrite`
-  * commit — both halves already exist in this library.
   */
 object StreamSnapshot {
 

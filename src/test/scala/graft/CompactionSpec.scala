@@ -69,14 +69,4 @@ class CompactionSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("Compaction.plan") || e2.getMessage.contains("bad bytes"))
   }
-
-  test("rewriteBin merges a bin's files into one") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString
-    Seq((1L, "x")).toDF("id", "s").write.parquet(s"$dir/f1")
-    Seq((2L, "y")).toDF("id", "s").write.parquet(s"$dir/f2")
-    Compaction.rewriteBin(spark, Seq(s"$dir/f1", s"$dir/f2"), s"$dir/out", 0L)
-    val out = spark.read.parquet(s"$dir/out/bin=0")
-    assert(out.count() == 2)
-    assert(out.inputFiles.length == 1)
-  }
 }

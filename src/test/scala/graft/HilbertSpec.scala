@@ -6,6 +6,26 @@ import org.apache.spark.sql.functions._
 class HilbertSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Inverse walk d → (x, y): the independent round-trip reference
+    * for `HilbertImpl.key2`. */
+  private def d2xy(d: Long, bits: Int): (Long, Long) = {
+    val n = 1L << bits
+    require(d >= 0 && d < n * n, s"hilbert d2xy: d outside [0, ${n * n - 1}]: $d")
+    var x = 0L; var y = 0L; var t = d; var s = 1L
+    while (s < n) {
+      val rx = (t / 2) & 1
+      val ry = (t ^ rx) & 1
+      if (ry == 0) {
+        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
+        val tmp = x; x = y; y = tmp
+      }
+      x += s * rx; y += s * ry
+      t /= 4
+      s <<= 1
+    }
+    (x, y)
+  }
+
   test("bits=1: the canonical 2x2 U walk") {
     assert(HilbertImpl.key2(0, 0, 1) == 0)
     assert(HilbertImpl.key2(0, 1, 1) == 1)
@@ -33,11 +53,11 @@ class HilbertSpec extends SparkSpec {
       val x = rnd.nextInt(65536).toLong; val y = rnd.nextInt(65536).toLong
       val d = HilbertImpl.key2(x, y, 16)
       assert(d >= 0 && d < (1L << 32))
-      assert(HilbertImpl.d2xy(d, 16) == ((x, y)))
+      assert(d2xy(d, 16) == ((x, y)))
     }
     // corners
     assert(HilbertImpl.key2(0, 0, 16) == 0)
-    assert(HilbertImpl.d2xy((1L << 32) - 1, 16)._1 == 65535)
+    assert(d2xy((1L << 32) - 1, 16)._1 == 65535)
   }
 
   test("column expression matches the JVM loop and stays codegen-compatible") {

@@ -40,8 +40,9 @@ class LogRegSpec extends SparkSpec {
     val df = rows.toDF("y", "x")
     val (w, _) = LogReg.trainDeterministic(df, "y", Seq("x"), lr = 0.5, iters = 10)
     assert(w(1) > 0.0, s"positive-class weight should be positive: ${w.toSeq}")
-    val scored = LogReg.score(df, w, Seq("x"))
-      .select($"y", $"score").as[(Long, Double)].collect()
+    // the model's margin w0 + w1·x: the sigmoid link is monotone, so
+    // it ranks rows exactly as the scored probability does
+    val scored = rows.map { case (y, x) => (y, w(0) + w(1) * x) }
     val posMin = scored.filter(_._1 == 1L).map(_._2).min
     val negMax = scored.filter(_._1 == 0L).map(_._2).max
     assert(posMin > negMax,
@@ -64,8 +65,8 @@ class LogRegSpec extends SparkSpec {
   }
 
   test("guard: non-integral feature raises (train and score must see the same values)") {
-    // before the guard, train silently truncated 2.7 -> 2 while
-    // score() used the raw 2.7 — two different models in disguise
+    // before the guard, train silently truncated 2.7 -> 2 while a
+    // scorer used the raw 2.7 — two different models in disguise
     val bad = Seq((1L, 2.7), (0L, -1.0)).toDF("y", "x")
     val e = intercept[Exception](
       LogReg.trainDeterministic(bad, "y", Seq("x"), 0.5, 1))

@@ -4,14 +4,16 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every public member of a top-level object in `src/main` must have a
-  * caller in `src/main`. Code that only specs reach is deleted together
-  * with those specs; the few members kept without a production caller
-  * are listed below with the reason they stay.
+/** Every public or `private[graft]` member of a top-level object in
+  * `src/main` must have a caller in `src/main`. Code that only specs
+  * reach is deleted together with those specs; the few members kept
+  * without a production caller are listed below with the reason they
+  * stay.
   *
   * A caller is resolved through the object, not by the member's name
   * alone (see [[PublicCallerScan]]), so two objects that each define a
-  * member of the same name do not vouch for each other. */
+  * member of the same name do not vouch for each other, and a name
+  * inside a string literal is no caller. */
 class PublicCallerScanSpec extends AnyFunSuite {
   import PublicCallerScan._
 
@@ -39,7 +41,14 @@ class PublicCallerScanSpec extends AnyFunSuite {
         "batch entry point, run by perfbench's etl_batch and PipelineIntegrationSpec"),
     "Pipelines.recap" ->
       ("the reference ETL's stage 3 (silver → nested daily gold): the library's " +
-        "batch entry point, run by perfbench's etl_batch and PipelineIntegrationSpec"))
+        "batch entry point, run by perfbench's etl_batch and PipelineIntegrationSpec"),
+    "Sources.landedJson" ->
+      ("the reference ETL's landing read (landing JSON → observations for " +
+        "Pipelines.ingest): the library's batch entry point, run by perfbench's " +
+        "etl_batch and PipelineIntegrationSpec"),
+    "GraftSession.create" ->
+      ("the specs' shared session (SparkSpec), built by the same builder as the " +
+        "mains' GraftSession.fromEnv so specs run on the mains' session settings"))
 
   private lazy val sources: Map[String, String] = {
     val root = Paths.get("src/main")
@@ -47,20 +56,21 @@ class PublicCallerScanSpec extends AnyFunSuite {
       .map((f: Path) => f.toString -> Files.readString(f)).toMap
   }
 
-  private lazy val members: Seq[(String, String)] = publicMembers(sources)
+  private lazy val members: Seq[(String, String)] = scannedMembers(sources)
   private lazy val missing: Set[String] = uncalled(sources)
 
   test("the scan sees the library's public surface") {
     // a broken parse would find nothing and pass vacuously
     val names = members.map(_._2).toSet
-    assert(names.size > 400, s"only ${names.size} public members found")
-    assert(Set("Pipelines.ingest", "Sinks.upsertPartitions", "Snapshots.commit").subsetOf(names))
+    assert(names.size > 400, s"only ${names.size} members found")
+    assert(Set("Pipelines.ingest", "Sinks.upsertPartitions", "Snapshots.commit",
+      "Snapshots.reconciledScan").subsetOf(names))
   }
 
   test("every public member has a src/main caller or an allowlisted reason") {
     val outside = missing -- allowlist.keySet
     assert(outside.isEmpty,
-      s"public members with no src/main caller: ${outside.toSeq.sorted.mkString(", ")} — " +
+      s"members with no src/main caller: ${outside.toSeq.sorted.mkString(", ")} — " +
         "delete them with the specs that only exercise them, or allowlist them with a reason")
   }
 
@@ -93,7 +103,23 @@ class PublicCallerScanSpec extends AnyFunSuite {
           "object Companion {\n  def helper(x: Int): Int = x\n  def apply(x: Int): Int = x\n}\n" +
           "object Unused {\n  def notImported: Int = 0\n}"),
       "H.scala" -> src("// Picked.notImported in a comment is no caller\n" +
-        "import p.Picked.{kept}\nobject H {\n  def z: Int = kept + notImported\n}")))
+        "import p.Picked.{kept}\nobject H {\n  def z: Int = kept + notImported\n}"),
+      // names in string text are no callers; splices are code
+      "I.scala" -> src(
+        "import p.Spliced.bareSplice\n" +
+          "object I {\n  def msg(n: Int): String =\n" +
+          "    s\"use Quoted.inText or ${Spliced.inBraces(n)}, not $bareSplice\" + " +
+          "\"Quoted.inPlain\" +\n" +
+          "      \"\"\"Quoted.inTriple\"\"\" + s\"\"\"${Spliced.tripleSplice}\"\"\"\n}"),
+      "J.scala" -> src(
+        "object Quoted {\n  def inText: Int = 1\n  def inPlain: Int = 2\n  def inTriple: Int = 3\n}\n" +
+          "object Spliced {\n  def inBraces(n: Int): Int = n\n  def bareSplice: Int = 1\n" +
+          "  def tripleSplice: Int = 2\n}"),
+      // package-private members are scanned like public ones
+      "K.scala" -> src(
+        "object Hidden {\n  private[graft] def uncalled: Int = 1\n" +
+          "  private[graft] def called: Int = 2\n  private def own: Int = 3\n}\n" +
+          "object L {\n  def z: Int = Hidden.called\n}")))
     assert(scanned.contains("C.twin") && scanned.contains("D.twin"),
       "objects sharing a member name do not vouch for each other")
     assert(!scanned.contains("Aliased.viaAlias"), "an import alias resolves to the object")
@@ -108,14 +134,23 @@ class PublicCallerScanSpec extends AnyFunSuite {
     assert(!scanned.contains("Companion.helper"), "a use in the defining file counts")
     assert(!scanned.contains("Companion.apply"), "Obj(…) calls apply")
     assert(!scanned.contains("D.other"))
+    assert(scanned.contains("Quoted.inText") && scanned.contains("Quoted.inPlain") &&
+      scanned.contains("Quoted.inTriple"), "a name inside a string literal is no caller")
+    assert(!scanned.contains("Spliced.inBraces") && !scanned.contains("Spliced.tripleSplice"),
+      "a ${…} splice is code")
+    assert(!scanned.contains("Spliced.bareSplice"), "a $name splice is code")
+    assert(scanned.contains("Hidden.uncalled"), "private[graft] members are scanned")
+    assert(!scanned.contains("Hidden.called") && !scanned.contains("Hidden.own"))
   }
 }
 
 /** The caller scan, over a map of file → source text.
   *
-  * A public member `Obj.m` (a `def`, `val`, `var`, nested `object`,
-  * class or type at the object's top level; overrides are skipped)
-  * has a caller when, with comments blanked:
+  * A scanned member `Obj.m` (a public or `private[graft]` `def`,
+  * `val`, `var`, nested `object`, class or type at the object's top
+  * level; overrides and `private` members are skipped) has a caller
+  * when, with comments and the text of string literals blanked (the
+  * splices of an interpolated string are kept: they are code):
   *   - another file names it through the object: `Obj.m` (any package
   *     prefix), or `A.m` after `import …{Obj => A}`;
   *   - another file imports the object's members (`Obj._`,
@@ -130,42 +165,73 @@ class PublicCallerScanSpec extends AnyFunSuite {
 object PublicCallerScan {
   private val ident = "[A-Za-z_][A-Za-z0-9_]*".r
   private val objectStart = "^(?:private\\[\\w+\\]\\s+|case\\s+)*object\\s+(\\w+)".r
-  private val member = ("^  (?:@\\w+\\s+)*(?:final\\s+|implicit\\s+|lazy\\s+)*" +
+  private val member = ("^  (?:@\\w+\\s+)*" +
+    "(?:private\\[graft\\]\\s+|final\\s+|implicit\\s+|lazy\\s+)*" +
     "(?:def|val|var|object|case\\s+class|class|trait|type)\\s+([A-Za-z_][A-Za-z0-9_]*)").r
   private val importStmt = "(?m)^[ \\t]*import\\s+([\\w.]+)(\\{[^}]*\\})?".r
 
-  /** The source with comments blanked (newlines kept); string and
-    * character literals are kept, so a comment marker inside a string
-    * is not taken for a comment. */
-  private def stripComments(src: String): String = {
+  /** The source as code only: comments and the text of string and
+    * character literals are blanked (newlines kept), so a member named
+    * in an error message is no caller. The splices of an interpolated
+    * string (`${…}`, `$name`) stay, because they are code. */
+  private def codeOnly(src: String): String = {
     val out = new StringBuilder(src.length)
     var i = 0
     def at(s: String) = src.startsWith(s, i)
-    while (i < src.length) {
-      if (at("//")) {
-        while (i < src.length && src(i) != '\n') i += 1
-      } else if (at("/*")) {
-        var depth = 0
-        while (i < src.length && (depth > 0 || at("/*"))) {
-          if (at("/*")) { depth += 1; i += 2 }
-          else if (at("*/")) { depth -= 1; i += 2 }
-          else { if (src(i) == '\n') out += '\n'; i += 1 }
-        }
-      } else if (at("\"\"\"")) {
-        val end = src.indexOf("\"\"\"", i + 3)
-        val stop = if (end < 0) src.length else end + 3
-        out ++= src.substring(i, stop); i = stop
-      } else if (src(i) == '"') {
-        var j = i + 1
-        while (j < src.length && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
-        val stop = math.min(src.length, j + 1)
-        out ++= src.substring(i, stop); i = stop
-      } else if (src(i) == '\'' && i + 2 < src.length && src(i + 2) == '\'') {
-        out ++= src.substring(i, i + 3); i += 3
-      } else if (at("'\\") && i + 3 < src.length && src(i + 3) == '\'') {
-        out ++= src.substring(i, i + 4); i += 4
-      } else { out += src(i); i += 1 }
+    def blank(n: Int): Unit = {
+      (i until math.min(src.length, i + n)).foreach(j => out += (if (src(j) == '\n') '\n' else ' '))
+      i += n
     }
+    def keep(n: Int): Unit = { out ++= src.substring(i, math.min(src.length, i + n)); i += n }
+    // a string literal from its opening quote; `interp` keeps its splices
+    def string(triple: Boolean, interp: Boolean): Unit = {
+      val quote = if (triple) "\"\"\"" else "\""
+      keep(quote.length)
+      var open = true
+      while (open && i < src.length) {
+        if (at(quote)) { keep(quote.length); open = false }
+        else if (!triple && src(i) == '\n') open = false
+        else if (!triple && src(i) == '\\') blank(2)
+        else if (interp && at("$$")) blank(2)
+        else if (interp && at("${")) { keep(2); code(inSplice = true); keep(1) }
+        else if (interp && src(i) == '$' && i + 1 < src.length &&
+            (src(i + 1).isLetter || src(i + 1) == '_')) {
+          var j = i + 1
+          while (j < src.length && (src(j).isLetterOrDigit || src(j) == '_')) j += 1
+          keep(j - i)
+        } else blank(1)
+      }
+    }
+    // code up to the end, or inside a splice up to (not past) its closing `}`
+    def code(inSplice: Boolean): Unit = {
+      var depth = 0
+      var done = false
+      while (!done && i < src.length) {
+        val interp = i > 0 && (src(i - 1).isLetterOrDigit || src(i - 1) == '_')
+        if (at("//")) {
+          while (i < src.length && src(i) != '\n') i += 1
+        } else if (at("/*")) {
+          var d = 0
+          while (i < src.length && (d > 0 || at("/*"))) {
+            if (at("/*")) { d += 1; i += 2 }
+            else if (at("*/")) { d -= 1; i += 2 }
+            else { if (src(i) == '\n') out += '\n'; i += 1 }
+          }
+        } else if (at("\"\"\"")) string(triple = true, interp)
+        else if (src(i) == '"') string(triple = false, interp)
+        else if (src(i) == '\'' && i + 2 < src.length && src(i + 2) == '\'') {
+          keep(1); blank(1); keep(1)
+        } else if (at("'\\") && i + 3 < src.length && src(i + 3) == '\'') {
+          keep(1); blank(2); keep(1)
+        } else if (inSplice && src(i) == '}' && depth == 0) done = true
+        else {
+          if (inSplice && src(i) == '{') depth += 1
+          if (inSplice && src(i) == '}') depth -= 1
+          keep(1)
+        }
+      }
+    }
+    code(inSplice = false)
     out.toString
   }
 
@@ -189,7 +255,7 @@ object PublicCallerScan {
   }
 
   private def parse(src: String): Parsed = {
-    val stripped = stripComments(src)
+    val stripped = codeOnly(src)
     val aliases = scala.collection.mutable.Map.empty[String, Set[String]]
     val wildcards = scala.collection.mutable.Set.empty[String]
     val picked = scala.collection.mutable.Map.empty[String, Map[String, String]]
@@ -232,11 +298,11 @@ object PublicCallerScan {
     Parsed(aliases.toMap, wildcards.toSet, picked.toMap, bare.toMap, selected.toSet, applied.toSet)
   }
 
-  /** (file, `Object.member`) for every public member of a top-level object. */
-  def publicMembers(sources: Map[String, String]): Seq[(String, String)] =
+  /** (file, `Object.member`) for every scanned member of a top-level object. */
+  def scannedMembers(sources: Map[String, String]): Seq[(String, String)] =
     sources.toSeq.sortBy(_._1).flatMap { case (file, src) =>
       var obj: Option[String] = None
-      stripComments(src).split("\n").toSeq.flatMap { line =>
+      codeOnly(src).split("\n").toSeq.flatMap { line =>
         objectStart.findFirstMatchIn(line) match {
           case Some(m) => obj = Some(m.group(1)); None
           case None =>
@@ -246,7 +312,7 @@ object PublicCallerScan {
       }
     }
 
-  /** Every public member of a top-level object that has no caller. */
+  /** Every scanned member of a top-level object that has no caller. */
   def uncalled(sources: Map[String, String]): Set[String] = {
     val parsed = sources.map { case (f, s) => f -> parse(s) }
     def hasCaller(file: String, qualified: String): Boolean = {
@@ -259,6 +325,6 @@ object PublicCallerScan {
           f != file && (p.selects(obj, name) || p.imports(obj, name).exists(p.bare.contains))
         }
     }
-    publicMembers(sources).collect { case (f, q) if !hasCaller(f, q) => q }.toSet
+    scannedMembers(sources).collect { case (f, q) if !hasCaller(f, q) => q }.toSet
   }
 }

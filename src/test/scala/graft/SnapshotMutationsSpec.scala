@@ -3,12 +3,11 @@ package graft
 import graft.sources.Snapshots
 import org.apache.spark.sql.functions._
 
-/** Copy-on-write DELETE / MERGE and the retrying append over
-  * versioned-snapshot tables: row semantics (NULL-predicate
-  * survivors, upsert replace-or-insert), the rewrite-only-affected-
-  * files guarantee (measured against manifest lines, not asserted),
-  * serializable-conflict aborts, and the append rebase that
-  * re-carries a concurrent winner without rewriting staged bytes. */
+/** Copy-on-write DELETE / MERGE / replaceWhere over versioned-snapshot
+  * tables: row semantics (NULL-predicate survivors, upsert
+  * replace-or-insert), the rewrite-only-affected-files guarantee
+  * (measured against manifest lines, not asserted), the source-type
+  * gate, and serializable-conflict aborts. */
 class SnapshotMutationsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -131,20 +130,25 @@ class SnapshotMutationsSpec extends SparkSpec {
     assert(Snapshots.currentVersion(t) == 4)
   }
 
-  test("metadata-only COUNT and MIN/MAX fold exactly from manifest stats") {
-    val t = threeFileTable()
-    assert(Snapshots.countRows(t) == 6L)
-    assert(Snapshots.minMaxFromStats(t, "id") == ((1L, 21L)))
-    // still exact after a copy-on-write delete re-stats nothing: the
-    // rewritten file has no stats -> loud, never a silent wrong answer
-    Snapshots.deleteWhere(spark, t, $"id" === 10L)
-    val e = intercept[IllegalArgumentException](Snapshots.countRows(t))
-    assert(e.getMessage.contains("without stats"))
-    // a stats-less commit also refuses metadata answers
-    val t2 = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t2)
-    assert(intercept[IllegalArgumentException](Snapshots.countRows(t2))
-      .getMessage.contains("without stats"))
+  test("COW verbs reject a type-widened source loudly (the skew-twin q_merge_cow hole)") {
+    val t = freshTable()
+    Snapshots.commit(Seq((1, 10), (2, 20)).toDF("id", "v"), t) // int table
+    // arithmetic promotion: v + 1L makes the source column LONG — the
+    // gate must refuse BEFORE any file lands (mixed-width files were
+    // readable only by footer-order luck)
+    val wideSrc = Seq((1, 30L)).toDF("id", "v")
+    val e1 = intercept[IllegalArgumentException](
+      Snapshots.mergeInto(spark, t, wideSrc, "id"))
+    assert(e1.getMessage.contains("bigint") && e1.getMessage.contains("retypeRewrite"))
+    val e2 = intercept[IllegalArgumentException](
+      Snapshots.replaceWhere(spark, t, col("id") === 1, wideSrc))
+    assert(e2.getMessage.contains("bigint") && e2.getMessage.contains("retypeRewrite"))
+    assert(Snapshots.currentVersion(t) == 1)
+    // the sanctioned path: retype the table first, then the wide source lands
+    Snapshots.retypeRewrite(spark, t, "v", org.apache.spark.sql.types.LongType)
+    Snapshots.mergeInto(spark, t, wideSrc, "id")
+    assert(Snapshots.read(spark, t).orderBy("id").as[(Int, Long)].collect().toSeq ==
+      Seq((1, 30L), (2, 20L)))
   }
 
   test("mergeIntoKeys matches on ALL key columns (composite keys)") {

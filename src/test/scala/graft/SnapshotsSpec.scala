@@ -67,24 +67,6 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.currentVersion(t) == 1)
   }
 
-  test("vacuum reclaims unreferenced bytes; retained versions still read") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)             // v1
-    Snapshots.commit(Seq((2L, "b")).toDF("id", "s"), t, "overwrite") // v2
-    Snapshots.commit(Seq((3L, "c")).toDF("id", "s"), t, "overwrite") // v3
-    Snapshots.vacuum(t, keepLast = 2)
-    assert(ids(Snapshots.read(spark, t)) == Seq(3L))
-    assert(ids(Snapshots.read(spark, t, version = 2)) == Seq(2L))
-    // v1 is expired: manifest gone, bytes gone, fails loud
-    intercept[IllegalArgumentException](Snapshots.read(spark, t, version = 1))
-    // v1's data dir was physically removed
-    val dataRoot = java.nio.file.Paths.get(t, "data")
-    val live = java.nio.file.Files.walk(dataRoot).iterator()
-    val names = new scala.collection.mutable.ArrayBuffer[String]
-    while (live.hasNext) names += live.next().toString
-    assert(!names.exists(_.contains("c1-")))
-  }
-
   test("bad inputs fail loud: unknown mode, missing version, empty table") {
     val t = freshTable()
     intercept[IllegalArgumentException](
@@ -93,39 +75,6 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
     intercept[IllegalArgumentException](Snapshots.read(spark, t, version = 7))
     intercept[IllegalArgumentException](Snapshots.rollback(t, 7))
-    intercept[IllegalArgumentException](Snapshots.vacuum(t, 0))
-  }
-
-  test("optimize merges small files, keeps rows identical, preserves history") {
-    val t = freshTable()
-    // 6 tiny single-file commits (the streaming-sink accumulation shape)
-    (1L to 6L).foreach(i => Snapshots.commit(Seq((i, s"r$i")).toDF("id", "s").coalesce(1), t))
-    val before = Snapshots.read(spark, t)
-    val filesBefore = Snapshots.liveFiles(t, 6).size
-    val v = Snapshots.optimize(spark, t, targetBytes = 1 << 20) // all are "small"
-    assert(v == 7)
-    val after = Snapshots.read(spark, t)
-    assert(ids(after) == ids(before))
-    assert(Snapshots.liveFiles(t, 7).size < filesBefore)
-    // fragmented history still time-travels
-    assert(ids(Snapshots.read(spark, t, version = 3)) == Seq(1L, 2L, 3L))
-    // nothing left to merge -> no empty commit
-    assert(Snapshots.optimize(spark, t, targetBytes = 1L) == -1)
-    assert(Snapshots.currentVersion(t) == 7)
-  }
-
-  test("optimize carries large files by reference, never rewrites their bytes") {
-    val t = freshTable()
-    Snapshots.commit(spark.range(200000).selectExpr("id", "repeat('x', 50) as s").coalesce(1), t)
-    Snapshots.commit(Seq("A").toDF("s").selectExpr("-1L as id", "s").coalesce(1), t)
-    Snapshots.commit(Seq("B").toDF("s").selectExpr("-2L as id", "s").coalesce(1), t)
-    val bigBefore = Snapshots.liveFiles(t, 3)
-      .filter(f => java.nio.file.Files.size(java.nio.file.Paths.get(f)) >= 4096)
-    val v = Snapshots.optimize(spark, t, targetBytes = 4096)
-    assert(v == 4)
-    val live = Snapshots.liveFiles(t, 4)
-    bigBefore.foreach(f => assert(live.contains(f))) // same physical file
-    assert(Snapshots.read(spark, t).count() == 200002)
   }
 
   test("manifest column stats: zone-map pruning skips disjoint files, never rows") {
@@ -402,54 +351,6 @@ class SnapshotsSpec extends SparkSpec {
     intercept[IllegalArgumentException](store.putIfNoneMatch("../../escape", a))
   }
 
-  // ---- column ids + rename: the identity-tracking evolution (r8 item #4) ----
-
-  test("rename: a renamed column round-trips reads across the rename") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t) // v1: files under 's'
-    assert(Snapshots.rename(t, "s", "label") == 2) // v2: metadata-only
-    // old files reconcile onto the new name
-    val head = Snapshots.read(spark, t)
-    assert(head.columns.toSeq == Seq("id", "label"))
-    assert(head.orderBy("id").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a"), (2L, "b")))
-    // appends under the NEW name mix with pre-rename files
-    Snapshots.commit(Seq((3L, "c")).toDF("id", "label"), t) // v3
-    assert(Snapshots.read(spark, t).orderBy("id").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a"), (2L, "b"), (3L, "c")))
-    // time travel BEFORE the rename still shows the old name
-    assert(Snapshots.read(spark, t, version = 1).columns.toSeq == Seq("id", "s"))
-  }
-
-  test("rename guards: retype still loud with both types; alias reuse and stale names rejected") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
-    Snapshots.rename(t, "s", "label")
-    // an append still using the OLD name is loud (drop + alias reuse)
-    val e1 = intercept[IllegalArgumentException](
-      Snapshots.commit(Seq((9L, "x")).toDF("id", "s"), t))
-    assert(e1.getMessage.contains("label") || e1.getMessage.contains("historical"))
-    // retype of the renamed column fails naming both types
-    val e2 = intercept[IllegalArgumentException](
-      Snapshots.commit(Seq((9L, 5L)).toDF("id", "label"), t))
-    assert(e2.getMessage.contains("retyped") &&
-      e2.getMessage.contains("string") && e2.getMessage.contains("bigint"))
-    // rename to an existing name / of an unknown column
-    intercept[IllegalArgumentException](Snapshots.rename(t, "id", "label"))
-    intercept[IllegalArgumentException](Snapshots.rename(t, "nope", "x"))
-    // a SECOND rename; then reusing the retired alias anywhere is loud
-    Snapshots.rename(t, "label", "title")
-    val e3 = intercept[IllegalArgumentException](Snapshots.rename(t, "id", "s"))
-    assert(e3.getMessage.contains("historical"))
-    val e4 = intercept[IllegalArgumentException](
-      Snapshots.commit(Seq((9L, "x", "y")).toDF("id", "title", "s"), t))
-    assert(e4.getMessage.contains("reuses a historical name"))
-    // reads chase the id across BOTH renames
-    assert(Snapshots.read(spark, t).columns.toSeq == Seq("id", "title"))
-    assert(Snapshots.read(spark, t).orderBy("id").as[(Long, String)].collect().toSeq ==
-      Seq((1L, "a")))
-  }
-
   // ---- per-manifest schema records: the additive gate ----
 
   test("schema gate: a retyped column append is rejected naming both types, before any bytes land") {
@@ -500,21 +401,6 @@ class SnapshotsSpec extends SparkSpec {
     assert(ids(Snapshots.read(spark, t)) == Seq(1L, 4L))
   }
 
-  test("history: one row per retained version with op, file count, and schema flag") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, "a")).toDF("id", "s"), t)
-    Snapshots.commit(Seq((2L, "b")).toDF("id", "s"), t, tag = Some("batch-2"))
-    Snapshots.commit(Seq((9L, "z")).toDF("id", "s"), t, mode = "overwrite")
-    val h = Snapshots.history(spark, t).orderBy($"version")
-      .as[(Int, Int, String, Long, Option[String], Long, Boolean)].collect().toSeq
-    assert(h.map(r => (r._1, r._2, r._3, r._5, r._7)) == Seq(
-      (1, 0, "append", None, true),
-      (2, 1, "append", Some("batch-2"), true),
-      (3, 2, "overwrite", None, true)))
-    assert(h.map(_._6) == Seq(1L, 2L, 1L)) // file counts: 1, 1+1 carried, overwrite 1
-    assert(h.forall(_._4 > 0L)) // commit timestamps recorded
-  }
-
   test("schema records survive pre-record manifests: checks degrade to unchecked, then resume") {
     val t = freshTable()
     // simulate a legacy manifest with no schema record
@@ -530,5 +416,96 @@ class SnapshotsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Snapshots.commit(Seq(("2", "b")).toDF("id", "s"), t)
     }
+  }
+
+  // ---- retypeRewrite: the explicit retype as a whole-table rewrite ----
+
+  test("retypeRewrite long->int: whole-table rewrite, new physical type, time travel keeps the old") {
+    val t = freshTable()
+    Snapshots.commit(Seq((1, 10L), (2, 20L)).toDF("id", "v").repartition(2), t) // v1
+    Snapshots.commit(Seq((3, 30L)).toDF("id", "v"), t)                          // v2
+    val filesBefore = Snapshots.liveFiles(t, 2).toSet
+    val v = Snapshots.retypeRewrite(spark, t, "v", org.apache.spark.sql.types.IntegerType)
+    assert(v == 3)
+    // NOT metadata-only: every live file is new (the verb's name is its price)
+    assert((Snapshots.liveFiles(t, 3).toSet & filesBefore).isEmpty)
+    val r = Snapshots.read(spark, t)
+    assert(r.schema("v").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(r.orderBy("id").as[(Int, Int)].collect().toSeq == Seq((1, 10), (2, 20), (3, 30)))
+    // physically narrow now: a raw read of live files shows int
+    val raw = spark.read.parquet(Snapshots.liveFiles(t, 3): _*)
+    assert(raw.schema("v").dataType == org.apache.spark.sql.types.IntegerType)
+    // time travel BEFORE the retype: old type over the old bytes
+    val old = Snapshots.read(spark, t, version = 2)
+    assert(old.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(old.orderBy("id").select($"v").as[Long].collect().toSeq == Seq(10L, 20L, 30L))
+    // appends with the new type land; the old type is now the mismatch
+    Snapshots.commit(Seq((4, 40)).toDF("id", "v"), t)
+    assert(Snapshots.read(spark, t).count() == 4)
+  }
+
+  test("retypeRewrite refuses a value the cast cannot round-trip, naming the verb; table untouched") {
+    val t = freshTable()
+    Snapshots.commit(Seq((1, 10L), (2, 5000000000L)).toDF("id", "v"), t) // 5e9 > Int.Max
+    val e = intercept[Exception](
+      Snapshots.retypeRewrite(spark, t, "v", org.apache.spark.sql.types.IntegerType))
+    def all(t: Throwable): Seq[Throwable] =
+      t +: Option(t.getCause).toSeq.flatMap(all)
+    assert(all(e).exists(c => Option(c.getMessage).exists(_.contains("retypeRewrite"))),
+      s"expected the verb named in: $e")
+    // no manifest landed, data unchanged and still long
+    val r = Snapshots.read(spark, t)
+    assert(Snapshots.currentVersion(t) == 1)
+    assert(r.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(r.orderBy("id").select($"v").as[Long].collect().toSeq == Seq(10L, 5000000000L))
+  }
+
+  test("retypeRewrite guards: impossible casts refused; a lossless retype rewrites; NULLs pass") {
+    val t = freshTable()
+    Snapshots.commit(Seq((Some(1), Some(10)), (Some(2), None)).toDF("id", "v"), t)
+    // a cast Spark cannot express at all
+    val e1 = intercept[IllegalArgumentException](
+      Snapshots.retypeRewrite(spark, t, "v", org.apache.spark.sql.types.BinaryType))
+    assert(e1.getMessage.contains("no cast"))
+    val e2 = intercept[IllegalArgumentException](
+      Snapshots.retypeRewrite(spark, t, "v", org.apache.spark.sql.types.IntegerType))
+    assert(e2.getMessage.contains("already has type"))
+    // int -> long is lossless: it rewrites like any other retype and
+    // every value, NULL included, round-trips
+    assert(Snapshots.retypeRewrite(spark, t, "v", org.apache.spark.sql.types.LongType) == 2)
+    val wide = Snapshots.read(spark, t)
+    assert(wide.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(wide.orderBy("id").select($"v").as[Option[Long]].collect().toSeq ==
+      Seq(Some(10L), None))
+    // NULLs survive a legitimate narrow (long -> short with small values)
+    assert(Snapshots.retypeRewrite(spark, t, "v", org.apache.spark.sql.types.ShortType) == 3)
+    assert(Snapshots.read(spark, t).orderBy("id").select($"v").as[Option[Short]]
+      .collect().toSeq == Seq(Some(10.toShort), None))
+  }
+
+  test("retypeRewrite double->decimal: exact values convert, inexact raise") {
+    val t = freshTable()
+    Snapshots.commit(Seq((1, 1.25), (2, 10.5)).toDF("id", "v"), t)
+    val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(10, 2)
+    Snapshots.retypeRewrite(spark, t, "v", dec)
+    val r = Snapshots.read(spark, t)
+    assert(r.schema("v").dataType == dec)
+    assert(r.orderBy("id").select($"v".cast("string")).as[String].collect().toSeq ==
+      Seq("1.25", "10.50"))
+    // 1/3 does not survive the DECIMAL(10,2) round trip back to double
+    val t2 = freshTable()
+    Snapshots.commit(Seq((1, 1.0 / 3.0)).toDF("id", "v"), t2)
+    val e = intercept[Exception](Snapshots.retypeRewrite(spark, t2, "v",
+      org.apache.spark.sql.types.DataTypes.createDecimalType(10, 2)))
+    assert(e.toString.contains("retypeRewrite") ||
+      Option(e.getCause).exists(_.toString.contains("retypeRewrite")))
+  }
+
+  test("the implicit-append retype rejection names retypeRewrite") {
+    val t = freshTable()
+    Snapshots.commit(Seq((1, 10L)).toDF("id", "v"), t)
+    val e = intercept[IllegalArgumentException](
+      Snapshots.commit(Seq((2, 20)).toDF("id", "v"), t)) // int where table says long
+    assert(e.getMessage.contains("retypeRewrite"))
   }
 }

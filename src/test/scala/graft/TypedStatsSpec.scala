@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Typed zone maps (r11 verdict item #8): timestamp/date/double
   * manifest envelopes through the order-preserving Long encodings,
-  * measured file skipping, conservatism (stat-less and NaN files
-  * always read), and the minMaxFromStats integral-only refusal. */
+  * measured file skipping, and conservatism (stat-less and NaN files
+  * always read). */
 class TypedStatsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -93,14 +93,5 @@ class TypedStatsSpec extends SparkSpec {
     // the stat-less file is still scanned (conservative), then the
     // exact predicate drops its rows
     assert(none.count() == 0)
-  }
-
-  test("minMaxFromStats stays integral-only under a typed record schema") {
-    val t = freshTable()
-    Snapshots.commit(Seq((1L, 2.5), (2L, 7.5)).toDF("id", "v").coalesce(1),
-      t, statsCols = Seq("id", "v"))
-    assert(Snapshots.minMaxFromStats(t, "id") == (1L, 2L))
-    val e = intercept[IllegalArgumentException](Snapshots.minMaxFromStats(t, "v"))
-    assert(e.getMessage.contains("integral-only"))
   }
 }
