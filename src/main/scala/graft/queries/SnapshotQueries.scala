@@ -38,16 +38,16 @@ private[graft] object SnapshotQueries {
         |GROUP BY lang ORDER BY lang""".stripMargin),
     // ---- typed zone maps (r11 verdict item #8): a time-range read
     // over an event table committed range-clustered on ts with
-    // TIMESTAMP (+ double) manifest envelopes — readPrunedTyped
-    // encodes the bounds through the same monotone map the commit
+    // TIMESTAMP (+ double) manifest envelopes — readPruned encodes
+    // the timestamp bounds through the same monotone map the commit
     // used and skips disjoint files (TypedStatsSpec measures the
     // skipping; this oracle proves the pruned read loses nothing:
     // it must equal the plain filtered aggregate) ----
     QuerySpec("q_prune_time", (s, dir) => {
       val t = graft.sources.Snapshots.ensureTimeTable(s, dir)
-      graft.sources.Snapshots.readPrunedTyped(s, t, "ts",
+      graft.sources.Snapshots.readPruned(s, t, Seq(("ts",
         java.sql.Timestamp.from(java.time.Instant.parse("2024-01-05T00:00:00Z")),
-        java.sql.Timestamp.from(java.time.Instant.parse("2024-01-12T00:00:00Z")))
+        java.sql.Timestamp.from(java.time.Instant.parse("2024-01-12T00:00:00Z")))))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(round(col("value") * 100).cast("long")).as("cents"))
@@ -317,7 +317,7 @@ private[graft] object SnapshotQueries {
     // measured in SnapshotsSpec; here the GATE is result equality) ----
     QuerySpec("q_snapshot_prune", (s, dir) => {
       val t = graft.sources.Snapshots.ensureDemoTable(s, dir)
-      graft.sources.Snapshots.readPruned(s, t, "doc_id", 100L, 260L)
+      graft.sources.Snapshots.readPruned(s, t, Seq(("doc_id", 100L, 260L)))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).cast("long").as("total_chars"))
         .orderBy(col("source"))
@@ -338,7 +338,7 @@ private[graft] object SnapshotQueries {
     QuerySpec("q_optimize_zorder", (s, dir) => {
       val t = graft.sources.Snapshots.ensureScatteredDocsTable(s, dir)
       graft.sources.Snapshots.optimizeZOrder(s, t, Seq("doc_id", "n_chars"), nFiles = 8)
-      graft.sources.Snapshots.readPruned(s, t, "n_chars", 200L, 400L)
+      graft.sources.Snapshots.readPruned(s, t, Seq(("n_chars", 200L, 400L)))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).cast("long").as("sum_doc"))
         .orderBy(col("lang"))
@@ -357,7 +357,7 @@ private[graft] object SnapshotQueries {
     QuerySpec("q_zorder_box", (s, dir) => {
       val t = graft.sources.Snapshots.ensureScatteredDocsTable(s, dir)
       graft.sources.Snapshots.optimizeZOrder(s, t, Seq("doc_id", "n_chars"), nFiles = 8)
-      graft.sources.Snapshots.readPrunedBox(s, t,
+      graft.sources.Snapshots.readPruned(s, t,
           Seq(("doc_id", 100L, 400L), ("n_chars", 200L, 400L)))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).cast("long").as("sum_doc"))
@@ -516,7 +516,7 @@ private[graft] object SnapshotQueries {
       val inserts = docs.where(pmod(col("doc_id"), lit(10)) === 1)
         .withColumn("doc_id", col("doc_id") + 10000000L)
         .withColumn("source", lit("inserted"))
-      graft.sources.Snapshots.mergeInto(s, t, updates.unionByName(inserts), "doc_id")
+      graft.sources.Snapshots.mergeInto(s, t, updates.unionByName(inserts), Seq("doc_id"))
       graft.sources.Snapshots.read(s, t)
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),

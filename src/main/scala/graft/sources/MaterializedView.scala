@@ -36,11 +36,12 @@ object MaterializedView {
   private def sumName(c: String) = s"sum_$c"
 
   /** The base-table version the view currently reflects (0 = never
-    * built). Reads the view's manifest tags — O(retained versions). */
+    * built): the newest `mv.base=` tag — every view commit carries
+    * one, so this reads the view's HEAD manifest only. */
   def reflectedVersion(viewDir: String): Int =
-    Snapshots.committedTags(viewDir)
-      .collect { case t if t.startsWith(BaseTag) => t.substring(BaseTag.length).toInt }
-      .foldLeft(0)(math.max)
+    Snapshots.tagsNewestFirst(viewDir).collectFirst {
+      case t if t.startsWith(BaseTag) => t.substring(BaseTag.length).toInt
+    }.getOrElse(0)
 
   /** Full rebuild: aggregate the whole base HEAD into a fresh view
     * version (overwrite). The bootstrap, and the escape hatch after
@@ -75,7 +76,7 @@ object MaterializedView {
     }
     val combined = deltaAgg.join(cur, Seq(key), "left_outer")
       .select(deltaAgg(key) +: sums: _*)
-    Snapshots.mergeInto(spark, viewDir, combined, key, tag = Some(s"$BaseTag$baseV"))
+    Snapshots.mergeInto(spark, viewDir, combined, Seq(key), tag = Some(s"$BaseTag$baseV"))
     baseV
   }
 

@@ -70,6 +70,14 @@ object Snapshots {
       .foldLeft(0)(math.max)
   }
 
+  /** `version`, or HEAD when negative — failing loud when nothing is
+    * committed there. */
+  private def resolveVersion(tableDir: String, version: Int = -1): Int = {
+    val v = if (version >= 0) version else currentVersion(tableDir)
+    require(v > 0, s"Snapshots: $tableDir has no committed versions")
+    v
+  }
+
   // header lines are exactly these keys — file PATHS may legally
   // contain '=' (hive-style bin=0/ dirs), so discrimination must be
   // by known key, never by "contains a '='"
@@ -120,8 +128,7 @@ object Snapshots {
     * race — re-read HEAD and retry. */
   def commit(df: DataFrame, tableDir: String, mode: String = "append",
              tag: Option[String] = None, statsCols: Seq[String] = Nil,
-             bloomCols: Seq[String] = Nil, bloomExpectedItems: Long = 10000L,
-             bloomFpp: Double = 0.03): Int = {
+             bloomCols: Seq[String] = Nil): Int = {
     require(mode == "append" || mode == "overwrite",
       s"mode must be append|overwrite, got '$mode'")
     Files.createDirectories(snapPath(tableDir))
@@ -130,22 +137,22 @@ object Snapshots {
     // schema gate BEFORE the data write — a rejected commit leaves no
     // orphan bytes. Appends only: they carry the parent's files, so a
     // retype/rename would poison the union read; an overwrite replaces
-    // every live file and may legitimately reshape the table.
-    if (mode == "append" && prev > 0) checkAdditiveAgainst(tableDir, prev, df.schema)
+    // every live file and may legitimately reshape the table. A
+    // record-less parent (pre-schema-record manifest) checks nothing.
+    if (mode == "append" && prev > 0) manifestSchema(tableDir, prev)
+      .foreach(pj => requireAdditive(parseStruct(pj), df.schema, tableDir))
     // data lands under a nonce'd dir so a racing loser's files never
     // collide with the winner's, and no manifest ever lists the loser's
-    val nonce = java.util.UUID.randomUUID.toString.take(8)
-    val dataDir = Paths.get(tableDir, "data", s"c$v-$nonce")
+    val dataDir = stageDataDir(tableDir, s"c$v")
     df.write.parquet(dataDir.toString)
-    val newFiles = Files.list(dataDir).iterator().asScala
-      .map(_.toString).filter(_.matches(".*part-.*\\.parquet")).toSeq.sorted
+    val newFiles = listParts(dataDir)
     val statLined =
       if (statsCols.isEmpty) newFiles
       else statLines(df.sparkSession, newFiles, statsCols)
     val newLines =
       if (bloomCols.isEmpty) statLined
       else statLined.map(l =>
-        withBloomParts(df.sparkSession, l, bloomCols, bloomExpectedItems, bloomFpp))
+        withBloomParts(df.sparkSession, l, bloomCols))
     // append carries the previous version's full lines — stats travel
     // with their files
     val carried = if (mode == "append" && prev > 0) fileLines(tableDir, prev) else Seq.empty
@@ -161,29 +168,32 @@ object Snapshots {
     * min/max envelopes are useless). One
     * `org.apache.spark.util.sketch.BloomFilter` per (file, col),
     * built from that file's values; no false negatives by
-    * construction, so pruning can never drop a row. Sized by the
-    * caller (`bloomExpectedItems`/`bloomFpp` ≈ file row count / the
+    * construction, so pruning can never drop a row. Sized by
+    * `BloomExpectedItems` / `BloomFpp` (≈ file row count / the
     * acceptable extra-read rate). Non-string columns fail loud —
     * integral columns belong in `statsCols`. Base64 carries no tab,
     * newline, ':' or leading '=', so the parts coexist with stat
     * parts on the same line (and [[fileStats]] skips the namespace
     * explicitly). The per-file build mirrors `statLines`' read-back
     * pass — the cost real formats fold into the writer. */
-  private def withBloomParts(spark: SparkSession, line: String, bloomCols: Seq[String],
-                             expectedItems: Long, fpp: Double): String = {
+  private def withBloomParts(spark: SparkSession, line: String,
+                             bloomCols: Seq[String]): String = {
     val path = line.split('\t')(0)
     val df = spark.read.parquet(path)
     val parts = bloomCols.map { c =>
       require(df.schema(c).dataType == org.apache.spark.sql.types.StringType,
         s"Snapshots: bloom stats support STRING columns ('$c' is " +
           s"${df.schema(c).dataType.catalogString}); integral columns belong in statsCols")
-      val bf = df.stat.bloomFilter(c, expectedItems, fpp)
+      val bf = df.stat.bloomFilter(c, BloomExpectedItems, BloomFpp)
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       s"bloom:$c=${java.util.Base64.getEncoder.encodeToString(bos.toByteArray)}"
     }
     (line +: parts).mkString("\t")
   }
+
+  private val BloomExpectedItems = 4000L
+  private val BloomFpp = 0.01
 
   /** The file paths of `version` that MAY contain `col = value` —
     * per-file Bloom probing: a file is skipped only when its filter
@@ -205,59 +215,24 @@ object Snapshots {
     }
   }
 
-  /** The file paths of `version` that can contain a row inside the
-    * BOX — the conjunction of per-column ranges: a file is skipped
-    * when ANY column's recorded envelope is disjoint from its range
-    * (each skip is individually provable, so the conjunction is
-    * never lossy; stat-less columns never skip). Package-visible so
-    * the spec can measure. */
-  private[graft] def prunedFilesBox(tableDir: String, version: Int,
-                                    box: Seq[(String, Long, Long)]): Seq[String] = {
-    // raw bounds fold into each column's encoded space (see
-    // boundEncoder) before the envelope comparison
-    val encBox = box.map { case (c, lo, hi) =>
-      val enc = boundEncoder(tableDir, version, c)
-      (c, enc(lo), enc(hi))
-    }
-    fileStats(tableDir, version).collect {
-      case (path, stats) if encBox.forall { case (c, lo, hi) =>
-        stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      } => path
-    }
-  }
-
-  /** Box read: conjunctive range predicates over several columns
-    * with manifest-stat file skipping on EVERY dimension — the query
-    * shape `optimizeZOrder` lays data out for (a z-clustered file
-    * covers a tight hyper-rectangle, so a small box intersects few
-    * envelopes; a single-column sort can only ever prune its leading
-    * column). Equals the unpruned conjunctive filter by
-    * construction. */
-  def readPrunedBox(spark: SparkSession, tableDir: String,
-                    box: Seq[(String, Long, Long)], version: Int = -1): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(box.nonEmpty, "box needs at least one (column, lo, hi) range")
-    val v = if (version >= 0) version else currentVersion(tableDir)
-    require(v > 0, s"Snapshots: $tableDir has no committed versions")
-    val pred = box.map { case (c, lo, hi) => col(c).between(lo, hi) }.reduce(_ && _)
-    val files = prunedFilesBox(tableDir, v, box)
-    if (files.isEmpty) read(spark, tableDir, v).where(pred).limit(0)
-    else reconciledScan(spark, tableDir, v, files).where(pred)
-  }
-
   /** Point-lookup read with Bloom file skipping: reads only files
     * whose filter may contain `value`, then applies the exact
     * predicate. Equals the unpruned filtered read by construction
     * (no false negatives; false positives only read extra). */
   def readPrunedEq(spark: SparkSession, tableDir: String, c: String,
                    value: String, version: Int = -1): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val v = if (version >= 0) version else currentVersion(tableDir)
-    require(v > 0, s"Snapshots: $tableDir has no committed versions")
-    val files = prunedFilesEq(tableDir, v, c, value)
-    if (files.isEmpty) read(spark, tableDir, v).where(col(c) === value).limit(0)
-    else reconciledScan(spark, tableDir, v, files).where(col(c) === value)
+    val v = resolveVersion(tableDir, version)
+    scanFiltered(spark, tableDir, v, prunedFilesEq(tableDir, v, c, value),
+      org.apache.spark.sql.functions.col(c) === value)
   }
+
+  /** The pruned reads' shared tail: scan the surviving `files` and
+    * apply the exact `pred`; with no file left, an empty frame that
+    * keeps the table's schema. */
+  private def scanFiltered(spark: SparkSession, tableDir: String, v: Int,
+                           files: Seq[String], pred: org.apache.spark.sql.Column): DataFrame =
+    if (files.isEmpty) read(spark, tableDir, v).where(pred).limit(0)
+    else reconciledScan(spark, tableDir, v, files).where(pred)
 
   /** Order-preserving Long encoding of a collected stat value — the
     * typed-zone-map seam (r11 verdict item #8): manifest envelopes
@@ -345,90 +320,65 @@ object Snapshots {
     newFiles.map(f => (f +: byPath.getOrElse(f, Seq.empty)).mkString("\t"))
   }
 
-  /** Typed-bound pruned read: the [[readPruned]] shape for ANY
-    * stats-supported column type — `lo`/`hi` are VALUES of the
-    * column's type (java.sql.Timestamp / Date / Double / Long …),
-    * encoded through the same monotone map the commit used, so file
-    * skipping is provably conservative; the exact BETWEEN predicate
-    * applies with the original typed literals. */
-  def readPrunedTyped(spark: SparkSession, tableDir: String, c: String,
-                      lo: Any, hi: Any, version: Int = -1): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val v = if (version >= 0) version else currentVersion(tableDir)
-    require(v > 0, s"Snapshots: $tableDir has no committed versions")
-    val loE = encodeStat(lo, c).getOrElse(
-      throw new IllegalArgumentException(s"Snapshots: readPrunedTyped null lo bound"))
-    val hiE = encodeStat(hi, c).getOrElse(
-      throw new IllegalArgumentException(s"Snapshots: readPrunedTyped null hi bound"))
-    val pred = col(c).between(lit(lo), lit(hi))
-    val files = prunedFilesEncoded(tableDir, v, c, loE, hiE)
-    if (files.isEmpty) read(spark, tableDir, v).where(pred).limit(0)
-    else reconciledScan(spark, tableDir, v, files).where(pred)
-  }
-
-  /** Long-bound → encoded-bound translator for the RAW pruning API:
-    * integral/date/timestamp columns take raw longs in their encoded
-    * units already (values / epoch days / epoch micros — identity),
-    * but float/double envelopes are stored as sign-folded IEEE bits,
-    * so a raw numeric bound must fold the same way or pruning would
-    * silently compare values against bit patterns (caught by the
-    * z-order spec the moment typed stats landed). Record-less
-    * manifests keep the legacy identity. */
-  private def boundEncoder(tableDir: String, version: Int, c: String): Long => Long =
-    manifestSchema(tableDir, version).map(parseStruct)
-      .flatMap(_.fields.find(_.name == c)).map(_.dataType) match {
-      case Some(org.apache.spark.sql.types.DoubleType) |
-           Some(org.apache.spark.sql.types.FloatType) =>
-        (v: Long) => orderedDoubleBits(v.toDouble)
-      case _ => identity
-    }
-
-  /** The file paths of `version` that can contain rows with
-    * `col` in [lo, hi] — manifest-stat pruning: a file is skipped
-    * ONLY when its recorded envelope is disjoint from the range;
-    * files without a stat for `col` are always kept (no false
-    * skipping, ever). Raw long bounds are interpreted in the
-    * column's VALUE space (see [[boundEncoder]]). Package-visible so
-    * the spec can measure. */
+  /** The file paths of `version` that can contain a row inside the
+    * BOX — the conjunction of per-column ranges `(col, lo, hi)`, the
+    * bounds being VALUES of each column's type: a file is skipped
+    * when ANY column's recorded envelope is disjoint from its range
+    * (each skip is individually provable, so the conjunction is never
+    * lossy; stat-less columns never skip). Bounds encode through
+    * [[encodeStat]], the monotone map the commit used — except that
+    * on a float/double column any numeric bound folds as a double, so
+    * a raw long bound compares in value space, not against the
+    * envelope's sign-folded bits. Package-visible so the spec can
+    * measure. */
   private[graft] def prunedFiles(tableDir: String, version: Int,
-                                 c: String, lo: Long, hi: Long): Seq[String] = {
-    val enc = boundEncoder(tableDir, version, c)
-    prunedFilesEncoded(tableDir, version, c, enc(lo), enc(hi))
-  }
-
-  /** [[prunedFiles]] with bounds ALREADY in the encoded space —
-    * what [[readPrunedTyped]] produces via [[encodeStat]]. */
-  private def prunedFilesEncoded(tableDir: String, version: Int,
-                                 c: String, lo: Long, hi: Long): Seq[String] =
-    fileStats(tableDir, version).collect {
-      case (path, stats) if stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } => path
+                                 box: Seq[(String, Any, Any)]): Seq[String] = {
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    val types = manifestSchema(tableDir, version).map(parseStruct)
+      .map(_.fields.map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
+    val encBox = box.map { case (c, lo, hi) =>
+      val floating = types.get(c).exists(t => t == DoubleType || t == FloatType)
+      def enc(bound: Any): Long = bound match {
+        case n: java.lang.Number if floating => orderedDoubleBits(n.doubleValue)
+        case b => encodeStat(b, c).getOrElse(
+          throw new IllegalArgumentException(s"Snapshots: null bound for '$c' in readPruned"))
+      }
+      (c, enc(lo), enc(hi))
     }
+    fileStats(tableDir, version).collect {
+      case (path, stats) if encBox.forall { case (c, lo, hi) =>
+        stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+      } => path
+    }
+  }
 
-  /** Range read with manifest-stat file skipping: reads only files
-    * whose envelope intersects [lo, hi], then applies the exact
-    * predicate. Equals the unpruned filtered read by construction. */
-  def readPruned(spark: SparkSession, tableDir: String, c: String,
-                 lo: Long, hi: Long, version: Int = -1): DataFrame = {
+  /** Range read with manifest-stat file skipping: conjunctive
+    * `(col, lo, hi)` ranges with bounds in each column's own type
+    * (Long / Double / java.sql.Timestamp / Date …). Reads only the
+    * files whose envelopes meet the box ([[prunedFiles]]), then
+    * applies the exact BETWEEN predicates — equal to the unpruned
+    * filtered read by construction. A several-column box is the shape
+    * `optimizeZOrder` lays data out for (a single-column sort prunes
+    * its leading column only). */
+  def readPruned(spark: SparkSession, tableDir: String, box: Seq[(String, Any, Any)],
+                 version: Int = -1): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val v = if (version >= 0) version else currentVersion(tableDir)
-    require(v > 0, s"Snapshots: $tableDir has no committed versions")
-    val files = prunedFiles(tableDir, v, c, lo, hi)
-    if (files.isEmpty) read(spark, tableDir, v).where(col(c).between(lo, hi)).limit(0)
-    else reconciledScan(spark, tableDir, v, files).where(col(c).between(lo, hi))
+    require(box.nonEmpty, "readPruned needs at least one (column, lo, hi) range")
+    val v = resolveVersion(tableDir, version)
+    scanFiltered(spark, tableDir, v, prunedFiles(tableDir, v, box),
+      box.map { case (c, lo, hi) => col(c).between(lo, hi) }.reduce(_ && _))
   }
 
-  /** Tags of every retained committed version — the idempotence
-    * ledger a streaming sink consults before re-committing a
-    * replayed micro-batch. O(retained versions) small-file reads of
-    * the manifest directory only. */
-  def committedTags(tableDir: String): Set[String] = {
-    val dir = snapPath(tableDir)
-    if (!Files.isDirectory(dir)) return Set.empty
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("v\\d{8}\\.txt"))
+  /** Manifest tags newest-first: a lazy walk down from HEAD that
+    * reads one manifest per step, so a caller that stops at its
+    * answer (the streaming sink's batch ledger, a view's reflected
+    * base version) reads only the manifests it passes — HEAD's alone
+    * in the steady state. Version slots holding no manifest file are
+    * skipped. */
+  def tagsNewestFirst(tableDir: String): Iterator[String] =
+    Iterator.iterate(currentVersion(tableDir))(_ - 1).takeWhile(_ > 0)
+      .map(manifestPath(tableDir, _)).filter(Files.isRegularFile(_))
       .flatMap(p => headerValue(Files.readAllLines(p).asScala.toSeq, "tag"))
-      .toSet
-  }
 
   /** Make `version`'s file list the new HEAD (as a NEW version —
     * history is never rewritten). */
@@ -549,8 +499,7 @@ object Snapshots {
   def retypeRewrite(spark: SparkSession, tableDir: String, name: String,
                     to: org.apache.spark.sql.types.DataType): Int = {
     import org.apache.spark.sql.functions._
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
+    val head = resolveVersion(tableDir)
     val j = manifestSchema(tableDir, head).getOrElse(throw new IllegalArgumentException(
       s"Snapshots: version $head of $tableDir carries no schema record — " +
         "retypeRewrite needs one (commit once with this library version first)"))
@@ -569,7 +518,6 @@ object Snapshots {
           s"${to.catalogString} for column '$name' — retypeRewrite cannot convert it")
     val lines = fileLines(tableDir, head)
     require(lines.nonEmpty, s"Snapshots: $tableDir HEAD is empty; nothing to retype")
-    val files = lines.map(_.split('\t')(0))
     val cols = st.fieldNames.toSeq
     // round-trip guard IN the write projection: a value the target
     // type cannot represent exactly raises naming the verb and the
@@ -590,22 +538,13 @@ object Snapshots {
           s"${to.catalogString} exactly — a silent lossy cast is refused; " +
           "transform into a NEW column instead"))).cast(to))
       .otherwise(casted)
-    val outDir = stageDataDir(tableDir, "t")
-    reconciledScan(spark, tableDir, head, files)
-      .select(cols.map(c => if (c == name) guarded.as(c) else col(c)): _*)
-      .write.parquet(outDir.toString)
     val retyped = org.apache.spark.sql.types.StructType(
       st.fields.map(g => if (g.name == name) g.copy(dataType = to) else g))
-    publishOrConflict(tableDir, head, "retype", listParts(outDir), schema = Some(retyped.json))
-    head + 1
+    // every file is hit: the whole table rewrites
+    rewriteAndPublish(spark, tableDir, head, lines, lines.map(_.split('\t')(0)), "retype",
+      _.select(cols.map(c => if (c == name) guarded.as(c) else col(c)): _*),
+      schema = Some(retyped.json))
   }
-
-  /** Run the additive gate against `parentV`'s recorded schema; a
-    * record-less parent (pre-schema-record manifest) checks nothing. */
-  private def checkAdditiveAgainst(tableDir: String, parentV: Int,
-                                   next: org.apache.spark.sql.types.StructType): Unit =
-    manifestSchema(tableDir, parentV)
-      .foreach(pj => requireAdditive(parseStruct(pj), next, tableDir))
 
   // ---- merge-on-read deletion vectors (r11 verdict item #1) ----
   //
@@ -712,11 +651,8 @@ object Snapshots {
     * comes from one sampled footer, the plain-parquet default. */
   def read(spark: SparkSession, tableDir: String, version: Int = -1,
            mergeSchema: Boolean = false): DataFrame = {
-    val v = if (version >= 0) version else currentVersion(tableDir)
-    require(v > 0, s"Snapshots: $tableDir has no committed versions")
-    val files = liveFiles(tableDir, v)
-    if (files.isEmpty) spark.emptyDataFrame
-    else reconciledScan(spark, tableDir, v, files, mergeSchema)
+    val v = resolveVersion(tableDir, version)
+    reconciledScan(spark, tableDir, v, liveFiles(tableDir, v), mergeSchema)
   }
 
   /** Incremental (change-feed-lite) read: the rows ADDED between
@@ -767,8 +703,7 @@ object Snapshots {
                      nFiles: Int): Int = {
     require(cols.size >= 2, "optimizeZOrder needs >= 2 columns (sort linearly for 1)")
     require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
+    val head = resolveVersion(tableDir)
     val df = read(spark, tableDir, head)
     val bits = math.min(16, 63 / cols.size)
     val zk = graft.ops.Layout.zKeyN(cols.map(c => graft.ops.Layout.rankBits(df, c, bits)), bits)
@@ -797,19 +732,23 @@ object Snapshots {
     else Files.list(dataDir).iterator().asScala
       .map(_.toString).filter(_.matches(".*part-.*\\.parquet")).toSeq.sorted
 
-  /** COW-verb source gate: the injected rows' TYPES must match the
-    * table's read schema exactly, not just its column names. Without
-    * this, an arithmetic widening in the caller (`intCol + 1L`)
-    * silently wrote wider-typed files into a narrow-recorded table —
-    * readable only by footer-order luck (found by the r10 skew-twin
-    * gate: GenSkew's documents carry n_chars as INT where the driver
-    * SFs carry BIGINT, and q_merge_cow's +100000L promoted it). */
-  private def requireSourceTypes(spark: SparkSession, tableDir: String, head: Int,
-                                 df: DataFrame, verb: String): Unit = {
+  /** COW-verb source gate: the injected rows must carry exactly the
+    * table's columns, each with the table's TYPE, not just its name.
+    * Without the type check, an arithmetic widening in the caller
+    * (`intCol + 1L`) silently wrote wider-typed files into a
+    * narrow-recorded table — readable only by footer-order luck (found
+    * by the r10 skew-twin gate: GenSkew's documents carry n_chars as
+    * INT where the driver SFs carry BIGINT, and q_merge_cow's +100000L
+    * promoted it). Returns the table's column order. */
+  private def requireSourceSchema(spark: SparkSession, tableDir: String, head: Int,
+                                  df: DataFrame, verb: String, noun: String): Seq[String] = {
     val table = read(spark, tableDir, head).schema
-      .fields.map(f => f.name -> f.dataType).toMap
+    require(df.columns.sorted.toSeq == table.fieldNames.sorted.toSeq,
+      s"Snapshots: $verb schema mismatch — table [${table.fieldNames.sorted.mkString(",")}] " +
+        s"vs $noun [${df.columns.sorted.mkString(",")}]")
+    val types = table.fields.map(f => f.name -> f.dataType).toMap
     df.schema.fields.foreach { f =>
-      table.get(f.name).filter(_ != f.dataType).foreach { tt =>
+      types.get(f.name).filter(_ != f.dataType).foreach { tt =>
         throw new IllegalArgumentException(
           s"Snapshots: $verb source column '${f.name}' is " +
             s"${f.dataType.catalogString} but the table records ${tt.catalogString} — " +
@@ -817,6 +756,7 @@ object Snapshots {
             "Snapshots.retypeRewrite() first")
       }
     }
+    table.fieldNames.toSeq
   }
 
   /** Publish `v = readV + 1` or fail loud when the table advanced
@@ -835,6 +775,42 @@ object Snapshots {
         s"Snapshots: $tableDir advanced past version $readV during $op — " +
           "the planned rewrite set is stale; re-run the operation against the new HEAD")
     }
+
+  /** The COW verbs' hit-file scan: the sorted paths among `files`
+    * holding a row that `matches` keeps. The file column is stamped
+    * inside the scan stage (`reconciledScan(withRowPos = true)`) —
+    * input_file_name() on top of the scan is illegal (and wrong) once
+    * a DV anti-join is present. The collect is listing-sized. */
+  private def hitFiles(spark: SparkSession, tableDir: String, head: Int, files: Seq[String])
+                      (matches: DataFrame => DataFrame): Seq[String] =
+    if (files.isEmpty) Seq.empty
+    else matches(reconciledScan(spark, tableDir, head, files, withRowPos = true))
+      .select(org.apache.spark.sql.functions.col(GFile)).distinct()
+      .collect().map(r => localPath(r.getString(0))).toSeq.sorted
+
+  /** The COW verbs' rewrite-and-publish: the `hit` files' rows pass
+    * through `keep` (reconciledScan, so their DVs bake into clean
+    * bytes), `insert` joins them, and both land in one staged data
+    * dir; every other manifest line carries by reference with its
+    * stats. `beforePublish` runs after the staged write and before
+    * the manifest link; the publish aborts when the table advanced
+    * past `head` ([[publishOrConflict]]). Returns the new version. */
+  private def rewriteAndPublish(spark: SparkSession, tableDir: String, head: Int,
+                                lines: Seq[String], hit: Seq[String], op: String,
+                                keep: DataFrame => DataFrame,
+                                insert: Option[DataFrame] = None,
+                                tag: Option[String] = None, schema: Option[String] = None,
+                                beforePublish: () => Unit = () => ()): Int = {
+    val hitSet = hit.toSet
+    val kept = lines.filterNot(l => hitSet(l.split('\t')(0)))
+    val outDir = stageDataDir(tableDir, op)
+    val survivors =
+      if (hit.isEmpty) None else Some(keep(reconciledScan(spark, tableDir, head, hit)))
+    (survivors ++ insert).reduce(_ unionByName _).write.parquet(outDir.toString)
+    beforePublish()
+    publishOrConflict(tableDir, head, op, kept ++ listParts(outDir), tag, schema)
+    head + 1
+  }
 
   /** Copy-on-write row-level DELETE: remove the rows where
     * `predicate` is TRUE (NULL-predicate rows SURVIVE — SQL DELETE
@@ -883,8 +859,7 @@ object Snapshots {
                                         predicate: org.apache.spark.sql.Column,
                                         beforePublish: () => Unit): Int = {
     import org.apache.spark.sql.functions._
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
+    val head = resolveVersion(tableDir)
     val lines = fileLines(tableDir, head)
     if (lines.isEmpty) return -1
     val files = lines.map(_.split('\t')(0))
@@ -901,7 +876,7 @@ object Snapshots {
       .groupBy(col("file")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     if (counts.isEmpty) {
-      Files.walk(dvDir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      deleteTree(dvDir)
       return -1
     }
     // every sidecar file key MUST name a manifest line: a normalization
@@ -936,31 +911,14 @@ object Snapshots {
   private[graft] def deleteWhereHook(spark: SparkSession, tableDir: String,
                                      predicate: org.apache.spark.sql.Column,
                                      beforePublish: () => Unit): Int = {
-    import org.apache.spark.sql.functions._
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val head = resolveVersion(tableDir)
     val lines = fileLines(tableDir, head)
-    if (lines.isEmpty) return -1
-    val files = lines.map(_.split('\t')(0))
-    // reconciledScan everywhere a COW verb touches live files: the
-    // rewrite must bake the files' DVs in, so rewritten files are
-    // clean. withRowPos stamps the file path INSIDE the scan stage —
-    // input_file_name() on top of the scan is illegal (and wrong) once
-    // a DV anti-join is present
-    val hit = reconciledScan(spark, tableDir, head, files, withRowPos = true)
-      .where(predicate)
-      .select(col(GFile).as("__f")).distinct()
-      .collect().map(r => localPath(r.getString(0))).toSet // listing-sized
-    if (hit.isEmpty) return -1
-    val kept = lines.filterNot(l => hit.contains(l.split('\t')(0)))
-    val outDir = stageDataDir(tableDir, "d")
+    val hit = hitFiles(spark, tableDir, head, lines.map(_.split('\t')(0)))(_.where(predicate))
+    if (hit.isEmpty) -1
     // survivors: predicate FALSE or NULL both keep the row
-    reconciledScan(spark, tableDir, head, hit.toSeq.sorted)
-      .where(!coalesce(predicate, lit(false)))
-      .write.parquet(outDir.toString)
-    beforePublish()
-    publishOrConflict(tableDir, head, "delete", kept ++ listParts(outDir))
-    head + 1
+    else rewriteAndPublish(spark, tableDir, head, lines, hit, "delete",
+      _.where(!coalesce(predicate, lit(false))), beforePublish = beforePublish)
   }
 
   /** Atomic predicate-scoped overwrite — Delta's `replaceWhere`, the
@@ -978,22 +936,11 @@ object Snapshots {
   def replaceWhere(spark: SparkSession, tableDir: String,
                    predicate: org.apache.spark.sql.Column, df: DataFrame): Int = {
     import org.apache.spark.sql.functions._
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
+    val head = resolveVersion(tableDir)
     val lines = fileLines(tableDir, head)
     require(lines.nonEmpty, s"Snapshots: $tableDir HEAD is empty; use commit(append)")
-    val tableCols = read(spark, tableDir, head).columns.toSeq
-    require(df.columns.sorted.toSeq == tableCols.sorted,
-      s"Snapshots: replaceWhere schema mismatch — table [${tableCols.sorted.mkString(",")}] " +
-        s"vs replacement [${df.columns.sorted.mkString(",")}]")
-    requireSourceTypes(spark, tableDir, head, df, "replaceWhere")
-    val files = lines.map(_.split('\t')(0))
-    val hit = reconciledScan(spark, tableDir, head, files,
-        withRowPos = true) // stamped file col — DV-join-safe (see deleteWhere)
-      .where(predicate)
-      .select(col(GFile).as("__f")).distinct()
-      .collect().map(r => localPath(r.getString(0))).toSet // listing-sized
-    val kept = lines.filterNot(l => hit.contains(l.split('\t')(0)))
+    val tableCols = requireSourceSchema(spark, tableDir, head, df, "replaceWhere", "replacement")
+    val hit = hitFiles(spark, tableDir, head, lines.map(_.split('\t')(0)))(_.where(predicate))
     // inserted rows must live INSIDE the replaced scope — raise in
     // the write projection, one scan
     val c0 = tableCols.head
@@ -1004,20 +951,12 @@ object Snapshots {
           raise_error(lit("Snapshots: replaceWhere insert outside the replaced scope — " +
             "every inserted row must satisfy the predicate")).cast(c0Type))
           .otherwise(col(c0)))
-    val outDir = stageDataDir(tableDir, "r")
-    val rewritten =
-      if (hit.isEmpty) guardedNew
-      else reconciledScan(spark, tableDir, head, hit.toSeq.sorted)
-        .where(!coalesce(predicate, lit(false)))
-        .select(tableCols.map(col): _*)
-        .unionByName(guardedNew)
-    rewritten.write.parquet(outDir.toString)
-    publishOrConflict(tableDir, head, "replace", kept ++ listParts(outDir))
-    head + 1
+    rewriteAndPublish(spark, tableDir, head, lines, hit, "replace",
+      _.where(!coalesce(predicate, lit(false))).select(tableCols.map(col): _*), Some(guardedNew))
   }
 
-  /** Copy-on-write MERGE (keyed upsert): rows of `source` replace
-    * same-`key` rows of the table; new-key rows are appended —
+  /** Copy-on-write MERGE (keyed upsert): rows of `source` replace the
+    * table rows that match on ALL `keys`; new-key rows are appended —
     * Delta/Iceberg `MERGE WHEN MATCHED THEN UPDATE WHEN NOT MATCHED
     * THEN INSERT`, as one commit. Only files containing a matched
     * key are rewritten; the rest carry by reference. Fails loud on
@@ -1026,30 +965,18 @@ object Snapshots {
     * with `mergeSchema` for that). Returns the committed version.
     *
     * Scale: candidate files are pre-pruned through the manifest
-    * zone maps when the table carries envelopes for `key` (the
-    * source's key range is one tiny aggregate); the match pass then
-    * scans only candidates' key columns, and rewrite IO ∝ files
-    * actually containing matches + the source itself. */
+    * zone maps when the table carries envelopes for an integral
+    * leading key (the source's key range is one tiny aggregate); the
+    * match pass then scans only candidates' key columns, and rewrite
+    * IO ∝ files actually containing matches + the source itself. */
   def mergeInto(spark: SparkSession, tableDir: String, source: DataFrame,
-                key: String, tag: Option[String] = None): Int =
-    mergeIntoKeys(spark, tableDir, source, Seq(key), tag)
-
-  /** Composite-key form of [[mergeInto]]: a row matches when ALL key
-    * columns are equal. Zone-map candidate pruning applies through
-    * the first key column when it is integral with recorded stats. */
-  def mergeIntoKeys(spark: SparkSession, tableDir: String, source: DataFrame,
-                    keys: Seq[String], tag: Option[String] = None): Int = {
+                keys: Seq[String], tag: Option[String] = None): Int = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "mergeInto needs at least one key column")
-    val head = currentVersion(tableDir)
-    require(head > 0, s"Snapshots: $tableDir has no committed versions")
+    val head = resolveVersion(tableDir)
     val lines = fileLines(tableDir, head)
     require(lines.nonEmpty, s"Snapshots: $tableDir HEAD is empty; use commit(append)")
-    val tableCols = read(spark, tableDir, head).columns.toSeq
-    require(source.columns.sorted.toSeq == tableCols.sorted,
-      s"Snapshots: mergeInto schema mismatch — table [${tableCols.sorted.mkString(",")}] " +
-        s"vs source [${source.columns.sorted.mkString(",")}]")
-    requireSourceTypes(spark, tableDir, head, source, "mergeInto")
+    val tableCols = requireSourceSchema(spark, tableDir, head, source, "mergeInto", "source")
     require(source.groupBy(keys.map(col): _*).count()
         .where(col("count") > 1).limit(1).count() == 0,
       s"Snapshots: mergeInto source has duplicate (${keys.mkString(",")}) values — ambiguous merge")
@@ -1071,28 +998,13 @@ object Snapshots {
       else {
         val bounds = src.agg(min(col(key0).cast("long")), max(col(key0).cast("long"))).first()
         if (bounds.isNullAt(0)) files
-        else prunedFiles(tableDir, head, key0, bounds.getLong(0), bounds.getLong(1))
+        else prunedFiles(tableDir, head, Seq((key0, bounds.getLong(0), bounds.getLong(1))))
       }
     val srcKeys = src.select(keys.map(col): _*).distinct()
-    val hit =
-      if (candidates.isEmpty) Set.empty[String]
-      else reconciledScan(spark, tableDir, head, candidates,
-        withRowPos = true) // stamped file col — DV-join-safe (see deleteWhere)
-        .select(keys.map(col) :+ col(GFile).as("__f"): _*)
-        .join(srcKeys, keys, "left_semi")
-        .select(col("__f")).distinct()
-        .collect().map(r => localPath(r.getString(0))).toSet // listing-sized
-    val kept = lines.filterNot(l => hit.contains(l.split('\t')(0)))
-    val outDir = stageDataDir(tableDir, "m")
-    val survivors =
-      if (hit.isEmpty) src
-      else reconciledScan(spark, tableDir, head, hit.toSeq.sorted)
-        .join(srcKeys, keys, "left_anti")
-        .select(tableCols.map(col): _*)
-        .unionByName(src)
-    survivors.write.parquet(outDir.toString)
-    publishOrConflict(tableDir, head, "merge", kept ++ listParts(outDir), tag)
-    head + 1
+    val hit = hitFiles(spark, tableDir, head, candidates)(
+      _.select(keys.map(col) :+ col(GFile): _*).join(srcKeys, keys, "left_semi"))
+    rewriteAndPublish(spark, tableDir, head, lines, hit, "merge",
+      _.join(srcKeys, keys, "left_anti").select(tableCols.map(col): _*), Some(src), tag)
   }
 
   // ---- demo-fixture lifecycle (r14 optimization) ----
@@ -1240,8 +1152,8 @@ object Snapshots {
       val docs = graft.Tables.documents(spark, sfDir)
       val src = org.apache.spark.sql.functions.col("source")
       commit(docs.where("doc_id % 2 = 0").repartition(4, src), tableDir.toString,
-        "append", bloomCols = Seq("source"), bloomExpectedItems = 4000L, bloomFpp = 0.01)
+        "append", bloomCols = Seq("source"))
       commit(docs.where("doc_id % 2 = 1").repartition(4, src), tableDir.toString,
-        "append", bloomCols = Seq("source"), bloomExpectedItems = 4000L, bloomFpp = 0.01)
+        "append", bloomCols = Seq("source"))
     }
 }

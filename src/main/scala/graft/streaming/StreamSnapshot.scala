@@ -9,9 +9,11 @@ import org.apache.spark.sql.DataFrame
   *
   * Mechanism: each micro-batch commits as ONE snapshot version whose
   * manifest carries the tag `batch=<batchId>`. Before committing,
-  * the sink consults the table's tag ledger (`committedTags` — an
-  * O(retained versions) read of the small `_snapshots/` directory):
-  * a replayed batch finds its own tag and SKIPS, so a crash between
+  * the sink walks the tags newest-first (`tagsNewestFirst`) to the
+  * first batch tag at or below its own id — ids rise with versions,
+  * so that tag alone says whether this batch committed, and the
+  * steady state reads HEAD's manifest only. A replayed batch finds
+  * its own tag and SKIPS, so a crash between
   * "manifest published" and "checkpoint advanced" — the classic
   * double-write window every foreachBatch sink has — re-runs the
   * batch as a no-op instead of double-appending. The commit itself
@@ -24,7 +26,7 @@ import org.apache.spark.sql.DataFrame
   * disk: the library has no retention or compaction verb.
   *
   * Scale: one manifest per micro-batch is the real-world Delta/
-  * Iceberg streaming-sink shape; the ledger read is metadata-sized.
+  * Iceberg streaming-sink shape; the ledger check reads one manifest.
   */
 object StreamSnapshot {
 
@@ -40,9 +42,13 @@ object StreamSnapshot {
     require(mode == "append" || mode == "overwrite",
       s"mode must be append|overwrite, got '$mode'")
     (batch: DataFrame, batchId: Long) => {
-      val tag = s"batch=$batchId"
-      if (!Snapshots.committedTags(tableDir).contains(tag))
-        Snapshots.commit(batch, tableDir, mode, Some(tag))
+      val last = Snapshots.tagsNewestFirst(tableDir).collectFirst {
+        case BatchTag(id) if id.toLong <= batchId => id.toLong
+      }
+      if (!last.contains(batchId))
+        Snapshots.commit(batch, tableDir, mode, Some(s"batch=$batchId"))
     }
   }
+
+  private val BatchTag = "batch=(\\d+)".r
 }

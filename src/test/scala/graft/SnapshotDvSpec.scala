@@ -94,7 +94,7 @@ class SnapshotDvSpec extends SparkSpec {
   test("pruned reads fold DVs (zone-map path routes through the reconciling scan)") {
     val t = threeFileTable()
     Snapshots.deleteWhere(spark, t, $"id" === 10L, mode = "mor")
-    assert(ids(Snapshots.readPruned(spark, t, "id", 9L, 12L)) == Seq(11L))
+    assert(ids(Snapshots.readPruned(spark, t, Seq(("id", 9L, 12L)))) == Seq(11L))
   }
 
   test("MOR delete aborts loudly when the table advanced past its read version") {
@@ -113,7 +113,7 @@ class SnapshotDvSpec extends SparkSpec {
     Snapshots.deleteWhere(spark, t, $"id" === 10L, mode = "mor")
     // update id=11, insert id=30 — the rewrite scan must not resurrect 10
     Snapshots.mergeInto(spark, t,
-      Seq((11L, "D2"), (30L, "g")).toDF("id", "s"), "id")
+      Seq((11L, "D2"), (30L, "g")).toDF("id", "s"), Seq("id"))
     val out = Snapshots.read(spark, t).select($"id", $"s").as[(Long, String)]
       .collect().sortBy(_._1).toSeq
     assert(out == Seq((1L, "a"), (2L, "b"), (11L, "D2"), (20L, "e"), (21L, "f"), (30L, "g")))

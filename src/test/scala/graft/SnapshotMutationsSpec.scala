@@ -76,7 +76,7 @@ class SnapshotMutationsSpec extends SparkSpec {
     val t = threeFileTable()
     val before = manifestFileLines(t, 3)
     val src = Seq((10L, "UPDATED"), (99L, "NEW")).toDF("id", "s")
-    val v = Snapshots.mergeInto(spark, t, src, "id")
+    val v = Snapshots.mergeInto(spark, t, src, Seq("id"))
     assert(v == 4)
     val rows = Snapshots.read(spark, t).as[(Long, String)].collect().toMap
     assert(rows == Map(1L -> "a", 2L -> "b", 10L -> "UPDATED", 11L -> "d",
@@ -89,7 +89,7 @@ class SnapshotMutationsSpec extends SparkSpec {
   test("mergeInto with no matched keys is a pure insert that carries every file") {
     val t = threeFileTable()
     val before = manifestFileLines(t, 3)
-    Snapshots.mergeInto(spark, t, Seq((99L, "NEW")).toDF("id", "s"), "id")
+    Snapshots.mergeInto(spark, t, Seq((99L, "NEW")).toDF("id", "s"), Seq("id"))
     assert(manifestFileLines(t, 4).toSet.intersect(before.toSet).size == 3)
     assert(ids(Snapshots.read(spark, t)) == Seq(1L, 2L, 10L, 11L, 20L, 21L, 99L))
   }
@@ -98,12 +98,12 @@ class SnapshotMutationsSpec extends SparkSpec {
     val t = threeFileTable()
     val dup = Seq((10L, "x"), (10L, "y")).toDF("id", "s")
     val eDup = intercept[IllegalArgumentException] {
-      Snapshots.mergeInto(spark, t, dup, "id")
+      Snapshots.mergeInto(spark, t, dup, Seq("id"))
     }
     assert(eDup.getMessage.contains("duplicate"))
     val wrong = Seq((10L, "x", 1)).toDF("id", "s", "extra")
     val eSchema = intercept[IllegalArgumentException] {
-      Snapshots.mergeInto(spark, t, wrong, "id")
+      Snapshots.mergeInto(spark, t, wrong, Seq("id"))
     }
     assert(eSchema.getMessage.contains("schema mismatch"))
     assert(Snapshots.currentVersion(t) == 3) // nothing committed
@@ -138,7 +138,7 @@ class SnapshotMutationsSpec extends SparkSpec {
     // readable only by footer-order luck)
     val wideSrc = Seq((1, 30L)).toDF("id", "v")
     val e1 = intercept[IllegalArgumentException](
-      Snapshots.mergeInto(spark, t, wideSrc, "id"))
+      Snapshots.mergeInto(spark, t, wideSrc, Seq("id")))
     assert(e1.getMessage.contains("bigint") && e1.getMessage.contains("retypeRewrite"))
     val e2 = intercept[IllegalArgumentException](
       Snapshots.replaceWhere(spark, t, col("id") === 1, wideSrc))
@@ -146,17 +146,17 @@ class SnapshotMutationsSpec extends SparkSpec {
     assert(Snapshots.currentVersion(t) == 1)
     // the sanctioned path: retype the table first, then the wide source lands
     Snapshots.retypeRewrite(spark, t, "v", org.apache.spark.sql.types.LongType)
-    Snapshots.mergeInto(spark, t, wideSrc, "id")
+    Snapshots.mergeInto(spark, t, wideSrc, Seq("id"))
     assert(Snapshots.read(spark, t).orderBy("id").as[(Int, Long)].collect().toSeq ==
       Seq((1, 30L), (2, 20L)))
   }
 
-  test("mergeIntoKeys matches on ALL key columns (composite keys)") {
+  test("mergeInto matches on ALL key columns (composite keys)") {
     val t = freshTable()
     Snapshots.commit(Seq((1L, "x", "a"), (1L, "y", "b"), (2L, "x", "c"))
       .toDF("k1", "k2", "s"), t)
     val src = Seq((1L, "x", "UPD"), (3L, "z", "NEW")).toDF("k1", "k2", "s")
-    Snapshots.mergeIntoKeys(spark, t, src, Seq("k1", "k2"))
+    Snapshots.mergeInto(spark, t, src, Seq("k1", "k2"))
     val rows = Snapshots.read(spark, t).as[(Long, String, String)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     // (1,x) replaced; (1,y) and (2,x) untouched despite sharing a key part
@@ -165,7 +165,7 @@ class SnapshotMutationsSpec extends SparkSpec {
     // duplicate composite keys in the source fail loud
     val dup = Seq((1L, "x", "p"), (1L, "x", "q")).toDF("k1", "k2", "s")
     assert(intercept[IllegalArgumentException] {
-      Snapshots.mergeIntoKeys(spark, t, dup, Seq("k1", "k2"))
+      Snapshots.mergeInto(spark, t, dup, Seq("k1", "k2"))
     }.getMessage.contains("duplicate"))
   }
 

@@ -86,13 +86,13 @@ class SnapshotsSpec extends SparkSpec {
     val stats = Snapshots.fileStats(t, 3)
     assert(stats.size == 3 && stats.forall(_._2.contains("id")))
     // the middle range touches exactly one file
-    assert(Snapshots.prunedFiles(t, 3, "id", 150L, 160L).size == 1)
-    val pruned = Snapshots.readPruned(spark, t, "id", 150L, 160L)
+    assert(Snapshots.prunedFiles(t, 3, Seq(("id", 150L, 160L))).size == 1)
+    val pruned = Snapshots.readPruned(spark, t, Seq(("id", 150L, 160L)))
     assert(ids(pruned) == (150L to 160L))
     // boundary overlap keeps both adjacent files
-    assert(Snapshots.prunedFiles(t, 3, "id", 100L, 101L).size == 2)
+    assert(Snapshots.prunedFiles(t, 3, Seq(("id", 100L, 101L))).size == 2)
     // fully-outside range reads nothing but still returns the schema
-    assert(Snapshots.readPruned(spark, t, "id", 900L, 999L).count() == 0)
+    assert(Snapshots.readPruned(spark, t, Seq(("id", 900L, 999L))).count() == 0)
   }
 
   test("stats survive append-carry and rollback; stat-less files always read") {
@@ -100,8 +100,8 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.commit((1L to 50L).toDF("id").coalesce(1), t, statsCols = Seq("id"))
     Snapshots.commit((51L to 99L).toDF("id").coalesce(1), t) // NO stats
     // the stat-less file must be kept for any range (conservative)
-    assert(Snapshots.prunedFiles(t, 2, "id", 10L, 20L).size == 2)
-    assert(ids(Snapshots.readPruned(spark, t, "id", 40L, 60L)) == (40L to 60L))
+    assert(Snapshots.prunedFiles(t, 2, Seq(("id", 10L, 20L))).size == 2)
+    assert(ids(Snapshots.readPruned(spark, t, Seq(("id", 40L, 60L)))) == (40L to 60L))
     Snapshots.commit(Seq(1000L).toDF("id"), t, mode = "overwrite")
     Snapshots.rollback(t, 2)
     // rolled-back manifest still carries v1's stats line
@@ -147,11 +147,11 @@ class SnapshotsSpec extends SparkSpec {
     val t = freshTable()
     // three single-file commits with disjoint string key sets
     Snapshots.commit(Seq((1L, "apple"), (2L, "avocado")).toDF("id", "s").coalesce(1), t,
-      bloomCols = Seq("s"), bloomExpectedItems = 100L, bloomFpp = 0.01)
+      bloomCols = Seq("s"))
     Snapshots.commit(Seq((3L, "banana"), (4L, "blueberry")).toDF("id", "s").coalesce(1), t,
-      bloomCols = Seq("s"), bloomExpectedItems = 100L, bloomFpp = 0.01)
+      bloomCols = Seq("s"))
     Snapshots.commit(Seq((5L, "cherry"), (6L, "cranberry")).toDF("id", "s").coalesce(1), t,
-      bloomCols = Seq("s"), bloomExpectedItems = 100L, bloomFpp = 0.01)
+      bloomCols = Seq("s"))
     // the probe skips files whose filter answers definitely-absent
     // (deterministic: fixed data, fixed sketch seeds)
     assert(Snapshots.prunedFilesEq(t, 3, "s", "banana").size < 3)
@@ -176,7 +176,7 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.prunedFilesEq(t, 2, "s", "y").size == 1)
     assert(ids(Snapshots.readPrunedEq(spark, t, "s", "x")) == Seq(1L))
     // and range pruning still works beside the blooms
-    assert(ids(Snapshots.readPruned(spark, t, "id", 50L, 200L)) == Seq(100L))
+    assert(ids(Snapshots.readPruned(spark, t, Seq(("id", 50L, 200L)))) == Seq(100L))
   }
 
   test("bloom on a non-string column fails loud (integral columns belong in statsCols)") {
@@ -193,36 +193,36 @@ class SnapshotsSpec extends SparkSpec {
     val grid = spark.range(1024).select(
       ($"id" % 32).as("x"), ($"id" / 32).as("y"), $"id")
     Snapshots.commit(grid.repartition(8), t, statsCols = Seq("x", "y"))
-    val before = Snapshots.prunedFiles(t, 1, "y", 4L, 7L).size
+    val before = Snapshots.prunedFiles(t, 1, Seq(("y", 4L, 7L))).size
     val v = Snapshots.optimizeZOrder(spark, t, Seq("x", "y"), nFiles = 8)
     assert(v == 2)
-    val afterY = Snapshots.prunedFiles(t, v, "y", 4L, 7L).size
-    val afterX = Snapshots.prunedFiles(t, v, "x", 4L, 7L).size
+    val afterY = Snapshots.prunedFiles(t, v, Seq(("y", 4L, 7L))).size
+    val afterX = Snapshots.prunedFiles(t, v, Seq(("x", 4L, 7L))).size
     info(s"files read for y-slice: $before of 8 before, $afterY after; x-slice: $afterX")
     assert(before == 8, "hash-scattered layout should have no pruning")
     assert(afterY < 8 && afterX < 8, "z-order must prune on both dimensions")
     // and the rows are identical
     assert(Snapshots.read(spark, t).agg(sum($"id")).head.getLong(0) == 1024L * 1023 / 2)
     // q_snapshot-style result equality through the pruned read
-    assert(ids(Snapshots.readPruned(spark, t, "x", 3L, 3L).select($"id".as("id"))) ==
+    assert(ids(Snapshots.readPruned(spark, t, Seq(("x", 3L, 3L))).select($"id".as("id"))) ==
       (0 until 32).map(r => r * 32L + 3L))
   }
 
-  test("readPrunedBox: a small box on a z-ordered table prunes more than either single range") {
+  test("readPruned box: a small box on a z-ordered table prunes more than either single range") {
     val t = freshTable()
     val grid = spark.range(1024).select(
       ($"id" % 32).as("x"), ($"id" / 32).cast("long").as("y"), $"id")
     Snapshots.commit(grid.repartition(8), t, statsCols = Seq("x", "y"))
     val v = Snapshots.optimizeZOrder(spark, t, Seq("x", "y"), nFiles = 8)
     val box = Seq(("x", 4L, 7L), ("y", 4L, 7L))
-    val boxFiles = Snapshots.prunedFilesBox(t, v, box).size
-    val xFiles = Snapshots.prunedFiles(t, v, "x", 4L, 7L).size
-    val yFiles = Snapshots.prunedFiles(t, v, "y", 4L, 7L).size
+    val boxFiles = Snapshots.prunedFiles(t, v, box).size
+    val xFiles = Snapshots.prunedFiles(t, v, Seq(("x", 4L, 7L))).size
+    val yFiles = Snapshots.prunedFiles(t, v, Seq(("y", 4L, 7L))).size
     info(s"files: box=$boxFiles x=$xFiles y=$yFiles of 8")
     assert(boxFiles <= math.min(xFiles, yFiles))
     assert(boxFiles < 8)
     // result equality: the 4x4 box has exactly 16 cells
-    val rows = Snapshots.readPrunedBox(spark, t, box)
+    val rows = Snapshots.readPruned(spark, t, box)
       .select($"x", $"y").as[(Long, Long)].collect().toSet
     assert(rows == (for (x <- 4L to 7L; y <- 4L to 7L) yield (x, y)).toSet)
   }
@@ -275,7 +275,7 @@ class SnapshotsSpec extends SparkSpec {
     // non-atomic — the ledger IS the atomicity, exactly as the HTTP
     // 412 is on S3 — so this passing proves the protocol needs
     // nothing from the store beyond the CommitPublisher contract.
-    val ledger = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
+    val ledger = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
     val cas: graft.sources.CommitPublisher = (target, body) => {
       if (ledger.putIfAbsent(target.toString, java.lang.Boolean.TRUE) != null)
         throw new java.nio.file.FileAlreadyExistsException(target.toString)

@@ -150,7 +150,7 @@ class StreamPipelineSpec extends SparkSpec {
 
     // the version history IS the micro-batch ledger: every version is
     // tagged batch=<id>, unique by construction
-    val tags = Snapshots.committedTags(table)
+    val tags = Snapshots.tagsNewestFirst(table).toSet
     assert(tags.nonEmpty && tags.size == Snapshots.currentVersion(table),
       s"tags $tags vs ${Snapshots.currentVersion(table)} versions")
   }

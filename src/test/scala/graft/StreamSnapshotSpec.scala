@@ -32,7 +32,7 @@ class StreamSnapshotSpec extends SparkSpec {
     assert(ids(Snapshots.read(spark, table)) == Seq(1L, 2L, 3L))
     // micro-batch history time-travels
     assert(ids(Snapshots.read(spark, table, version = 1)) == Seq(1L, 2L))
-    assert(Snapshots.committedTags(table) == Set("batch=0", "batch=1"))
+    assert(Snapshots.tagsNewestFirst(table).toSeq == Seq("batch=1", "batch=0"))
   }
 
   test("a replayed micro-batch is a no-op: no new version, no duplicate rows") {
@@ -60,6 +60,22 @@ class StreamSnapshotSpec extends SparkSpec {
     assert(ids(Snapshots.read(spark, table)) == Seq(1L, 2L, 5L))
     val dups = Snapshots.read(spark, table).groupBy($"value").count().where($"count" > 1)
     assert(dups.isEmpty)
+  }
+
+  test("the ledger check reads down from HEAD: a broken older manifest does not block the sink") {
+    // a replay of the newest batch and the next batch are both answered
+    // by HEAD's tag, so neither reads v1 — here v1's manifest is a directory
+    val (table, _) = freshDirs()
+    val sink = StreamSnapshot.sink(table)
+    (0L to 2L).foreach(b => sink(Seq(b).toDF("value"), b))
+    val v1 = java.nio.file.Paths.get(table, "_snapshots", "v00000001.txt")
+    Files.delete(v1)
+    Files.createDirectory(v1)
+    sink(Seq(2L).toDF("value"), 2L) // replayed -> skipped
+    assert(Snapshots.currentVersion(table) == 3)
+    sink(Seq(3L).toDF("value"), 3L)
+    assert(Snapshots.currentVersion(table) == 4)
+    assert(ids(Snapshots.read(spark, table)) == Seq(0L, 1L, 2L, 3L))
   }
 
   test("overwrite mode keeps only the latest batch at HEAD, history retained") {

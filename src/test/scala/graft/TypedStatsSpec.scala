@@ -36,15 +36,15 @@ class TypedStatsSpec extends SparkSpec {
       t, statsCols = Seq("ts"))
     val lo = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-03T00:00:00Z"))
     val hi = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-04T00:00:00Z"))
-    val pruned = Snapshots.readPrunedTyped(spark, t, "ts", lo, hi)
+    val pruned = Snapshots.readPruned(spark, t, Seq(("ts", lo, hi)))
     val full = Snapshots.read(spark, t).where($"ts".between(lit(lo), lit(hi)))
     assert(pruned.select($"id").as[Long].collect().sorted.toSeq ==
       full.select($"id").as[Long].collect().sorted.toSeq)
     assert(pruned.count() == 25) // hours 48..72 inclusive
     // the skipping is real: a 1-day window over 10 days in 6
     // range-clustered files touches at most 2
-    val hit = Snapshots.prunedFiles(t, 1, "ts",
-      Snapshots.encodeStat(lo, "ts").get, Snapshots.encodeStat(hi, "ts").get)
+    val hit = Snapshots.prunedFiles(t, 1, Seq(("ts",
+      Snapshots.encodeStat(lo, "ts").get, Snapshots.encodeStat(hi, "ts").get)))
     assert(hit.size <= 2 && hit.size < Snapshots.liveFiles(t, 1).size,
       s"expected real pruning, got ${hit.size} of ${Snapshots.liveFiles(t, 1).size}")
   }
@@ -59,19 +59,19 @@ class TypedStatsSpec extends SparkSpec {
       t, statsCols = Seq("v"))
     val v = Snapshots.currentVersion(t)
     // RAW long bounds — prunedFiles folds them into the double
-    // column's encoded space itself (the readPruned legacy API)
-    val hit = Snapshots.prunedFiles(t, v, "v", -2L, 3L)
+    // column's encoded space itself
+    val hit = Snapshots.prunedFiles(t, v, Seq(("v", -2L, 3L)))
     // file 1 ([-100,-50]) skipped; file 2 hit; file 3's envelope is
     // [100, NaN] — disjoint from [-2,3], legitimately skipped (NaN
     // never matches a BETWEEN anyway, so nothing is lost)
     assert(hit.size == 1, s"expected 1 candidate file, got $hit")
-    val got = Snapshots.readPrunedTyped(spark, t, "v",
-      java.lang.Double.valueOf(-2.0), java.lang.Double.valueOf(3.0))
+    val got = Snapshots.readPruned(spark, t, Seq(("v",
+      java.lang.Double.valueOf(-2.0), java.lang.Double.valueOf(3.0))))
       .select($"id").as[Long].collect().sorted.toSeq
     assert(got == Seq(3L, 4L))
     // ...but a range REACHING the NaN file's real values reads it
-    val wide = Snapshots.readPrunedTyped(spark, t, "v",
-      java.lang.Double.valueOf(0.0), java.lang.Double.valueOf(200.0))
+    val wide = Snapshots.readPruned(spark, t, Seq(("v",
+      java.lang.Double.valueOf(0.0), java.lang.Double.valueOf(200.0))))
       .select($"id").as[Long].collect().sorted.toSeq
     assert(wide == Seq(4L, 5L))
   }
@@ -84,12 +84,12 @@ class TypedStatsSpec extends SparkSpec {
     // second commit WITHOUT stats: its file must always be a candidate
     Snapshots.commit(Seq((3L, java.sql.Date.valueOf("2024-06-15")))
       .toDF("id", "d").coalesce(1), t)
-    val got = Snapshots.readPrunedTyped(spark, t, "d",
-      java.sql.Date.valueOf("2024-06-01"), java.sql.Date.valueOf("2024-06-30"))
+    val got = Snapshots.readPruned(spark, t, Seq(("d",
+      java.sql.Date.valueOf("2024-06-01"), java.sql.Date.valueOf("2024-06-30"))))
       .select($"id").as[Long].collect().toSeq
     assert(got == Seq(3L))
-    val none = Snapshots.readPrunedTyped(spark, t, "d",
-      java.sql.Date.valueOf("2025-01-01"), java.sql.Date.valueOf("2025-01-31"))
+    val none = Snapshots.readPruned(spark, t, Seq(("d",
+      java.sql.Date.valueOf("2025-01-01"), java.sql.Date.valueOf("2025-01-31"))))
     // the stat-less file is still scanned (conservative), then the
     // exact predicate drops its rows
     assert(none.count() == 0)
